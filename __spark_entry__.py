@@ -11,7 +11,6 @@ only adapts the registry to the driver's function signatures.
 
 from __future__ import annotations
 
-from collections import deque
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,37 +34,15 @@ def entry(spark: SparkSession) -> DataFrame:
 # the same hazard for itself in round 13; a GC-pressure flake from
 # exactly this was observed in a driver-style verify run this round).
 #
-# Each wrapped query build opens its own scope and RETIRES the scopes
-# of queries built three-or-more invocations earlier.  A sequential
-# driver (build -> collect -> next, the contract the verify recipe
-# mirrors) has consumed those results long ago; keeping the two most
-# recent prior scopes alive tolerates even a driver that pipelines a
-# couple of builds ahead.  Nothing is cached and nothing is computed
-# early — this only FREES storage the old code leaked.
-_RETIRED: deque = deque()
-_KEEP_PRIOR = 2
-
-
-def _scoped(fn: Callable[[SparkSession, str], DataFrame]):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        while len(_RETIRED) > _KEEP_PRIOR:
-            _RETIRED.popleft().release()
-        scope = pinning._PinScope()
-        with pinning._LOCK:
-            pinning._SCOPES.append(scope)
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            with pinning._LOCK:
-                pinning._SCOPES.remove(scope)
-            _RETIRED.append(scope)
-
-    return run
+# pinning.rolling_pin_scope gives each query build its own scope and
+# frees it a few builds later.  A sequential caller (build -> collect
+# -> next, the contract the verify recipe mirrors) has consumed those
+# results long ago; nothing is cached and nothing is computed early.
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: _scoped(q.fn) for name, q in QUERIES.items()}
+    return {name: pinning.rolling_pin_scope(q.fn) for name, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

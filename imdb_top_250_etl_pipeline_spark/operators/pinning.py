@@ -35,6 +35,11 @@ This module closes it with an ambient-scope pattern:
           groups.write.parquet(out)    # consume INSIDE the scope
       # all checkpoint blocks freed here
 
+* ``rolling_pin_scope(fn)`` — for a consumer that cannot open a
+  ``with`` block around its use of a result (the ``queries()`` adapter
+  in ``__spark_entry__.py``): each build gets a scope that is released
+  a fixed number of builds later.
+
 CONTRACT: a pinned DataFrame is executor-storage-backed and cannot be
 recomputed once released (lineage is truncated at the checkpoint —
 Spark raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).  Consume results
@@ -61,13 +66,18 @@ import os
 import shutil
 import threading
 import uuid
+from collections import deque
+from collections.abc import Callable
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.RLock()
 _SCOPES: list["_PinScope"] = []
+# scopes of finished rolling_pin_scope builds, oldest first
+_RETIRED: deque["_PinScope"] = deque()
+_KEEP_PRIOR = 2
 
 
 def _persistent_ids(sc) -> set[int]:
@@ -183,6 +193,42 @@ class _PinScope:
             # context's checkpoint dir back to whoever owned it before
             self._restore_checkpoint_dir()
             shutil.rmtree(self.reliable_dir, ignore_errors=True)
+
+
+def rolling_pin_scope(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Wrap a query build so each call gets its own pin scope.
+
+    For a consumer that builds a query, collects it and moves on (all
+    50 ``queries()`` entries in one session) with no ambient
+    ``pin_scope``.
+    Each call's scope retires when the build returns; a call first
+    releases the scopes retired more than ``_KEEP_PRIOR`` calls ago, so
+    the results of the two most recent prior builds stay consumable
+    while older ones stop holding executor storage.  The retire queue
+    only changes under ``_LOCK``.
+    """
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with _LOCK:
+            stale = [
+                _RETIRED.popleft()
+                for _ in range(len(_RETIRED) - _KEEP_PRIOR)
+            ]
+        for old in stale:
+            old.release()
+        scope = _PinScope()
+        with _LOCK:
+            _SCOPES.append(scope)
+        try:
+            return fn(spark, sf_dir)
+        finally:
+            with _LOCK:
+                _SCOPES.remove(scope)
+                _RETIRED.append(scope)
+
+    return run
 
 
 @contextmanager

@@ -17,16 +17,26 @@ Branch projections normalize heterogeneous schemas to a shared column
 list with explicit casts ON BOTH SIDES (Spark select / oracle SELECT),
 because the driver compares schemas and hashes values after sorting
 columns by name.
+
+extension_battery, the widest battery, writes each branch once: an
+entry in ``_EXT_BRANCHES`` names the part tag, the SUBSUMED
+constituent, and one SQL expression per shared column.  That entry
+renders the branch's Spark ``select`` (through ``F.expr``), its DuckDB
+oracle SELECT over the constituent's own registered oracle, and its
+``EXTENSION_BATTERY_PARTS`` shard-map key, so adding a branch means
+registering the constituent, subsuming it, and adding one table entry.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import load
-from .registry import ORACLES, QUERIES, register, subsume
+from .registry import ORACLES, QUERIES, lookup, register, subsume
 
 # Capture constituent fns + oracle SQL before subsume() detaches them
 # from the driver-facing dicts.
@@ -8710,10 +8720,6 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly 50; every constituent stays individually oracle-checked in
 # tests/test_oracle_parity via SUBSUMED.
 
-_NB = "CAST(NULL AS BIGINT)"
-_NS = "CAST(NULL AS VARCHAR)"
-_ND = "CAST(NULL AS DOUBLE)"
-
 _SDD_ORACLE = f"""
 WITH reps AS (
   SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text
@@ -8736,1483 +8742,540 @@ SELECT 'sdd_bounds', NULL, NULL, CAST(NULL AS BIGINT), true
 """
 
 
-_EXT_ORACLE = "\nUNION ALL\n".join(
-    [
-        f"SELECT 'jdbc_'||part AS part, c_custkey AS a, {_NB} AS b, "
-        f"{_NB} AS n, c_mktsegment AS k, c_name AS s, "
-        f"CAST(c_acctbal AS DOUBLE) AS v, ok "
-        f"FROM ({_SQL['sink_jdbc_roundtrip']}) t",
-        f"SELECT 'js_'||part AS part, {_NB} AS a, {_NB} AS b, n, k, "
-        f"{_NS} AS s, v, ok FROM ({_SQL['join_scale_battery']}) t",
-        f"SELECT 'bm25' AS part, doc_id AS a, {_NB} AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, bm25 AS v, true AS ok "
-        f"FROM ({_SQL['text_bm25_scores']}) t",
-        f"SELECT 'ts_'||part AS part, uid AS a, t AS b, n, {_NS} AS k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_SQL['timeseries_battery']}) t",
-        f"SELECT 'lk_'||part AS part, a, b, d AS n, {_NS} AS k, "
-        f"{_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SQL['linkage_battery']}) t",
-        f"SELECT 'cos' AS part, query_id AS a, neighbor_id AS b, "
-        f"CAST(rank AS BIGINT) AS n, {_NS} AS k, {_NS} AS s, {_ND} AS v, "
-        f"true AS ok FROM ({_SQL['sim_cosine_topk']}) t",
-        f"SELECT 'segdedup' AS part, doc_id AS a, {_NB} AS b, n_kept AS n, "
-        f"{_NS} AS k, clean_text AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SEGDEDUP_ORACLE}) t",
-        f"SELECT 'cms_'||part AS part, a, b, n, {_NS} AS k, {_NS} AS s, "
-        f"{_ND} AS v, true AS ok FROM ({_CMS_ORACLE}) t",
-        f"SELECT 'bf_'||part AS part, a, b, n, {_NS} AS k, {_NS} AS s, "
-        f"{_ND} AS v, true AS ok FROM ({_BLOOM_ORACLE}) t",
-        f"SELECT 'mba' AS part, item_a AS a, item_b AS b, c_ab AS n, "
-        f"CAST(c_a AS VARCHAR) AS k, CAST(c_b AS VARCHAR) AS s, "
-        f"confidence AS v, true AS ok FROM ({_MBA_ORACLE}) t",
-        # at_v rides the double slot; ks itself is fully determined by
-        # the hashed integers (n / (a*b)) and is value-checked in the
-        # constituent's own parity test
-        f"SELECT 'ks' AS part, n_a AS a, n_b AS b, d_scaled AS n, "
-        f"{_NS} AS k, {_NS} AS s, at_v AS v, "
-        f"true AS ok FROM ({_KS_ORACLE}) t",
-        f"SELECT 'chi2' AS part, observed AS a, n_a AS b, n_b AS n, "
-        f"a AS k, b AS s, contrib AS v, true AS ok "
-        f"FROM ({_CHI2_ORACLE}) t",
-        f"SELECT 'vocab' AS part, n_tokens AS a, n_types AS b, "
-        f"n_hapax AS n, source AS k, CAST(n_docs AS VARCHAR) AS s, "
-        f"ttr AS v, true AS ok FROM ({_VOCAB_ORACLE}) t",
-        f"SELECT 'benford' AS part, CAST(digit AS BIGINT) AS a, n AS b, "
-        f"n_total AS n, {_NS} AS k, {_NS} AS s, dev AS v, "
-        f"true AS ok FROM ({_BENFORD_ORACLE}) t",
-        # timestamps ride the string slots as epoch-micro integers
-        # (integer formatting is deterministic cross-engine)
-        f"SELECT 'streak' AS part, user_id AS a, streak_len AS b, "
-        f"n_events_before AS n, "
-        f"CAST(epoch_us(start_ts) AS VARCHAR) AS k, "
-        f"CAST(epoch_us(end_ts) AS VARCHAR) AS s, {_ND} AS v, "
-        f"true AS ok FROM ({_STREAK_ORACLE}) t",
-        f"SELECT 'rollmad' AS part, user_id AS a, event_id AS b, "
-        f"n_obs AS n, {_NS} AS k, {_NS} AS s, "
-        f"roll_med + roll_mad AS v, is_anomaly AS ok "
-        f"FROM ({_ROLLMAD_ORACLE}) t",
-        f"SELECT 'cusum' AS part, user_id AS a, event_id AS b, "
-        f"cusum_pos AS n, CAST(cusum_neg AS VARCHAR) AS k, "
-        f"CAST(alarm_neg AS VARCHAR) AS s, value AS v, alarm_pos AS ok "
-        f"FROM ({_CUSUM_ORACLE}) t",
-        f"SELECT 'winnow' AS part, doc_id AS a, fp_pos AS b, "
-        f"fp_hash AS n, {_NS} AS k, {_NS} AS s, {_ND} AS v, "
-        f"true AS ok FROM ({_WINNOW_ORACLE}) t",
-        f"SELECT 'qnorm' AS part, doc_id AS a, norm_value AS b, "
-        f"pooled_target AS n, source AS k, "
-        f"CAST(src_rank AS VARCHAR) AS s, "
-        f"CAST(n_chars AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_QNORM_ORACLE}) t",
-        f"SELECT 'sdec' AS part, epoch_day AS a, y_scaled AS b, "
-        f"n_obs * 8 + phase AS n, event_type AS k, {_NS} AS s, "
-        f"y + coalesce(trend, 0) + coalesce(seasonal, 0) "
-        f"+ coalesce(remainder, 0) AS v, true AS ok "
-        f"FROM ({_SDECOMP_ORACLE}) t",
-        f"SELECT 'twap' AS part, user_id AS a, bucket AS b, "
-        f"covered_us AS n, CAST(n_pieces AS VARCHAR) AS k, {_NS} AS s, "
-        f"twap AS v, true AS ok FROM ({_TWAP_ORACLE}) t",
-        f"SELECT 'skew' AS part, n_keys AS a, max_count AS b, "
-        f"n_rows AS n, CAST(top1_ppm AS VARCHAR) AS k, "
-        f"p50_count || ':' || p90_count || ':' || p99_count AS s, "
-        f"gini AS v, true AS ok FROM ({_SKEW_ORACLE}) t",
-        f"SELECT 'ltrend' AS part, n_obs AS a, {_NB} AS b, {_NB} AS n, "
-        f"event_type AS k, {_NS} AS s, "
-        f"slope + intercept + r2 AS v, true AS ok "
-        f"FROM ({_LTREND_ORACLE}) t",
-        f"SELECT 'wquant' AS part, w_total AS a, {_NB} AS b, {_NB} AS n, "
-        f"l_returnflag AS k, {_NS} AS s, "
-        f"wq_1_2 + wq_9_10 + wq_99_100 AS v, true AS ok "
-        f"FROM ({_WQUANT_ORACLE}) t",
-        f"SELECT 'pmi' AS part, c_xy AS a, c_x * 100000 + c_y AS b, "
-        f"n_pairs AS n, w1 AS k, w2 AS s, pmi AS v, true AS ok "
-        f"FROM ({_PMI_ORACLE}) t",
-        f"SELECT 'burst' AS part, user_id AS a, n_gaps AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, "
-        f"mean_gap_us + coalesce(cv2, 0) + coalesce(burstiness, 0) AS v, "
-        f"true AS ok FROM ({_BURST_ORACLE}) t",
-        f"SELECT 'wau' AS part, epoch_day AS a, dau AS b, wau AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, wau_within_bound AS ok "
-        f"FROM ({_WAU_ORACLE}) t",
-        f"SELECT 'ovlp' AS part, n_a AS a, n_b AS b, "
-        f"n_inter * 1000000 + n_union AS n, g1 AS k, g2 AS s, "
-        f"{_ND} AS v, inter_within_bound AS ok "
-        f"FROM ({_OVERLAP_ORACLE}) t",
-        f"SELECT 'duprate' AS part, n_docs AS a, n_distinct AS b, "
-        f"n_clones * 1000 + max_clone_count AS n, source AS k, "
-        f"CAST(dup_ppm AS VARCHAR) AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_DUPRATE_ORACLE}) t",
-        f"SELECT 'wmark' AS part, n_events AS a, n_late AS b, "
-        f"p99_us AS n, CAST(p50_us AS VARCHAR) AS k, "
-        f"CAST(p95_us AS VARCHAR) AS s, CAST(max_us AS DOUBLE) AS v, "
-        f"true AS ok FROM ({_WMAUDIT_ORACLE}) t",
-        f"SELECT 'fanout' AS part, predicted_rows AS a, "
-        f"max_key_product AS b, "
-        f"n_keys_left * 1000000 + n_keys_right * 1000 + n_keys_both AS n, "
-        f"CAST(n_left AS VARCHAR) AS k, CAST(n_right AS VARCHAR) AS s, "
-        f"CAST(hot_ppm AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_FANOUT_ORACLE}) t",
-        f"SELECT 'rdv' AS part, doc_id AS a, {_NB} AS b, {_NB} AS n, "
-        f"shard AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_RENDEZVOUS_ORACLE}) t",
-        f"SELECT 'fastss' AS part, c_custkey AS a, n_neighbors AS b, "
-        f"nbr_id_sum AS n, CAST(nbr_min AS VARCHAR) AS k, "
-        f"CAST(nbr_max AS VARCHAR) AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_FASTSS_ORACLE}) t",
-        f"SELECT 'spansd' AS part, doc_id AS a, n_dup_spans AS b, "
-        f"n_kept AS n, CAST(n_spans AS VARCHAR) AS k, clean_text AS s, "
-        f"dup_span_frac AS v, true AS ok FROM ({_SPAN_DEDUP_ORACLE}) t",
-        f"SELECT 'dsir' AS part, doc_id AS a, score_scaled AS b, "
-        f"n_grams AS n, {_NS} AS k, {_NS} AS s, score AS v, true AS ok "
-        f"FROM ({_DSIR_ORACLE}) t",
-        f"SELECT 'lm' AS part, c_w1 AS a, cont AS b, c AS n, w1 AS k, "
-        f"w2 AS s, p_kn AS v, true AS ok FROM ({_BIGRAM_LM_ORACLE}) t",
-        f"SELECT 'qscore' AS part, doc_id AS a, {_NB} AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, score AS v, keep AS ok "
-        f"FROM ({_QCLS_ORACLE}) t",
-        f"SELECT 'markov' AS part, {_NB} AS a, {_NB} AS b, n, src AS k, "
-        f"dst AS s, p AS v, true AS ok FROM ({_MARKOV_ORACLE}) t",
-        f"SELECT 'tdiff' AS part, c_custkey AS a, {_NB} AS b, "
-        f"n_changed AS n, status AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_TDIFF_ORACLE}) t",
-        f"SELECT 'pysource' AS part, doc_id AS a, {_NB} AS b, "
-        f"n_chars AS n, source AS k, text AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_PYSOURCE_ORACLE}) t",
-        f"SELECT 'paths' AS part, {_NB} AS a, {_NB} AS b, n_keys AS n, "
-        f"{_NS} AS k, path AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_PATHS_ORACLE}) t",
-        f"SELECT 'range1h' AS part, user_id AS a, event_id AS b, "
-        f"n_1h AS n, {_NS} AS k, {_NS} AS s, vmax_1h AS v, true AS ok "
-        f"FROM ({_RANGE1H_ORACLE}) t",
-        f"SELECT 'tri' AS part, node AS a, {_NB} AS b, n_tri AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_TRIANGLE_ORACLE}) t",
-        f"SELECT 'udtf' AS part, doc_id AS a, CAST(pos AS BIGINT) AS b, "
-        f"CAST(char_start AS BIGINT) AS n, {_NS} AS k, span AS s, "
-        f"{_ND} AS v, true AS ok FROM ({_UDTF_ORACLE}) t",
-        f"SELECT 'variant' AS part, event_id AS a, {_NB} AS b, "
-        f"CAST(k_val AS BIGINT) AS n, {_NS} AS k, {_NS} AS s, {_ND} AS v, "
-        f"ok FROM ({_VARIANT_ORACLE}) t",
-        f"SELECT 'mg' AS part, {_NB} AS a, {_NB} AS b, n_exact AS n, "
-        f"item AS k, {_NS} AS s, {_ND} AS v, ok FROM ({_MG_ORACLE}) t",
-        f"SELECT 'tpch' AS part, {_NB} AS a, {_NB} AS b, n, k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_TPCH_SHAPES_ORACLE}) t",
-        f"SELECT 'tpch2' AS part, {_NB} AS a, {_NB} AS b, n, k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_TPCH_SHAPES2_ORACLE}) t",
-        f"SELECT 'rrf' AS part, query_id AS a, id AS b, rrf_scaled AS n, "
-        f"CAST(n_lists AS VARCHAR) AS k, {_NS} AS s, "
-        f"CAST(fused_rank AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_SQL['hybrid_rrf_retrieval']}) t",
-        f"SELECT 'pipeline' AS part, doc_id AS a, n_copies AS b, "
-        f"CAST(n_ws_tokens AS BIGINT) AS n, split AS k, "
-        f"CAST(n_bpe_tokens AS VARCHAR) AS s, contamination_ratio AS v, "
-        f"true AS ok FROM ({_SQL['corpus_training_pipeline']}) t",
-        f"SELECT 'cdc2' AS part, c_custkey AS a, {_NB} AS b, {_NB} AS n, "
-        f"op AS k, c_name || '|' || c_mktsegment AS s, "
-        f"CAST(c_acctbal AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_SNAPSHOT_CDC_ORACLE}) t",
-        "SELECT 'scdlk' AS part, o_orderkey AS a, at_v AS b, "
-        "valid_from_v AS n, o_orderstatus AS k, CAST(NULL AS VARCHAR) AS s, "
-        "total AS v, true AS ok FROM ("
-        + _SCD2_LOOKUP_ORACLE.format(cdc=_CDC_SQL)
-        + ") t",
-        f"SELECT 'ppl' AS part, doc_id AS a, {_NB} AS b, n_bigrams AS n, "
-        f"{_NS} AS k, {_NS} AS s, ppl AS v, true AS ok "
-        f"FROM ({_PPL_ORACLE}) t",
-        f"SELECT 'cbkt' AS part, doc_id AS a, bucket_id AS b, "
-        f"n_bigrams AS n, lang AS k, bucket AS s, ppl AS v, true AS ok "
-        f"FROM ({_CBKT_ORACLE}) t",
-        f"SELECT 'jsd' AS part, {_NB} AS a, js_scaled AS b, {_NB} AS n, "
-        f"group_a AS k, group_b AS s, js AS v, true AS ok "
-        f"FROM ({_JSD_ORACLE}) t",
-        f"SELECT 'ppj_'||part AS part, a, b, {_NB} AS n, {_NS} AS k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_PPJOIN_ORACLE}) t",
-        f"SELECT 'gsplit' AS part, doc_id AS a, group_rep AS b, "
-        f"{_NB} AS n, split AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_GSPLIT_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_UNIMAX_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_OLAP_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_AHASH_ORACLE}) t",
-        f"SELECT part, a, b, n, k, s, v, ok FROM ({_AUDIO_ORACLE}) t",
-        f"SELECT 'y4m' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_Y4M_ORACLE}) t",
-        f"SELECT 'avi' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_AVI_ORACLE}) t",
-        f"SELECT 'h264' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_MP4_ORACLE}) t",
-        f"SELECT 'h264p' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) || ':' "
-        f"|| CAST(is_key AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_MP4P_ORACLE}) t",
-        f"SELECT 'fmp4' AS part, doc_id AS a, CAST(frame_idx AS BIGINT) "
-        f"AS b, y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"CAST(y_min AS VARCHAR) || ':' || CAST(y_max AS VARCHAR) AS s, "
-        f"CAST(ts_ms AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_FMP4_ORACLE}) t",
-        f"SELECT 'g711' AS part, doc_id AS a, n_samples AS b, s_sum AS n, "
-        f"law AS k, "
-        f"CAST(s_min AS VARCHAR) || ':' || CAST(s_max AS VARCHAR) AS s, "
-        f"CAST(sample_rate AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_G711_ORACLE}) t",
-        f"SELECT part, a, b, n, {_NS} AS k, {_NS} AS s, {_ND} AS v, ok "
-        f"FROM ({_SDD_ORACLE}) t",
-        f"SELECT 'tune_' || family AS part, target_scaled AS a, "
-        f"param_id AS b, cost AS n, "
-        f"CAST(p1 AS VARCHAR) || 'x' || CAST(p2 AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(recall_scaled AS DOUBLE) AS v, meets AS ok "
-        f"FROM ({_SQL['tune_recall_params']}) t",
-        f"SELECT 'jpeg_' || codec AS part, doc_id AS a, "
-        f"CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_JPEG_ORACLE}) t",
-        f"SELECT 'tiff' AS part, doc_id AS a, CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_TIFF_ORACLE}) t",
-        f"SELECT 'gif' AS part, doc_id AS a, CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_GIF_ORACLE}) t",
-        f"SELECT 'thumb' AS part, doc_id AS a, CAST(y_min AS BIGINT) AS b, "
-        f"y_sum AS n, "
-        f"CAST(width AS VARCHAR) || 'x' || CAST(height AS VARCHAR) AS k, "
-        f"{_NS} AS s, CAST(y_max AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_THUMB_ORACLE}) t",
-        f"SELECT 'xfmt_'||part AS part, a, b, n, {_NS} AS k, {_NS} AS s, "
-        f"{_ND} AS v, ok FROM ({_XFMT_ORACLE}) t",
-        f"SELECT 'kcore' AS part, node AS a, deg AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_kcore_oracle()}) t",
-        f"SELECT 'lpa' AS part, node AS a, lab AS b, {_NB} AS n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_lpa_oracle()}) t",
-        f"SELECT 'contain' AS part, id_a AS a, id_b AS b, shared AS n, "
-        f"CAST(n_a AS VARCHAR) AS k, CAST(n_b AS VARCHAR) AS s, "
-        f"containment AS v, true AS ok FROM ({_CONTAIN_ORACLE}) t",
-        f"SELECT 'ileave' AS part, doc_id AS a, interleave_key AS b, "
-        f"pos AS n, lang AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_ILEAVE_ORACLE}) t",
-        f"SELECT 'gopher' AS part, doc_id AS a, n_words AS b, "
-        f"sum_word_len AS n, keep AS k, rule_bits AS s, "
-        f"CAST(n_lines AS DOUBLE) AS v, true AS ok "
-        f"FROM ({_GOPHER_ORACLE}) t",
-        f"SELECT 'novel' AS part, doc_id AS a, n_grams AS b, "
-        f"n_novel AS n, {_NS} AS k, {_NS} AS s, novelty AS v, "
-        f"true AS ok FROM ({_NOVEL_ORACLE}) t",
-        f"SELECT 'entropy' AS part, doc_id AS a, n_chars AS b, "
-        f"n_distinct_chars AS n, {_NS} AS k, {_NS} AS s, entropy AS v, "
-        f"true AS ok FROM ({_ENTROPY_ORACLE}) t",
-        f"SELECT 'naa_'||part AS part, {_NB} AS a, s AS b, n, "
-        f"{_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SQL['sql_null_aware_anti']}) t",
-        f"SELECT 'preagg' AS part, {_NB} AS a, {_NB} AS b, n_rows AS n, "
-        f"n_name AS k, {_NS} AS s, sum_rev AS v, true AS ok "
-        f"FROM ({_PREAGG_ORACLE}) t",
-        f"SELECT 'exp_'||part AS part, c_custkey AS a, {_NB} AS b, "
-        f"{_NB} AS n, failed AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_EXPECT_ORACLE}) t",
-        f"SELECT 'inc_'||part AS part, a, b, n, {_NS} AS k, "
-        f"{_NS} AS s, v, true AS ok FROM ({_INC_ORACLE}) t",
-        f"SELECT 'semdedup_' || part AS part, {_NB} AS a, {_NB} AS b, "
-        f"n, {_NS} AS k, {_NS} AS s, {_ND} AS v, true AS ok "
-        f"FROM ({_SQL['dedup_semantic']}) t",
-    ]
+# ---------------------------------------------------------------------------
+# Streaming incremental near-dup dedup (round 13): the continuously-
+# ingesting-corpus composition of the txn sink and the MinHash probe.
+# ---------------------------------------------------------------------------
+
+
+
+@register(
+    "stream_incremental_dedup",
+    oracle=_SDD_ORACLE,
+    doc="Streaming incremental near-dup dedup (round 13 — streaming/"
+    "jobs.py::stream_near_dup_ingest): the continuously-ingesting-"
+    "corpus composition of two verified pieces — per microbatch, the "
+    "incoming docs are shingled/signed/banded ONCE, probed against the "
+    "ACCUMULATED index txn tables for cross-batch duplicates (work ∝ "
+    "batch + matched buckets, never corpus) and against themselves for "
+    "within-batch pairs, then dup pairs and index rows append under "
+    "app_txn idempotence (sources/txn.py) so every pair is recorded "
+    "EXACTLY ONCE across restarts/replays.  Fixture: distinct-text "
+    "shingleable reps stream in 3 microbatches (sequential availableNow "
+    "deliveries — the stream_fbmerge_check pattern), then a 4th batch "
+    "plants EXACT twins (id + 300000, the guarded _twin_id offset) of "
+    "every 13th rep.  Identical text => identical signature => same "
+    "bucket in every band, so each twin MUST surface with jaccard "
+    "exactly 1.0 (the dedup_incremental_probe containment guarantee, "
+    "now across the streaming boundary): part=sdd_planted pins each "
+    "expected (rep, twin) pair's presence per-row; sdd_containment "
+    "pins found == planted; sdd_restart REPLAYS every batch against a "
+    "fresh checkpoint and pins the dups table unchanged (the exactly-"
+    "once half); sdd_bounds pins every emitted pair inside "
+    "[threshold, 1].  Hash-seed-dependent natural near-dup pairs stay "
+    "engine-side (they ride the table but not the oracle), and the "
+    "runtime path (restarts, drop-mode chains) is pinned in "
+    "tests/test_streaming.py.",
 )
+def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
+    import tempfile
+
+    from ..operators.dedup import collapse_exact_first
+    from ..operators.pinning import eager_pin
+    from ..sources.txn import txn_read
+    from ..streaming.jobs import stream_near_dup_ingest
+    from .llm_data import _twin_id
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    shingleable = F.col("text").rlike(r"(^| )\S+ \S+ \S+")
+    base = eager_pin(
+        collapse_exact_first(docs, "text", "doc_id").where(shingleable)
+    )
+    planted = eager_pin(base.where(F.col("doc_id") % 13 == 0))
+    twins = planted.select(
+        _twin_id(F.col("doc_id")).alias("doc_id"), "text"
+    )
+
+    scratch = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
+    )
+    os.makedirs(scratch, exist_ok=True)
+    work = tempfile.mkdtemp(prefix="sdd_", dir=scratch)
+    try:
+        src = os.path.join(work, "src")
+        index_dir = os.path.join(work, "idx")
+
+        def run(ckpt: str) -> None:
+            # maxFilesPerTrigger=1: a FRESH-checkpoint replay must
+            # re-deliver the same four per-file microbatches (ids 0-3),
+            # exercising every app_txn no-op — without it the replay
+            # collapses into one batch and only id 0's idempotence is
+            # checked (round-13 review finding)
+            stream = (
+                spark.readStream.schema(base.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            q = (
+                stream_near_dup_ingest(
+                    stream, index_dir, ckpt, app_id="sdd",
+                    index_duplicates=True,
+                )
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+        ckpt = os.path.join(work, "ckpt")
+        # three deliveries + one twin delivery, each its own microbatch
+        for kk in range(3):
+            base.where(F.col("doc_id") % 3 == kk).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+            run(ckpt)
+        twins.coalesce(1).write.mode("append").parquet(src)
+        run(ckpt)
+        dups1 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
+        # FULL replay against a fresh checkpoint: every append must be
+        # an app_txn no-op — the dups table byte-identical
+        run(os.path.join(work, "ckpt2"))
+        dups2 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+    exact1 = dups1.where(F.col("jaccard") == 1.0).select(
+        "new_id", "existing_id"
+    )
+    planted_rows = planted.select(
+        F.lit("sdd_planted").alias("part"),
+        F.col("doc_id").alias("a"),
+        (F.col("doc_id") + 300000).alias("b"),
+        F.lit(None).cast("bigint").alias("n"),
+    ).join(
+        exact1.select(
+            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
+        ).withColumn("ok", F.lit(True)),
+        ["a", "b"],
+        "left",
+    ).select("part", "a", "b", "n", F.coalesce("ok", F.lit(False)).alias("ok"))
+    nulls = [
+        F.lit(None).cast("bigint").alias("a"),
+        F.lit(None).cast("bigint").alias("b"),
+    ]
+    n_found = planted.select(
+        F.col("doc_id").alias("a"),
+        (F.col("doc_id") + 300000).alias("b"),
+    ).join(
+        exact1.select(
+            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
+        ),
+        ["a", "b"],
+        "left_semi",
+    ).agg(F.count("*").alias("h"))
+    containment = (
+        planted.agg(F.count("*").cast("bigint").alias("t"))
+        .crossJoin(F.broadcast(n_found))
+        .select(
+            F.lit("sdd_containment").alias("part"),
+            *nulls,
+            F.col("t").alias("n"),
+            (F.col("h") == F.col("t")).alias("ok"),
+        )
+    )
+    unchanged = (
+        dups1.exceptAll(dups2).isEmpty()
+        and dups2.exceptAll(dups1).isEmpty()
+    )
+    restart = planted.agg(F.count("*").cast("bigint").alias("n")).select(
+        F.lit("sdd_restart").alias("part"),
+        *nulls,
+        "n",
+        F.lit(bool(unchanged)).alias("ok"),
+    )
+    bounds = dups1.agg(
+        F.coalesce(
+            F.min(
+                (F.col("jaccard") >= 0.5) & (F.col("jaccard") <= 1.0)
+            ),
+            F.lit(True),
+        ).alias("ok")
+    ).select(
+        F.lit("sdd_bounds").alias("part"),
+        *nulls,
+        F.lit(None).cast("bigint").alias("n"),
+        "ok",
+    )
+    return (
+        planted_rows.unionByName(containment)
+        .unionByName(restart)
+        .unionByName(bounds)
+    )
+
+
+# round-13: streaming incremental near-dup, riding extension_battery
+# (part=sdd_*)
+subsume("stream_incremental_dedup")
+
+
+# One entry per extension_battery branch: (tag, constituent, slots).
+#
+# * tag — the branch's part value; a tag ending in "_" is a prefix
+#   family whose part is tag || the constituent's own `part` column
+#   ("jdbc_" -> jdbc_write_read, jdbc_parallel, ...).
+# * constituent — the SUBSUMED query whose registered fn (Spark side)
+#   and registered oracle (DuckDB side) the branch projects.
+# * slots — one SQL expression per shared column (part, a, b, n, k, s,
+#   v, ok).  The same text runs through F.expr and through DuckDB, so
+#   it sticks to syntax both engines read identically: CAST(x AS
+#   BIGINT|DOUBLE|STRING) (never VARCHAR: Spark wants a size), ||,
+#   coalesce, arithmetic.  A missing slot is a typed NULL, a missing ok
+#   is true, and `part` defaults to the tag as above.  The one function
+#   the engines spell differently is written as a (spark, duckdb) pair.
+#
+# Every CAST(... AS BIGINT) below reads an integer column on both sides,
+# where it changes no value.  Never cast a fractional column to an
+# integer here: DuckDB rounds CAST(2.7 AS BIGINT) to 3 where Spark
+# truncates it to 2.  tests/test_oracle_parity pins each rendered oracle
+# branch to the shared schema, so a branch that drifts fails by name.
+_PASS = {c: c for c in ("part", "a", "b", "n", "k", "s", "v", "ok")}
+_WXH = "CAST(width AS STRING) || 'x' || CAST(height AS STRING)"
+_YMM = "CAST(y_min AS STRING) || ':' || CAST(y_max AS STRING)"
+_FRAME = {
+    "a": "CAST(doc_id AS BIGINT)",
+    "b": "CAST(frame_idx AS BIGINT)",
+    "n": "CAST(y_sum AS BIGINT)",
+    "k": _WXH,
+    "s": _YMM,
+    "v": "CAST(ts_ms AS DOUBLE)",
+}
+_IMAGE = {
+    "a": "CAST(doc_id AS BIGINT)",
+    "b": "CAST(y_min AS BIGINT)",
+    "n": "CAST(y_sum AS BIGINT)",
+    "k": _WXH,
+    "v": "CAST(y_max AS DOUBLE)",
+}
+
+_EXT_BRANCHES: list[tuple[str, str, dict]] = [
+    ("jdbc_", "sink_jdbc_roundtrip", {
+        "a": "CAST(c_custkey AS BIGINT)", "k": "c_mktsegment",
+        "s": "c_name", "v": "CAST(c_acctbal AS DOUBLE)", "ok": "ok"}),
+    ("js_", "join_scale_battery", {
+        "n": "CAST(n AS BIGINT)", "k": "k", "v": "CAST(v AS DOUBLE)",
+        "ok": "ok"}),
+    ("bm25", "text_bm25_scores", {
+        "a": "CAST(doc_id AS BIGINT)", "v": "CAST(bm25 AS DOUBLE)"}),
+    ("ts_", "timeseries_battery", {
+        "a": "CAST(uid AS BIGINT)", "b": "CAST(t AS BIGINT)",
+        "n": "CAST(n AS BIGINT)", "v": "CAST(v AS DOUBLE)"}),
+    ("lk_", "linkage_battery", {
+        "a": "CAST(a AS BIGINT)", "b": "CAST(b AS BIGINT)",
+        "n": "CAST(d AS BIGINT)"}),
+    ("cos", "sim_cosine_topk", {
+        "a": "CAST(query_id AS BIGINT)", "b": "CAST(neighbor_id AS BIGINT)",
+        "n": "CAST(rank AS BIGINT)"}),
+    ("segdedup", "text_segment_dedup", {
+        "a": "CAST(doc_id AS BIGINT)", "n": "CAST(n_kept AS BIGINT)",
+        "s": "clean_text"}),
+    ("cms_", "agg_count_min", {
+        "a": "CAST(a AS BIGINT)", "b": "CAST(b AS BIGINT)",
+        "n": "CAST(n AS BIGINT)"}),
+    ("bf_", "agg_bloom_membership", {
+        "a": "CAST(a AS BIGINT)", "b": "CAST(b AS BIGINT)",
+        "n": "CAST(n AS BIGINT)"}),
+    ("mba", "agg_market_basket", {
+        "a": "CAST(item_a AS BIGINT)", "b": "CAST(item_b AS BIGINT)",
+        "n": "c_ab", "k": "CAST(c_a AS STRING)", "s": "CAST(c_b AS STRING)",
+        "v": "confidence"}),
+    # at_v rides the double slot; ks itself is fully determined by the
+    # hashed integers (n / (a*b)) and is value-checked in the
+    # constituent's own parity test
+    ("ks", "agg_ks_drift", {
+        "a": "CAST(n_a AS BIGINT)", "b": "CAST(n_b AS BIGINT)",
+        "n": "CAST(d_scaled AS BIGINT)", "v": "at_v"}),
+    ("chi2", "agg_chi_square", {
+        "a": "observed", "b": "n_a", "n": "n_b", "k": "CAST(a AS STRING)",
+        "s": "CAST(b AS STRING)", "v": "contrib"}),
+    ("vocab", "text_vocab_profile", {
+        "a": "n_tokens", "b": "n_types", "n": "n_hapax", "k": "source",
+        "s": "CAST(n_docs AS STRING)", "v": "ttr"}),
+    ("benford", "agg_benford_audit", {
+        "a": "CAST(digit AS BIGINT)", "b": "n", "n": "n_total",
+        "v": "dev"}),
+    # timestamps ride the string slots as epoch-micro integers (integer
+    # formatting is deterministic cross-engine)
+    ("streak", "events_flag_streaks", {
+        "a": "CAST(user_id AS BIGINT)", "b": "streak_len",
+        "n": "n_events_before",
+        "k": ("CAST(unix_micros(start_ts) AS STRING)",
+              "CAST(epoch_us(start_ts) AS STRING)"),
+        "s": ("CAST(unix_micros(end_ts) AS STRING)",
+              "CAST(epoch_us(end_ts) AS STRING)")}),
+    ("rollmad", "timeseries_rolling_mad", {
+        "a": "CAST(user_id AS BIGINT)", "b": "CAST(event_id AS BIGINT)",
+        "n": "CAST(n_obs AS BIGINT)", "v": "roll_med + roll_mad",
+        "ok": "is_anomaly"}),
+    ("cusum", "timeseries_cusum", {
+        "a": "CAST(user_id AS BIGINT)", "b": "CAST(event_id AS BIGINT)",
+        "n": "CAST(cusum_pos AS BIGINT)", "k": "CAST(cusum_neg AS STRING)",
+        "s": "CAST(alarm_neg AS STRING)", "v": "value", "ok": "alarm_pos"}),
+    ("winnow", "text_winnow_fingerprints", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "fp_pos", "n": "fp_hash"}),
+    ("qnorm", "corpus_quantile_normalize", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(norm_value AS BIGINT)",
+        "n": "pooled_target", "k": "source", "s": "CAST(src_rank AS STRING)",
+        "v": "CAST(n_chars AS DOUBLE)"}),
+    ("sdec", "timeseries_seasonal_decompose", {
+        "a": "epoch_day", "b": "y_scaled", "n": "n_obs * 8 + phase",
+        "k": "event_type",
+        "v": "y + coalesce(trend, 0) + coalesce(seasonal, 0) "
+        "+ coalesce(remainder, 0)"}),
+    ("twap", "timeseries_twap", {
+        "a": "CAST(user_id AS BIGINT)", "b": "bucket", "n": "covered_us",
+        "k": "CAST(n_pieces AS STRING)", "v": "twap"}),
+    ("skew", "agg_key_skew", {
+        "a": "n_keys", "b": "max_count", "n": "n_rows",
+        "k": "CAST(top1_ppm AS STRING)",
+        "s": "CAST(p50_count AS STRING) || ':' || CAST(p90_count AS STRING)"
+        " || ':' || CAST(p99_count AS STRING)",
+        "v": "gini"}),
+    ("ltrend", "timeseries_linear_trend", {
+        "a": "n_obs", "k": "event_type", "v": "slope + intercept + r2"}),
+    ("wquant", "agg_weighted_quantiles", {
+        "a": "w_total", "k": "l_returnflag",
+        "v": "wq_1_2 + wq_9_10 + wq_99_100"}),
+    ("pmi", "text_pmi_collocations", {
+        "a": "c_xy", "b": "c_x * 100000 + c_y", "n": "n_pairs", "k": "w1",
+        "s": "w2", "v": "pmi"}),
+    ("burst", "events_burstiness", {
+        "a": "CAST(user_id AS BIGINT)", "b": "n_gaps",
+        "v": "mean_gap_us + coalesce(cv2, 0) + coalesce(burstiness, 0)"}),
+    ("wau", "events_active_users", {
+        "a": "epoch_day", "b": "dau", "n": "wau", "ok": "wau_within_bound"}),
+    ("ovlp", "events_audience_overlap", {
+        "a": "n_a", "b": "n_b", "n": "n_inter * 1000000 + n_union",
+        "k": "g1", "s": "g2", "ok": "inter_within_bound"}),
+    ("duprate", "corpus_dup_rate", {
+        "a": "n_docs", "b": "n_distinct",
+        "n": "n_clones * 1000 + max_clone_count", "k": "source",
+        "s": "CAST(dup_ppm AS STRING)"}),
+    ("wmark", "events_watermark_audit", {
+        "a": "n_events", "b": "n_late", "n": "p99_us",
+        "k": "CAST(p50_us AS STRING)", "s": "CAST(p95_us AS STRING)",
+        "v": "CAST(max_us AS DOUBLE)"}),
+    ("fanout", "join_fanout_preflight", {
+        "a": "predicted_rows", "b": "max_key_product",
+        "n": "n_keys_left * 1000000 + n_keys_right * 1000 + n_keys_both",
+        "k": "CAST(n_left AS STRING)", "s": "CAST(n_right AS STRING)",
+        "v": "CAST(hot_ppm AS DOUBLE)"}),
+    ("rdv", "corpus_rendezvous_shards", {
+        "a": "CAST(doc_id AS BIGINT)", "k": "shard"}),
+    ("fastss", "linkage_fastss_pairs", {
+        "a": "c_custkey", "b": "n_neighbors", "n": "nbr_id_sum",
+        "k": "CAST(nbr_min AS STRING)", "s": "CAST(nbr_max AS STRING)"}),
+    ("spansd", "text_span_dedup", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(n_dup_spans AS BIGINT)",
+        "n": "CAST(n_kept AS BIGINT)", "k": "CAST(n_spans AS STRING)",
+        "s": "clean_text", "v": "CAST(dup_span_frac AS DOUBLE)"}),
+    ("dsir", "text_dsir_importance", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(score_scaled AS BIGINT)",
+        "n": "CAST(n_grams AS BIGINT)", "v": "CAST(score AS DOUBLE)"}),
+    ("lm", "text_bigram_lm", {
+        "a": "CAST(c_w1 AS BIGINT)", "b": "CAST(cont AS BIGINT)",
+        "n": "CAST(c AS BIGINT)", "k": "w1", "s": "w2",
+        "v": "CAST(p_kn AS DOUBLE)"}),
+    ("qscore", "text_quality_classifier", {
+        "a": "CAST(doc_id AS BIGINT)", "v": "CAST(score AS DOUBLE)",
+        "ok": "keep"}),
+    ("markov", "events_markov_transitions", {
+        "n": "CAST(n AS BIGINT)", "k": "src", "s": "dst",
+        "v": "CAST(p AS DOUBLE)"}),
+    ("tdiff", "etl_table_diff", {
+        "a": "CAST(c_custkey AS BIGINT)", "n": "CAST(n_changed AS BIGINT)",
+        "k": "status"}),
+    ("pysource", "source_python_datasource", {
+        "a": "CAST(doc_id AS BIGINT)", "n": "CAST(n_chars AS BIGINT)",
+        "k": "source", "s": "text"}),
+    ("paths", "events_session_paths", {
+        "n": "CAST(n_keys AS BIGINT)", "s": "path"}),
+    ("range1h", "window_time_range_frame", {
+        "a": "CAST(user_id AS BIGINT)", "b": "CAST(event_id AS BIGINT)",
+        "n": "CAST(n_1h AS BIGINT)", "v": "CAST(vmax_1h AS DOUBLE)"}),
+    ("tri", "graph_triangle_counts", {
+        "a": "CAST(node AS BIGINT)", "n": "CAST(n_tri AS BIGINT)"}),
+    ("udtf", "udtf_token_spans", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(pos AS BIGINT)",
+        "n": "CAST(char_start AS BIGINT)", "s": "span"}),
+    ("variant", "events_variant_extract", {
+        "a": "CAST(event_id AS BIGINT)", "n": "CAST(k_val AS BIGINT)",
+        "ok": "ok"}),
+    ("mg", "agg_heavy_hitters_mg", {
+        "n": "CAST(n_exact AS BIGINT)", "k": "item", "ok": "ok"}),
+    ("tpch", "sql_tpch_shapes", {
+        "n": "CAST(n AS BIGINT)", "k": "k", "v": "CAST(v AS DOUBLE)"}),
+    ("tpch2", "sql_tpch_shapes2", {
+        "n": "CAST(n AS BIGINT)", "k": "k", "v": "CAST(v AS DOUBLE)"}),
+    ("rrf", "hybrid_rrf_retrieval", {
+        "a": "CAST(query_id AS BIGINT)", "b": "CAST(id AS BIGINT)",
+        "n": "CAST(rrf_scaled AS BIGINT)", "k": "CAST(n_lists AS STRING)",
+        "v": "CAST(fused_rank AS DOUBLE)"}),
+    ("pipeline", "corpus_training_pipeline", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(n_copies AS BIGINT)",
+        "n": "CAST(n_ws_tokens AS BIGINT)", "k": "split",
+        "s": "CAST(n_bpe_tokens AS STRING)",
+        "v": "CAST(contamination_ratio AS DOUBLE)"}),
+    # || propagates NULL in both engines, so 'D' rows keep a NULL payload
+    ("cdc2", "etl_snapshot_cdc", {
+        "a": "CAST(c_custkey AS BIGINT)", "k": "op",
+        "s": "c_name || '|' || c_mktsegment",
+        "v": "CAST(c_acctbal AS DOUBLE)"}),
+    ("scdlk", "etl_scd2_lookup", {
+        "a": "CAST(o_orderkey AS BIGINT)", "b": "CAST(at_v AS BIGINT)",
+        "n": "CAST(valid_from_v AS BIGINT)", "k": "o_orderstatus",
+        "v": "CAST(total AS DOUBLE)"}),
+    ("ppl", "text_lm_perplexity", {
+        "a": "CAST(doc_id AS BIGINT)", "n": "CAST(n_bigrams AS BIGINT)",
+        "v": "CAST(ppl AS DOUBLE)"}),
+    ("cbkt", "text_ccnet_buckets", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(bucket_id AS BIGINT)",
+        "n": "CAST(n_bigrams AS BIGINT)", "k": "lang", "s": "bucket",
+        "v": "CAST(ppl AS DOUBLE)"}),
+    ("jsd", "text_js_divergence", {
+        "b": "CAST(js_scaled AS BIGINT)", "k": "group_a", "s": "group_b",
+        "v": "CAST(js AS DOUBLE)"}),
+    ("ppj_", "dedup_ppjoin_exact", {
+        "a": "CAST(a AS BIGINT)", "b": "CAST(b AS BIGINT)",
+        "v": "CAST(v AS DOUBLE)"}),
+    ("gsplit", "corpus_group_safe_split", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(group_rep AS BIGINT)",
+        "k": "split"}),
+    # pass-through branches already emit the shared schema and tag
+    # their own parts
+    ("umax_", "corpus_unimax", {**_PASS, "n": "CAST(n AS BIGINT)"}),
+    ("olap_", "sql_olap_shapes", _PASS),
+    ("ahash_", "multimodal_ahash_dedup", _PASS),
+    ("aud_", "multimodal_audio_stats", _PASS),
+    ("y4m", "multimodal_y4m_stats", _FRAME),
+    ("avi", "multimodal_avi_stats", _FRAME),
+    ("h264", "multimodal_mp4_stats", _FRAME),
+    ("h264p", "multimodal_mp4_pgop_stats", {
+        **_FRAME, "s": _YMM + " || ':' || CAST(is_key AS STRING)"}),
+    ("fmp4", "multimodal_mp4_frag_stats", _FRAME),
+    ("g711", "multimodal_g711_stats", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(n_samples AS BIGINT)",
+        "n": "CAST(s_sum AS BIGINT)", "k": "law",
+        "s": "CAST(s_min AS STRING) || ':' || CAST(s_max AS STRING)",
+        "v": "CAST(sample_rate AS DOUBLE)"}),
+    ("sdd_", "stream_incremental_dedup", {
+        "part": "part", "a": "CAST(a AS BIGINT)", "b": "CAST(b AS BIGINT)",
+        "n": "CAST(n AS BIGINT)", "ok": "ok"}),
+    ("tune_", "tune_recall_params", {
+        "part": "'tune_' || family", "a": "CAST(target_scaled AS BIGINT)",
+        "b": "CAST(param_id AS BIGINT)", "n": "CAST(cost AS BIGINT)",
+        "k": "CAST(p1 AS STRING) || 'x' || CAST(p2 AS STRING)",
+        "v": "CAST(recall_scaled AS DOUBLE)", "ok": "meets"}),
+    ("jpeg_", "multimodal_jpeg_stats", {
+        **_IMAGE, "part": "'jpeg_' || codec"}),
+    ("gif", "multimodal_gif_stats", _IMAGE),
+    ("tiff", "multimodal_tiff_stats", _IMAGE),
+    ("thumb", "multimodal_thumbnail_pipeline", _IMAGE),
+    ("xfmt_", "multimodal_cross_format_dedup", {
+        "a": "a", "b": "b", "n": "n", "ok": "ok"}),
+    ("kcore", "graph_kcore", {"a": "node", "b": "deg"}),
+    ("lpa", "graph_label_propagation", {"a": "node", "b": "lab"}),
+    ("contain", "dedup_containment_pairs", {
+        "a": "CAST(id_a AS BIGINT)", "b": "CAST(id_b AS BIGINT)",
+        "n": "shared", "k": "CAST(n_a AS STRING)",
+        "s": "CAST(n_b AS STRING)", "v": "containment"}),
+    ("ileave", "corpus_interleave", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "interleave_key", "n": "pos",
+        "k": "lang"}),
+    ("gopher", "text_gopher_rules", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "n_words", "n": "sum_word_len",
+        "k": "keep", "s": "rule_bits", "v": "CAST(n_lines AS DOUBLE)"}),
+    ("novel", "text_ngram_novelty", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(n_grams AS BIGINT)",
+        "n": "CAST(n_novel AS BIGINT)", "v": "novelty"}),
+    ("entropy", "text_char_entropy", {
+        "a": "CAST(doc_id AS BIGINT)", "b": "CAST(n_chars AS BIGINT)",
+        "n": "CAST(n_distinct_chars AS BIGINT)", "v": "entropy"}),
+    ("naa_", "sql_null_aware_anti", {
+        "b": "CAST(s AS BIGINT)", "n": "CAST(n AS BIGINT)"}),
+    ("preagg", "join_preagg_pushdown", {
+        "n": "CAST(n_rows AS BIGINT)", "k": "n_name",
+        "v": "CAST(sum_rev AS DOUBLE)"}),
+    ("exp_", "etl_expectations", {
+        "a": "CAST(c_custkey AS BIGINT)", "k": "failed"}),
+    ("inc_", "incremental_battery", {
+        "a": "CAST(a AS BIGINT)", "b": "CAST(b AS BIGINT)",
+        "n": "CAST(n AS BIGINT)", "v": "CAST(v AS DOUBLE)"}),
+    ("semdedup_", "dedup_semantic", {"n": "CAST(n AS BIGINT)", "ok": "ok"}),
+]
+
+_DEFAULT_SLOTS = {
+    "a": "CAST(NULL AS BIGINT)",
+    "b": "CAST(NULL AS BIGINT)",
+    "n": "CAST(NULL AS BIGINT)",
+    "k": "CAST(NULL AS STRING)",
+    "s": "CAST(NULL AS STRING)",
+    "v": "CAST(NULL AS DOUBLE)",
+    "ok": "true",
+}
+
+
+def _branch_columns(tag: str, slots: dict, engine: int) -> list[tuple[str, str]]:
+    """(column, expression) pairs of one branch in shared-schema order;
+    engine 0 = Spark, 1 = DuckDB picks a side of any (spark, duckdb)
+    slot pair."""
+    part = f"'{tag}' || part" if tag.endswith("_") else f"'{tag}'"
+    exprs = {"part": part, **_DEFAULT_SLOTS, **slots}
+    return [
+        (col, e[engine] if isinstance(e, tuple) else e)
+        for col, e in exprs.items()
+    ]
+
+
+def _ext_branch_sql(tag: str, constituent: str, slots: dict) -> str:
+    cols = ", ".join(f"{e} AS {c}" for c, e in _branch_columns(tag, slots, 1))
+    return f"SELECT {cols} FROM ({lookup(constituent).oracle}) t"
+
+
+_EXT_ORACLE = "\nUNION ALL\n".join(_ext_branch_sql(*b) for b in _EXT_BRANCHES)
 
 
 @register(
     "extension_battery",
     oracle=_EXT_ORACLE,
     doc="Cross-family extension surfaces in one driver slot (see the "
-    "slot-discipline note above): jdbc_* = Derby JDBC roundtrip/"
-    "parallel-stride/pushdown (sink_jdbc_roundtrip), js_* = bucketed "
-    "zero-Exchange and skew-salted joins (join_scale_battery), bm25 = "
-    "BM25 lexical scoring (text_bm25_scores), ts_* = EWMA + "
-    "grid-resample interpolation (timeseries_battery), lk_* = blocked "
-    "record linkage pairs + transitive clusters (linkage_battery), "
-    "cos = exact brute-force cosine top-k (sim_cosine_topk), "
-    "segdedup = corpus-frequency boilerplate removal "
-    "(text_segment_dedup), cms_* = count–min sketch buckets + "
-    "min-over-rows point estimates checked against exact frequencies "
-    "(agg_count_min), spansd = exact-substring span dedup — "
-    "duplicated k-token passages trimmed everywhere but their "
-    "canonical owner (text_span_dedup), dsir = DSIR hashed-n-gram "
-    "importance weights against the lang='en' target corpus "
-    "(text_dsir_importance), lm = Kneser–Ney bigram LM "
-    "statistics "
-    "(text_bigram_lm), qscore = sparse linear quality classifier "
-    "(text_quality_classifier), markov = user-journey transition "
-    "matrix (events_markov_transitions), tdiff = snapshot "
-    "reconciliation (etl_table_diff), pysource = Spark 4 Python "
-    "DataSource with plan-time filter pushdown "
-    "(source_python_datasource), paths = journey-path frequencies "
-    "(events_session_paths), range1h = trailing-1h RANGE window frame "
-    "(window_time_range_frame), tri = degree-ordered triangle counting "
-    "(graph_triangle_counts), udtf = Python UDTF token spans via "
-    "LATERAL (udtf_token_spans), variant = VariantType semi-structured "
-    "extraction (events_variant_extract), mg = Misra–Gries heavy "
-    "hitters as an invariant (agg_heavy_hitters_mg), tpch = the "
-    "Q4/Q10/Q14/Q18/Q19/Q20/Q21 warehouse shapes (sql_tpch_shapes), "
-    "tpch2 = the remaining eleven shapes completing all 22 "
-    "(sql_tpch_shapes2: Q2/Q6/Q7/Q8/Q9/Q11/Q12/Q13/Q15/Q16/Q22), "
-    "rrf = reciprocal-rank-fusion hybrid retrieval over BM25 + cosine "
-    "rank lists with an exact-integer score (hybrid_rrf_retrieval), "
-    "pipeline = the LLM-data pipeline end-to-end — quality gate → "
-    "exact dedup → decontamination → md5 split → token budgeting, the "
-    "COMPOSITION hash-checked in one row (corpus_training_pipeline), "
-    "cdc2 = "
-    "snapshot-diff CDC generation (etl_snapshot_cdc), scdlk = "
-    "point-in-time SCD2 dimension lookup (etl_scd2_lookup), ppl = "
-    "corpus-LM pseudo-perplexity scoring (text_lm_perplexity), "
-    "cbkt = CCNet per-language perplexity terciles via distributed "
-    "rank arithmetic (text_ccnet_buckets), jsd = pairwise "
-    "Jensen–Shannon divergence between per-source hashed token "
-    "distributions (text_js_divergence), "
-    "ppj_* = exact prefix-filtered set-similarity pairs + their "
-    "connected-component groups vs a brute-force + recursive-CTE "
-    "oracle (dedup_ppjoin_exact), gsplit = leakage-safe train/val/"
-    "test assignment keyed on the near-dup component representative "
-    "(corpus_group_safe_split), umax_* = UNIMAX water-filling budget "
-    "allocation + materialized per-epoch copies (corpus_unimax), "
-    "olap_* = window-over-aggregate report idioms: ratio-to-report, "
-    "year-over-year delta, Pareto cumulative share with an exact "
-    "integer-scaled 80%% cut (sql_olap_shapes).  Shared "
-    "schema (part, a, b, n, k, s, v, ok) with NULL padding typed "
-    "identically on both sides; each branch keeps its own ok pins "
-    "(JDBC stride partitioning, pushdown into Derby's WHERE, "
-    "zero-Exchange bucketed plan, _salt in join keys, classifier "
-    "keep flags).",
+    "slot-discipline note above): one branch per _EXT_BRANCHES entry, "
+    "each projecting a SUBSUMED constituent into the shared schema "
+    "(part, a, b, n, k, s, v, ok) with a part tag naming the branch.  "
+    "Each branch keeps its constituent's own ok pins (JDBC stride "
+    "partitioning, pushdown into Derby's WHERE, zero-Exchange bucketed "
+    "plan, _salt in join keys, classifier keep flags).",
 )
 def extension_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _nb() -> Column:
-        return F.lit(None).cast("long")
-
-    def _ns() -> Column:
-        return F.lit(None).cast("string")
-
-    def _nd() -> Column:
-        return F.lit(None).cast("double")
-
-    jdbc = _FN["sink_jdbc_roundtrip"](spark, sf_dir).select(
-        F.concat(F.lit("jdbc_"), F.col("part")).alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("c_mktsegment").alias("k"),
-        F.col("c_name").alias("s"),
-        F.col("c_acctbal").cast("double").alias("v"),
-        "ok",
-    )
-    js = _FN["join_scale_battery"](spark, sf_dir).select(
-        F.concat(F.lit("js_"), F.col("part")).alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        "ok",
-    )
-    bm = _FN["text_bm25_scores"](spark, sf_dir).select(
-        F.lit("bm25").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("bm25").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ts = _FN["timeseries_battery"](spark, sf_dir).select(
-        F.concat(F.lit("ts_"), F.col("part")).alias("part"),
-        F.col("uid").cast("long").alias("a"),
-        F.col("t").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    lk = _FN["linkage_battery"](spark, sf_dir).select(
-        F.concat(F.lit("lk_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("d").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cos = _FN["sim_cosine_topk"](spark, sf_dir).select(
-        F.lit("cos").alias("part"),
-        F.col("query_id").cast("long").alias("a"),
-        F.col("neighbor_id").cast("long").alias("b"),
-        F.col("rank").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    seg = text_segment_dedup(spark, sf_dir).select(
-        F.lit("segdedup").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_kept").cast("long").alias("n"),
-        _ns().alias("k"),
-        F.col("clean_text").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cms = agg_count_min(spark, sf_dir).select(
-        F.concat(F.lit("cms_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    blm = agg_bloom_membership(spark, sf_dir).select(
-        F.concat(F.lit("bf_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    mba = agg_market_basket(spark, sf_dir).select(
-        F.lit("mba").alias("part"),
-        F.col("item_a").cast("long").alias("a"),
-        F.col("item_b").cast("long").alias("b"),
-        F.col("c_ab").alias("n"),
-        F.col("c_a").cast("string").alias("k"),
-        F.col("c_b").cast("string").alias("s"),
-        F.col("confidence").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ksd = agg_ks_drift(spark, sf_dir).select(
-        F.lit("ks").alias("part"),
-        F.col("n_a").cast("long").alias("a"),
-        F.col("n_b").cast("long").alias("b"),
-        F.col("d_scaled").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("at_v").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    chi = agg_chi_square(spark, sf_dir).select(
-        F.lit("chi2").alias("part"),
-        F.col("observed").alias("a"),
-        F.col("n_a").alias("b"),
-        F.col("n_b").alias("n"),
-        F.col("a").cast("string").alias("k"),
-        F.col("b").cast("string").alias("s"),
-        F.col("contrib").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    voc = text_vocab_profile(spark, sf_dir).select(
-        F.lit("vocab").alias("part"),
-        F.col("n_tokens").alias("a"),
-        F.col("n_types").alias("b"),
-        F.col("n_hapax").alias("n"),
-        F.col("source").alias("k"),
-        F.col("n_docs").cast("string").alias("s"),
-        F.col("ttr").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ben = agg_benford_audit(spark, sf_dir).select(
-        F.lit("benford").alias("part"),
-        F.col("digit").cast("long").alias("a"),
-        F.col("n").alias("b"),
-        F.col("n_total").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("dev").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    stk = events_flag_streaks(spark, sf_dir).select(
-        F.lit("streak").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("streak_len").alias("b"),
-        F.col("n_events_before").alias("n"),
-        F.unix_micros("start_ts").cast("string").alias("k"),
-        F.unix_micros("end_ts").cast("string").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rmd = timeseries_rolling_mad(spark, sf_dir).select(
-        F.lit("rollmad").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("event_id").cast("long").alias("b"),
-        F.col("n_obs").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        (F.col("roll_med") + F.col("roll_mad")).alias("v"),
-        F.col("is_anomaly").alias("ok"),
-    )
-    fss = linkage_fastss_pairs(spark, sf_dir).select(
-        F.lit("fastss").alias("part"),
-        F.col("c_custkey").alias("a"),
-        F.col("n_neighbors").alias("b"),
-        F.col("nbr_id_sum").alias("n"),
-        F.col("nbr_min").cast("string").alias("k"),
-        F.col("nbr_max").cast("string").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rdv = corpus_rendezvous_shards(spark, sf_dir).select(
-        F.lit("rdv").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("shard").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    fan = join_fanout_preflight(spark, sf_dir).select(
-        F.lit("fanout").alias("part"),
-        F.col("predicted_rows").alias("a"),
-        F.col("max_key_product").alias("b"),
-        (
-            F.col("n_keys_left") * 1000000
-            + F.col("n_keys_right") * 1000
-            + F.col("n_keys_both")
-        ).alias("n"),
-        F.col("n_left").cast("string").alias("k"),
-        F.col("n_right").cast("string").alias("s"),
-        F.col("hot_ppm").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    wmk = events_watermark_audit(spark, sf_dir).select(
-        F.lit("wmark").alias("part"),
-        F.col("n_events").alias("a"),
-        F.col("n_late").alias("b"),
-        F.col("p99_us").alias("n"),
-        F.col("p50_us").cast("string").alias("k"),
-        F.col("p95_us").cast("string").alias("s"),
-        F.col("max_us").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    dpr = corpus_dup_rate(spark, sf_dir).select(
-        F.lit("duprate").alias("part"),
-        F.col("n_docs").alias("a"),
-        F.col("n_distinct").alias("b"),
-        (F.col("n_clones") * 1000 + F.col("max_clone_count")).alias("n"),
-        F.col("source").alias("k"),
-        F.col("dup_ppm").cast("string").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ovl = events_audience_overlap(spark, sf_dir).select(
-        F.lit("ovlp").alias("part"),
-        F.col("n_a").alias("a"),
-        F.col("n_b").alias("b"),
-        (F.col("n_inter") * 1000000 + F.col("n_union")).alias("n"),
-        F.col("g1").alias("k"),
-        F.col("g2").alias("s"),
-        _nd().alias("v"),
-        F.col("inter_within_bound").alias("ok"),
-    )
-    wau = events_active_users(spark, sf_dir).select(
-        F.lit("wau").alias("part"),
-        F.col("epoch_day").alias("a"),
-        F.col("dau").alias("b"),
-        F.col("wau").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("wau_within_bound").alias("ok"),
-    )
-    bst = events_burstiness(spark, sf_dir).select(
-        F.lit("burst").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("n_gaps").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        (
-            F.col("mean_gap_us")
-            + F.coalesce(F.col("cv2"), F.lit(0.0))
-            + F.coalesce(F.col("burstiness"), F.lit(0.0))
-        ).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pmi = text_pmi_collocations(spark, sf_dir).select(
-        F.lit("pmi").alias("part"),
-        F.col("c_xy").alias("a"),
-        (F.col("c_x") * 100000 + F.col("c_y")).alias("b"),
-        F.col("n_pairs").alias("n"),
-        F.col("w1").alias("k"),
-        F.col("w2").alias("s"),
-        F.col("pmi").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    wqt = agg_weighted_quantiles(spark, sf_dir).select(
-        F.lit("wquant").alias("part"),
-        F.col("w_total").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("l_returnflag").alias("k"),
-        _ns().alias("s"),
-        (
-            F.col("wq_1_2") + F.col("wq_9_10") + F.col("wq_99_100")
-        ).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ltr = timeseries_linear_trend(spark, sf_dir).select(
-        F.lit("ltrend").alias("part"),
-        F.col("n_obs").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("event_type").alias("k"),
-        _ns().alias("s"),
-        (F.col("slope") + F.col("intercept") + F.col("r2")).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    skw = agg_key_skew(spark, sf_dir).select(
-        F.lit("skew").alias("part"),
-        F.col("n_keys").alias("a"),
-        F.col("max_count").alias("b"),
-        F.col("n_rows").alias("n"),
-        F.col("top1_ppm").cast("string").alias("k"),
-        F.concat(
-            F.col("p50_count").cast("string"),
-            F.lit(":"),
-            F.col("p90_count").cast("string"),
-            F.lit(":"),
-            F.col("p99_count").cast("string"),
-        ).alias("s"),
-        F.col("gini").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    twp = timeseries_twap(spark, sf_dir).select(
-        F.lit("twap").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("bucket").alias("b"),
-        F.col("covered_us").alias("n"),
-        F.col("n_pieces").cast("string").alias("k"),
-        _ns().alias("s"),
-        F.col("twap").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sdc = timeseries_seasonal_decompose(spark, sf_dir).select(
-        F.lit("sdec").alias("part"),
-        F.col("epoch_day").alias("a"),
-        F.col("y_scaled").alias("b"),
-        (F.col("n_obs") * 8 + F.col("phase")).alias("n"),
-        F.col("event_type").alias("k"),
-        _ns().alias("s"),
-        (
-            F.col("y")
-            + F.coalesce(F.col("trend"), F.lit(0.0))
-            + F.coalesce(F.col("seasonal"), F.lit(0.0))
-            + F.coalesce(F.col("remainder"), F.lit(0.0))
-        ).alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    qnm = corpus_quantile_normalize(spark, sf_dir).select(
-        F.lit("qnorm").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("norm_value").cast("long").alias("b"),
-        F.col("pooled_target").alias("n"),
-        F.col("source").alias("k"),
-        F.col("src_rank").cast("string").alias("s"),
-        F.col("n_chars").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    wnw = text_winnow_fingerprints(spark, sf_dir).select(
-        F.lit("winnow").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("fp_pos").alias("b"),
-        F.col("fp_hash").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    csm = timeseries_cusum(spark, sf_dir).select(
-        F.lit("cusum").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("event_id").cast("long").alias("b"),
-        F.col("cusum_pos").alias("n"),
-        F.col("cusum_neg").cast("string").alias("k"),
-        F.col("alarm_neg").cast("string").alias("s"),
-        F.col("value").alias("v"),
-        F.col("alarm_pos").alias("ok"),
-    )
-    spn = text_span_dedup(spark, sf_dir).select(
-        F.lit("spansd").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_dup_spans").cast("long").alias("b"),
-        F.col("n_kept").cast("long").alias("n"),
-        F.col("n_spans").cast("string").alias("k"),
-        F.col("clean_text").alias("s"),
-        F.col("dup_span_frac").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    dsir = text_dsir_importance(spark, sf_dir).select(
-        F.lit("dsir").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("score_scaled").cast("long").alias("b"),
-        F.col("n_grams").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("score").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    lm = text_bigram_lm(spark, sf_dir).select(
-        F.lit("lm").alias("part"),
-        F.col("c_w1").cast("long").alias("a"),
-        F.col("cont").cast("long").alias("b"),
-        F.col("c").cast("long").alias("n"),
-        F.col("w1").alias("k"),
-        F.col("w2").alias("s"),
-        F.col("p_kn").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    qc = text_quality_classifier(spark, sf_dir).select(
-        F.lit("qscore").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("score").cast("double").alias("v"),
-        F.col("keep").alias("ok"),
-    )
-    mk = events_markov_transitions(spark, sf_dir).select(
-        F.lit("markov").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("src").alias("k"),
-        F.col("dst").alias("s"),
-        F.col("p").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    td = etl_table_diff(spark, sf_dir).select(
-        F.lit("tdiff").alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_changed").cast("long").alias("n"),
-        F.col("status").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    py = source_python_datasource(spark, sf_dir).select(
-        F.lit("pysource").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_chars").cast("long").alias("n"),
-        F.col("source").alias("k"),
-        F.col("text").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pa = events_session_paths(spark, sf_dir).select(
-        F.lit("paths").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n_keys").cast("long").alias("n"),
-        _ns().alias("k"),
-        F.col("path").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rg = window_time_range_frame(spark, sf_dir).select(
-        F.lit("range1h").alias("part"),
-        F.col("user_id").cast("long").alias("a"),
-        F.col("event_id").cast("long").alias("b"),
-        F.col("n_1h").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("vmax_1h").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tr = graph_triangle_counts(spark, sf_dir).select(
-        F.lit("tri").alias("part"),
-        F.col("node").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_tri").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ut = udtf_token_spans(spark, sf_dir).select(
-        F.lit("udtf").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("pos").cast("long").alias("b"),
-        F.col("char_start").cast("long").alias("n"),
-        _ns().alias("k"),
-        F.col("span").alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    va = events_variant_extract(spark, sf_dir).select(
-        F.lit("variant").alias("part"),
-        F.col("event_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("k_val").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    mg = agg_heavy_hitters_mg(spark, sf_dir).select(
-        F.lit("mg").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n_exact").cast("long").alias("n"),
-        F.col("item").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    tp = sql_tpch_shapes(spark, sf_dir).select(
-        F.lit("tpch").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tp2 = sql_tpch_shapes2(spark, sf_dir).select(
-        F.lit("tpch2").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        F.col("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    rrf = _FN["hybrid_rrf_retrieval"](spark, sf_dir).select(
-        F.lit("rrf").alias("part"),
-        F.col("query_id").cast("long").alias("a"),
-        F.col("id").cast("long").alias("b"),
-        F.col("rrf_scaled").cast("long").alias("n"),
-        F.col("n_lists").cast("string").alias("k"),
-        _ns().alias("s"),
-        F.col("fused_rank").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pipe = _FN["corpus_training_pipeline"](spark, sf_dir).select(
-        F.lit("pipeline").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_copies").cast("long").alias("b"),
-        F.col("n_ws_tokens").cast("long").alias("n"),
-        F.col("split").alias("k"),
-        F.col("n_bpe_tokens").cast("string").alias("s"),
-        F.col("contamination_ratio").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    c2 = etl_snapshot_cdc(spark, sf_dir).select(
-        F.lit("cdc2").alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("op").alias("k"),
-        # concat (not concat_ws): NULL-propagating like SQL ||, so 'D'
-        # rows' NULL payload stays NULL instead of collapsing to ""
-        F.concat(F.col("c_name"), F.lit("|"), F.col("c_mktsegment")).alias(
-            "s"
-        ),
-        F.col("c_acctbal").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sl = etl_scd2_lookup(spark, sf_dir).select(
-        F.lit("scdlk").alias("part"),
-        F.col("o_orderkey").cast("long").alias("a"),
-        F.col("at_v").cast("long").alias("b"),
-        F.col("valid_from_v").cast("long").alias("n"),
-        F.col("o_orderstatus").alias("k"),
-        _ns().alias("s"),
-        F.col("total").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pl = text_lm_perplexity(spark, sf_dir).select(
-        F.lit("ppl").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        _nb().alias("b"),
-        F.col("n_bigrams").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("ppl").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cbk = text_ccnet_buckets(spark, sf_dir).select(
-        F.lit("cbkt").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("bucket_id").cast("long").alias("b"),
-        F.col("n_bigrams").cast("long").alias("n"),
-        F.col("lang").alias("k"),
-        F.col("bucket").alias("s"),
-        F.col("ppl").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    jsd = text_js_divergence(spark, sf_dir).select(
-        F.lit("jsd").alias("part"),
-        _nb().alias("a"),
-        F.col("js_scaled").cast("long").alias("b"),
-        _nb().alias("n"),
-        F.col("group_a").alias("k"),
-        F.col("group_b").alias("s"),
-        F.col("js").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pj = dedup_ppjoin_exact(spark, sf_dir).select(
-        F.concat(F.lit("ppj_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    gsp = corpus_group_safe_split(spark, sf_dir).select(
-        F.lit("gsplit").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("group_rep").cast("long").alias("b"),
-        _nb().alias("n"),
-        F.col("split").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    umx = corpus_unimax(spark, sf_dir)
-    olp = sql_olap_shapes(spark, sf_dir)
-    ahd = multimodal_ahash_dedup(spark, sf_dir)
-    aud = multimodal_audio_stats(spark, sf_dir)
-    xf = multimodal_cross_format_dedup(spark, sf_dir).select(
-        F.concat(F.lit("xfmt_"), F.col("part")).alias("part"),
-        F.col("a"),
-        F.col("b"),
-        F.col("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    thm = multimodal_thumbnail_pipeline(spark, sf_dir).select(
-        F.lit("thumb").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    gifs = multimodal_gif_stats(spark, sf_dir).select(
-        F.lit("gif").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tif = multimodal_tiff_stats(spark, sf_dir).select(
-        F.lit("tiff").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    jpg = multimodal_jpeg_stats(spark, sf_dir).select(
-        F.concat(F.lit("jpeg_"), F.col("codec")).alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("y_min").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("y_max").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    y4m = multimodal_y4m_stats(spark, sf_dir).select(
-        F.lit("y4m").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    tune = _FN["tune_recall_params"](spark, sf_dir).select(
-        F.concat(F.lit("tune_"), F.col("family")).alias("part"),
-        F.col("target_scaled").cast("long").alias("a"),
-        F.col("param_id").cast("long").alias("b"),
-        F.col("cost").cast("long").alias("n"),
-        F.concat(
-            F.col("p1").cast("string"), F.lit("x"), F.col("p2").cast("string")
-        ).alias("k"),
-        _ns().alias("s"),
-        F.col("recall_scaled").cast("double").alias("v"),
-        F.col("meets").alias("ok"),
-    )
-    avi = multimodal_avi_stats(spark, sf_dir).select(
-        F.lit("avi").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    mp4s = multimodal_mp4_stats(spark, sf_dir).select(
-        F.lit("h264").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    mp4p = multimodal_mp4_pgop_stats(spark, sf_dir).select(
-        F.lit("h264p").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-            F.lit(":"),
-            F.col("is_key").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    fmp4 = multimodal_mp4_frag_stats(spark, sf_dir).select(
-        F.lit("fmp4").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("frame_idx").cast("long").alias("b"),
-        F.col("y_sum").cast("long").alias("n"),
-        F.concat(
-            F.col("width").cast("string"),
-            F.lit("x"),
-            F.col("height").cast("string"),
-        ).alias("k"),
-        F.concat(
-            F.col("y_min").cast("string"),
-            F.lit(":"),
-            F.col("y_max").cast("string"),
-        ).alias("s"),
-        F.col("ts_ms").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    g711 = multimodal_g711_stats(spark, sf_dir).select(
-        F.lit("g711").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_samples").cast("long").alias("b"),
-        F.col("s_sum").cast("long").alias("n"),
-        F.col("law").alias("k"),
-        F.concat(
-            F.col("s_min").cast("string"),
-            F.lit(":"),
-            F.col("s_max").cast("string"),
-        ).alias("s"),
-        F.col("sample_rate").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sdd = stream_incremental_dedup(spark, sf_dir).select(
-        F.col("part"),
-        F.col("a").cast("long"),
-        F.col("b").cast("long"),
-        F.col("n").cast("long"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.lit(None).cast("double").alias("v"),
-        F.col("ok"),
-    )
-    nov = text_ngram_novelty(spark, sf_dir).select(
-        F.lit("novel").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_grams").cast("long").alias("b"),
-        F.col("n_novel").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("novelty").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ent = text_char_entropy(spark, sf_dir).select(
-        F.lit("entropy").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_chars").cast("long").alias("b"),
-        F.col("n_distinct_chars").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("entropy").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    gop = text_gopher_rules(spark, sf_dir).select(
-        F.lit("gopher").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_words").alias("b"),
-        F.col("sum_word_len").alias("n"),
-        F.col("keep").alias("k"),
-        F.col("rule_bits").alias("s"),
-        F.col("n_lines").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    ilv = corpus_interleave(spark, sf_dir).select(
-        F.lit("ileave").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("interleave_key").alias("b"),
-        F.col("pos").alias("n"),
-        F.col("lang").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    cnt2 = dedup_containment_pairs(spark, sf_dir).select(
-        F.lit("contain").alias("part"),
-        F.col("id_a").cast("long").alias("a"),
-        F.col("id_b").cast("long").alias("b"),
-        F.col("shared").alias("n"),
-        F.col("n_a").cast("string").alias("k"),
-        F.col("n_b").cast("string").alias("s"),
-        F.col("containment").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    kcr = graph_kcore(spark, sf_dir).select(
-        F.lit("kcore").alias("part"),
-        F.col("node").alias("a"),
-        F.col("deg").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    lpa = graph_label_propagation(spark, sf_dir).select(
-        F.lit("lpa").alias("part"),
-        F.col("node").alias("a"),
-        F.col("lab").alias("b"),
-        _nb().alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    pre = join_preagg_pushdown(spark, sf_dir).select(
-        F.lit("preagg").alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n_rows").cast("long").alias("n"),
-        F.col("n_name").alias("k"),
-        _ns().alias("s"),
-        F.col("sum_rev").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    inc = incremental_battery(spark, sf_dir).select(
-        F.concat(F.lit("inc_"), F.col("part")).alias("part"),
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        F.col("v").cast("double").alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    sem = _FN["dedup_semantic"](spark, sf_dir).select(
-        F.concat(F.lit("semdedup_"), F.col("part")).alias("part"),
-        _nb().alias("a"),
-        _nb().alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.col("ok"),
-    )
-    exp = etl_expectations(spark, sf_dir).select(
-        F.concat(F.lit("exp_"), F.col("part")).alias("part"),
-        F.col("c_custkey").cast("long").alias("a"),
-        _nb().alias("b"),
-        _nb().alias("n"),
-        F.col("failed").alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    naa = _FN["sql_null_aware_anti"](spark, sf_dir).select(
-        F.concat(F.lit("naa_"), F.col("part")).alias("part"),
-        _nb().alias("a"),
-        F.col("s").cast("long").alias("b"),
-        F.col("n").cast("long").alias("n"),
-        _ns().alias("k"),
-        _ns().alias("s"),
-        _nd().alias("v"),
-        F.lit(True).alias("ok"),
-    )
-    return (
-        jdbc.unionByName(js)
-        .unionByName(bm)
-        .unionByName(ts)
-        .unionByName(lk)
-        .unionByName(cos)
-        .unionByName(seg)
-        .unionByName(cms)
-        .unionByName(blm)
-        .unionByName(mba)
-        .unionByName(ksd)
-        .unionByName(chi)
-        .unionByName(voc)
-        .unionByName(ben)
-        .unionByName(stk)
-        .unionByName(rmd)
-        .unionByName(csm)
-        .unionByName(wnw)
-        .unionByName(qnm)
-        .unionByName(sdc)
-        .unionByName(twp)
-        .unionByName(skw)
-        .unionByName(ltr)
-        .unionByName(wqt)
-        .unionByName(pmi)
-        .unionByName(bst)
-        .unionByName(wau)
-        .unionByName(ovl)
-        .unionByName(dpr)
-        .unionByName(wmk)
-        .unionByName(fan)
-        .unionByName(rdv)
-        .unionByName(fss)
-        .unionByName(spn)
-        .unionByName(dsir)
-        .unionByName(lm)
-        .unionByName(qc)
-        .unionByName(mk)
-        .unionByName(td)
-        .unionByName(py)
-        .unionByName(pa)
-        .unionByName(rg)
-        .unionByName(tr)
-        .unionByName(ut)
-        .unionByName(va)
-        .unionByName(mg)
-        .unionByName(tp)
-        .unionByName(tp2)
-        .unionByName(rrf)
-        .unionByName(pipe)
-        .unionByName(c2)
-        .unionByName(sl)
-        .unionByName(pl)
-        .unionByName(cbk)
-        .unionByName(jsd)
-        .unionByName(pj)
-        .unionByName(gsp)
-        .unionByName(umx)
-        .unionByName(olp)
-        .unionByName(ahd)
-        .unionByName(aud)
-        .unionByName(y4m)
-        .unionByName(avi)
-        .unionByName(mp4s)
-        .unionByName(mp4p)
-        .unionByName(fmp4)
-        .unionByName(g711)
-        .unionByName(sdd)
-        .unionByName(tune)
-        .unionByName(jpg)
-        .unionByName(gifs)
-        .unionByName(tif)
-        .unionByName(thm)
-        .unionByName(xf)
-        .unionByName(kcr)
-        .unionByName(lpa)
-        .unionByName(cnt2)
-        .unionByName(ilv)
-        .unionByName(gop)
-        .unionByName(nov)
-        .unionByName(ent)
-        .unionByName(naa)
-        .unionByName(pre)
-        .unionByName(exp)
-        .unionByName(inc)
-        .unionByName(sem)
-    )
+    branches = [
+        lookup(constituent).fn(spark, sf_dir).select(
+            *[F.expr(e).alias(c) for c, e in _branch_columns(tag, slots, 0)]
+        )
+        for tag, constituent, slots in _EXT_BRANCHES
+    ]
+    return reduce(DataFrame.unionByName, branches)
 
 
-# Part-tag -> covering SUBSUMED constituent for extension_battery.  Keys
-# ending in "_" are prefix families ("jdbc_" covers jdbc_write_read,
-# jdbc_parallel, jdbc_pushdown); all other keys match exactly.  Every
-# constituent named here carries its OWN DuckDB oracle over the same
-# branch values, so a sweep (tools/sf1_sweep.py) may check each branch
-# independently instead of running the monolithic ~60-branch UNION
+# Part-tag -> covering SUBSUMED constituent for extension_battery, read
+# off the branch table.  Every constituent carries its OWN DuckDB oracle
+# over the same branch values (the battery oracle above is rendered
+# from exactly those oracles), so a sweep (tools/sf1_sweep.py) may check
+# each branch independently instead of running the monolithic UNION
 # oracle (~19 min of DuckDB wall at sf1, round-10 measurement) — the
 # battery itself then runs rows-only at sweep scale while the driver
 # still hash-checks the full union at sf0.01.
-# tests/test_oracle_parity.py pins that this map stays total: every
-# part the battery emits resolves here, and every constituent it names
-# is registered with a non-None oracle.
 EXTENSION_BATTERY_PARTS: dict[str, str] = {
-    "jdbc_": "sink_jdbc_roundtrip",
-    "js_": "join_scale_battery",
-    "bm25": "text_bm25_scores",
-    "ts_": "timeseries_battery",
-    "lk_": "linkage_battery",
-    "cos": "sim_cosine_topk",
-    "segdedup": "text_segment_dedup",
-    "cms_": "agg_count_min",
-    "bf_": "agg_bloom_membership",
-    "mba": "agg_market_basket",
-    "ks": "agg_ks_drift",
-    "chi2": "agg_chi_square",
-    "vocab": "text_vocab_profile",
-    "benford": "agg_benford_audit",
-    "streak": "events_flag_streaks",
-    "rollmad": "timeseries_rolling_mad",
-    "cusum": "timeseries_cusum",
-    "winnow": "text_winnow_fingerprints",
-    "qnorm": "corpus_quantile_normalize",
-    "sdec": "timeseries_seasonal_decompose",
-    "twap": "timeseries_twap",
-    "skew": "agg_key_skew",
-    "ltrend": "timeseries_linear_trend",
-    "wquant": "agg_weighted_quantiles",
-    "pmi": "text_pmi_collocations",
-    "burst": "events_burstiness",
-    "wau": "events_active_users",
-    "ovlp": "events_audience_overlap",
-    "duprate": "corpus_dup_rate",
-    "wmark": "events_watermark_audit",
-    "fanout": "join_fanout_preflight",
-    "rdv": "corpus_rendezvous_shards",
-    "fastss": "linkage_fastss_pairs",
-    "spansd": "text_span_dedup",
-    "dsir": "text_dsir_importance",
-    "lm": "text_bigram_lm",
-    "qscore": "text_quality_classifier",
-    "markov": "events_markov_transitions",
-    "tdiff": "etl_table_diff",
-    "pysource": "source_python_datasource",
-    "paths": "events_session_paths",
-    "range1h": "window_time_range_frame",
-    "tri": "graph_triangle_counts",
-    "udtf": "udtf_token_spans",
-    "variant": "events_variant_extract",
-    "mg": "agg_heavy_hitters_mg",
-    "tpch": "sql_tpch_shapes",
-    "tpch2": "sql_tpch_shapes2",
-    "rrf": "hybrid_rrf_retrieval",
-    "pipeline": "corpus_training_pipeline",
-    "cdc2": "etl_snapshot_cdc",
-    "scdlk": "etl_scd2_lookup",
-    "ppl": "text_lm_perplexity",
-    "cbkt": "text_ccnet_buckets",
-    "jsd": "text_js_divergence",
-    "ppj_": "dedup_ppjoin_exact",
-    "gsplit": "corpus_group_safe_split",
-    "umax_": "corpus_unimax",
-    "olap_": "sql_olap_shapes",
-    "ahash_": "multimodal_ahash_dedup",
-    "aud_": "multimodal_audio_stats",
-    "y4m": "multimodal_y4m_stats",
-    "avi": "multimodal_avi_stats",
-    "h264": "multimodal_mp4_stats",
-    "h264p": "multimodal_mp4_pgop_stats",
-    "fmp4": "multimodal_mp4_frag_stats",
-    "g711": "multimodal_g711_stats",
-    "sdd_": "stream_incremental_dedup",
-    "tune_": "tune_recall_params",
-    "jpeg_": "multimodal_jpeg_stats",
-    "gif": "multimodal_gif_stats",
-    "tiff": "multimodal_tiff_stats",
-    "thumb": "multimodal_thumbnail_pipeline",
-    "xfmt_": "multimodal_cross_format_dedup",
-    "kcore": "graph_kcore",
-    "lpa": "graph_label_propagation",
-    "contain": "dedup_containment_pairs",
-    "ileave": "corpus_interleave",
-    "gopher": "text_gopher_rules",
-    "novel": "text_ngram_novelty",
-    "entropy": "text_char_entropy",
-    "naa_": "sql_null_aware_anti",
-    "preagg": "join_preagg_pushdown",
-    "exp_": "etl_expectations",
-    "inc_": "incremental_battery",
-    "semdedup_": "dedup_semantic",
+    tag: constituent for tag, constituent, _ in _EXT_BRANCHES
 }
 
 
@@ -10573,180 +9636,3 @@ subsume(
     # iterative BPE trainer: rows-only by design (python-dual tested)
     "text_bpe_merges",
 )
-
-
-# ---------------------------------------------------------------------------
-# Streaming incremental near-dup dedup (round 13): the continuously-
-# ingesting-corpus composition of the txn sink and the MinHash probe.
-# ---------------------------------------------------------------------------
-
-
-
-@register(
-    "stream_incremental_dedup",
-    oracle=_SDD_ORACLE,
-    doc="Streaming incremental near-dup dedup (round 13 — streaming/"
-    "jobs.py::stream_near_dup_ingest): the continuously-ingesting-"
-    "corpus composition of two verified pieces — per microbatch, the "
-    "incoming docs are shingled/signed/banded ONCE, probed against the "
-    "ACCUMULATED index txn tables for cross-batch duplicates (work ∝ "
-    "batch + matched buckets, never corpus) and against themselves for "
-    "within-batch pairs, then dup pairs and index rows append under "
-    "app_txn idempotence (sources/txn.py) so every pair is recorded "
-    "EXACTLY ONCE across restarts/replays.  Fixture: distinct-text "
-    "shingleable reps stream in 3 microbatches (sequential availableNow "
-    "deliveries — the stream_fbmerge_check pattern), then a 4th batch "
-    "plants EXACT twins (id + 300000, the guarded _twin_id offset) of "
-    "every 13th rep.  Identical text => identical signature => same "
-    "bucket in every band, so each twin MUST surface with jaccard "
-    "exactly 1.0 (the dedup_incremental_probe containment guarantee, "
-    "now across the streaming boundary): part=sdd_planted pins each "
-    "expected (rep, twin) pair's presence per-row; sdd_containment "
-    "pins found == planted; sdd_restart REPLAYS every batch against a "
-    "fresh checkpoint and pins the dups table unchanged (the exactly-"
-    "once half); sdd_bounds pins every emitted pair inside "
-    "[threshold, 1].  Hash-seed-dependent natural near-dup pairs stay "
-    "engine-side (they ride the table but not the oracle), and the "
-    "runtime path (restarts, drop-mode chains) is pinned in "
-    "tests/test_streaming.py.",
-)
-def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from ..operators.dedup import collapse_exact_first
-    from ..operators.pinning import eager_pin
-    from ..sources.txn import txn_read
-    from ..streaming.jobs import stream_near_dup_ingest
-    from .llm_data import _twin_id
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    shingleable = F.col("text").rlike(r"(^| )\S+ \S+ \S+")
-    base = eager_pin(
-        collapse_exact_first(docs, "text", "doc_id").where(shingleable)
-    )
-    planted = eager_pin(base.where(F.col("doc_id") % 13 == 0))
-    twins = planted.select(
-        _twin_id(F.col("doc_id")).alias("doc_id"), "text"
-    )
-
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
-    )
-    os.makedirs(scratch, exist_ok=True)
-    work = tempfile.mkdtemp(prefix="sdd_", dir=scratch)
-    try:
-        src = os.path.join(work, "src")
-        index_dir = os.path.join(work, "idx")
-
-        def run(ckpt: str) -> None:
-            # maxFilesPerTrigger=1: a FRESH-checkpoint replay must
-            # re-deliver the same four per-file microbatches (ids 0-3),
-            # exercising every app_txn no-op — without it the replay
-            # collapses into one batch and only id 0's idempotence is
-            # checked (round-13 review finding)
-            stream = (
-                spark.readStream.schema(base.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            q = (
-                stream_near_dup_ingest(
-                    stream, index_dir, ckpt, app_id="sdd",
-                    index_duplicates=True,
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        ckpt = os.path.join(work, "ckpt")
-        # three deliveries + one twin delivery, each its own microbatch
-        for kk in range(3):
-            base.where(F.col("doc_id") % 3 == kk).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            run(ckpt)
-        twins.coalesce(1).write.mode("append").parquet(src)
-        run(ckpt)
-        dups1 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
-        # FULL replay against a fresh checkpoint: every append must be
-        # an app_txn no-op — the dups table byte-identical
-        run(os.path.join(work, "ckpt2"))
-        dups2 = eager_pin(txn_read(spark, os.path.join(index_dir, "dups")))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-    exact1 = dups1.where(F.col("jaccard") == 1.0).select(
-        "new_id", "existing_id"
-    )
-    planted_rows = planted.select(
-        F.lit("sdd_planted").alias("part"),
-        F.col("doc_id").alias("a"),
-        (F.col("doc_id") + 300000).alias("b"),
-        F.lit(None).cast("bigint").alias("n"),
-    ).join(
-        exact1.select(
-            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
-        ).withColumn("ok", F.lit(True)),
-        ["a", "b"],
-        "left",
-    ).select("part", "a", "b", "n", F.coalesce("ok", F.lit(False)).alias("ok"))
-    nulls = [
-        F.lit(None).cast("bigint").alias("a"),
-        F.lit(None).cast("bigint").alias("b"),
-    ]
-    n_found = planted.select(
-        F.col("doc_id").alias("a"),
-        (F.col("doc_id") + 300000).alias("b"),
-    ).join(
-        exact1.select(
-            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
-        ),
-        ["a", "b"],
-        "left_semi",
-    ).agg(F.count("*").alias("h"))
-    containment = (
-        planted.agg(F.count("*").cast("bigint").alias("t"))
-        .crossJoin(F.broadcast(n_found))
-        .select(
-            F.lit("sdd_containment").alias("part"),
-            *nulls,
-            F.col("t").alias("n"),
-            (F.col("h") == F.col("t")).alias("ok"),
-        )
-    )
-    unchanged = (
-        dups1.exceptAll(dups2).isEmpty()
-        and dups2.exceptAll(dups1).isEmpty()
-    )
-    restart = planted.agg(F.count("*").cast("bigint").alias("n")).select(
-        F.lit("sdd_restart").alias("part"),
-        *nulls,
-        "n",
-        F.lit(bool(unchanged)).alias("ok"),
-    )
-    bounds = dups1.agg(
-        F.coalesce(
-            F.min(
-                (F.col("jaccard") >= 0.5) & (F.col("jaccard") <= 1.0)
-            ),
-            F.lit(True),
-        ).alias("ok")
-    ).select(
-        F.lit("sdd_bounds").alias("part"),
-        *nulls,
-        F.lit(None).cast("bigint").alias("n"),
-        "ok",
-    )
-    return (
-        planted_rows.unionByName(containment)
-        .unionByName(restart)
-        .unionByName(bounds)
-    )
-
-
-# round-13: streaming incremental near-dup, riding extension_battery
-# (part=sdd_*)
-subsume("stream_incremental_dedup")

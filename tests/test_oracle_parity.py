@@ -66,6 +66,44 @@ def test_extension_battery_shard_map_constituents_oracle_backed():
         )
 
 
+def test_extension_battery_branch_schemas():
+    """Every extension_battery branch's rendered oracle fragment binds
+    to the shared schema on its own.  The battery's UNION ALL would
+    coerce a drifting branch away (an INTEGER or HUGEINT slot just
+    widens the whole column), so this is what names the branch.
+    DESCRIBE only binds each fragment; nothing executes."""
+    import duckdb
+
+    from imdb_top_250_etl_pipeline_spark.plans import batteries
+
+    from .conftest import SF_SMOKE
+
+    con = duckdb.connect()
+    for t in (
+        "region nation customer supplier part orders lineitem events "
+        "documents embeddings"
+    ).split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+    want = [
+        ("part", "VARCHAR"),
+        ("a", "BIGINT"),
+        ("b", "BIGINT"),
+        ("n", "BIGINT"),
+        ("k", "VARCHAR"),
+        ("s", "VARCHAR"),
+        ("v", "DOUBLE"),
+        ("ok", "BOOLEAN"),
+    ]
+    drift = {}
+    for branch in batteries._EXT_BRANCHES:
+        sql = batteries._ext_branch_sql(*branch)
+        got = [(r[0], r[1]) for r in con.execute("DESCRIBE " + sql).fetchall()]
+        if got != want:
+            drift[branch[0]] = got
+    con.close()
+    assert not drift, drift
+
+
 @pytest.mark.slow
 def test_extension_battery_shard_map_total(spark):
     """The expensive half (builds and executes the battery at

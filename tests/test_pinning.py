@@ -294,17 +294,16 @@ def test_pin_scope_reliable_mode_is_scoped(spark, tmp_path):
     handle.release()
 
 
-def test_entry_queries_roll_pin_release(spark):
+def test_entry_queries_roll_pin_release(spark, monkeypatch):
     """Round-14: the driver adapter wraps each queries() entry in its
     own pin scope and retires scopes from builds >= 3 invocations ago —
     a 50-query vanilla-session run must not accumulate every query's
     dead localCheckpoint blocks (the hazard bench.py fixed for itself
     in round 13).  Sequential build->consume->next stays correct, and
     the pinned-RDD count stays bounded instead of growing per query."""
-    import sys
-
-    sys.path.insert(0, ".")
+    monkeypatch.syspath_prepend(".")
     import __spark_entry__ as mod
+    from imdb_top_250_etl_pipeline_spark.operators import pinning
     from imdb_top_250_etl_pipeline_spark.operators.pinning import (
         pinned_rdd_count,
     )
@@ -319,17 +318,76 @@ def test_entry_queries_roll_pin_release(spark):
     sf = "/root/testdata/sf0.001"
     base = pinned_rdd_count(spark)
     high = 0
-    for n in names:
-        rows = qs[n](spark, sf).collect()
-        assert rows, n  # consumed sequentially, correct under the wrap
-        high = max(high, pinned_rdd_count(spark))
-    # after the loop, only the keep-window scopes may still hold blocks:
-    # trigger two more retires and verify the count returns near base
-    qs["dedup_exact_documents"](spark, sf).collect()
-    qs["dedup_exact_documents"](spark, sf).collect()
-    qs["dedup_exact_documents"](spark, sf).collect()
-    settled = pinned_rdd_count(spark)
-    # 9 pin-heavy builds happened; without the rolling release the
-    # settled count would sit ~9 queries' pins above base
-    assert settled - base <= high - base, (base, high, settled)
-    assert settled - base < 9, (base, settled)
+    try:
+        for n in names:
+            rows = qs[n](spark, sf).collect()
+            assert rows, n  # consumed sequentially, correct under the wrap
+            high = max(high, pinned_rdd_count(spark))
+        # after the loop, only the keep-window scopes may still hold
+        # blocks: trigger two more retires and verify the count returns
+        # near base
+        qs["dedup_exact_documents"](spark, sf).collect()
+        qs["dedup_exact_documents"](spark, sf).collect()
+        qs["dedup_exact_documents"](spark, sf).collect()
+        settled = pinned_rdd_count(spark)
+        # 9 pin-heavy builds happened; without the rolling release the
+        # settled count would sit ~9 queries' pins above base
+        assert settled - base <= high - base, (base, high, settled)
+        assert settled - base < 9, (base, settled)
+    finally:
+        # the keep window outlives the test: free it so later tests
+        # start from the session's own pins
+        with pinning._LOCK:
+            retired = list(pinning._RETIRED)
+            pinning._RETIRED.clear()
+        for scope in retired:
+            scope.release()
+
+
+def test_rolling_pin_scope_threads_account_for_every_scope(monkeypatch):
+    """Builds racing through rolling_pin_scope from several threads:
+    every scope ends either released exactly once or still in the keep
+    window.  A retire check made outside the lock could pop an empty
+    queue or release a scope twice."""
+    import sys
+    import threading
+    from collections import deque
+
+    from imdb_top_250_etl_pipeline_spark.operators import pinning
+
+    monkeypatch.setattr(pinning, "_RETIRED", deque())
+    released = []
+    monkeypatch.setattr(
+        pinning._PinScope,
+        "release",
+        lambda self, blocking=False: released.append(self),
+    )
+    built = []
+    run = pinning.rolling_pin_scope(lambda spark, sf: built.append(sf))
+    n_threads, n_calls = 8, 300
+    errors = []
+
+    def worker():
+        try:
+            for _ in range(n_calls):
+                run(None, "")
+        except Exception as ex:  # noqa: BLE001 — surfaced below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=worker) for _ in range(n_threads)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    total = n_threads * n_calls
+    assert len(built) == total
+    assert len({id(s) for s in released}) == len(released)
+    assert len(released) + len(pinning._RETIRED) == total
+    assert len(pinning._RETIRED) <= pinning._KEEP_PRIOR + n_threads
