@@ -109,15 +109,12 @@ def _raw_overrides():
     }
 
 
-def main() -> None:
-    from imdb_top_250_etl_pipeline_spark.session import get_spark
-    from imdb_top_250_etl_pipeline_spark.plans import QUERIES, SUBSUMED, lookup
-
-    spark = get_spark("bench")
-    # lookup() resolves driver-facing AND battery-subsumed names, so the
-    # headline list keeps the same per-query timings across rounds even
-    # after queries were consolidated into batteries for the driver.
-    names = [n for n in HEADLINE if n in QUERIES or n in SUBSUMED]
+def time_queries(spark, names: list[str], runs: int):
+    """Warm the session up, then time every query in ``names`` ``runs``
+    times at SF_DIR; yields ``(name, [seconds per run])`` as each query
+    finishes.  Raw-override forms are timed where they exist."""
+    from imdb_top_250_etl_pipeline_spark.operators.pinning import pin_scope
+    from imdb_top_250_etl_pipeline_spark.plans import lookup
 
     # Warmup on the smallest SF so per-query timings measure the plan,
     # not first-touch costs: JVM JIT + parquet footers (first query) and
@@ -132,21 +129,13 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
 
-    timings: dict[str, float] = {}
-    steady: dict[str, float] = {}
     for name in names:
         # the timed window includes plan construction: queries that
         # materialize intermediate tables (eager localCheckpoint) do real
         # work inside fn(), and excluding it would under-report them.
-        # Each query runs twice: the FIRST run is the primary metric
-        # (cold plan, comparable with earlier rounds' single-run
-        # numbers); the min of both lands in "queries_steady" because
-        # this container shares hardware and single cold runs swing
-        # 1.5-3x with co-tenant load — the steady number is the one that
-        # reflects the plan.
         fn = _raw_overrides().get(name) or lookup(name).fn
-        runs = []
-        for _ in range(2):
+        secs = []
+        for _ in range(runs):
             # Round-13 measurement-hygiene fix (documented in
             # OPTIMIZATION_r13.md): queries that materialize
             # intermediates via eager localCheckpoint leak their blocks
@@ -160,15 +149,32 @@ def main() -> None:
             # same as every earlier round), so per-query numbers mean
             # "this query on a healthy session" — the same thing they
             # meant for queries that never pinned.
-            from imdb_top_250_etl_pipeline_spark.operators.pinning import (
-                pin_scope,
-            )
-
             with pin_scope():
                 t0 = time.perf_counter()
                 df = fn(spark, SF_DIR)
                 df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.perf_counter() - t0, 3))
+                secs.append(round(time.perf_counter() - t0, 3))
+        yield name, secs
+
+
+def main() -> None:
+    from imdb_top_250_etl_pipeline_spark.session import get_spark
+    from imdb_top_250_etl_pipeline_spark.plans import QUERIES, SUBSUMED
+
+    spark = get_spark("bench")
+    # lookup() resolves driver-facing AND battery-subsumed names, so the
+    # headline list keeps the same per-query timings across rounds even
+    # after queries were consolidated into batteries for the driver.
+    names = [n for n in HEADLINE if n in QUERIES or n in SUBSUMED]
+
+    timings: dict[str, float] = {}
+    steady: dict[str, float] = {}
+    # Each query runs twice: the FIRST run is the primary metric (cold
+    # plan, comparable with earlier rounds' single-run numbers); the min
+    # of both lands in "queries_steady" because this container shares
+    # hardware and single cold runs swing 1.5-3x with co-tenant load —
+    # the steady number is the one that reflects the plan.
+    for name, runs in time_queries(spark, names, 2):
         timings[name] = runs[0]
         steady[name] = min(runs)
 

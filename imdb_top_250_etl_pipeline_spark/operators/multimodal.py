@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import plan_size_bytes
+
 PROPS_SCHEMA = "k INT"
 
 
@@ -98,10 +100,8 @@ def _seam_width(df: DataFrame, par: int) -> int:
     ``df.rdd.getNumPartitions()`` probe which built the physical plan
     twice on chained seams.  No estimate available (Connect session)
     falls back to the round-13 fixed ``2*par``."""
-    try:
-        # Py4J hands scala.math.BigInt back as a plain Python int
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    est = plan_size_bytes(df)
+    if est is None:
         return 2 * par
     return max(1, min(2 * par, -(-est // _SEAM_TASK_BYTES)))
 

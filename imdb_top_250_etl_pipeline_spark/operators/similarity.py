@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .dedup import capped_band_pairs, spread
+from .dedup import capped_band_pairs, plan_size_bytes, spread
 from .pinning import eager_pin, pin
 
 
@@ -124,10 +124,6 @@ def brute_force_topk(
 _ONE_TASK_TOPK_BYTES = 256 * 1024 * 1024
 
 
-# the shared static size hint lives next to spread() in dedup.py
-from .dedup import plan_size_bytes as _plan_bytes  # noqa: E402
-
-
 def _two_phase_topk(
     scored: DataFrame, k: int, size_hint_df: DataFrame | None = None
 ) -> DataFrame:
@@ -162,7 +158,7 @@ def _two_phase_topk(
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
     )
-    hint = _plan_bytes(size_hint_df) if size_hint_df is not None else None
+    hint = plan_size_bytes(size_hint_df) if size_hint_df is not None else None
     if hint is not None and hint < _ONE_TASK_TOPK_BYTES:
         return rank_k(scored)
     n_salts = max(scored.sparkSession.sparkContext.defaultParallelism, 8)

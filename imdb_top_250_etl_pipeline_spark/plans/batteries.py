@@ -18,13 +18,17 @@ list with explicit casts ON BOTH SIDES (Spark select / oracle SELECT),
 because the driver compares schemas and hashes values after sorting
 columns by name.
 
-extension_battery, the widest battery, writes each branch once: an
-entry in ``_EXT_BRANCHES`` names the part tag, the SUBSUMED
-constituent, and one SQL expression per shared column.  That entry
-renders the branch's Spark ``select`` (through ``F.expr``), its DuckDB
-oracle SELECT over the constituent's own registered oracle, and its
-``EXTENSION_BATTERY_PARTS`` shard-map key, so adding a branch means
-registering the constituent, subsuming it, and adding one table entry.
+Each branch is written once.  A table-rendered battery
+(``_table_battery``; every battery here but dedup_pairs_battery,
+sim_topk_battery, text_doc_battery and scalar_events_battery) declares
+its shared schema once and lists one ``(tag, source, slots)`` entry per
+branch: the part tag, the registered query (or ``(spark_fn,
+oracle_sql)`` pair) it projects, and one SQL expression per filled
+column.  The entry renders the branch's Spark ``select`` (through
+``F.expr``) and its DuckDB oracle SELECT over the source's oracle, and
+for extension_battery also its ``EXTENSION_BATTERY_PARTS`` shard-map
+key, so adding a branch means adding one table entry (after
+registering and subsuming a new constituent).
 """
 
 from __future__ import annotations
@@ -52,9 +56,90 @@ def _null(sql_type: str) -> Column:
     return F.lit(None).cast(sql_type)
 
 
-def _wrap(tag: str, cols_sql: str, inner: str) -> str:
-    """Oracle branch: tag + projected columns over a constituent's SQL."""
-    return f"SELECT '{tag}' AS part, {cols_sql} FROM ({inner}) t"
+# A tagged-union battery is one table: a schema and a list of branches,
+# rendered into both the Spark union and the DuckDB oracle.
+#
+# * schema — the shared columns after `part`, in output order, each with
+#   the SQL a branch renders when it leaves the column out: a typed NULL
+#   (or a constant such as extension_battery's `ok` default of true).
+#   The defaults also declare the column types the branches must bind to.
+# * branches — (tag, source, slots) entries:
+#   - tag: the branch's part value; a tag ending in "_" is a prefix
+#     family whose part is tag || the source's own `part` column
+#     ("jdbc_" -> jdbc_write_read, jdbc_parallel, ...).
+#   - source: a registered query name, whose fn (Spark side) and oracle
+#     (DuckDB side) the branch projects, or a (spark_fn, oracle_sql)
+#     pair for a branch computed only inside its battery.
+#   - slots: one SQL expression per filled column.  The same text runs
+#     through F.expr and through DuckDB, so it sticks to syntax both
+#     engines read identically: CAST(x AS BIGINT|DOUBLE|STRING) (never
+#     VARCHAR: Spark wants a size), ||, coalesce, CASE, arithmetic.
+#     Where the two sides differ (a function the engines spell
+#     differently, a flag only Spark computes) the slot is a
+#     (spark, duckdb) pair.
+#
+# Copy a branch's expressions exactly, casts included, and never cast a
+# fractional column to an integer: DuckDB rounds CAST(2.7 AS BIGINT) to 3
+# where Spark truncates it to 2.  tests/test_oracle_parity pins every
+# rendered oracle branch to its battery's declared types, so a branch
+# that drifts fails by name.
+BATTERY_TABLES: dict[str, tuple[dict, list]] = {}
+
+
+def _same(*cols: str) -> dict:
+    """Slots that pass columns of the same name straight through."""
+    return {c: c for c in cols}
+
+
+def _branch_columns(
+    schema: dict, tag: str, slots: dict, engine: int
+) -> list[tuple[str, str]]:
+    """(column, expression) pairs of one branch in schema order; engine
+    0 = Spark, 1 = DuckDB picks a side of any (spark, duckdb) pair."""
+    part = f"'{tag}' || part" if tag.endswith("_") else f"'{tag}'"
+    exprs = {"part": part, **schema, **slots}
+    return [
+        (col, e[engine] if isinstance(e, tuple) else e)
+        for col, e in exprs.items()
+    ]
+
+
+def _source(source) -> tuple:
+    """(spark_fn, oracle_sql) of a branch source."""
+    if isinstance(source, str):
+        q = lookup(source)
+        return q.fn, q.oracle
+    return source
+
+
+def branch_sql(schema: dict, tag: str, source, slots: dict) -> str:
+    """One branch's oracle: its slots over the source's oracle."""
+    cols = ", ".join(
+        f"{e} AS {c}" for c, e in _branch_columns(schema, tag, slots, 1)
+    )
+    return f"SELECT {cols} FROM ({_source(source)[1]}) t"
+
+
+def _table_battery(name: str, schema: dict, branches: list, doc: str):
+    """Register battery `name`, rendered from its branch table."""
+    BATTERY_TABLES[name] = (schema, branches)
+
+    def battery(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return reduce(
+            DataFrame.unionByName,
+            [
+                _source(source)[0](spark, sf_dir).select(
+                    *[
+                        F.expr(e).alias(c)
+                        for c, e in _branch_columns(schema, tag, slots, 0)
+                    ]
+                )
+                for tag, source, slots in branches
+            ],
+        )
+
+    oracle = "\nUNION ALL\n".join(branch_sql(schema, *b) for b in branches)
+    return register(name, oracle=oracle, doc=doc)(battery)
 
 
 # ---------------------------------------------------------------------------
@@ -110,48 +195,126 @@ _PROFILE_ORACLE = "\nUNION ALL\n".join(
 )
 
 
-@register(
+def _distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """agg_count_distinct beside approx_count_distinct's invariant flag:
+    the HLL++ estimate per l_returnflag within 3*rsd of the exact count."""
+    exact = lookup("agg_count_distinct").fn(spark, sf_dir)
+    li = load(spark, sf_dir, "lineitem")
+    flag = (
+        li.groupBy("l_returnflag")
+        .agg(
+            F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx"),
+            F.countDistinct("l_partkey").alias("exact"),
+        )
+        .select(
+            (F.abs(F.col("approx") - F.col("exact")) <= 0.06 * F.col("exact")).alias(
+                "ok"
+            )
+        )
+        .agg(F.min("ok").alias("approx_ok"))
+    )
+    return exact.crossJoin(flag)
+
+
+# mergeable-sketch invariant: per-day HLL sketches unioned across the
+# month must estimate the month's exact distinct users within 5%
+# (the incremental pattern — sketch values are engine-specific, so
+# the oracle pins the exact count and the invariant boolean)
+_HLL_UNION_ORACLE = (
+    "SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_customers FROM events"
+)
+
+
+def _hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.profiling import incremental_distinct_estimate
+
+    ev = load(spark, sf_dir, "events")
+    est = incremental_distinct_estimate(
+        ev, "user_id", F.to_date("ts")
+    ).select("estimate")
+    return (
+        ev.agg(F.countDistinct("user_id").alias("n_customers"))
+        .crossJoin(F.broadcast(est))
+        .select(
+            "n_customers",
+            (
+                F.abs(F.col("estimate") - F.col("n_customers"))
+                <= 0.05 * F.col("n_customers")
+            ).alias("approx_ok"),
+        )
+    )
+
+
+def _profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.profiling import profile_columns
+
+    return profile_columns(load(spark, sf_dir, "customer"), _PROFILE_COLS)
+
+
+# mergeable quantile summaries (round 9 — the quantile analogue of
+# hll_union): per-day equi-depth grids merged into global p50/p90/
+# p99 estimates whose RANK error vs the data must stay within
+# 2/grid, folded to the invariant boolean the oracle pins true
+_QMERGE_ORACLE = "SELECT p FROM (VALUES ('p50'), ('p90'), ('p99')) t(p)"
+
+
+def _qmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.profiling import merged_quantile_estimate, quantile_state
+
+    GRID = 64
+    evv = load(spark, sf_dir, "events").select(
+        F.to_date("ts").alias("day"), "value"
+    )
+    qst = quantile_state(evv, "value", "day", grid=GRID)
+    qest = merged_quantile_estimate(qst, [0.5, 0.9, 0.99])
+    qrank = (
+        evv.crossJoin(F.broadcast(qest))
+        .groupBy("p")
+        .agg(
+            (
+                F.sum(F.when(F.col("value") <= F.col("est"), 1).otherwise(0))
+                / F.count("*")
+            ).alias("_rank")
+        )
+    )
+    return qrank.select(
+        "p",
+        (F.abs(F.col("_rank") - F.col("p")) <= 2.0 / GRID).alias("approx_ok"),
+    )
+
+
+# approx_ok is computed in Spark and pinned true by the oracle
+_APPROX_OK = {"approx_ok": ("approx_ok", "true")}
+
+agg_distinct_battery = _table_battery(
     "agg_distinct_battery",
-    oracle=(
-        _wrap(
-            "exact",
-            "o_orderpriority, n_customers, n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            _SQL["agg_count_distinct"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "histogram",
-            "CAST(bucket AS VARCHAR) AS o_orderpriority, n AS n_customers, "
-            "CAST(NULL AS BIGINT) AS n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            _HISTOGRAM_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "hll_union",
-            "'union' AS o_orderpriority, "
-            "CAST(count(DISTINCT user_id) AS BIGINT) AS n_customers, "
-            "CAST(NULL AS BIGINT) AS n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            "SELECT user_id FROM events",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "profile",
-            "col_name AS o_orderpriority, n_distinct AS n_customers, "
-            "n_nulls AS n_orders, true AS approx_ok, min_s, max_s",
-            _PROFILE_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "qmerge",
-            "p AS o_orderpriority, CAST(NULL AS BIGINT) AS n_customers, "
-            "CAST(NULL AS BIGINT) AS n_orders, true AS approx_ok, "
-            "CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s",
-            "SELECT p FROM (VALUES ('p50'), ('p90'), ('p99')) t(p)",
-        )
-    ),
+    {
+        "o_orderpriority": "CAST(NULL AS STRING)",
+        "n_customers": "CAST(NULL AS BIGINT)",
+        "n_orders": "CAST(NULL AS BIGINT)",
+        "approx_ok": "true",
+        "min_s": "CAST(NULL AS STRING)",
+        "max_s": "CAST(NULL AS STRING)",
+    },
+    [
+        ("exact", (_distinct_exact, lookup("agg_count_distinct").oracle), {
+            **_same("o_orderpriority", "n_customers", "n_orders"),
+            **_APPROX_OK}),
+        ("histogram", "agg_histogram_fixed_width", {
+            "o_orderpriority": "CAST(bucket AS STRING)", "n_customers": "n"}),
+        ("hll_union", (_hll_union, _HLL_UNION_ORACLE), {
+            "o_orderpriority": "'union'", "n_customers": "n_customers",
+            **_APPROX_OK}),
+        ("profile", (_profile, _PROFILE_ORACLE), {
+            "o_orderpriority": "col_name", "n_customers": "n_distinct",
+            "n_orders": "n_nulls", **_same("min_s", "max_s")}),
+        ("qmerge", (_qmerge, _QMERGE_ORACLE), {
+            "o_orderpriority": (
+                "concat('p', CAST(CAST(round(p * 100) AS INT) AS STRING))",
+                "p",
+            ),
+            **_APPROX_OK}),
+    ],
     doc="countDistinct (exact, hash-checked) + approx_count_distinct "
     "verified AS AN INVARIANT: the HLL++ estimate per l_returnflag must "
     "sit within 3*rsd of the exact count, folded to one boolean the "
@@ -170,203 +333,55 @@ _PROFILE_ORACLE = "\nUNION ALL\n".join(
     "profiling.py::quantile_state/merged_quantile_estimate). Subsumes "
     "agg_count_distinct, agg_approx_distinct.",
 )
-def agg_distinct_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = _FN["agg_count_distinct"](spark, sf_dir)
-    li = load(spark, sf_dir, "lineitem")
-    flag = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx"),
-            F.countDistinct("l_partkey").alias("exact"),
-        )
-        .select(
-            (F.abs(F.col("approx") - F.col("exact")) <= 0.06 * F.col("exact")).alias(
-                "ok"
-            )
-        )
-        .agg(F.min("ok").alias("approx_ok"))
-    )
-    no_mm = [_null("string").alias("min_s"), _null("string").alias("max_s")]
-    ex = exact.select(_tag("exact"), "*").crossJoin(flag).select("*", *no_mm)
-    hist = agg_histogram_fixed_width(spark, sf_dir).select(
-        _tag("histogram"),
-        F.col("bucket").cast("string").alias("o_orderpriority"),
-        F.col("n").alias("n_customers"),
-        _null("bigint").alias("n_orders"),
-        F.lit(True).alias("approx_ok"),
-        *no_mm,
-    )
-    # mergeable-sketch invariant: per-day HLL sketches unioned across the
-    # month must estimate the month's exact distinct users within 5%
-    # (the incremental pattern — sketch values are engine-specific, so
-    # the oracle pins the exact count and the invariant boolean)
-    from ..operators.profiling import incremental_distinct_estimate
-
-    ev = load(spark, sf_dir, "events")
-    est = incremental_distinct_estimate(
-        ev, "user_id", F.to_date("ts")
-    ).select("estimate")
-    hll = (
-        ev.agg(F.countDistinct("user_id").alias("n_customers"))
-        .crossJoin(F.broadcast(est))
-        .select(
-            _tag("hll_union"),
-            F.lit("union").alias("o_orderpriority"),
-            "n_customers",
-            _null("bigint").alias("n_orders"),
-            (
-                F.abs(F.col("estimate") - F.col("n_customers"))
-                <= 0.05 * F.col("n_customers")
-            ).alias("approx_ok"),
-            *no_mm,
-        )
-    )
-    from ..operators.profiling import profile_columns
-
-    prof = profile_columns(
-        load(spark, sf_dir, "customer"), _PROFILE_COLS
-    ).select(
-        _tag("profile"),
-        F.col("col_name").alias("o_orderpriority"),
-        F.col("n_distinct").alias("n_customers"),
-        F.col("n_nulls").alias("n_orders"),
-        F.lit(True).alias("approx_ok"),
-        "min_s",
-        "max_s",
-    )
-    # mergeable quantile summaries (round 9 — the quantile analogue of
-    # hll_union): per-day equi-depth grids merged into global p50/p90/
-    # p99 estimates whose RANK error vs the data must stay within
-    # 2/grid, folded to the invariant boolean the oracle pins true
-    from ..operators.profiling import merged_quantile_estimate, quantile_state
-
-    GRID = 64
-    evv = ev.select(F.to_date("ts").alias("day"), "value")
-    qst = quantile_state(evv, "value", "day", grid=GRID)
-    qest = merged_quantile_estimate(qst, [0.5, 0.9, 0.99])
-    qrank = (
-        evv.crossJoin(F.broadcast(qest))
-        .groupBy("p")
-        .agg(
-            (
-                F.sum(F.when(F.col("value") <= F.col("est"), 1).otherwise(0))
-                / F.count("*")
-            ).alias("_rank")
-        )
-    )
-    qm = qrank.select(
-        _tag("qmerge"),
-        F.concat(
-            F.lit("p"), F.round(F.col("p") * 100).cast("int").cast("string")
-        ).alias("o_orderpriority"),
-        _null("bigint").alias("n_customers"),
-        _null("bigint").alias("n_orders"),
-        (F.abs(F.col("_rank") - F.col("p")) <= 2.0 / GRID).alias(
-            "approx_ok"
-        ),
-        *no_mm,
-    )
-    return (
-        ex.unionByName(hist)
-        .unionByName(hll)
-        .unionByName(prof)
-        .unionByName(qm)
-    )
 
 
-@register(
+agg_grouping_battery = _table_battery(
     "agg_grouping_battery",
-    oracle=(
-        _wrap(
-            "rollup",
-            "n_name AS k1, o_orderpriority AS k2, n_orders, total, "
-            "g_nation AS g1, g_prio AS g2",
-            _SQL["agg_rollup"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "cube",
-            "l_returnflag AS k1, l_linestatus AS k2, CAST(NULL AS BIGINT) "
-            "AS n_orders, sum_qty AS total, g_rf AS g1, g_ls AS g2",
-            _SQL["agg_cube"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "gsets",
-            "n_name AS k1, o_orderpriority AS k2, n_orders, "
-            "CAST(NULL AS DOUBLE) AS total, g_nation AS g1, g_prio AS g2",
-            _SQL["sql_grouping_sets"],
-        )
-    ),
+    {
+        "k1": "CAST(NULL AS STRING)",
+        "k2": "CAST(NULL AS STRING)",
+        "n_orders": "CAST(NULL AS BIGINT)",
+        "total": "CAST(NULL AS DOUBLE)",
+        "g1": "CAST(NULL AS INT)",
+        "g2": "CAST(NULL AS INT)",
+    },
+    [
+        ("rollup", "agg_rollup", {
+            "k1": "n_name", "k2": "o_orderpriority", "n_orders": "n_orders",
+            "total": "total", "g1": "g_nation", "g2": "g_prio"}),
+        ("cube", "agg_cube", {
+            "k1": "l_returnflag", "k2": "l_linestatus", "total": "sum_qty",
+            "g1": "g_rf", "g2": "g_ls"}),
+        ("gsets", "sql_grouping_sets", {
+            "k1": "n_name", "k2": "o_orderpriority", "n_orders": "n_orders",
+            "g1": "g_nation", "g2": "g_prio"}),
+    ],
     doc="ROLLUP + CUBE + GROUPING SETS (the spark.sql path) in one tagged "
     "union. Subsumes agg_rollup, agg_cube, sql_grouping_sets.",
 )
-def agg_grouping_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _FN["agg_rollup"](spark, sf_dir).select(
-        _tag("rollup"),
-        F.col("n_name").alias("k1"),
-        F.col("o_orderpriority").alias("k2"),
-        "n_orders",
-        "total",
-        F.col("g_nation").alias("g1"),
-        F.col("g_prio").alias("g2"),
-    )
-    c = _FN["agg_cube"](spark, sf_dir).select(
-        _tag("cube"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        _null("bigint").alias("n_orders"),
-        F.col("sum_qty").alias("total"),
-        F.col("g_rf").alias("g1"),
-        F.col("g_ls").alias("g2"),
-    )
-    g = _FN["sql_grouping_sets"](spark, sf_dir).select(
-        _tag("gsets"),
-        F.col("n_name").alias("k1"),
-        F.col("o_orderpriority").alias("k2"),
-        "n_orders",
-        _null("double").alias("total"),
-        F.col("g_nation").alias("g1"),
-        F.col("g_prio").alias("g2"),
-    )
-    return r.unionByName(c).unionByName(g)
 
 
-@register(
+agg_stats_battery = _table_battery(
     "agg_stats_battery",
-    oracle=(
-        _wrap(
-            "moments",
-            "l_returnflag AS k, CAST(n AS DOUBLE) AS v1, qty_stddev AS v2, "
-            "qty_var AS v3, qty_skew AS v4, qty_kurt AS v5, "
-            "price_qty_corr AS v6",
-            _SQL["agg_stats_moments"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "percentiles",
-            "o_orderpriority AS k, p50 AS v1, p90 AS v2, p99 AS v3, "
-            "CAST(approx_ok AS DOUBLE) AS v4, CAST(NULL AS DOUBLE) AS v5, "
-            "CAST(NULL AS DOUBLE) AS v6",
-            _SQL["agg_percentiles"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "psi",
-            "bucket AS k, p_ref AS v1, p_cur AS v2, contrib AS v3, "
-            "psi AS v4, CAST(NULL AS DOUBLE) AS v5, "
-            "CAST(NULL AS DOUBLE) AS v6",
-            _SQL["agg_psi_drift"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "mad",
-            "o_orderpriority AS k, median AS v1, mad AS v2, "
-            "CAST(n_outliers AS DOUBLE) AS v3, outlier_frac AS v4, "
-            "CAST(NULL AS DOUBLE) AS v5, CAST(NULL AS DOUBLE) AS v6",
-            _SQL["agg_mad_outliers"],
-        )
-    ),
+    {
+        "k": "CAST(NULL AS STRING)",
+        **{f"v{i}": "CAST(NULL AS DOUBLE)" for i in range(1, 7)},
+    },
+    [
+        ("moments", "agg_stats_moments", {
+            "k": "l_returnflag", "v1": "CAST(n AS DOUBLE)", "v2": "qty_stddev",
+            "v3": "qty_var", "v4": "qty_skew", "v5": "qty_kurt",
+            "v6": "price_qty_corr"}),
+        ("percentiles", "agg_percentiles", {
+            "k": "o_orderpriority", "v1": "p50", "v2": "p90", "v3": "p99",
+            "v4": "CAST(approx_ok AS DOUBLE)"}),
+        ("psi", "agg_psi_drift", {
+            "k": "bucket", "v1": "p_ref", "v2": "p_cur", "v3": "contrib",
+            "v4": "psi"}),
+        ("mad", "agg_mad_outliers", {
+            "k": "o_orderpriority", "v1": "median", "v2": "mad",
+            "v3": "CAST(n_outliers AS DOUBLE)", "v4": "outlier_frac"}),
+    ],
     doc="Statistical moments (stddev/var/skew/kurt/corr per returnflag) + "
     "exact percentiles per priority with the approx_percentile sketch "
     "folded to an invariant boolean, normalized to (part, k, v1..v6), "
@@ -380,48 +395,6 @@ def agg_grouping_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_stats.py. Subsumes agg_stats_moments, agg_percentiles, "
     "agg_psi_drift, agg_mad_outliers.",
 )
-def agg_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _FN["agg_stats_moments"](spark, sf_dir).select(
-        _tag("moments"),
-        F.col("l_returnflag").alias("k"),
-        F.col("n").cast("double").alias("v1"),
-        F.col("qty_stddev").alias("v2"),
-        F.col("qty_var").alias("v3"),
-        F.col("qty_skew").alias("v4"),
-        F.col("qty_kurt").alias("v5"),
-        F.col("price_qty_corr").alias("v6"),
-    )
-    p = _FN["agg_percentiles"](spark, sf_dir).select(
-        _tag("percentiles"),
-        F.col("o_orderpriority").alias("k"),
-        F.col("p50").alias("v1"),
-        F.col("p90").alias("v2"),
-        F.col("p99").alias("v3"),
-        F.col("approx_ok").cast("double").alias("v4"),
-        _null("double").alias("v5"),
-        _null("double").alias("v6"),
-    )
-    d = _FN["agg_psi_drift"](spark, sf_dir).select(
-        _tag("psi"),
-        F.col("bucket").alias("k"),
-        F.col("p_ref").alias("v1"),
-        F.col("p_cur").alias("v2"),
-        F.col("contrib").alias("v3"),
-        F.col("psi").alias("v4"),
-        _null("double").alias("v5"),
-        _null("double").alias("v6"),
-    )
-    md = _FN["agg_mad_outliers"](spark, sf_dir).select(
-        _tag("mad"),
-        F.col("o_orderpriority").alias("k"),
-        F.col("median").alias("v1"),
-        F.col("mad").alias("v2"),
-        F.col("n_outliers").cast("double").alias("v3"),
-        F.col("outlier_frac").alias("v4"),
-        _null("double").alias("v5"),
-        _null("double").alias("v6"),
-    )
-    return m.unionByName(p).unionByName(d).unionByName(md)
 
 
 # ---------------------------------------------------------------------------
@@ -429,103 +402,57 @@ def agg_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+join_semi_anti = _table_battery(
     "join_semi_anti",
-    oracle=(
-        _wrap("semi", "c_custkey, c_name", _SQL["join_semi"])
-        + "\nUNION ALL\n"
-        + _wrap("anti", "c_custkey, c_name", _SQL["join_anti"])
-    ),
+    {"c_custkey": "CAST(NULL AS BIGINT)", "c_name": "CAST(NULL AS STRING)"},
+    [
+        ("semi", "join_semi", _same("c_custkey", "c_name")),
+        ("anti", "join_anti", _same("c_custkey", "c_name")),
+    ],
     doc="Left-semi (EXISTS) + left-anti (NOT EXISTS) membership joins, "
     "tagged. Subsumes join_semi, join_anti.",
 )
-def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _FN["join_semi"](spark, sf_dir).select(_tag("semi"), "c_custkey", "c_name")
-    a = _FN["join_anti"](spark, sf_dir).select(_tag("anti"), "c_custkey", "c_name")
-    return s.unionByName(a)
 
 
-@register(
+join_outer_battery = _table_battery(
     "join_outer_battery",
-    oracle=(
-        _wrap(
-            "right",
-            "c_custkey AS k1, o_orderkey AS k2, c_mktsegment AS s1",
-            _SQL["join_right"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "full",
-            "custkey AS k1, CAST(NULL AS BIGINT) AS k2, "
-            "CAST(has_open_order AS VARCHAR) || '|' || "
-            "CAST(is_rich AS VARCHAR) AS s1",
-            _SQL["join_full_outer"],
-        )
-    ),
+    {
+        "k1": "CAST(NULL AS BIGINT)",
+        "k2": "CAST(NULL AS BIGINT)",
+        "s1": "CAST(NULL AS STRING)",
+    },
+    [
+        ("right", "join_right", {
+            "k1": "c_custkey", "k2": "o_orderkey", "s1": "c_mktsegment"}),
+        ("full", "join_full_outer", {
+            "k1": "custkey",
+            "s1": "CAST(has_open_order AS STRING) || '|' || "
+            "CAST(is_rich AS STRING)"}),
+    ],
     doc="Right outer + full outer (MERGE core) joins, tagged and "
     "normalized. Subsumes join_right, join_full_outer.",
 )
-def join_outer_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _FN["join_right"](spark, sf_dir).select(
-        _tag("right"),
-        F.col("c_custkey").alias("k1"),
-        F.col("o_orderkey").alias("k2"),
-        F.col("c_mktsegment").alias("s1"),
-    )
-    f = _FN["join_full_outer"](spark, sf_dir).select(
-        _tag("full"),
-        F.col("custkey").alias("k1"),
-        _null("bigint").alias("k2"),
-        F.concat(
-            F.col("has_open_order").cast("string"),
-            F.lit("|"),
-            F.col("is_rich").cast("string"),
-        ).alias("s1"),
-    )
-    return r.unionByName(f)
 
 
-@register(
+join_misc_battery = _table_battery(
     "join_misc_battery",
-    oracle=(
-        _wrap(
-            "cross",
-            "CAST(NULL AS BIGINT) AS k, r_name AS a, n_name AS b",
-            _SQL["join_cross"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap("zip", "pos AS k, r_name AS a, n_name AS b", _SQL["join_zip_positional"])
-        + "\nUNION ALL\n"
-        + _wrap(
-            "range",
-            "p_partkey AS k, CAST(p_size AS VARCHAR) AS a, bucket_name AS b",
-            _SQL["join_range_theta"],
-        )
-    ),
+    {
+        "k": "CAST(NULL AS BIGINT)",
+        "a": "CAST(NULL AS STRING)",
+        "b": "CAST(NULL AS STRING)",
+    },
+    [
+        ("cross", "join_cross", {"a": "r_name", "b": "n_name"}),
+        ("zip", "join_zip_positional", {
+            "k": "pos", "a": "r_name", "b": "n_name"}),
+        ("range", "join_range_theta", {
+            "k": "p_partkey", "a": "CAST(p_size AS STRING)",
+            "b": "bucket_name"}),
+    ],
     doc="Cross join + positional zip pairing (J4) + theta/range banding "
     "join, tagged and normalized. Subsumes join_cross, "
     "join_zip_positional, join_range_theta.",
 )
-def join_misc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _FN["join_cross"](spark, sf_dir).select(
-        _tag("cross"),
-        _null("bigint").alias("k"),
-        F.col("r_name").alias("a"),
-        F.col("n_name").alias("b"),
-    )
-    z = _FN["join_zip_positional"](spark, sf_dir).select(
-        _tag("zip"),
-        F.col("pos").alias("k"),
-        F.col("r_name").alias("a"),
-        F.col("n_name").alias("b"),
-    )
-    r = _FN["join_range_theta"](spark, sf_dir).select(
-        _tag("range"),
-        F.col("p_partkey").alias("k"),
-        F.col("p_size").cast("string").alias("a"),
-        F.col("bucket_name").alias("b"),
-    )
-    return c.unionByName(z).unionByName(r)
 
 
 # ---------------------------------------------------------------------------
@@ -533,81 +460,74 @@ def join_misc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+filter_null_battery = _table_battery(
     "filter_null_battery",
-    oracle=(
-        _wrap(
-            "nulls",
-            "event_id AS k1, CAST(NULL AS BIGINT) AS k2, "
-            "CAST(NULL AS BIGINT) AS k3, CAST(NULL AS BIGINT) AS k4, "
-            "value AS v1, value_filled AS v2, value_missing AS flag",
-            _SQL["filter_null_handling"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "drop",
-            "l_orderkey AS k1, CAST(l_linenumber AS BIGINT) AS k2, "
-            "l_partkey AS k3, l_suppkey AS k4, "
-            "CAST(l_quantity AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2, "
-            "CAST(NULL AS BOOLEAN) AS flag",
-            _SQL["column_drop"],
-        )
-    ),
+    {
+        **{f"k{i}": "CAST(NULL AS BIGINT)" for i in range(1, 5)},
+        "v1": "CAST(NULL AS DOUBLE)",
+        "v2": "CAST(NULL AS DOUBLE)",
+        "flag": "CAST(NULL AS BOOLEAN)",
+    },
+    [
+        ("nulls", "filter_null_handling", {
+            "k1": "event_id", "v1": "value", "v2": "value_filled",
+            "flag": "value_missing"}),
+        ("drop", "column_drop", {
+            "k1": "l_orderkey", "k2": "CAST(l_linenumber AS BIGINT)",
+            "k3": "l_partkey", "k4": "l_suppkey",
+            "v1": "CAST(l_quantity AS DOUBLE)"}),
+    ],
     doc="Null predicates/coalesce fill (P5/P7) + column drop with pruning "
     "(P3), tagged and normalized. Subsumes filter_null_handling, "
     "column_drop.",
 )
-def filter_null_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = _FN["filter_null_handling"](spark, sf_dir).select(
-        _tag("nulls"),
-        F.col("event_id").alias("k1"),
-        _null("bigint").alias("k2"),
-        _null("bigint").alias("k3"),
-        _null("bigint").alias("k4"),
-        F.col("value").alias("v1"),
-        F.col("value_filled").alias("v2"),
-        F.col("value_missing").alias("flag"),
-    )
-    d = _FN["column_drop"](spark, sf_dir).select(
-        _tag("drop"),
-        F.col("l_orderkey").alias("k1"),
-        F.col("l_linenumber").cast("bigint").alias("k2"),
-        F.col("l_partkey").alias("k3"),
-        F.col("l_suppkey").alias("k4"),
-        F.col("l_quantity").cast("double").alias("v1"),
-        _null("double").alias("v2"),
-        _null("boolean").alias("flag"),
-    )
-    return n.unionByName(d)
 
 
-@register(
+# the ALL (multiset) set ops over naturally-duplicated custkeys: orders
+# with o_orderkey % 3 = 0 against those with o_orderkey % 2 = 0
+def _custkeys(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
+    return (
+        load(spark, sf_dir, "orders")
+        .where(F.col("o_orderkey") % mod == 0)
+        .select(F.col("o_custkey").alias("custkey"))
+    )
+
+
+_INTERSECT_ALL_ORACLE = (
+    "SELECT o_custkey AS custkey FROM orders "
+    "WHERE o_orderkey % 3 = 0 "
+    "INTERSECT ALL "
+    "SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0"
+)
+
+
+def _intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _custkeys(spark, sf_dir, 3).intersectAll(_custkeys(spark, sf_dir, 2))
+
+
+_EXCEPT_ALL_ORACLE = (
+    "SELECT o_custkey AS custkey FROM orders "
+    "WHERE o_orderkey % 3 = 0 "
+    "EXCEPT ALL "
+    "SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0"
+)
+
+
+def _except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _custkeys(spark, sf_dir, 3).exceptAll(_custkeys(spark, sf_dir, 2))
+
+
+set_ops_battery = _table_battery(
     "set_ops_battery",
-    oracle=(
-        _wrap("union", "custkey", _SQL["set_union_distinct"])
-        + "\nUNION ALL\n"
-        + _wrap("intersect", "custkey", _SQL["set_intersect"])
-        + "\nUNION ALL\n"
-        + _wrap("except", "custkey", _SQL["set_except"])
-        + "\nUNION ALL\n"
-        + _wrap(
-            "intersect_all",
-            "custkey",
-            "SELECT o_custkey AS custkey FROM orders "
-            "WHERE o_orderkey % 3 = 0 "
-            "INTERSECT ALL "
-            "SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "except_all",
-            "custkey",
-            "SELECT o_custkey AS custkey FROM orders "
-            "WHERE o_orderkey % 3 = 0 "
-            "EXCEPT ALL "
-            "SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0",
-        )
-    ),
+    {"custkey": "CAST(NULL AS BIGINT)"},
+    [
+        ("union", "set_union_distinct", _same("custkey")),
+        ("intersect", "set_intersect", _same("custkey")),
+        ("except", "set_except", _same("custkey")),
+        ("intersect_all", (_intersect_all, _INTERSECT_ALL_ORACLE),
+         _same("custkey")),
+        ("except_all", (_except_all, _EXCEPT_ALL_ORACLE), _same("custkey")),
+    ],
     doc="UNION DISTINCT (A1) + INTERSECT + EXCEPT, plus — round 9 — "
     "the ALL (multiset) variants over naturally-duplicated custkeys "
     "(a customer appears once per order): INTERSECT ALL keeps "
@@ -618,25 +538,6 @@ def filter_null_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "MULTIPLICITIES, which is the whole point of the ALL branches. "
     "Subsumes set_union_distinct, set_intersect, set_except.",
 )
-def set_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    u = _FN["set_union_distinct"](spark, sf_dir).select(_tag("union"), "custkey")
-    i = _FN["set_intersect"](spark, sf_dir).select(_tag("intersect"), "custkey")
-    e = _FN["set_except"](spark, sf_dir).select(_tag("except"), "custkey")
-    o = load(spark, sf_dir, "orders")
-    a3 = o.where(F.col("o_orderkey") % 3 == 0).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    a2 = o.where(F.col("o_orderkey") % 2 == 0).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    ia = a3.intersectAll(a2).select(_tag("intersect_all"), "custkey")
-    ea = a3.exceptAll(a2).select(_tag("except_all"), "custkey")
-    return (
-        u.unionByName(i)
-        .unionByName(e)
-        .unionByName(ia)
-        .unionByName(ea)
-    )
 
 
 _WINDOW_NAV_SQL = """
@@ -691,12 +592,6 @@ _WINDOW_QBIN_SQL = """
            END AS running_value
     FROM events, edges
 """
-
-_WINDOW_AUX = (
-    "CAST(NULL AS VARCHAR) AS prev_type, CAST(NULL AS VARCHAR) AS next_type, "
-    "CAST(NULL AS BIGINT) AS secs_since_prev"
-)
-
 
 def _events_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "events").select(
@@ -844,46 +739,52 @@ def scalar_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+def _window_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running sum + lag/lead over one (user_id, ts) window: the Spark
+    side of _WINDOW_NAV_SQL."""
+    from pyspark.sql.window import Window as W
+
+    from ..functions.numeric import money
+
+    e = load(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    prev_ts = F.lag("ts").over(w)
+    return e.select(
+        "user_id",
+        "event_id",
+        "ts",
+        F.sum(money("value")).over(run).cast("double").alias("running_value"),
+        F.lag("event_type").over(w).alias("prev_type"),
+        F.lead("event_type").over(w).alias("next_type"),
+        (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)).alias(
+            "secs_since_prev"
+        ),
+    )
+
+
+_RUNNING = _same("user_id", "event_id", "ts", "running_value")
+
+window_events_battery = _table_battery(
     "window_events_battery",
-    oracle=(
-        _wrap(
-            "nav",
-            "user_id, event_id, ts, running_value, prev_type, next_type, "
-            "secs_since_prev",
-            _WINDOW_NAV_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "rn",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_RN_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "cumsum",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_CUMSUM_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "rdist",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_RDIST_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "qbin",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _WINDOW_QBIN_SQL,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "zorder",
-            f"user_id, event_id, ts, running_value, {_WINDOW_AUX}",
-            _ZORDER_ORACLE,
-        )
-    ),
+    {
+        "user_id": "CAST(NULL AS BIGINT)",
+        "event_id": "CAST(NULL AS BIGINT)",
+        "ts": "CAST(NULL AS TIMESTAMP)",
+        "running_value": "CAST(NULL AS DOUBLE)",
+        "prev_type": "CAST(NULL AS STRING)",
+        "next_type": "CAST(NULL AS STRING)",
+        "secs_since_prev": "CAST(NULL AS BIGINT)",
+    },
+    [
+        ("nav", (_window_nav, _WINDOW_NAV_SQL), {
+            **_RUNNING, **_same("prev_type", "next_type", "secs_since_prev")}),
+        ("rn", "window_grouped_row_number", _RUNNING),
+        ("cumsum", "window_distributed_cumsum", _RUNNING),
+        ("rdist", "window_running_distinct", _RUNNING),
+        ("qbin", "window_quantile_bins", _RUNNING),
+        ("zorder", "scalar_zorder_key", _RUNNING),
+    ],
     doc="Frame-spec running sum + lag/lead navigation over the SAME "
     "(user_id, ts) window (part=nav), PLUS the three distributed window "
     "alternatives hash-checked against their plain-window oracle "
@@ -902,45 +803,6 @@ def scalar_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetic). Subsumes window_running_sum, window_lag_lead, "
     "window_running_distinct.",
 )
-def window_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    from ..functions.numeric import money
-
-    e = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    prev_ts = F.lag("ts").over(w)
-    nav = e.select(
-        _tag("nav"),
-        "user_id",
-        "event_id",
-        "ts",
-        F.sum(money("value")).over(run).cast("double").alias("running_value"),
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.lead("event_type").over(w).alias("next_type"),
-        (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)).alias(
-            "secs_since_prev"
-        ),
-    )
-
-    aux = [
-        _null("string").alias("prev_type"),
-        _null("string").alias("next_type"),
-        _null("bigint").alias("secs_since_prev"),
-    ]
-    rn = window_grouped_row_number(spark, sf_dir).select(_tag("rn"), "*", *aux)
-    cs = window_distributed_cumsum(spark, sf_dir).select(_tag("cumsum"), "*", *aux)
-    rd = window_running_distinct(spark, sf_dir).select(_tag("rdist"), "*", *aux)
-    qb = window_quantile_bins(spark, sf_dir).select(_tag("qbin"), "*", *aux)
-    zo = scalar_zorder_key(spark, sf_dir).select(_tag("zorder"), "*", *aux)
-    return (
-        nav.unionByName(rn)
-        .unionByName(cs)
-        .unionByName(rd)
-        .unionByName(qb)
-        .unionByName(zo)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -948,31 +810,19 @@ def window_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+etl_bridges = _table_battery(
     "etl_bridges",
-    oracle=(
-        _wrap("star", "movie_id, person_id", _SQL["etl_bridge_star"])
-        + "\nUNION ALL\n"
-        + _wrap("director", "movie_id, person_id", _SQL["etl_bridge_director"])
-        + "\nUNION ALL\n"
-        + _wrap("writer", "movie_id, person_id", _SQL["etl_bridge_writer"])
-    ),
+    {"movie_id": "CAST(NULL AS INT)", "person_id": "CAST(NULL AS INT)"},
+    [
+        ("star", "etl_bridge_star", _same("movie_id", "person_id")),
+        ("director", "etl_bridge_director", _same("movie_id", "person_id")),
+        ("writer", "etl_bridge_writer", _same("movie_id", "person_id")),
+    ],
     doc="All three bridge tables (E2/E3 keyed unnest -> broadcast people "
     "join -> composite-PK dedup; reference webscraper-postgres.py:"
     "239-285), tagged. Subsumes etl_bridge_star, etl_bridge_director, "
     "etl_bridge_writer.",
 )
-def etl_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _FN["etl_bridge_star"](spark, sf_dir).select(
-        _tag("star"), "movie_id", "person_id"
-    )
-    d = _FN["etl_bridge_director"](spark, sf_dir).select(
-        _tag("director"), "movie_id", "person_id"
-    )
-    w = _FN["etl_bridge_writer"](spark, sf_dir).select(
-        _tag("writer"), "movie_id", "person_id"
-    )
-    return s.unionByName(d).unionByName(w)
 
 
 # Shared CDC change-stream fixture (Spark + SQL twins below): full-row
@@ -1041,56 +891,75 @@ def _cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NO_VALID = "CAST(NULL AS BIGINT) AS valid_from_v, CAST(NULL AS BIGINT) AS valid_to_v"
+_CDC_PAYLOAD = ["o_custkey", "o_orderstatus", "total"]
+
+# part=cdc: the change stream folded to final state (latest-wins,
+# trailing deletes drop the key)
+_CDC_STATE_ORACLE = f"""
+    SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
+           o_custkey
+    FROM (
+      SELECT *, row_number() OVER (
+                PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
+      FROM ({_CDC_SQL}) ch
+    ) latest
+    WHERE rn = 1 AND op <> 'D'
+"""
 
 
-@register(
+def _cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.etl import apply_changes
+
+    return apply_changes(
+        _cdc_changes(spark, sf_dir), "o_orderkey", "seq", "op", _CDC_PAYLOAD
+    )
+
+
+# part=scd2: the change stream as type-2 history (NULL valid_to_v = the
+# current row; deletes close intervals without emitting rows)
+_SCD2_HISTORY_ORACLE = f"""
+    SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
+           o_custkey, CAST(seq AS BIGINT) AS valid_from_v, valid_to_v
+    FROM (
+      SELECT *, CAST(lead(seq) OVER (
+                PARTITION BY o_orderkey ORDER BY seq) AS BIGINT)
+                AS valid_to_v
+      FROM ({_CDC_SQL}) ch
+    ) versions
+    WHERE op <> 'D'
+"""
+
+
+def _scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.etl import scd2_history
+
+    return scd2_history(
+        _cdc_changes(spark, sf_dir), "o_orderkey", "seq", "op", _CDC_PAYLOAD
+    )
+
+
+_UPSERTED = _same("o_orderkey", "o_orderstatus", "total", "o_custkey")
+_CDC_ROWS = {**_UPSERTED, "total": "CAST(total AS DOUBLE)"}
+
+etl_upsert_idempotent = _table_battery(
     "etl_upsert_idempotent",
-    oracle=(
-        _wrap(
-            "once",
-            f"o_orderkey, o_orderstatus, total, o_custkey, {_NO_VALID}",
-            _SQL["etl_upsert_orders"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "twice",
-            f"o_orderkey, o_orderstatus, total, o_custkey, {_NO_VALID}",
-            _SQL["etl_incremental_rerun"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "cdc",
-            f"o_orderkey, o_orderstatus, total, o_custkey, {_NO_VALID}",
-            f"""
-            SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
-                   o_custkey
-            FROM (
-              SELECT *, row_number() OVER (
-                        PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
-              FROM ({_CDC_SQL}) ch
-            ) latest
-            WHERE rn = 1 AND op <> 'D'
-            """,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "scd2",
-            "o_orderkey, o_orderstatus, total, o_custkey, "
-            "valid_from_v, valid_to_v",
-            f"""
-            SELECT o_orderkey, o_orderstatus, CAST(total AS DOUBLE) AS total,
-                   o_custkey, CAST(seq AS BIGINT) AS valid_from_v, valid_to_v
-            FROM (
-              SELECT *, CAST(lead(seq) OVER (
-                        PARTITION BY o_orderkey ORDER BY seq) AS BIGINT)
-                        AS valid_to_v
-              FROM ({_CDC_SQL}) ch
-            ) versions
-            WHERE op <> 'D'
-            """,
-        )
-    ),
+    {
+        "o_orderkey": "CAST(NULL AS BIGINT)",
+        "o_orderstatus": "CAST(NULL AS STRING)",
+        "total": "CAST(NULL AS DOUBLE)",
+        "o_custkey": "CAST(NULL AS BIGINT)",
+        "valid_from_v": "CAST(NULL AS BIGINT)",
+        "valid_to_v": "CAST(NULL AS BIGINT)",
+    },
+    [
+        ("once", "etl_upsert_orders", _UPSERTED),
+        ("twice", "etl_incremental_rerun", _UPSERTED),
+        ("cdc", (_cdc_state, _CDC_STATE_ORACLE), _CDC_ROWS),
+        ("scd2", (_scd2_history, _SCD2_HISTORY_ORACLE), {
+            **_CDC_ROWS,
+            "valid_from_v": "CAST(valid_from_v AS BIGINT)",
+            "valid_to_v": "CAST(valid_to_v AS BIGINT)"}),
+    ],
     doc="S5 MERGE upsert + S7 idempotent re-run (apply the same batch "
     "twice -> identical table; both branches share one oracle result by "
     "construction), plus the CDC surface over a deterministic I/U/D "
@@ -1104,35 +973,6 @@ _NO_VALID = "CAST(NULL AS BIGINT) AS valid_from_v, CAST(NULL AS BIGINT) AS valid
     "branches run the identical windows in DuckDB. Subsumes "
     "etl_upsert_orders, etl_incremental_rerun.",
 )
-def etl_upsert_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.etl import apply_changes, scd2_history
-
-    no_valid = [
-        _null("bigint").alias("valid_from_v"),
-        _null("bigint").alias("valid_to_v"),
-    ]
-    once = _FN["etl_upsert_orders"](spark, sf_dir).select(
-        _tag("once"), "o_orderkey", "o_orderstatus", "total", "o_custkey",
-        *no_valid,
-    )
-    twice = _FN["etl_incremental_rerun"](spark, sf_dir).select(
-        _tag("twice"), "o_orderkey", "o_orderstatus", "total", "o_custkey",
-        *no_valid,
-    )
-    payload = ["o_custkey", "o_orderstatus", "total"]
-    changes = _cdc_changes(spark, sf_dir)
-    cdc = apply_changes(changes, "o_orderkey", "seq", "op", payload).select(
-        _tag("cdc"), "o_orderkey", "o_orderstatus",
-        F.col("total").cast("double").alias("total"), "o_custkey",
-        *no_valid,
-    )
-    scd2 = scd2_history(changes, "o_orderkey", "seq", "op", payload).select(
-        _tag("scd2"), "o_orderkey", "o_orderstatus",
-        F.col("total").cast("double").alias("total"), "o_custkey",
-        F.col("valid_from_v").cast("bigint").alias("valid_from_v"),
-        F.col("valid_to_v").cast("bigint").alias("valid_to_v"),
-    )
-    return once.unionByName(twice).unionByName(cdc).unionByName(scd2)
 
 
 # ---------------------------------------------------------------------------
@@ -1745,34 +1585,33 @@ _JLPROJ_ORACLE = """
 """
 
 
-@register(
+def _jlproj(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.similarity import jl_project
+
+    return jl_project(
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", out_dim=4
+    )
+
+
+multimodal_scalar_battery = _table_battery(
     "multimodal_scalar_battery",
-    oracle=(
-        _wrap(
-            "props",
-            "event_type AS k, n_events AS n1, k_sum AS n2, "
-            "CAST(k_max AS BIGINT) AS n3, CAST(NULL AS BIGINT) AS n4, "
-            "CAST(NULL AS BIGINT) AS n5, k_avg AS v",
-            _SQL["multimodal_props_json"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "quantize",
-            "CAST(vec_id AS VARCHAR) AS k, CAST(dim AS BIGINT) AS n1, "
-            "q_sum AS n2, CAST(n_pos AS BIGINT) AS n3, q_max AS n4, "
-            "q_min AS n5, CAST(NULL AS DOUBLE) AS v",
-            _SQL["multimodal_embedding_quantize"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "jlproj",
-            "CAST(vec_id AS VARCHAR) AS k, CAST(out_dim AS BIGINT) AS n1, "
-            "CAST(NULL AS BIGINT) AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "CAST(NULL AS BIGINT) AS n4, CAST(NULL AS BIGINT) AS n5, "
-            "y AS v",
-            _JLPROJ_ORACLE,
-        )
-    ),
+    {
+        "k": "CAST(NULL AS STRING)",
+        **{f"n{i}": "CAST(NULL AS BIGINT)" for i in range(1, 6)},
+        "v": "CAST(NULL AS DOUBLE)",
+    },
+    [
+        ("props", "multimodal_props_json", {
+            "k": "event_type", "n1": "n_events", "n2": "k_sum",
+            "n3": "CAST(k_max AS BIGINT)", "v": "k_avg"}),
+        ("quantize", "multimodal_embedding_quantize", {
+            "k": "CAST(vec_id AS STRING)", "n1": "CAST(dim AS BIGINT)",
+            "n2": "q_sum", "n3": "CAST(n_pos AS BIGINT)", "n4": "q_max",
+            "n5": "q_min"}),
+        ("jlproj", (_jlproj, _JLPROJ_ORACLE), {
+            "k": "CAST(vec_id AS STRING)", "n1": "CAST(out_dim AS BIGINT)",
+            "v": "y"}),
+    ],
     doc="The multimodal scalar surface in one battery: JSON sidecar "
     "parsing (part=props: from_json schema-on-read -> typed aggregation, "
     "exact integer sums) + embedding quantization features (part="
@@ -1785,42 +1624,6 @@ _JLPROJ_ORACLE = """
     "(part, k, n1..n5, v). All branches hash-checked. Subsumes "
     "multimodal_props_json, multimodal_embedding_quantize.",
 )
-def multimodal_scalar_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _FN["multimodal_props_json"](spark, sf_dir).select(
-        _tag("props"),
-        F.col("event_type").alias("k"),
-        F.col("n_events").alias("n1"),
-        F.col("k_sum").alias("n2"),
-        F.col("k_max").cast("bigint").alias("n3"),
-        _null("bigint").alias("n4"),
-        _null("bigint").alias("n5"),
-        F.col("k_avg").alias("v"),
-    )
-    q = _FN["multimodal_embedding_quantize"](spark, sf_dir).select(
-        _tag("quantize"),
-        F.col("vec_id").cast("string").alias("k"),
-        F.col("dim").cast("bigint").alias("n1"),
-        F.col("q_sum").alias("n2"),
-        F.col("n_pos").cast("bigint").alias("n3"),
-        F.col("q_max").alias("n4"),
-        F.col("q_min").alias("n5"),
-        _null("double").alias("v"),
-    )
-    from ..operators.similarity import jl_project
-
-    jl = jl_project(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", out_dim=4
-    ).select(
-        _tag("jlproj"),
-        F.col("vec_id").cast("string").alias("k"),
-        F.col("out_dim").cast("bigint").alias("n1"),
-        _null("bigint").alias("n2"),
-        _null("bigint").alias("n3"),
-        _null("bigint").alias("n4"),
-        _null("bigint").alias("n5"),
-        F.col("y").alias("v"),
-    )
-    return p.unionByName(q).unionByName(jl)
 
 
 from ..operators.text import PII_PATTERNS as _PII  # noqa: E402
@@ -1937,43 +1740,39 @@ def text_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+def _doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.text import chunk_documents
+
+    return chunk_documents(
+        load(spark, sf_dir, "documents").where(F.col("doc_id") < 200),
+        "text",
+        "doc_id",
+        window=16,
+        stride=8,
+    )
+
+
+text_tokens_battery = _table_battery(
     "text_tokens_battery",
-    oracle=(
-        _wrap(
-            "word_counts",
-            "CAST(NULL AS BIGINT) AS k1, n AS k2, word, "
-            "CAST(NULL AS INT) AS n_tok",
-            _SQL["text_word_counts"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "posexplode",
-            "doc_id AS k1, CAST(pos AS BIGINT) AS k2, word, "
-            "CAST(NULL AS INT) AS n_tok",
-            _SQL["scalar_posexplode"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "chunk",
-            "doc_id AS k1, CAST(chunk_idx AS BIGINT) AS k2, "
-            "chunk_text AS word, n_chunk_tokens AS n_tok",
-            _CHUNK_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "pack",
-            "bin_id AS k1, offset_in_bin AS k2, chunk_ref AS word, "
-            "n_chunk_tokens AS n_tok",
-            _PACK_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "tfidf",
-            "doc_id AS k1, tf AS k2, word, dfreq AS n_tok",
-            _TFIDF_ORACLE,
-        )
-    ),
+    {
+        "k1": "CAST(NULL AS BIGINT)",
+        "k2": "CAST(NULL AS BIGINT)",
+        "word": "CAST(NULL AS STRING)",
+        "n_tok": "CAST(NULL AS INT)",
+    },
+    [
+        ("word_counts", "text_word_counts", {"k2": "n", "word": "word"}),
+        ("posexplode", "scalar_posexplode", {
+            "k1": "doc_id", "k2": "CAST(pos AS BIGINT)", "word": "word"}),
+        ("chunk", (_doc_chunks, _CHUNK_ORACLE), {
+            "k1": "doc_id", "k2": "CAST(chunk_idx AS BIGINT)",
+            "word": "chunk_text", "n_tok": "n_chunk_tokens"}),
+        ("pack", "text_sequence_packing", {
+            "k1": "bin_id", "k2": "offset_in_bin", "word": "chunk_ref",
+            "n_tok": "n_chunk_tokens"}),
+        ("tfidf", "text_tfidf_stats", {
+            "k1": "doc_id", "k2": "tf", "word": "word", "n_tok": "dfreq"}),
+    ],
     doc="Corpus word frequencies (tokenize -> explode -> two-phase count) "
     "+ posexplode indexed unnest + sliding-window document chunking "
     "(operators/text.py::chunk_documents, window=16/stride=8 — the "
@@ -1986,54 +1785,6 @@ def text_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact lexical features, shuffle-hash dfreq join), tagged. "
     "Subsumes text_word_counts, scalar_posexplode.",
 )
-def text_tokens_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.text import chunk_documents
-
-    wc = _FN["text_word_counts"](spark, sf_dir).select(
-        _tag("word_counts"),
-        _null("bigint").alias("k1"),
-        F.col("n").alias("k2"),
-        "word",
-        _null("int").alias("n_tok"),
-    )
-    pe = _FN["scalar_posexplode"](spark, sf_dir).select(
-        _tag("posexplode"),
-        F.col("doc_id").alias("k1"),
-        F.col("pos").cast("bigint").alias("k2"),
-        "word",
-        _null("int").alias("n_tok"),
-    )
-    chunks = chunk_documents(
-        load(spark, sf_dir, "documents").where(F.col("doc_id") < 200),
-        "text",
-        "doc_id",
-        window=16,
-        stride=8,
-    )
-    ch_out = chunks.select(
-        _tag("chunk"),
-        F.col("doc_id").alias("k1"),
-        F.col("chunk_idx").cast("bigint").alias("k2"),
-        F.col("chunk_text").alias("word"),
-        F.col("n_chunk_tokens").alias("n_tok"),
-    )
-    pk = text_sequence_packing(spark, sf_dir).select(
-        _tag("pack"),
-        F.col("bin_id").alias("k1"),
-        F.col("offset_in_bin").alias("k2"),
-        F.col("chunk_ref").alias("word"),
-        F.col("n_chunk_tokens").alias("n_tok"),
-    )
-    ti = text_tfidf_stats(spark, sf_dir).select(
-        _tag("tfidf"),
-        F.col("doc_id").alias("k1"),
-        F.col("tf").alias("k2"),
-        "word",
-        F.col("dfreq").alias("n_tok"),
-    )
-    return (
-        wc.unionByName(pe).unionByName(ch_out).unionByName(pk).unionByName(ti)
-    )
 
 
 @register(
@@ -2237,44 +1988,26 @@ def scalar_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+sql_text_battery = _table_battery(
     "sql_text_battery",
-    oracle=(
-        _wrap(
-            "q3",
-            "l_orderkey AS k, revenue AS v, o_orderdate AS d, "
-            "o_orderpriority AS s",
-            _SQL["sql_tpch_q3_shipping_priority"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "q17",
-            "n_small AS k, total_price AS v, CAST(NULL AS TIMESTAMP) AS d, "
-            "CAST(NULL AS VARCHAR) AS s",
-            _SQL["sql_q17_correlated_subquery"],
-        )
-    ),
+    {
+        "k": "CAST(NULL AS BIGINT)",
+        "v": "CAST(NULL AS DOUBLE)",
+        "d": "CAST(NULL AS TIMESTAMP)",
+        "s": "CAST(NULL AS STRING)",
+    },
+    [
+        ("q3", "sql_tpch_q3_shipping_priority", {
+            "k": "l_orderkey", "v": "revenue", "d": "o_orderdate",
+            "s": "o_orderpriority"}),
+        ("q17", "sql_q17_correlated_subquery", {
+            "k": "n_small", "v": "total_price"}),
+    ],
     doc="The spark.sql text path: TPC-H Q3 (scan-join-agg-topk) + Q17 "
     "(correlated scalar subquery, Catalyst-decorrelated), tagged and "
     "normalized. Subsumes sql_tpch_q3_shipping_priority, "
     "sql_q17_correlated_subquery.",
 )
-def sql_text_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q3 = _FN["sql_tpch_q3_shipping_priority"](spark, sf_dir).select(
-        _tag("q3"),
-        F.col("l_orderkey").alias("k"),
-        F.col("revenue").alias("v"),
-        F.col("o_orderdate").alias("d"),
-        F.col("o_orderpriority").alias("s"),
-    )
-    q17 = _FN["sql_q17_correlated_subquery"](spark, sf_dir).select(
-        _tag("q17"),
-        F.col("n_small").alias("k"),
-        F.col("total_price").alias("v"),
-        _null("timestamp").alias("d"),
-        _null("string").alias("s"),
-    )
-    return q3.unionByName(q17)
 
 
 # Versioned dim for the as-of branch: order keys mapped onto the events
@@ -2666,151 +2399,132 @@ def stream_fbmerge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+def _asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Backward as-of join of each event against the versioned dim: the
+    Spark side of _ASOF_ORACLE."""
+    from ..operators.timeseries import asof_join
+
+    events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    versions = (
+        load(spark, sf_dir, "orders")
+        .select(
+            F.col("o_custkey").alias("user_id"),
+            F.expr(
+                "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, "
+                "CAST(o_orderkey % 30 AS INT), 0, 0, 0)"
+            ).alias("version_ts"),
+            "o_orderkey",
+            "o_totalprice",
+        )
+        .groupBy("user_id", "version_ts")
+        .agg(
+            F.max("o_orderkey").alias("o_orderkey"),
+            F.max_by("o_totalprice", "o_orderkey").alias("total"),
+        )
+    )
+    return asof_join(
+        events, versions, "user_id", "ts", "version_ts", ["o_orderkey", "total"]
+    ).select(
+        F.col("user_id").alias("uid"),
+        F.col("ts").alias("t1"),
+        F.col("asof_version_ts").alias("t2"),
+        F.col("event_id").alias("n"),
+        F.col("o_orderkey").alias("n2"),
+        F.col("total").alias("v"),
+    )
+
+
+def _ivjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketized points-in-interval join (operators/timeseries.py::
+    interval_join — equi-join on 1h time buckets, no cross product;
+    bucket_width == the interval span, so each interval spans <= 2
+    buckets): the Spark side of _IVJOIN_ORACLE."""
+    from ..operators.timeseries import interval_join
+
+    ev_pts = load(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    trig = (
+        load(spark, sf_dir, "events")
+        .where(F.col("event_id") % 997 == 0)
+        .select(
+            F.col("event_id").alias("trig_id"),
+            F.col("ts").alias("t_start"),
+            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("t_end"),
+        )
+    )
+    return interval_join(
+        ev_pts, trig, "ts", "t_start", "t_end", bucket_width=3600
+    ).select(
+        F.col("user_id").alias("uid"),
+        F.col("t_start").alias("t1"),
+        F.col("t_end").alias("t2"),
+        F.col("event_id").alias("n"),
+        F.col("trig_id").alias("n2"),
+        F.col("value").alias("v"),
+    )
+
+
+_STREAM_WINDOW = {
+    "t1": "w_start", "t2": "w_end", "n": "n_events", "n2": "n_users"}
+_STREAM_JOIN = {
+    "uid": "user_id", "t1": "l_ts", "t2": "r_ts", "n": "l_event_id",
+    "n2": "r_event_id"}
+_TOUCH = "CASE {} WHEN 'view' THEN 1 WHEN 'click' THEN 2 WHEN 'signup' THEN 3 END"
+
+stream_battery = _table_battery(
     "stream_battery",
-    oracle=(
-        _wrap(
-            "tumble",
-            "CAST(NULL AS BIGINT) AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, n_users AS n2, value_sum AS v",
-            _SQL["stream_tumbling_window"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "slide",
-            "CAST(NULL AS BIGINT) AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, n_users AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_sliding_window"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "session",
-            "user_id AS uid, session_start AS t1, session_last AS t2, "
-            "n_events AS n, session_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_sessionize"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "session_builtin",
-            "user_id AS uid, session_start AS t1, session_end AS t2, "
-            "n_events AS n, CAST(NULL AS BIGINT) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_session_window"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "asof",
-            "uid, t1, t2, n, n2, v",
-            _ASOF_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "late",
-            "CAST(NULL AS BIGINT) AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, n_users AS n2, value_sum AS v",
-            _SQL["stream_late_data_drop"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ss",
-            "user_id AS uid, l_ts AS t1, r_ts AS t2, "
-            "l_event_id AS n, r_event_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_stream_join"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ssl",
-            "user_id AS uid, l_ts AS t1, r_ts AS t2, "
-            "l_event_id AS n, r_event_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_stream_left_outer"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ssf",
-            "user_id AS uid, l_ts AS t1, r_ts AS t2, "
-            "l_event_id AS n, r_event_id AS n2, CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_stream_full_outer"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "trend",
-            "user_id AS uid, w_start AS t1, w_end AS t2, "
-            "n_events AS n, CAST(rank AS BIGINT) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            _SQL["stream_trending_topk"],
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ffill",
-            "uid, t1, CAST(NULL AS TIMESTAMP) AS t2, n, "
-            "CAST(NULL AS BIGINT) AS n2, v",
-            _FFILL_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "enrich",
-            "uid, t1, CAST(NULL AS TIMESTAMP) AS t2, n, n2, v",
-            _ENRICH_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "sdedup",
-            "user_id AS uid, ts AS t1, CAST(NULL AS TIMESTAMP) AS t2, "
-            "event_id AS n, CAST(NULL AS BIGINT) AS n2, value AS v",
-            "SELECT user_id, ts, event_id, value FROM events",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ucount",
-            "uid, CAST(NULL AS TIMESTAMP) AS t1, "
-            "CAST(NULL AS TIMESTAMP) AS t2, n, CAST(NULL AS BIGINT) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            "SELECT user_id AS uid, CAST(count(*) AS BIGINT) AS n "
-            "FROM events GROUP BY user_id",
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "funnel",
-            "user_id AS uid, t_1 AS t1, t_2 AS t2, "
-            "CAST(n_steps AS BIGINT) AS n, epoch_us(t_3) AS n2, "
-            "CAST(NULL AS DOUBLE) AS v",
-            _FUNNEL_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "retention",
-            "CAST(NULL AS BIGINT) AS uid, "
-            "CAST(cohort_date AS TIMESTAMP) AS t1, "
-            "CAST(NULL AS TIMESTAMP) AS t2, CAST(day_offset AS BIGINT) AS n, "
-            "n_users AS n2, CAST(NULL AS DOUBLE) AS v",
-            _RETENTION_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "fbmerge",
-            "CAST(NULL AS BIGINT) AS uid, CAST(NULL AS TIMESTAMP) AS t1, "
-            "CAST(NULL AS TIMESTAMP) AS t2, CAST(ok AS BIGINT) AS n, "
-            "n_rows AS n2, CAST(NULL AS DOUBLE) AS v",
-            _FBMERGE_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "ivjoin",
-            "uid, t1, t2, n, n2, v",
-            _IVJOIN_ORACLE,
-        )
-        + "\nUNION ALL\n"
-        + _wrap(
-            "attrib",
-            "user_id AS uid, ts AS t1, CAST(NULL AS TIMESTAMP) AS t2, "
-            "event_id AS n, "
-            "CAST(CASE first_touch WHEN 'view' THEN 1 WHEN 'click' THEN 2 "
-            "WHEN 'signup' THEN 3 END AS BIGINT) AS n2, "
-            "CAST(CASE last_touch WHEN 'view' THEN 1 WHEN 'click' THEN 2 "
-            "WHEN 'signup' THEN 3 END AS DOUBLE) AS v",
-            _ATTRIBUTION_ORACLE,
-        )
-    ),
+    {
+        "uid": "CAST(NULL AS BIGINT)",
+        "t1": "CAST(NULL AS TIMESTAMP)",
+        "t2": "CAST(NULL AS TIMESTAMP)",
+        "n": "CAST(NULL AS BIGINT)",
+        "n2": "CAST(NULL AS BIGINT)",
+        "v": "CAST(NULL AS DOUBLE)",
+    },
+    [
+        ("tumble", "stream_tumbling_window", {
+            **_STREAM_WINDOW, "v": "value_sum"}),
+        ("slide", "stream_sliding_window", _STREAM_WINDOW),
+        ("session", "stream_sessionize", {
+            "uid": "user_id", "t1": "session_start", "t2": "session_last",
+            "n": "n_events", "n2": "session_id"}),
+        ("session_builtin", "stream_session_window", {
+            "uid": "user_id", "t1": "session_start", "t2": "session_end",
+            "n": "n_events"}),
+        ("asof", (_asof, _ASOF_ORACLE), _same("uid", "t1", "t2", "n", "n2", "v")),
+        ("late", "stream_late_data_drop", {**_STREAM_WINDOW, "v": "value_sum"}),
+        ("ss", "stream_stream_join", _STREAM_JOIN),
+        ("ssl", "stream_stream_left_outer", _STREAM_JOIN),
+        ("ssf", "stream_stream_full_outer", _STREAM_JOIN),
+        ("trend", "stream_trending_topk", {
+            "uid": "user_id", "t1": "w_start", "t2": "w_end", "n": "n_events",
+            "n2": "CAST(rank AS BIGINT)"}),
+        ("ffill", "stream_forward_fill", _same("uid", "t1", "n", "v")),
+        ("enrich", "stream_static_enrich", _same("uid", "t1", "n", "n2", "v")),
+        ("sdedup", "stream_stateful_dedup_dual", {
+            "uid": "user_id", "t1": "ts", "n": "event_id", "v": "value"}),
+        ("ucount", "stream_stateful_count_dual", _same("uid", "n")),
+        ("funnel", "events_funnel", {
+            "uid": "user_id", "t1": "t_1", "t2": "t_2",
+            "n": "CAST(n_steps AS BIGINT)",
+            "n2": ("unix_micros(t_3)", "epoch_us(t_3)")}),
+        ("retention", "events_retention", {
+            # TIMESTAMP_LTZ, not TIMESTAMP, on the Spark side: the bare
+            # keyword resolves via spark.sql.timestampType (catalog.py
+            # discipline)
+            "t1": ("CAST(cohort_date AS TIMESTAMP_LTZ)",
+                   "CAST(cohort_date AS TIMESTAMP)"),
+            "n": "CAST(day_offset AS BIGINT)", "n2": "n_users"}),
+        ("fbmerge", "stream_fbmerge_check", {
+            "n": "CAST(ok AS BIGINT)", "n2": "n_rows"}),
+        ("ivjoin", (_ivjoin, _IVJOIN_ORACLE),
+         _same("uid", "t1", "t2", "n", "n2", "v")),
+        ("attrib", "events_attribution", {
+            "uid": "user_id", "t1": "ts", "n": "event_id",
+            "n2": f"CAST({_TOUCH.format('first_touch')} AS BIGINT)",
+            "v": f"CAST({_TOUCH.format('last_touch')} AS DOUBLE)"}),
+    ],
     doc="The streaming batch-dual surface in one battery: tumbling window, "
     "sliding window, lag+cumsum sessionization, the built-in "
     "F.session_window — whose oracle is the manual sessionization with "
@@ -2856,248 +2570,6 @@ def stream_fbmerge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_trending_topk (part=trend: salted two-phase top-3 most "
     "active users per 6h window), stream_fbmerge_check.",
 )
-def stream_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _FN["stream_tumbling_window"](spark, sf_dir).select(
-        _tag("tumble"),
-        _null("bigint").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("n_users").alias("n2"),
-        F.col("value_sum").alias("v"),
-    )
-    s = _FN["stream_sliding_window"](spark, sf_dir).select(
-        _tag("slide"),
-        _null("bigint").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("n_users").alias("n2"),
-        _null("double").alias("v"),
-    )
-    m = _FN["stream_sessionize"](spark, sf_dir).select(
-        _tag("session"),
-        F.col("user_id").alias("uid"),
-        F.col("session_start").alias("t1"),
-        F.col("session_last").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("session_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    b = _FN["stream_session_window"](spark, sf_dir).select(
-        _tag("session_builtin"),
-        F.col("user_id").alias("uid"),
-        F.col("session_start").alias("t1"),
-        F.col("session_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        _null("bigint").alias("n2"),
-        _null("double").alias("v"),
-    )
-    from ..operators.timeseries import asof_join
-
-    events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    versions = (
-        load(spark, sf_dir, "orders")
-        .select(
-            F.col("o_custkey").alias("user_id"),
-            F.expr(
-                "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, "
-                "CAST(o_orderkey % 30 AS INT), 0, 0, 0)"
-            ).alias("version_ts"),
-            "o_orderkey",
-            "o_totalprice",
-        )
-        .groupBy("user_id", "version_ts")
-        .agg(
-            F.max("o_orderkey").alias("o_orderkey"),
-            F.max_by("o_totalprice", "o_orderkey").alias("total"),
-        )
-    )
-    a = asof_join(
-        events, versions, "user_id", "ts", "version_ts", ["o_orderkey", "total"]
-    ).select(
-        _tag("asof"),
-        F.col("user_id").alias("uid"),
-        F.col("ts").alias("t1"),
-        F.col("asof_version_ts").alias("t2"),
-        F.col("event_id").alias("n"),
-        F.col("o_orderkey").alias("n2"),
-        F.col("total").alias("v"),
-    )
-    ld = _FN["stream_late_data_drop"](spark, sf_dir).select(
-        _tag("late"),
-        _null("bigint").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("n_users").alias("n2"),
-        F.col("value_sum").alias("v"),
-    )
-    ss = _FN["stream_stream_join"](spark, sf_dir).select(
-        _tag("ss"),
-        F.col("user_id").alias("uid"),
-        F.col("l_ts").alias("t1"),
-        F.col("r_ts").alias("t2"),
-        F.col("l_event_id").alias("n"),
-        F.col("r_event_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    ssl = _FN["stream_stream_left_outer"](spark, sf_dir).select(
-        _tag("ssl"),
-        F.col("user_id").alias("uid"),
-        F.col("l_ts").alias("t1"),
-        F.col("r_ts").alias("t2"),
-        F.col("l_event_id").alias("n"),
-        F.col("r_event_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    ssf = _FN["stream_stream_full_outer"](spark, sf_dir).select(
-        _tag("ssf"),
-        F.col("user_id").alias("uid"),
-        F.col("l_ts").alias("t1"),
-        F.col("r_ts").alias("t2"),
-        F.col("l_event_id").alias("n"),
-        F.col("r_event_id").alias("n2"),
-        _null("double").alias("v"),
-    )
-    trend = _FN["stream_trending_topk"](spark, sf_dir).select(
-        _tag("trend"),
-        F.col("user_id").alias("uid"),
-        F.col("w_start").alias("t1"),
-        F.col("w_end").alias("t2"),
-        F.col("n_events").alias("n"),
-        F.col("rank").cast("long").alias("n2"),
-        _null("double").alias("v"),
-    )
-    ff = stream_forward_fill(spark, sf_dir).select(
-        _tag("ffill"),
-        "uid",
-        "t1",
-        _null("timestamp").alias("t2"),
-        "n",
-        _null("bigint").alias("n2"),
-        "v",
-    )
-    en = stream_static_enrich(spark, sf_dir).select(
-        _tag("enrich"),
-        "uid",
-        "t1",
-        _null("timestamp").alias("t2"),
-        "n",
-        "n2",
-        "v",
-    )
-    sd = stream_stateful_dedup_dual(spark, sf_dir).select(
-        _tag("sdedup"),
-        F.col("user_id").alias("uid"),
-        F.col("ts").alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("event_id").alias("n"),
-        _null("bigint").alias("n2"),
-        F.col("value").alias("v"),
-    )
-    uc = stream_stateful_count_dual(spark, sf_dir).select(
-        _tag("ucount"),
-        "uid",
-        _null("timestamp").alias("t1"),
-        _null("timestamp").alias("t2"),
-        "n",
-        _null("bigint").alias("n2"),
-        _null("double").alias("v"),
-    )
-    fu = events_funnel(spark, sf_dir).select(
-        _tag("funnel"),
-        F.col("user_id").alias("uid"),
-        F.col("t_1").alias("t1"),
-        F.col("t_2").alias("t2"),
-        F.col("n_steps").cast("bigint").alias("n"),
-        F.unix_micros("t_3").alias("n2"),
-        _null("double").alias("v"),
-    )
-    re = events_retention(spark, sf_dir).select(
-        _tag("retention"),
-        _null("bigint").alias("uid"),
-        # T.TimestampType(), not the string "timestamp": the string form
-        # resolves via spark.sql.timestampType (catalog.py discipline)
-        F.col("cohort_date").cast(T.TimestampType()).alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("day_offset").cast("bigint").alias("n"),
-        F.col("n_users").alias("n2"),
-        _null("double").alias("v"),
-    )
-    fb = stream_fbmerge_check(spark, sf_dir).select(
-        _tag("fbmerge"),
-        _null("bigint").alias("uid"),
-        _null("timestamp").alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("ok").cast("bigint").alias("n"),
-        F.col("n_rows").alias("n2"),
-        _null("double").alias("v"),
-    )
-    # part=ivjoin: bucketized points-in-interval join (operators/
-    # timeseries.py::interval_join — equi-join on 1h time buckets, no
-    # cross product; bucket_width == the interval span, so each
-    # interval spans <= 2 buckets)
-    from ..operators.timeseries import interval_join
-
-    ev_pts = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    trig = (
-        load(spark, sf_dir, "events")
-        .where(F.col("event_id") % 997 == 0)
-        .select(
-            F.col("event_id").alias("trig_id"),
-            F.col("ts").alias("t_start"),
-            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("t_end"),
-        )
-    )
-    iv = interval_join(
-        ev_pts, trig, "ts", "t_start", "t_end", bucket_width=3600
-    ).select(
-        _tag("ivjoin"),
-        F.col("user_id").alias("uid"),
-        F.col("t_start").alias("t1"),
-        F.col("t_end").alias("t2"),
-        F.col("event_id").alias("n"),
-        F.col("trig_id").alias("n2"),
-        F.col("value").alias("v"),
-    )
-    at = events_attribution(spark, sf_dir)
-    ch = lambda c: (
-        F.when(F.col(c) == "view", 1)
-        .when(F.col(c) == "click", 2)
-        .when(F.col(c) == "signup", 3)
-    )
-    at = at.select(
-        _tag("attrib"),
-        F.col("user_id").alias("uid"),
-        F.col("ts").alias("t1"),
-        _null("timestamp").alias("t2"),
-        F.col("event_id").alias("n"),
-        ch("first_touch").cast("bigint").alias("n2"),
-        ch("last_touch").cast("double").alias("v"),
-    )
-    return (
-        t.unionByName(s)
-        .unionByName(m)
-        .unionByName(b)
-        .unionByName(a)
-        .unionByName(ld)
-        .unionByName(ss)
-        .unionByName(ssl)
-        .unionByName(ssf)
-        .unionByName(trend)
-        .unionByName(ff)
-        .unionByName(en)
-        .unionByName(sd)
-        .unionByName(uc)
-        .unionByName(fu)
-        .unionByName(re)
-        .unionByName(fb)
-        .unionByName(iv)
-        .unionByName(at)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -8919,27 +8391,15 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 subsume("stream_incremental_dedup")
 
 
-# One entry per extension_battery branch: (tag, constituent, slots).
-#
-# * tag — the branch's part value; a tag ending in "_" is a prefix
-#   family whose part is tag || the constituent's own `part` column
-#   ("jdbc_" -> jdbc_write_read, jdbc_parallel, ...).
-# * constituent — the SUBSUMED query whose registered fn (Spark side)
-#   and registered oracle (DuckDB side) the branch projects.
-# * slots — one SQL expression per shared column (part, a, b, n, k, s,
-#   v, ok).  The same text runs through F.expr and through DuckDB, so
-#   it sticks to syntax both engines read identically: CAST(x AS
-#   BIGINT|DOUBLE|STRING) (never VARCHAR: Spark wants a size), ||,
-#   coalesce, arithmetic.  A missing slot is a typed NULL, a missing ok
-#   is true, and `part` defaults to the tag as above.  The one function
-#   the engines spell differently is written as a (spark, duckdb) pair.
+# One entry per extension_battery branch (the branch-table format is
+# described at the top of this module).  Every source is a SUBSUMED
+# constituent, so EXTENSION_BATTERY_PARTS below can shard the oracle;
+# pass-through branches (umax_, olap_, ahash_, aud_, sdd_) keep the
+# constituent's own `part` column.
 #
 # Every CAST(... AS BIGINT) below reads an integer column on both sides,
-# where it changes no value.  Never cast a fractional column to an
-# integer here: DuckDB rounds CAST(2.7 AS BIGINT) to 3 where Spark
-# truncates it to 2.  tests/test_oracle_parity pins each rendered oracle
-# branch to the shared schema, so a branch that drifts fails by name.
-_PASS = {c: c for c in ("part", "a", "b", "n", "k", "s", "v", "ok")}
+# where it changes no value.
+_PASS = _same("part", "a", "b", "n", "k", "s", "v", "ok")
 _WXH = "CAST(width AS STRING) || 'x' || CAST(height AS STRING)"
 _YMM = "CAST(y_min AS STRING) || ':' || CAST(y_max AS STRING)"
 _FRAME = {
@@ -9214,40 +8674,18 @@ _EXT_BRANCHES: list[tuple[str, str, dict]] = [
     ("semdedup_", "dedup_semantic", {"n": "CAST(n AS BIGINT)", "ok": "ok"}),
 ]
 
-_DEFAULT_SLOTS = {
-    "a": "CAST(NULL AS BIGINT)",
-    "b": "CAST(NULL AS BIGINT)",
-    "n": "CAST(NULL AS BIGINT)",
-    "k": "CAST(NULL AS STRING)",
-    "s": "CAST(NULL AS STRING)",
-    "v": "CAST(NULL AS DOUBLE)",
-    "ok": "true",
-}
-
-
-def _branch_columns(tag: str, slots: dict, engine: int) -> list[tuple[str, str]]:
-    """(column, expression) pairs of one branch in shared-schema order;
-    engine 0 = Spark, 1 = DuckDB picks a side of any (spark, duckdb)
-    slot pair."""
-    part = f"'{tag}' || part" if tag.endswith("_") else f"'{tag}'"
-    exprs = {"part": part, **_DEFAULT_SLOTS, **slots}
-    return [
-        (col, e[engine] if isinstance(e, tuple) else e)
-        for col, e in exprs.items()
-    ]
-
-
-def _ext_branch_sql(tag: str, constituent: str, slots: dict) -> str:
-    cols = ", ".join(f"{e} AS {c}" for c, e in _branch_columns(tag, slots, 1))
-    return f"SELECT {cols} FROM ({lookup(constituent).oracle}) t"
-
-
-_EXT_ORACLE = "\nUNION ALL\n".join(_ext_branch_sql(*b) for b in _EXT_BRANCHES)
-
-
-@register(
+extension_battery = _table_battery(
     "extension_battery",
-    oracle=_EXT_ORACLE,
+    {
+        "a": "CAST(NULL AS BIGINT)",
+        "b": "CAST(NULL AS BIGINT)",
+        "n": "CAST(NULL AS BIGINT)",
+        "k": "CAST(NULL AS STRING)",
+        "s": "CAST(NULL AS STRING)",
+        "v": "CAST(NULL AS DOUBLE)",
+        "ok": "true",
+    },
+    _EXT_BRANCHES,
     doc="Cross-family extension surfaces in one driver slot (see the "
     "slot-discipline note above): one branch per _EXT_BRANCHES entry, "
     "each projecting a SUBSUMED constituent into the shared schema "
@@ -9256,14 +8694,6 @@ _EXT_ORACLE = "\nUNION ALL\n".join(_ext_branch_sql(*b) for b in _EXT_BRANCHES)
     "partitioning, pushdown into Derby's WHERE, zero-Exchange bucketed "
     "plan, _salt in join keys, classifier keep flags).",
 )
-def extension_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    branches = [
-        lookup(constituent).fn(spark, sf_dir).select(
-            *[F.expr(e).alias(c) for c, e in _branch_columns(tag, slots, 0)]
-        )
-        for tag, constituent, slots in _EXT_BRANCHES
-    ]
-    return reduce(DataFrame.unionByName, branches)
 
 
 # Part-tag -> covering SUBSUMED constituent for extension_battery, read

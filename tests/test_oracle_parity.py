@@ -67,11 +67,14 @@ def test_extension_battery_shard_map_constituents_oracle_backed():
 
 
 def test_extension_battery_branch_schemas():
-    """Every extension_battery branch's rendered oracle fragment binds
-    to the shared schema on its own.  The battery's UNION ALL would
-    coerce a drifting branch away (an INTEGER or HUGEINT slot just
-    widens the whole column), so this is what names the branch.
-    DESCRIBE only binds each fragment; nothing executes."""
+    """Every branch of every table-rendered battery (extension_battery
+    and the rest of batteries.BATTERY_TABLES) binds its rendered oracle
+    fragment to the battery's declared column types on its own.  The
+    battery's UNION ALL would coerce a drifting branch away (an INTEGER
+    or HUGEINT slot just widens the whole column), so this is what names
+    the branch.  The declared types are what DuckDB binds each schema's
+    defaults to (STRING -> VARCHAR).  DESCRIBE only binds each
+    fragment; nothing executes."""
     import duckdb
 
     from imdb_top_250_etl_pipeline_spark.plans import batteries
@@ -84,22 +87,29 @@ def test_extension_battery_branch_schemas():
         "documents embeddings"
     ).split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
-    want = [
-        ("part", "VARCHAR"),
-        ("a", "BIGINT"),
-        ("b", "BIGINT"),
-        ("n", "BIGINT"),
-        ("k", "VARCHAR"),
-        ("s", "VARCHAR"),
-        ("v", "DOUBLE"),
-        ("ok", "BOOLEAN"),
-    ]
+
+    def describe(sql):
+        return [(r[0], r[1]) for r in con.execute("DESCRIBE " + sql).fetchall()]
+
     drift = {}
-    for branch in batteries._EXT_BRANCHES:
-        sql = batteries._ext_branch_sql(*branch)
-        got = [(r[0], r[1]) for r in con.execute("DESCRIBE " + sql).fetchall()]
-        if got != want:
-            drift[branch[0]] = got
+    for name, (schema, branches) in batteries.BATTERY_TABLES.items():
+        defaults = ", ".join(f"{e} AS {c}" for c, e in schema.items())
+        want = describe(f"SELECT 'tag' AS part, {defaults}")
+        if name == "extension_battery":
+            assert want == [
+                ("part", "VARCHAR"),
+                ("a", "BIGINT"),
+                ("b", "BIGINT"),
+                ("n", "BIGINT"),
+                ("k", "VARCHAR"),
+                ("s", "VARCHAR"),
+                ("v", "DOUBLE"),
+                ("ok", "BOOLEAN"),
+            ]
+        for branch in branches:
+            got = describe(batteries.branch_sql(schema, *branch))
+            if got != want:
+                drift[f"{name}:{branch[0]}"] = got
     con.close()
     assert not drift, drift
 

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
-"""Subset bench for optimization iteration: same methodology as bench.py
-(noop sink, cold + min-of-N steady) over a named subset of HEADLINE
-queries.  NOT the driver bench — bench.py stays the contract.
+"""Subset bench for optimization iteration: bench.py's own warm-up and
+timing loop (bench.time_queries: noop sink, one pin scope per run, cold
++ min-of-N steady) over a named subset of queries at
+$SPARK_GRAFT_SF_DIR.  NOT the driver bench — bench.py stays the
+contract.
 
 Usage: python tools/opt_bench.py name1 name2 ... [--runs 3]
 """
@@ -11,11 +13,8 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
@@ -25,31 +24,11 @@ def main() -> None:
         if a.startswith("--runs"):
             runs_n = int(a.split("=", 1)[1]) if "=" in a else runs_n
     import bench
-    from imdb_top_250_etl_pipeline_spark.plans import lookup
     from imdb_top_250_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("opt-bench")
-    raw = bench._raw_overrides()
-    # warmups (same as bench.py)
-    lookup(args[0]).fn(spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
     out = {}
-    for name in args:
-        fn = raw.get(name) or lookup(name).fn
-        rs = []
-        for _ in range(runs_n):
-            # same per-run pin hygiene as bench.py (round 13): without
-            # it, run N pays for runs 1..N-1's dead checkpoint blocks
-            from imdb_top_250_etl_pipeline_spark.operators.pinning import (
-                pin_scope,
-            )
-
-            with pin_scope():
-                t0 = time.perf_counter()
-                df = fn(spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                rs.append(round(time.perf_counter() - t0, 3))
+    for name, rs in bench.time_queries(spark, args, runs_n):
         out[name] = {"cold": rs[0], "min": min(rs), "runs": rs}
         sys.stderr.write(f"{name}: {out[name]}\n")
     print(json.dumps(out))

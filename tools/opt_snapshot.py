@@ -7,7 +7,9 @@ bench's raw-override functions — at a given SF dir.  Run once BEFORE an
 optimization (committed as OPT_SNAPSHOT_<sf>.json) and after every
 substantive change; any hash drift means the rewrite changed what a
 query computes, which the driver would grade as a REGRESSION regardless
-of speed.
+of speed.  Each entry also records the ordered Spark schema
+(``simpleString``): the value hash renders an INT and a BIGINT alike,
+so a dropped widening cast shows up only as schema drift.
 
 Usage:
   python tools/opt_snapshot.py [--sf-dir /root/testdata/sf0.01]
@@ -64,6 +66,7 @@ def main() -> None:
             snap[name] = {
                 "rows": len(rows),
                 "cols": sorted(c.lower() for c in df.columns),
+                "schema": df.schema.simpleString(),
                 "hash": h,
                 "sec": round(time.perf_counter() - t0, 2),
             }
@@ -83,6 +86,10 @@ def main() -> None:
                 drift.append((n, "NEW"))
             elif b.get("hash") != v.get("hash") or b.get("rows") != v.get("rows"):
                 drift.append((n, f"hash {b.get('hash','?')[:8]} -> {v.get('hash','?')[:8]}"))
+            elif "schema" in b and b["schema"] != v.get("schema"):
+                # baselines written before the schema field compare on
+                # rows and hash only
+                drift.append((n, f"schema {b['schema']} -> {v.get('schema')}"))
         if drift:
             print(json.dumps({"IDENTICAL": False, "drift": drift}, indent=1))
             sys.exit(1)
