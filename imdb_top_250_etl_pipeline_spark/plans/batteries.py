@@ -29,31 +29,39 @@ column.  The entry renders the branch's Spark ``select`` (through
 for extension_battery also its ``EXTENSION_BATTERY_PARTS`` shard-map
 key, so adding a branch means adding one table entry (after
 registering and subsuming a new constituent).
+
+dedup_pairs_battery and sim_topk_battery (and the planted-invariant
+queries here: dedup_incremental_probe, multimodal_cross_format_dedup,
+stream_incremental_dedup) emit invariant rows instead of constituent
+rows, written like llm_data.py's: build each row's one-row frame with
+the plans/invariants.py kit (``violations`` for a zero-count contract,
+``found`` + ``containment`` for planted recall, ``ann_recall`` for a
+top-k ranking) and list ``(tag, frame, slots)`` entries for ``render``
+over the declared schema.  Their oracle stays hand-written SQL that
+restates each expected value independently — never render it from
+the kit.  text_doc_battery and scalar_events_battery are joins, not
+unions, and reach their constituents through ``lookup(name)``.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import load
-from .registry import ORACLES, QUERIES, lookup, register, subsume
-
-# Capture constituent fns + oracle SQL before subsume() detaches them
-# from the driver-facing dicts.
-_FN = {name: q.fn for name, q in QUERIES.items()}
-_SQL = dict(ORACLES)
-
-
-def _tag(t: str) -> Column:
-    return F.lit(t).alias("part")
-
-
-def _null(sql_type: str) -> Column:
-    return F.lit(None).cast(sql_type)
+from .invariants import (
+    FLAG,
+    NEIGHBOR,
+    ann_recall,
+    containment,
+    found,
+    render,
+    violations,
+)
+from .registry import lookup, register, subsume
 
 
 # A tagged-union battery is one table: a schema and a list of branches,
@@ -1052,27 +1060,10 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_docs = docs.where((F.col("doc_id") % 5 != 0) & shingleable).select(
         F.col("doc_id").alias("existing_id"), "text"
     )
-    expected = eager_pin(batch.join(idx_docs, "text").select("new_id", "existing_id"))
+    pair = ["new_id", "existing_id"]
+    expected = eager_pin(batch.join(idx_docs, "text").select(*pair))
     probe = eager_pin(_dedup_incremental_probe_raw(spark, sf_dir))
-    hits = (
-        expected.join(
-            probe.where(F.col("jaccard") == 1.0).select(
-                "new_id", "existing_id"
-            ),
-            ["new_id", "existing_id"],
-            "left_semi",
-        )
-        .agg(F.count("*").alias("h"))
-    )
-    n_expected = expected.agg(F.count("*").alias("t"))
-    containment = (
-        n_expected.crossJoin(F.broadcast(hits))
-        .select(
-            F.lit("exact_containment").alias("part"),
-            F.col("t").cast("bigint").alias("n"),
-            (F.col("h") == F.col("t")).alias("ok"),
-        )
-    )
+    hits = found(expected, probe.where(F.col("jaccard") == 1.0), pair)
     partition_ok = probe.agg(
         F.coalesce(
             F.min(
@@ -1084,12 +1075,12 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(True),
         ).alias("ok")
     )
-    batch_row = (
-        batch.agg(F.count("*").cast("bigint").alias("n"))
-        .crossJoin(F.broadcast(partition_ok))
-        .select(F.lit("batch_partition").alias("part"), "n", "ok")
-    )
-    return containment.unionByName(batch_row)
+    return render({"n": "bigint", "ok": "boolean"}, [
+        ("exact_containment", containment(expected, hits), FLAG),
+        ("batch_partition", batch.agg(F.count("*").alias("n")).crossJoin(
+            F.broadcast(partition_ok)
+        ), FLAG),
+    ])
 
 
 _DEDUP_PAIRS_INVARIANT_ORACLE = """
@@ -1205,6 +1196,8 @@ def dedup_pairs_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pinning import eager_pin
     from ..operators.similarity import semantic_dedup
     from .llm_data import (
+        _PAIR,
+        _SCORED,
         _corpus_near,
         _dedup_ngram_jaccard_raw,
         _dedup_simhash_raw,
@@ -1226,16 +1219,6 @@ def dedup_pairs_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = eager_pin(s)
     ngr = eager_pin(g)
     pairs = sim.unionByName(ngr)
-    nulls3 = [
-        _null("bigint").alias("id_a"),
-        _null("bigint").alias("id_b"),
-        _null("double").alias("score"),
-    ]
-
-    def _flag_row(tag: str, n_col, ok_col, frame: DataFrame) -> DataFrame:
-        return frame.select(
-            _tag(tag), *nulls3, n_col.alias("n"), ok_col.alias("ok")
-        )
 
     # --- ngram: planted-pair dual + exact-containment recall ---------
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1320,58 +1303,12 @@ def dedup_pairs_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("rlang_a") == F.col("rlang_b"))
     )
-    ngram_planted = nq.select(
-        _tag("ngram_planted"),
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 100000).alias("id_b"),
-        F.round(F.col("i") / F.col("u"), 4).alias("score"),
-        _null("bigint").alias("n"),
-        _null("boolean").alias("ok"),
-    )
     rep_pairs = nq.select(
         "doc_id",
         F.least("rep_a", "rep_b").alias("id_a"),
         F.greatest("rep_a", "rep_b").alias("id_b"),
     )
-    n_found = (
-        rep_pairs.join(ngr.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-        .agg(F.countDistinct("doc_id").alias("nf"))
-    )
-    ngram_recall = _flag_row(
-        "ngram_recall",
-        F.col("np"),
-        F.col("nf") == F.col("np"),
-        nq.agg(F.count("*").alias("np")).crossJoin(F.broadcast(n_found)),
-    )
-
-    def _violations(tag: str, frame: DataFrame, bad: F.Column) -> DataFrame:
-        agg = frame.select(
-            F.when(bad, 1).otherwise(0).alias("b")
-        ).agg(F.coalesce(F.sum("b"), F.lit(0)).cast("bigint").alias("v"))
-        return _flag_row(tag, F.col("v"), F.col("v") == 0, agg)
-
-    ngram_precision = _violations(
-        "ngram_precision",
-        ngr,
-        (F.col("score") < 0.8)
-        | (F.col("score") > 1.0)
-        | (F.col("id_a") >= F.col("id_b")),
-    )
-
-    # --- simhash: non-empty + contract precision ----------------------
-    simhash_nonempty = _flag_row(
-        "simhash_nonempty",
-        _null("bigint"),
-        F.col("c") > 0,
-        sim.agg(F.count("*").alias("c")),
-    )
-    simhash_precision = _violations(
-        "simhash_precision",
-        sim,
-        (F.col("score") < 0)
-        | (F.col("score") > 3)
-        | (F.col("id_a") >= F.col("id_b")),
-    )
+    n_found = found(rep_pairs, ngr, _PAIR, F.countDistinct("doc_id"))
 
     # --- groups: CC self-consistency over the pinned pair union ------
     grp = eager_pin(dedup_groups(pairs.select("id_a", "id_b")))
@@ -1394,21 +1331,8 @@ def dedup_pairs_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select((F.col("gn") == F.col("en")).alias("node_ok"))
     )
-    groups_consistent = _flag_row(
-        "groups_consistent",
-        _null("bigint"),
-        F.col("rep_ok") & F.col("edge_ok") & F.col("node_ok"),
-        rep_ok.crossJoin(F.broadcast(edge_ok)).crossJoin(F.broadcast(node_ok)),
-    )
-
-    # --- incremental: probe-contract precision ------------------------
-    incremental_valid = _violations(
-        "incremental_valid",
-        _dedup_incremental_probe_raw(spark, sf_dir),
-        (F.col("new_id") % 5 != 0)
-        | (F.col("existing_id") % 5 == 0)
-        | (F.col("jaccard") < 0.5)
-        | (F.col("jaccard") > 1.0),
+    groups = rep_ok.crossJoin(F.broadcast(edge_ok)).crossJoin(
+        F.broadcast(node_ok)
     )
 
     # --- pagerank: mass conservation + positivity + node coverage ----
@@ -1418,41 +1342,63 @@ def dedup_pairs_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     pr = pagerank(edges, "src", "dst", n_iter=8)
-    pagerank_mass = _flag_row(
-        "pagerank_mass",
-        _null("bigint"),
-        (F.abs(F.col("mass") - 1.0) < 1e-6)
-        & (F.col("rmin") > 0)
-        & (F.col("pn") == F.col("en")),
-        pr.agg(
-            F.sum("rank").alias("mass"),
-            F.min("rank").alias("rmin"),
-            F.countDistinct("node").alias("pn"),
-        ).crossJoin(
-            F.broadcast(endpoints.agg(F.countDistinct("node").alias("en")))
-        ),
+    mass = pr.agg(
+        F.sum("rank").alias("mass"),
+        F.min("rank").alias("rmin"),
+        F.countDistinct("node").alias("pn"),
+    ).crossJoin(
+        F.broadcast(endpoints.agg(F.countDistinct("node").alias("en")))
     )
 
     # --- semantic: keep == min-id representative per group ------------
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     sem = semantic_dedup(emb, emb.where(F.col("vec_id") % 25 == 0))
     sem_min = sem.groupBy("group_id").agg(F.min("vec_id").alias("gmin"))
-    semantic_keep = _violations(
-        "semantic_keep",
-        sem.join(sem_min, "group_id"),
-        F.col("keep") != (F.col("vec_id") == F.col("gmin")),
-    )
 
-    return (
-        ngram_planted.unionByName(ngram_recall)
-        .unionByName(ngram_precision)
-        .unionByName(simhash_nonempty)
-        .unionByName(simhash_precision)
-        .unionByName(groups_consistent)
-        .unionByName(incremental_valid)
-        .unionByName(pagerank_mass)
-        .unionByName(semantic_keep)
-    )
+    return render(_SCORED, [
+        ("ngram_planted", nq, {
+            "id_a": F.col("doc_id"),
+            "id_b": F.col("doc_id") + 100000,
+            "score": F.round(F.col("i") / F.col("u"), 4),
+        }),
+        ("ngram_recall", containment(nq, n_found), FLAG),
+        ("ngram_precision", violations(
+            ngr,
+            (F.col("score") < 0.8)
+            | (F.col("score") > 1.0)
+            | (F.col("id_a") >= F.col("id_b")),
+        ), FLAG),
+        # simhash: non-empty + contract precision
+        ("simhash_nonempty", sim.agg(F.count("*").alias("c")), {
+            "ok": F.col("c") > 0,
+        }),
+        ("simhash_precision", violations(
+            sim,
+            (F.col("score") < 0)
+            | (F.col("score") > 3)
+            | (F.col("id_a") >= F.col("id_b")),
+        ), FLAG),
+        ("groups_consistent", groups, {
+            "ok": F.col("rep_ok") & F.col("edge_ok") & F.col("node_ok"),
+        }),
+        # incremental: probe-contract precision
+        ("incremental_valid", violations(
+            _dedup_incremental_probe_raw(spark, sf_dir),
+            (F.col("new_id") % 5 != 0)
+            | (F.col("existing_id") % 5 == 0)
+            | (F.col("jaccard") < 0.5)
+            | (F.col("jaccard") > 1.0),
+        ), FLAG),
+        ("pagerank_mass", mass, {
+            "ok": (F.abs(F.col("mass") - 1.0) < 1e-6)
+            & (F.col("rmin") > 0)
+            & (F.col("pn") == F.col("en")),
+        }),
+        ("semantic_keep", violations(
+            sem.join(sem_min, "group_id"),
+            F.col("keep") != (F.col("vec_id") == F.col("gmin")),
+        ), FLAG),
+    ])
 
 
 _SIM_TOPK_INVARIANT_ORACLE = """
@@ -1498,28 +1444,6 @@ def sim_topk_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact baseline feeds all four invariants: pin once
     exact = eager_pin(brute_force_topk(e, queries, k=5))
 
-    def recall_row(tag: str, ann: DataFrame, num: int, den: int) -> DataFrame:
-        hits = (
-            ann.select("query_id", "neighbor_id")
-            .join(
-                exact.select("query_id", "neighbor_id"),
-                ["query_id", "neighbor_id"],
-                "left_semi",
-            )
-            .agg(F.count("*").alias("h"))
-        )
-        tot = exact.agg(F.count("*").alias("t"))
-        return (
-            ann.agg(F.countDistinct("query_id").cast("bigint").alias("n_queries"))
-            .crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(tag).alias("part"),
-                "n_queries",
-                (den * F.col("h") >= num * F.col("t")).alias("ok"),
-            )
-        )
-
     from .llm_data import (
         _sim_ann_ivf_kmeans_raw,
         _sim_ann_ivf_raw,
@@ -1527,41 +1451,34 @@ def sim_topk_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sim_mmr_rerank_raw,
     )
 
-    i = recall_row("ivf", _sim_ann_ivf_raw(spark, sf_dir), 1, 2)
-    k = recall_row("ivf_kmeans", _sim_ann_ivf_kmeans_raw(spark, sf_dir), 1, 2)
-    p = recall_row("pq", _sim_ann_pq_raw(spark, sf_dir), 9, 10)
+    i = ann_recall(_sim_ann_ivf_raw(spark, sf_dir), exact, 1, 2)
+    k = ann_recall(_sim_ann_ivf_kmeans_raw(spark, sf_dir), exact, 1, 2)
+    p = ann_recall(_sim_ann_pq_raw(spark, sf_dir), exact, 9, 10)
     # mmr: greedy selection with empty selected-set IS argmax relevance,
     # so rank 1 must equal the exact top-1 per query; and every query
     # must emit exactly k=10 rows from its 20-candidate shortlist
     m = eager_pin(_sim_mmr_rerank_raw(spark, sf_dir))
-    first_match = (
-        m.where(F.col("rank") == 1)
-        .join(
-            exact.where(F.col("rank") == 1).select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        )
-        .agg(F.count("*").alias("n_match"))
+    first_match = found(
+        m.where(F.col("rank") == 1), exact.where(F.col("rank") == 1), NEIGHBOR
     )
     per_q = m.groupBy("query_id").agg(F.count("*").alias("c"))
-    mrow = (
-        per_q.agg(
-            F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-            F.min("c").alias("cmin"),
-            F.max("c").alias("cmax"),
-        )
-        .crossJoin(F.broadcast(first_match))
-        .select(
-            F.lit("mmr").alias("part"),
-            "n_queries",
-            (
-                (F.col("n_match") == F.col("n_queries"))
-                & (F.col("cmin") == 10)
-                & (F.col("cmax") == 10)
-            ).alias("ok"),
-        )
-    )
-    return i.unionByName(k).unionByName(mrow).unionByName(p)
+    mrow = per_q.agg(
+        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
+        F.min("c").alias("cmin"),
+        F.max("c").alias("cmax"),
+    ).crossJoin(F.broadcast(first_match))
+    flag = {"n_queries": "n_queries", "ok": "ok"}
+    return render({"n_queries": "bigint", "ok": "boolean"}, [
+        ("ivf", i, flag),
+        ("ivf_kmeans", k, flag),
+        ("mmr", mrow, {
+            "n_queries": "n_queries",
+            "ok": (F.col("found") == F.col("n_queries"))
+            & (F.col("cmin") == 10)
+            & (F.col("cmax") == 10),
+        }),
+        ("pq", p, flag),
+    ])
 
 
 # JL projection: integer sign-sums of quantized components, dequantized
@@ -1790,12 +1707,12 @@ text_tokens_battery = _table_battery(
 @register(
     "text_doc_battery",
     oracle=f"""
-    WITH q AS ({_SQL["text_quality_scores"]}),
-         t AS ({_SQL["text_token_counts"]}),
-         l AS ({_SQL["text_language_id"]}),
-         f AS ({_SQL["text_fingerprints"]}),
-         a AS ({_SQL["scalar_array_battery"]}),
-         rep AS ({_SQL["text_repetition_signals"]}),
+    WITH q AS ({lookup("text_quality_scores").oracle}),
+         t AS ({lookup("text_token_counts").oracle}),
+         l AS ({lookup("text_language_id").oracle}),
+         f AS ({lookup("text_fingerprints").oracle}),
+         a AS ({lookup("scalar_array_battery").oracle}),
+         rep AS ({lookup("text_repetition_signals").oracle}),
          ctoks AS (
            SELECT doc_id, source, string_split(text, ' ') AS tk FROM documents
          ),
@@ -1954,8 +1871,8 @@ def text_doc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "scalar_events_battery",
     oracle=f"""
-    WITH j AS ({_SQL["scalar_json_battery"]}),
-         n AS ({_SQL["scalar_nan_normalize"]})
+    WITH j AS ({lookup("scalar_json_battery").oracle}),
+         n AS ({lookup("scalar_nan_normalize").oracle})
     SELECT j.event_id, j.k_typed, j.k_raw, j.k_high, j.k_band,
            n.is_nan, n.v_clean, n.v_filled,
            map(['k'], [j.k_typed])['k'][1] AS map_k,
@@ -1971,8 +1888,8 @@ def text_doc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Subsumes scalar_json_battery, scalar_nan_normalize.",
 )
 def scalar_events_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    j = _FN["scalar_json_battery"](spark, sf_dir)
-    n = _FN["scalar_nan_normalize"](spark, sf_dir)
+    j = lookup("scalar_json_battery").fn(spark, sf_dir)
+    n = lookup("scalar_nan_normalize").fn(spark, sf_dir)
     m = F.create_map(F.lit("k"), F.col("k_typed"))
     return (
         j.join(n, "event_id")
@@ -7674,47 +7591,25 @@ def multimodal_cross_format_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
             radius=3,
         )
     )
-    planted = (
-        docs.join(
-            pairs,
-            (docs["doc_id"] == pairs["id_a"])
-            & (pairs["id_b"] == docs["doc_id"] + CROSS_FORMAT_ID_OFFSET),
-            "left",
-        )
-        .select(
-            F.lit("planted").alias("part"),
-            F.col("doc_id").cast("long").alias("a"),
-            (F.col("doc_id") + CROSS_FORMAT_ID_OFFSET)
-            .cast("long")
-            .alias("b"),
-            F.col("hamming").cast("long").alias("n"),
-            F.lit(True).alias("ok"),
-        )
+    planted = docs.join(
+        pairs,
+        (docs["doc_id"] == pairs["id_a"])
+        & (pairs["id_b"] == docs["doc_id"] + CROSS_FORMAT_ID_OFFSET),
+        "left",
     )
-    nb = F.lit(None).cast("long")
-    recall = planted.agg(
-        F.count(F.col("n")).cast("long").alias("_found")
-    ).select(
-        F.lit("recall").alias("part"),
-        nb.alias("a"),
-        nb.alias("b"),
-        F.col("_found").alias("n"),
-        F.lit(True).alias("ok"),
-    )
-    precision = pairs.agg(
-        F.coalesce(
-            F.sum((F.col("id_a") >= F.col("id_b")).cast("long")), F.lit(0)
-        )
-        .cast("long")
-        .alias("_bad")
-    ).select(
-        F.lit("precision").alias("part"),
-        nb.alias("a"),
-        nb.alias("b"),
-        F.col("_bad").alias("n"),
-        F.lit(True).alias("ok"),
-    )
-    return planted.unionByName(recall).unionByName(precision)
+    ok = {"ok": F.lit(True)}
+    return render({"a": "bigint", "b": "bigint", "n": "bigint", "ok": "boolean"}, [
+        ("planted", planted, {
+            "a": F.col("doc_id"),
+            "b": F.col("doc_id") + CROSS_FORMAT_ID_OFFSET,
+            "n": F.col("hamming"),
+            **ok,
+        }),
+        ("recall", planted.agg(F.count("hamming").alias("n")), {"n": "n", **ok}),
+        ("precision", violations(pairs, F.col("id_a") >= F.col("id_b")), {
+            "n": "n", **ok,
+        }),
+    ])
 
 
 _KCORE_K = 5
@@ -8317,54 +8212,16 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    exact1 = dups1.where(F.col("jaccard") == 1.0).select(
-        "new_id", "existing_id"
+    pair = ["a", "b"]
+    twin_pair = planted.select(
+        F.col("doc_id").alias("a"), (F.col("doc_id") + 300000).alias("b")
     )
-    planted_rows = planted.select(
-        F.lit("sdd_planted").alias("part"),
-        F.col("doc_id").alias("a"),
-        (F.col("doc_id") + 300000).alias("b"),
-        F.lit(None).cast("bigint").alias("n"),
-    ).join(
-        exact1.select(
-            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
-        ).withColumn("ok", F.lit(True)),
-        ["a", "b"],
-        "left",
-    ).select("part", "a", "b", "n", F.coalesce("ok", F.lit(False)).alias("ok"))
-    nulls = [
-        F.lit(None).cast("bigint").alias("a"),
-        F.lit(None).cast("bigint").alias("b"),
-    ]
-    n_found = planted.select(
-        F.col("doc_id").alias("a"),
-        (F.col("doc_id") + 300000).alias("b"),
-    ).join(
-        exact1.select(
-            F.col("existing_id").alias("a"), F.col("new_id").alias("b")
-        ),
-        ["a", "b"],
-        "left_semi",
-    ).agg(F.count("*").alias("h"))
-    containment = (
-        planted.agg(F.count("*").cast("bigint").alias("t"))
-        .crossJoin(F.broadcast(n_found))
-        .select(
-            F.lit("sdd_containment").alias("part"),
-            *nulls,
-            F.col("t").alias("n"),
-            (F.col("h") == F.col("t")).alias("ok"),
-        )
+    exact1 = dups1.where(F.col("jaccard") == 1.0).select(
+        F.col("existing_id").alias("a"), F.col("new_id").alias("b")
     )
     unchanged = (
         dups1.exceptAll(dups2).isEmpty()
         and dups2.exceptAll(dups1).isEmpty()
-    )
-    restart = planted.agg(F.count("*").cast("bigint").alias("n")).select(
-        F.lit("sdd_restart").alias("part"),
-        *nulls,
-        "n",
-        F.lit(bool(unchanged)).alias("ok"),
     )
     bounds = dups1.agg(
         F.coalesce(
@@ -8373,17 +8230,19 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.lit(True),
         ).alias("ok")
-    ).select(
-        F.lit("sdd_bounds").alias("part"),
-        *nulls,
-        F.lit(None).cast("bigint").alias("n"),
-        "ok",
     )
-    return (
-        planted_rows.unionByName(containment)
-        .unionByName(restart)
-        .unionByName(bounds)
-    )
+    return render({"a": "bigint", "b": "bigint", "n": "bigint", "ok": "boolean"}, [
+        ("sdd_planted", twin_pair.join(
+            exact1.withColumn("ok", F.lit(True)), pair, "left"
+        ), {"a": "a", "b": "b", "ok": F.coalesce("ok", F.lit(False))}),
+        ("sdd_containment", containment(
+            planted, found(twin_pair, exact1, pair)
+        ), FLAG),
+        ("sdd_restart", planted.agg(F.count("*").alias("n")), {
+            "n": "n", "ok": F.lit(bool(unchanged)),
+        }),
+        ("sdd_bounds", bounds, {"ok": "ok"}),
+    ])
 
 
 # round-13: streaming incremental near-dup, riding extension_battery

@@ -14,6 +14,23 @@ Oracle policy: hash-checked whenever cross-engine determinism holds
 for ops built on xxhash64/LSH (Spark-specific hash family) or multi-term
 fp folds (cosine), which are instead pinned by exact unit tests
 (tests/test_llm_data.py) against numpy/brute-force references.
+
+Invariant queries (the dedup and ANN queries whose raw output is
+engine-specific) check a planted fixture instead.  Writing one:
+
+1. plant the ground truth with pure expressions (``_twin_id`` twins,
+   every n-th doc) and pin, with ``eager_pin``, each table more than
+   one row reads;
+2. build each row's frame with the plans/invariants.py kit —
+   ``violations(pairs, bad)`` for a contract that must never fail,
+   ``containment(planted, found(probe, pairs, on), num, den)`` for
+   planted recall (pass a ``count`` to ``found`` for a collapse-aware
+   probe), ``ann_recall`` / ``ranks_contiguous`` for a top-k ranking;
+3. return ``render(schema, [(tag, frame, slots), ...])`` over the
+   query's declared columns (``_SCORED``, ``_TOPK``, …);
+4. write the oracle by hand in SQL: it re-derives the planted set and
+   states every expected ``n`` and ``ok``.  It is the independent dual
+   and is never rendered from the kit.
 """
 
 from __future__ import annotations
@@ -58,11 +75,30 @@ from ..operators.text import (
     word_counts,
 )
 from ..sources import load
+from .invariants import (
+    FLAG,
+    NEIGHBOR,
+    ann_recall,
+    containment,
+    found,
+    ranks_contiguous,
+    render,
+    violations,
+)
 from .registry import register
 
 # ---------------------------------------------------------------------------
 # Corpus builders: fixtures + planted duplicates (Spark + SQL twins).
 # ---------------------------------------------------------------------------
+
+# the pair-invariant queries' row schema (after `part`) and join key
+_SCORED = {"id_a": "bigint", "id_b": "bigint", "score": "double",
+           "n": "bigint", "ok": "boolean"}
+_PAIR = ["id_a", "id_b"]
+_PAIR_SLOTS = {c: c for c in _PAIR}
+
+# the top-k invariant queries' row schema (after `part`)
+_TOPK = {"n_queries": "bigint", "k": "bigint", "ok": "boolean"}
 
 # planted-twin id offset: twins live at doc_id + _TWIN_OFFSET, and the
 # recall invariants assume no real row occupies that range
@@ -285,8 +321,8 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh_a = F.array_distinct(word_shingles("text"))
     sh_b = F.array_distinct(word_shingles("trimmed"))
-    # pinned (round 13): planted feeds planted_rows + rep_pairs +
-    # recall_row — unpinned, each branch re-ran the double shingling +
+    # pinned (round 13): planted feeds the planted rows, rep_pairs and
+    # the recall count — unpinned, each branch re-ran the double shingling +
     # intersect/union pass (the dedup_simhash_pairs twin already pins
     # its planted subtree; this aligns the two)
     planted = eager_pin(
@@ -297,19 +333,6 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_intersect(sh_a, sh_b)).cast("bigint").alias("i"),
             F.size(F.array_union(sh_a, sh_b)).cast("bigint").alias("u"),
         ).where((F.col("u") > 0) & (2 * F.col("i") >= F.col("u")))
-    )
-    nulls = [
-        F.lit(None).cast("bigint").alias("id_a"),
-        F.lit(None).cast("bigint").alias("id_b"),
-        F.lit(None).cast("double").alias("score"),
-    ]
-    planted_rows = planted.select(
-        F.lit("planted").alias("part"),
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 100000).alias("id_b"),
-        F.round(F.col("i") / F.col("u"), 4).alias("score"),
-        F.lit(None).cast("bigint").alias("n"),
-        F.lit(None).cast("boolean").alias("ok"),
     )
     # COLLAPSE-AWARE found-count: the LSH pipeline runs
     # collapse_exact=True, so on a clone-dense corpus (the sf1 stress
@@ -344,38 +367,21 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("rep_a", "rep_b").alias("id_b"),
         )
     )
-    found = (
-        rep_pairs.join(lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-        .agg(F.countDistinct("doc_id").alias("n_found"))
-    )
-    recall_row = (
-        planted.agg(F.count("*").alias("n_planted"))
-        .crossJoin(F.broadcast(found))
-        .select(
-            F.lit("recall").alias("part"),
-            *nulls,
-            F.col("n_planted").alias("n"),
-            (10 * F.col("n_found") >= 9 * F.col("n_planted")).alias("ok"),
-        )
-    )
-    precision_row = lsh.select(
-        F.when(
+    hits = found(rep_pairs, lsh, _PAIR, F.countDistinct("doc_id"))
+    return render(_SCORED, [
+        ("planted", planted, {
+            "id_a": F.col("doc_id"),
+            "id_b": F.col("doc_id") + 100000,
+            "score": F.round(F.col("i") / F.col("u"), 4),
+        }),
+        ("recall", containment(planted, hits, 9, 10), FLAG),
+        ("precision", violations(
+            lsh,
             (F.col("jaccard") < 0.5)
             | (F.col("jaccard") > 1.0)
             | (F.col("id_a") >= F.col("id_b")),
-            1,
-        )
-        .otherwise(0)
-        .alias("bad")
-    ).agg(
-        F.coalesce(F.sum("bad"), F.lit(0)).cast("bigint").alias("n")
-    ).select(
-        F.lit("precision").alias("part"),
-        *nulls,
-        "n",
-        (F.col("n") == 0).alias("ok"),
-    )
-    return planted_rows.unionByName(recall_row).unionByName(precision_row)
+        ), FLAG),
+    ])
 
 
 def _dedup_simhash_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,55 +477,23 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             collapse_exact=True, max_bucket=1_000_000,
         )
     )
-    nulls = [
-        F.lit(None).cast("bigint").alias("id_a"),
-        F.lit(None).cast("bigint").alias("id_b"),
-        F.lit(None).cast("int").alias("hamming"),
-    ]
-    planted_rows = planted.select(
-        F.lit("planted").alias("part"),
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 300000).alias("id_b"),
-        F.lit(0).cast("int").alias("hamming"),
-        F.lit(None).cast("bigint").alias("n"),
-        F.lit(None).cast("boolean").alias("ok"),
+    twin_pair = planted.select(
+        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 300000).alias("id_b")
     )
-    found = (
-        planted.select(
-            F.col("doc_id").alias("id_a"),
-            (F.col("doc_id") + 300000).alias("id_b"),
-        )
-        .join(pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-        .agg(F.count("*").alias("n_found"))
+    return render(
+        {"id_a": "bigint", "id_b": "bigint", "hamming": "int",
+         "n": "bigint", "ok": "boolean"},
+        [
+            ("planted", twin_pair, {**_PAIR_SLOTS, "hamming": F.lit(0)}),
+            ("recall", containment(planted, found(twin_pair, pairs, _PAIR)), FLAG),
+            ("precision", violations(
+                pairs,
+                (F.col("hamming") < 0)
+                | (F.col("hamming") > 3)
+                | (F.col("id_a") >= F.col("id_b")),
+            ), FLAG),
+        ],
     )
-    recall_row = (
-        planted.agg(F.count("*").cast("bigint").alias("n_planted"))
-        .crossJoin(F.broadcast(found))
-        .select(
-            F.lit("recall").alias("part"),
-            *nulls,
-            F.col("n_planted").alias("n"),
-            (F.col("n_found") == F.col("n_planted")).alias("ok"),
-        )
-    )
-    precision_row = pairs.select(
-        F.when(
-            (F.col("hamming") < 0)
-            | (F.col("hamming") > 3)
-            | (F.col("id_a") >= F.col("id_b")),
-            1,
-        )
-        .otherwise(0)
-        .alias("bad")
-    ).agg(
-        F.coalesce(F.sum("bad"), F.lit(0)).cast("bigint").alias("n")
-    ).select(
-        F.lit("precision").alias("part"),
-        *nulls,
-        "n",
-        (F.col("n") == 0).alias("ok"),
-    )
-    return planted_rows.unionByName(recall_row).unionByName(precision_row)
 
 
 def _dedup_ngram_jaccard_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -621,53 +595,22 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=0.8, collapse_exact=True,
         )
     )
-    nulls = [
-        F.lit(None).cast("bigint").alias("id_a"),
-        F.lit(None).cast("bigint").alias("id_b"),
-    ]
-    planted_rows = planted.select(
-        F.lit("planted").alias("part"),
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 300000).alias("id_b"),
-        F.lit(None).cast("bigint").alias("n"),
-        F.lit(None).cast("boolean").alias("ok"),
+    twin_pair = planted.select(
+        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 300000).alias("id_b")
     )
-    found = (
-        planted.select(
-            F.col("doc_id").alias("id_a"),
-            (F.col("doc_id") + 300000).alias("id_b"),
-        )
-        .join(pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-        .agg(F.count("*").alias("n_found"))
+    return render(
+        {"id_a": "bigint", "id_b": "bigint", "n": "bigint", "ok": "boolean"},
+        [
+            ("planted", twin_pair, _PAIR_SLOTS),
+            ("recall", containment(planted, found(twin_pair, pairs, _PAIR)), FLAG),
+            ("precision", violations(
+                pairs,
+                (F.col("jaccard") < 0.8)
+                | (F.col("jaccard") > 1.0)
+                | (F.col("id_a") >= F.col("id_b")),
+            ), FLAG),
+        ],
     )
-    recall_row = (
-        planted.agg(F.count("*").cast("bigint").alias("n_planted"))
-        .crossJoin(F.broadcast(found))
-        .select(
-            F.lit("recall").alias("part"),
-            *nulls,
-            F.col("n_planted").alias("n"),
-            (F.col("n_found") == F.col("n_planted")).alias("ok"),
-        )
-    )
-    precision_row = pairs.select(
-        F.when(
-            (F.col("jaccard") < 0.8)
-            | (F.col("jaccard") > 1.0)
-            | (F.col("id_a") >= F.col("id_b")),
-            1,
-        )
-        .otherwise(0)
-        .alias("bad")
-    ).agg(
-        F.coalesce(F.sum("bad"), F.lit(0)).cast("bigint").alias("n")
-    ).select(
-        F.lit("precision").alias("part"),
-        *nulls,
-        "n",
-        (F.col("n") == 0).alias("ok"),
-    )
-    return planted_rows.unionByName(recall_row).unionByName(precision_row)
 
 
 def _cosine_noise() -> F.Column:
@@ -757,66 +700,30 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap planted filter as its own synchronous checkpoint job
     e = eager_pin(_cosine_reps(spark, sf_dir))
     lsh = eager_pin(_cosine_pairs_raw(spark, sf_dir, reps=e))
-    nulls = [
-        F.lit(None).cast("bigint").alias("id_a"),
-        F.lit(None).cast("bigint").alias("id_b"),
-        F.lit(None).cast("double").alias("score"),
-    ]
     # direct dual: cosine(original, perturbed) recomputed per planted
     # pair straight from the embeddings table — no LSH on this path.
     # UNPINNED (round 14): a filter + one cosine over the pinned rep
     # blocks; its three consumers replay that cheap projection instead
     # of paying a localCheckpoint write job
     planted = e.where(F.col("vec_id") % 13 == 0).select(
-        "vec_id",
+        F.col("vec_id").alias("id_a"),
+        (F.col("vec_id") + 100000).alias("id_b"),
         (
             cosine(F.col("embedding"), _cosine_noise()) >= 0.98
         ).alias("cos_ok"),
     )
-    planted_rows = planted.select(
-        F.lit("planted").alias("part"),
-        F.col("vec_id").alias("id_a"),
-        (F.col("vec_id") + 100000).alias("id_b"),
-        F.lit(None).cast("double").alias("score"),
-        F.lit(None).cast("bigint").alias("n"),
-        F.col("cos_ok").alias("ok"),
-    )
-    found = (
-        planted.select(
-            F.col("vec_id").alias("id_a"),
-            (F.col("vec_id") + 100000).alias("id_b"),
-        )
-        .join(lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-        .agg(F.count("*").alias("n_found"))
-    )
-    recall_row = (
-        planted.agg(F.count("*").alias("n_planted"))
-        .crossJoin(F.broadcast(found))
-        .select(
-            F.lit("recall").alias("part"),
-            *nulls,
-            F.col("n_planted").alias("n"),
-            (10 * F.col("n_found") >= 9 * F.col("n_planted")).alias("ok"),
-        )
-    )
-    precision_row = lsh.select(
-        F.when(
+    return render(_SCORED, [
+        ("planted", planted, {**_PAIR_SLOTS, "ok": "cos_ok"}),
+        ("recall", containment(
+            planted, found(planted.select(*_PAIR), lsh, _PAIR), 9, 10
+        ), FLAG),
+        ("precision", violations(
+            lsh,
             (F.col("cos_sim") < 0.98)
             | (F.col("cos_sim") > 1.0 + 1e-9)
             | (F.col("id_a") >= F.col("id_b")),
-            1,
-        )
-        .otherwise(0)
-        .alias("bad")
-    ).agg(
-        F.coalesce(F.sum("bad"), F.lit(0)).cast("bigint").alias("n")
-    ).select(
-        F.lit("precision").alias("part"),
-        *nulls,
-        "n",
-        (F.col("n") == 0).alias("ok"),
-    )
-    return planted_rows.unionByName(recall_row).unionByName(precision_row)
+        ), FLAG),
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -900,51 +807,27 @@ UNION ALL SELECT 'ranks_contiguous', nq, CAST(5 AS BIGINT), true FROM q
     "unit recall tests.",
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ann_rows(spark, sf_dir, _sim_ann_ivf_raw, 1, 2)
+
+
+def _ann_rows(
+    spark: SparkSession, sf_dir: str, raw, num: int, den: int
+) -> DataFrame:
+    """The rows of a top-5 ANN invariant query over the ranking
+    ``raw(spark, sf_dir)``: recall vs the exact top-5 >= num/den, and
+    contiguous rank lists."""
     from ..operators.pinning import eager_pin
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = e.where(F.col("vec_id") % 50 == 0)
-    # the raw ranking feeds three branches below: pin once
-    ann = eager_pin(_sim_ann_ivf_raw(spark, sf_dir))
+    # the raw ranking feeds both rows (three reads): pin once
+    ann = eager_pin(raw(spark, sf_dir))
     exact = eager_pin(brute_force_topk(e, queries, k=5))
-    hits = (
-        ann.select("query_id", "neighbor_id")
-        .join(
-            exact.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        )
-        .agg(F.count("*").alias("h"))
-    )
-    tot = exact.agg(F.count("*").alias("t"))
-    recall = (
-        ann.agg(F.countDistinct("query_id").cast("bigint").alias("n_queries"))
-        .crossJoin(F.broadcast(hits))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.lit("recall_floor").alias("part"),
-            "n_queries",
-            F.lit(5).cast("bigint").alias("k"),
-            (2 * F.col("h") >= F.col("t")).alias("ok"),
-        )
-    )
-    per_q = ann.groupBy("query_id").agg(
-        F.count("*").alias("c"),
-        F.min("rank").alias("rmin"),
-        F.max("rank").alias("rmax"),
-    )
-    contig = per_q.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-        F.min(
-            (F.col("rmin") == 1) & (F.col("rmax") == F.col("c")) & (F.col("c") <= 5)
-        ).alias("ok"),
-    ).select(
-        F.lit("ranks_contiguous").alias("part"),
-        "n_queries",
-        F.lit(5).cast("bigint").alias("k"),
-        "ok",
-    )
-    return recall.unionByName(contig)
+    slots = {"n_queries": "n_queries", "k": F.lit(5), "ok": "ok"}
+    return render(_TOPK, [
+        ("recall_floor", ann_recall(ann, exact, num, den), slots),
+        ("ranks_contiguous", ranks_contiguous(ann, 5), slots),
+    ])
 
 
 def _sim_mmr_rerank_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,22 +890,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         mmr_rerank(cands, e, queries, k=10, lam=0.7)
     )
     nq = m.agg(F.countDistinct("query_id").cast("bigint").alias("n_queries"))
-    k10 = F.lit(10).cast("bigint").alias("k")
-
-    first_match = (
-        m.where(F.col("rank") == 1)
-        .join(
-            cands.where(F.col("rank") == 1).select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        )
-        .agg(F.count("*").alias("n_match"))
-    )
-    first = nq.crossJoin(F.broadcast(first_match)).select(
-        F.lit("first_pick_argmax").alias("part"),
-        "n_queries",
-        k10,
-        (F.col("n_match") == F.col("n_queries")).alias("ok"),
+    first_match = found(
+        m.where(F.col("rank") == 1), cands.where(F.col("rank") == 1), NEIGHBOR
     )
     per_q = m.groupBy("query_id").agg(
         F.count("*").alias("c"),
@@ -1034,25 +903,20 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(
             (F.col("c") == 10) & (F.col("rmin") == 1) & (F.col("rmax") == 10)
         ).alias("ok"),
-    ).select(
-        F.lit("k_rows_contiguous").alias("part"), "n_queries", k10, "ok"
     )
     outside = (
-        m.select("query_id", "neighbor_id")
-        .join(
-            cands.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_anti",
-        )
+        m.select(*NEIGHBOR)
+        .join(cands.select(*NEIGHBOR), NEIGHBOR, "left_anti")
         .agg(F.count("*").alias("n_out"))
     )
-    subset = nq.crossJoin(F.broadcast(outside)).select(
-        F.lit("shortlist_subset").alias("part"),
-        "n_queries",
-        k10,
-        (F.col("n_out") == 0).alias("ok"),
-    )
-    return first.unionByName(contig).unionByName(subset)
+    slots = {"n_queries": "n_queries", "k": F.lit(10)}
+    return render(_TOPK, [
+        ("first_pick_argmax", nq.crossJoin(F.broadcast(first_match)),
+         {**slots, "ok": F.col("found") == F.col("n_queries")}),
+        ("k_rows_contiguous", contig, {**slots, "ok": "ok"}),
+        ("shortlist_subset", nq.crossJoin(F.broadcast(outside)),
+         {**slots, "ok": F.col("n_out") == 0}),
+    ])
 
 
 def _sim_ann_ivf_kmeans_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,50 +963,7 @@ UNION ALL SELECT 'ranks_contiguous', nq, CAST(5 AS BIGINT), true FROM q
     "refined-vs-raw unit test.",
 )
 def sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pinning import eager_pin
-
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = e.where(F.col("vec_id") % 50 == 0)
-    ann = eager_pin(_sim_ann_ivf_kmeans_raw(spark, sf_dir))
-    exact = eager_pin(brute_force_topk(e, queries, k=5))
-    hits = (
-        ann.select("query_id", "neighbor_id")
-        .join(
-            exact.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        )
-        .agg(F.count("*").alias("h"))
-    )
-    tot = exact.agg(F.count("*").alias("t"))
-    recall = (
-        ann.agg(F.countDistinct("query_id").cast("bigint").alias("n_queries"))
-        .crossJoin(F.broadcast(hits))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.lit("recall_floor").alias("part"),
-            "n_queries",
-            F.lit(5).cast("bigint").alias("k"),
-            (2 * F.col("h") >= F.col("t")).alias("ok"),
-        )
-    )
-    per_q = ann.groupBy("query_id").agg(
-        F.count("*").alias("c"),
-        F.min("rank").alias("rmin"),
-        F.max("rank").alias("rmax"),
-    )
-    contig = per_q.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-        F.min(
-            (F.col("rmin") == 1) & (F.col("rmax") == F.col("c")) & (F.col("c") <= 5)
-        ).alias("ok"),
-    ).select(
-        F.lit("ranks_contiguous").alias("part"),
-        "n_queries",
-        F.lit(5).cast("bigint").alias("k"),
-        "ok",
-    )
-    return recall.unionByName(contig)
+    return _ann_rows(spark, sf_dir, _sim_ann_ivf_kmeans_raw, 1, 2)
 
 
 def _sim_ann_pq_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1191,50 +1012,7 @@ UNION ALL SELECT 'ranks_contiguous', nq, CAST(5 AS BIGINT), true FROM q
     "sim_topk_battery, and the hand-codebook numpy dual tests.",
 )
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pinning import eager_pin
-
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = e.where(F.col("vec_id") % 50 == 0)
-    ann = eager_pin(_sim_ann_pq_raw(spark, sf_dir))
-    exact = eager_pin(brute_force_topk(e, queries, k=5))
-    hits = (
-        ann.select("query_id", "neighbor_id")
-        .join(
-            exact.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        )
-        .agg(F.count("*").alias("h"))
-    )
-    tot = exact.agg(F.count("*").alias("t"))
-    recall = (
-        ann.agg(F.countDistinct("query_id").cast("bigint").alias("n_queries"))
-        .crossJoin(F.broadcast(hits))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.lit("recall_floor").alias("part"),
-            "n_queries",
-            F.lit(5).cast("bigint").alias("k"),
-            (10 * F.col("h") >= 9 * F.col("t")).alias("ok"),
-        )
-    )
-    per_q = ann.groupBy("query_id").agg(
-        F.count("*").alias("c"),
-        F.min("rank").alias("rmin"),
-        F.max("rank").alias("rmax"),
-    )
-    contig = per_q.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
-        F.min(
-            (F.col("rmin") == 1) & (F.col("rmax") == F.col("c")) & (F.col("c") <= 5)
-        ).alias("ok"),
-    ).select(
-        F.lit("ranks_contiguous").alias("part"),
-        "n_queries",
-        F.lit(5).cast("bigint").alias("k"),
-        "ok",
-    )
-    return recall.unionByName(contig)
+    return _ann_rows(spark, sf_dir, _sim_ann_pq_raw, 9, 10)
 
 
 def _dedup_semantic_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1326,7 +1104,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (~F.col("keep"))
             ).alias("ok"),
         )
-        .select(F.lit("planted_grouped").alias("part"), "n", "ok")
     )
     grp_min = res.where(F.col("group_id").isNotNull()).groupBy(
         "group_id"
@@ -1343,10 +1120,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("ok"),
         )
-        .select(F.lit("partition_exact").alias("part"), "n", "ok")
     )
     # every group id is itself a present, minimal, kept member
-    reps = (
+    rep_closed = (
         grp_min.join(
             res.select(
                 F.col("vec_id").alias("group_id"),
@@ -1366,13 +1142,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(True),
             ).alias("ok")
         )
-        .select(
-            F.lit("group_rep_closed").alias("part"),
-            F.lit(None).cast("bigint").alias("n"),
-            "ok",
-        )
     )
-    return planted.unionByName(partition).unionByName(reps)
+    return render({"n": "bigint", "ok": "boolean"}, [
+        ("planted_grouped", planted, FLAG),
+        ("partition_exact", partition, FLAG),
+        ("group_rep_closed", rep_closed, {"ok": "ok"}),
+    ])
 
 
 @register(

@@ -10,6 +10,7 @@ Usage: python tools/opt_bench.py name1 name2 ... [--runs 3]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -18,17 +19,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    runs_n = 3
-    for a in sys.argv[1:]:
-        if a.startswith("--runs"):
-            runs_n = int(a.split("=", 1)[1]) if "=" in a else runs_n
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="+")
+    ap.add_argument("--runs", type=int, default=3)
+    args = ap.parse_intermixed_args()
     import bench
     from imdb_top_250_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("opt-bench")
     out = {}
-    for name, rs in bench.time_queries(spark, args, runs_n):
+    for name, rs in bench.time_queries(spark, args.names, args.runs):
         out[name] = {"cold": rs[0], "min": min(rs), "runs": rs}
         sys.stderr.write(f"{name}: {out[name]}\n")
     print(json.dumps(out))

@@ -2,12 +2,13 @@
 """Output-identity snapshot for the optimization rounds.
 
 Computes the oracle-harness order-insensitive value hash (bit-exact
-floats, 17-sig-digit repr) of every registered query's output — plus the
-bench's raw-override functions — at a given SF dir.  Run once BEFORE an
-optimization (committed as OPT_SNAPSHOT_<sf>.json) and after every
-substantive change; any hash drift means the rewrite changed what a
-query computes, which the driver would grade as a REGRESSION regardless
-of speed.  Each entry also records the ordered Spark schema
+floats, 17-sig-digit repr) of every registered query's output — the
+driver-facing ``QUERIES`` and the ``SUBSUMED`` battery constituents,
+plus the bench's raw-override functions — at a given SF dir.  Run once
+BEFORE an optimization (committed as OPT_SNAPSHOT_<sf>.json) and after
+every substantive change; any hash drift means the rewrite changed what
+a query computes, which the driver would grade as a REGRESSION
+regardless of speed.  Each entry also records the ordered Spark schema
 (``simpleString``): the value hash renders an INT and a BIGINT alike,
 so a dropped widening cast shows up only as schema drift.
 
@@ -41,7 +42,7 @@ def main() -> None:
 
     from oracle_harness import _hash_rows
 
-    from imdb_top_250_etl_pipeline_spark.plans import QUERIES
+    from imdb_top_250_etl_pipeline_spark.plans import QUERIES, SUBSUMED
     from imdb_top_250_etl_pipeline_spark.session import get_spark
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -50,7 +51,7 @@ def main() -> None:
     spark = get_spark("opt-snapshot")
     only = [s for s in args.only.split(",") if s]
 
-    fns: dict[str, object] = {n: q.fn for n, q in QUERIES.items()}
+    fns: dict[str, object] = {n: q.fn for n, q in {**QUERIES, **SUBSUMED}.items()}
     for n, fn in bench._raw_overrides().items():
         fns[f"RAW::{n}"] = fn
 
