@@ -6,32 +6,33 @@ embeddings are array<float> handled by expression math, and image/audio/
 video payloads ride as opaque binary with typed metadata, decoded by
 Arrow-batched pandas functions (the only place Python belongs).
 
-The decode seam carries SIX real formats end-to-end, all pure stdlib:
-PNG (chunk walk + zlib + spec-complete unfilter — round 9), BMP
-(24-bit BGR / 8-bit palette, padded rows, bottom-up or top-down —
-round 10), RIFF/WAVE PCM audio (8/16-bit, any channel count — round
-10), YUV4MPEG2 video (FRAME-marker demux + planar Y slices — round
-10; per-frame luma stats and true spatial aHash, so image near-dup
-machinery extends to frames), JPEG (full T.81 sequential-DCT entropy
-decode + deterministic encoder — round 10; PROGRESSIVE SOF2
-spectral-selection / successive-approximation decode + multi-scan
-encoder — round 11, operators/jpeg.py), GIF (variable-width LZW,
-interlace, palettes, operators/gif.py — round 10), TIFF
-(strips/PackBits/LZW+EarlyChange, operators/tiff.py — round 11), and
-COMPRESSED video via MJPEG-in-AVI (RIFF chunk walk + idx1 index seek,
-every frame a standalone JFIF payload decoded by the existing JPEG
-codec — round 12, operators/avi.py).  Images share ONE exact integer
-luma (_luma_u8), so the same pixels hash identically across container
-formats — the property cross-format image near-dup needs; WAV yields
-true sample rate / frames / peak / full-scale clipping.  Round 13
-adds H.264-in-MP4 intra-only decode (operators/h264.py + mp4.py:
-ISO-BMFF sample tables with the stss keyframe seek, CAVLC, intra
-prediction, in-loop deblocking) and FLAC lossless audio
-(operators/flac.py).  Still synthetic: MP3/AAC audio and inter-coded
-(P/B-frame) video — those raise at the same NotImplementedError seam
-(no PIL/ffmpeg in this container); the Spark-side plumbing (schema,
-mapInPandas batch shape, partitioning) is identical on both paths, so
-swapping in PIL/ffmpeg stays a one-function change.
+Real formats at the decode seam, all pure stdlib + numpy:
+
+* images: PNG (8-bit gray/RGB/RGBA, all five filters), BMP (24-bit,
+  8-bit palette, RLE8), JPEG (baseline and progressive,
+  operators/jpeg.py), GIF (LZW, interlace, operators/gif.py) and TIFF
+  (strips, PackBits, LZW + predictor, operators/tiff.py);
+* video: YUV4MPEG2, MJPEG-in-AVI (operators/avi.py) and H.264-in-MP4
+  (operators/h264.py + mp4.py) with I and P slices — progressive
+  (stss keyframe seek, or every sample in decode order) and
+  fragmented (sidx keyframe seek);
+* audio: RIFF/WAVE (PCM 8/16/24-bit, IMA ADPCM, G.711 A-law/mu-law)
+  and FLAC (operators/flac.py).
+
+Images share ONE exact integer luma (_luma_u8), so the same pixels
+hash identically across container formats — the property cross-format
+image near-dup needs.  The 'IMG:', 'VID:' and 'AUD:' headers are
+synthetic fixture formats.  Anything else (MP3/AAC audio, B-slice or
+CABAC video, other containers) raises NotImplementedError at the seam
+— there is no PIL/ffmpeg in this container — and corrupt bytes raise
+ValueError.
+
+Every seam operator is a row function over ``_codec_map_in_pandas``,
+which owns the one Arrow batch loop.  To add a format, write its
+``make(i)`` fixture (``_synthesize``) or its row function, plus one
+dispatch entry: ``_image_codec`` for an image format,
+``_VIDEO_CONTAINERS`` (one frame iterator) for a video container,
+``_audio_samples`` for audio.
 """
 
 from __future__ import annotations
@@ -131,8 +132,30 @@ def widen_for_python(df: DataFrame, *cols: str) -> DataFrame:
     return df
 
 
-def _codec_map_in_pandas(df: DataFrame, fn, schema) -> DataFrame:
-    """mapInPandas with the Arrow byte-batch cap enforced at the seam.
+def _row_batches(row, cols, names):
+    """The one Arrow batch loop of the codec seam: per pandas batch,
+    ``row(*values)`` of each input row's ``cols`` gives an iterable of
+    output tuples (none, one or many), all gathered into one frame
+    with columns ``names`` — typed by the seam's schema even when
+    empty."""
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = zip(*(pdf[c] for c in cols))
+            out = [t for vals in rows for t in row(*vals)]
+            yield pd.DataFrame.from_records(out, columns=names)
+
+    return run
+
+
+def _codec_map_in_pandas(
+    df: DataFrame, row, schema: T.StructType, cols=("doc_id", "blob")
+) -> DataFrame:
+    """The codec seam: ``row`` (see _row_batches) maps each input row
+    to output tuples in ``schema`` order, run over Arrow batches by
+    mapInPandas with the Arrow byte-batch cap enforced.
 
     The 64 MiB ``spark.sql.execution.arrow.maxBytesPerBatch`` bound
     must hold under ANY session (judge-r12: the tuned session.py
@@ -160,7 +183,9 @@ def _codec_map_in_pandas(df: DataFrame, fn, schema) -> DataFrame:
     # launches for a decode that fits in a handful; target partitions
     # now derive from the plan's byte estimate (one worker per
     # ~128 KiB of input), clamped to the round-13 cap.
-    return widen_for_python(df).mapInPandas(fn, schema)
+    return widen_for_python(df).mapInPandas(
+        _row_batches(row, cols, schema.fieldNames()), schema
+    )
 
 
 BLOB_META_SCHEMA = T.StructType(
@@ -192,6 +217,73 @@ def synthesize_blobs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _header_ints(tag: bytes, raw: bytes, *fields: bytes) -> list[int]:
+    """The integer fields of a synthetic fixture header.  A missing
+    tag or a malformed or non-positive field raises ValueError here,
+    where a 0 would otherwise reach a division downstream."""
+    try:
+        vals = [int(f) for f in fields]
+    except ValueError:
+        vals = [0]
+    if not raw.startswith(tag) or min(vals) <= 0:
+        raise ValueError(
+            f"malformed synthetic {tag.decode()} header: {raw[:40]!r}"
+        )
+    return vals
+
+
+def img_header(raw: bytes) -> tuple[int, int, bytes]:
+    """'IMG:<w>x<h>:<payload>' -> (w, h, payload): the one parser of
+    the synthetic image header."""
+    head, _, payload = raw[4:].partition(b":")
+    w_s, _, h_s = head.partition(b"x")
+    w, h = _header_ints(b"IMG:", raw, w_s, h_s)
+    return w, h, payload
+
+
+BLOB_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("blob", T.BinaryType()),
+    ]
+)
+
+
+def _synthesize(df: DataFrame, id_col: str, make) -> DataFrame:
+    """Fixture blobs: one (id, make(id)) row per input id."""
+    return _codec_map_in_pandas(
+        df.select(id_col), lambda i: [(int(i), make(int(i)))], BLOB_SCHEMA,
+        (id_col,),
+    )
+
+
+def _solid(i: int):
+    """The solid-gray (id % 256) image at synthesize_blobs' geometry."""
+    import numpy as np
+
+    return np.full((i % 48 + 16, i % 64 + 16), i % 256, dtype=np.uint8)
+
+
+def _bmp_gray(px) -> bytes:
+    """24-bit bottom-up BMP of an (h, w) gray image (BGR = gray
+    triples, rows padded to 4 bytes)."""
+    import struct
+
+    import numpy as np
+
+    h, w = px.shape
+    pad = (w * 3 + 3) & ~3
+    body = np.zeros((h, pad), dtype=np.uint8)
+    body[:, : w * 3] = np.repeat(px[::-1][:, :, None], 3, axis=2).reshape(
+        h, w * 3
+    )
+    hdr = struct.pack("<2sIHHI", b"BM", 54 + body.size, 0, 0, 54)
+    dib = struct.pack(
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, body.size, 2835, 2835, 0, 0
+    )
+    return hdr + dib + body.tobytes()
+
+
 def synthesize_bmp_blobs(df: DataFrame, id_col: str) -> DataFrame:
     """REAL 24-bit BMP bytes as a deterministic fixture: a solid-color
     (id % 256) image with the SAME width/height formulas as
@@ -199,30 +291,7 @@ def synthesize_bmp_blobs(df: DataFrame, id_col: str) -> DataFrame:
     their rows through a real binary codec while the oracle still
     derives every value from id arithmetic (n_bytes = 54 + padded-row
     bytes × height — the BMP size formula, SQL-expressible)."""
-
-    def gen(batches: Iterator) -> Iterator:
-        import struct
-
-        import pandas as pd
-
-        def solid_bmp(w: int, h: int, val: int) -> bytes:
-            row = (bytes([val, val, val]) * w).ljust((w * 3 + 3) & ~3, b"\x00")
-            body = row * h
-            hdr = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
-            dib = struct.pack(
-                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
-            )
-            return hdr + dib + body
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                ids.append(i)
-                blobs.append(solid_bmp(i % 64 + 16, i % 48 + 16, i % 256))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, lambda i: _bmp_gray(_solid(i)))
 
 
 def synthesize_jpeg_blobs(
@@ -243,25 +312,13 @@ def synthesize_jpeg_blobs(
     the same exact-stats contract (progressive is a lossless
     reordering of the quantized coefficients)."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
+    def make(i: int) -> bytes:
         from .jpeg import jpeg_encode, jpeg_encode_progressive
 
         enc = jpeg_encode_progressive if progressive else jpeg_encode
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                px = np.full(
-                    (i % 48 + 16, i % 64 + 16), i % 256, dtype=np.uint8
-                )
-                ids.append(i)
-                blobs.append(enc(px, quality=100))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        return enc(_solid(i), quality=100)
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 def synthesize_gif_blobs(df: DataFrame, id_col: str) -> DataFrame:
@@ -274,24 +331,12 @@ def synthesize_gif_blobs(df: DataFrame, id_col: str) -> DataFrame:
     recomputes all downstream stats from id arithmetic while the bytes
     exercise genuine variable-width LZW decode."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
+    def make(i: int) -> bytes:
         from .gif import gif_encode
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                px = np.full(
-                    (i % 48 + 16, i % 64 + 16), i % 256, dtype=np.uint8
-                )
-                ids.append(i)
-                blobs.append(gif_encode(px, interlace=(i % 3 == 0)))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        return gif_encode(_solid(i), interlace=(i % 3 == 0))
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 CROSS_FORMAT_ID_OFFSET = 10_000_000
@@ -309,34 +354,19 @@ def synthesize_tiff_blobs(df: DataFrame, id_col: str) -> DataFrame:
     SQL oracle recomputes the stats from id arithmetic while the
     bytes exercise the genuine IFD walk + strip decompression."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
+    def make(i: int) -> bytes:
         from .tiff import tiff_encode
 
-        comps = ["none", "packbits", "lzw"]
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                px = np.full(
-                    (i % 48 + 16, i % 64 + 16), i % 256, dtype=np.uint8
-                )
-                comp = comps[i % 3]
-                ids.append(i)
-                blobs.append(
-                    tiff_encode(
-                        px,
-                        compression=comp,
-                        rows_per_strip=7 if i % 4 == 0 else None,
-                        predictor=(comp == "lzw" and i % 2 == 0),
-                        big_endian=(i % 5 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        comp = ("none", "packbits", "lzw")[i % 3]
+        return tiff_encode(
+            _solid(i),
+            compression=comp,
+            rows_per_strip=7 if i % 4 == 0 else None,
+            predictor=(comp == "lzw" and i % 2 == 0),
+            big_endian=(i % 5 == 0),
+        )
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 def synthesize_cross_format_pairs(df: DataFrame, id_col: str) -> DataFrame:
@@ -350,54 +380,31 @@ def synthesize_cross_format_pairs(df: DataFrame, id_col: str) -> DataFrame:
     in the unit tests).  Gradient content (x + 3y + id mod 251) keeps
     hashes distinct ACROSS ids, so the pair table stays near-linear."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import struct
-
+    def pair(doc_id) -> list:
         import numpy as np
-        import pandas as pd
 
         from .gif import gif_encode
 
-        def gradient(w: int, h: int, seed: int):
-            x = np.arange(w)[None, :]
-            y = np.arange(h)[:, None]
-            return ((x + 3 * y + seed) % 251).astype(np.uint8)
-
-        def bmp_gray(px) -> bytes:
-            h, w = px.shape
-            pad = (w * 3 + 3) & ~3
-            body = np.zeros((h, pad), dtype=np.uint8)
-            # bottom-up rows, BGR = gray triples
-            rep = np.repeat(px[::-1][:, :, None], 3, axis=2).reshape(h, w * 3)
-            body[:, : w * 3] = rep
-            hdr = struct.pack("<2sIHHI", b"BM", 54 + body.size, 0, 0, 54)
-            dib = struct.pack(
-                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, body.size, 2835, 2835, 0, 0
+        i = int(doc_id)
+        if not 0 <= i < CROSS_FORMAT_ID_OFFSET:
+            # the GIF twin lives at id + offset; an id at or past the
+            # offset would silently collide with another doc's twin
+            # and corrupt the planted ground truth — fail loudly
+            # instead (the check is per-row inside the Arrow batch: no
+            # extra pass)
+            raise ValueError(
+                f"doc_id {i} outside [0, {CROSS_FORMAT_ID_OFFSET}): "
+                "raise CROSS_FORMAT_ID_OFFSET for this corpus"
             )
-            return hdr + dib + body.tobytes()
+        x = np.arange(i % 24 + 16)[None, :]
+        y = np.arange(i % 16 + 16)[:, None]
+        px = ((x + 3 * y + i) % 251).astype(np.uint8)
+        twin = i + CROSS_FORMAT_ID_OFFSET
+        return [(i, _bmp_gray(px)), (twin, gif_encode(px))]
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                if not 0 <= i < CROSS_FORMAT_ID_OFFSET:
-                    # the GIF twin lives at id + offset; an id at or
-                    # past the offset would silently collide with
-                    # another doc's twin and corrupt the planted
-                    # ground truth — fail loudly instead (the check is
-                    # per-row inside the Arrow batch: no extra pass)
-                    raise ValueError(
-                        f"doc_id {i} outside [0, {CROSS_FORMAT_ID_OFFSET}): "
-                        "raise CROSS_FORMAT_ID_OFFSET for this corpus"
-                    )
-                px = gradient(i % 24 + 16, i % 16 + 16, i)
-                ids.append(i)
-                blobs.append(bmp_gray(px))
-                ids.append(i + CROSS_FORMAT_ID_OFFSET)
-                blobs.append(gif_encode(px))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _codec_map_in_pandas(
+        df.select(id_col), pair, BLOB_SCHEMA, (id_col,)
+    )
 
 
 # --- real PNG codec (pure stdlib: chunk walk + zlib + unfilter) -------------
@@ -728,58 +735,71 @@ def bmp_gray_pixels(raw: bytes):
     return _luma_u8(np.ascontiguousarray(rgb))
 
 
-def decode_blobs(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched decode over binary blobs via mapInPandas.
+def _image_codec(raw: bytes):
+    """(dims, gray_pixels) of raw's real image format, or None — the
+    one image-format dispatch table: ``dims(raw)`` -> (width, height)
+    from the header alone, ``gray_pixels(raw)`` -> (h, w) uint8 exact
+    luma."""
+    from .gif import GIF_MAGIC, gif_dims, gif_gray_pixels
+    from .jpeg import JPEG_MAGIC, jpeg_decode, jpeg_dims
+    from .tiff import TIFF_MAGIC_BE, TIFF_MAGIC_LE, tiff_dims, tiff_gray_pixels
 
-    Two formats decode for real: PNG (stdlib zlib codec above — true
-    IHDR width/height) and the synthetic 'IMG:<w>x<h>:' header (the
-    deterministic fixture format).  Anything else raises
+    for magics, dims, pixels in (
+        ((PNG_MAGIC,), lambda r: png_ihdr(r)[:2], png_gray_pixels),
+        ((BMP_MAGIC,), bmp_dims, bmp_gray_pixels),
+        ((JPEG_MAGIC,), jpeg_dims, lambda r: _luma_u8(jpeg_decode(r))),
+        ((GIF_MAGIC,), gif_dims, gif_gray_pixels),
+        ((TIFF_MAGIC_LE, TIFF_MAGIC_BE), tiff_dims, tiff_gray_pixels),
+    ):
+        if raw.startswith(magics):
+            return dims, pixels
+    return None
+
+
+def image_dims(raw: bytes) -> tuple[int, int]:
+    """(width, height) of a PNG/BMP/JPEG/GIF/TIFF blob from its header
+    (no pixel decode), or of a synthetic 'IMG:' blob; anything else
+    raises to the codec seam."""
+    if raw.startswith(b"IMG:"):
+        return img_header(raw)[:2]
+    codec = _image_codec(raw)
+    if codec is None:
+        raise NotImplementedError(
+            "only PNG/BMP/JPEG/GIF/TIFF and the synthetic IMG header are "
+            "decodable in this container; plug a real codec in here"
+        )
+    return codec[0](raw)
+
+
+def gray_pixels_any(raw: bytes):
+    """Decode ANY of the seam's real image formats (PNG/BMP/JPEG/GIF/
+    TIFF) to (h, w) gray uint8 via the shared exact luma — the single
+    pixel dispatch used by decode_gray_stats, thumbnail_blobs and
+    ahash_blobs, so chain-level fuzzing exercises exactly the
+    production dispatch.  Unknown formats raise to the codec seam;
+    corrupt streams raise ValueError inside their decoder (the
+    codec-guard contract)."""
+    codec = _image_codec(raw)
+    if codec is None:
+        raise NotImplementedError("real image codec plugs in here")
+    return codec[1](raw)
+
+
+def decode_blobs(blobs: DataFrame) -> DataFrame:
+    """Arrow-batched image metadata over binary blobs: (width, height)
+    from the header of every real image format (image_dims) and of the
+    synthetic 'IMG:<w>x<h>:' fixture header.  Anything else raises
     NotImplementedError — the clearly-marked seam where PIL/
     torchvision/ffmpeg plug in; the batch shape (bytes in, struct
     metadata out, no driver round-trip) is what any real decoder needs.
     """
 
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id, blob):
+        raw = bytes(blob)
+        w, h = image_dims(raw)
+        return [(doc_id, "image", w, h, len(raw))]
 
-        from .gif import GIF_MAGIC, gif_dims
-        from .jpeg import JPEG_MAGIC, jpeg_dims
-        from .tiff import TIFF_MAGIC_BE, TIFF_MAGIC_LE, tiff_dims
-
-        for pdf in batches:
-            out = {"doc_id": [], "media_type": [], "width": [], "height": [], "n_bytes": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if raw.startswith(PNG_MAGIC):
-                    w, h, _, _ = png_ihdr(raw)
-                elif raw.startswith(BMP_MAGIC):
-                    w, h = bmp_dims(raw)
-                elif raw.startswith(JPEG_MAGIC):
-                    w, h = jpeg_dims(raw)
-                elif raw.startswith(GIF_MAGIC):
-                    w, h = gif_dims(raw)
-                elif raw.startswith(TIFF_MAGIC_LE) or raw.startswith(
-                    TIFF_MAGIC_BE
-                ):
-                    w, h = tiff_dims(raw)
-                elif raw.startswith(b"IMG:"):
-                    head, _, _payload = raw[4:].partition(b":")
-                    w_s, _, h_s = head.partition(b"x")
-                    w, h = int(w_s), int(h_s)
-                else:
-                    raise NotImplementedError(
-                        "only PNG/BMP and the synthetic IMG header are "
-                        "decodable in this container; plug a real codec "
-                        "in here"
-                    )
-                out["doc_id"].append(doc_id)
-                out["media_type"].append("image")
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_bytes"].append(len(raw))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(blobs, decode, BLOB_META_SCHEMA)
+    return _codec_map_in_pandas(blobs, row, BLOB_META_SCHEMA)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -801,42 +821,15 @@ def resize_images(blobs: DataFrame, max_side: int = 32) -> DataFrame:
     a real resizer needs: bytes in, bytes+metadata out, no driver hop.
     """
 
-    def resize(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id, blob):
+        w, h = image_dims(bytes(blob))
+        longer = max(w, h)
+        return [
+            (doc_id, max(1, w * max_side // longer),
+             max(1, h * max_side // longer))
+        ]
 
-        from .gif import GIF_MAGIC, gif_dims
-        from .jpeg import JPEG_MAGIC, jpeg_dims
-        from .tiff import TIFF_MAGIC_BE, TIFF_MAGIC_LE, tiff_dims
-
-        for pdf in batches:
-            out = {"doc_id": [], "new_width": [], "new_height": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if raw.startswith(PNG_MAGIC):
-                    w, h, _, _ = png_ihdr(raw)
-                elif raw.startswith(BMP_MAGIC):
-                    w, h = bmp_dims(raw)
-                elif raw.startswith(JPEG_MAGIC):
-                    w, h = jpeg_dims(raw)
-                elif raw.startswith(GIF_MAGIC):
-                    w, h = gif_dims(raw)
-                elif raw.startswith(TIFF_MAGIC_LE) or raw.startswith(
-                    TIFF_MAGIC_BE
-                ):
-                    w, h = tiff_dims(raw)
-                elif raw.startswith(b"IMG:"):
-                    head, _, _ = raw[4:].partition(b":")
-                    w_s, _, h_s = head.partition(b"x")
-                    w, h = int(w_s), int(h_s)
-                else:
-                    raise NotImplementedError("real image codec plugs in here")
-                longer = max(w, h)
-                out["doc_id"].append(doc_id)
-                out["new_width"].append(max(1, w * max_side // longer))
-                out["new_height"].append(max(1, h * max_side // longer))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(blobs, resize, RESIZE_SCHEMA)
+    return _codec_map_in_pandas(blobs, row, RESIZE_SCHEMA)
 
 
 def synthesize_videos(df: DataFrame, id_col: str) -> DataFrame:
@@ -848,6 +841,15 @@ def synthesize_videos(df: DataFrame, id_col: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias("doc_id"), F.encode(header, "UTF-8").alias("blob")
     )
+
+
+def vid_header(raw: bytes) -> tuple[int, int]:
+    """'VID:<n_frames>:<fps>:' -> (n_frames, fps): the one parser of the
+    synthetic video header."""
+    n_s, _, rest = raw[4:].partition(b":")
+    fps_s, _, _ = rest.partition(b":")
+    n, fps = _header_ints(b"VID:", raw, n_s, fps_s)
+    return n, fps
 
 
 FRAME_SCHEMA = T.StructType(
@@ -862,73 +864,24 @@ FRAME_SCHEMA = T.StructType(
 def sample_frames(videos: DataFrame, every_k: int = 7) -> DataFrame:
     """Arrow-batched frame sampling: one output row per kept frame.
 
-    Real pipelines run ffmpeg/pyav seek-and-decode here; the stub reads
-    the synthetic 'VID:<n_frames>:<fps>:' header and emits every k-th
-    frame index with its timestamp — the exact one-row-in, many-rows-out
-    (UDTF) batch shape frame extraction needs.  Frame rows are the unit
-    of downstream multimodal work (per-frame embeddings, dedup), so they
+    Real containers (Y4M, MJPEG-AVI, H.264-MP4 keyframes) go through
+    their frame iterator's index — timestamps from the container's own
+    clock, and no frame is decoded; the synthetic
+    'VID:<n_frames>:<fps>:' header emits every k-th frame index with
+    its timestamp.  This is the one-row-in, many-rows-out (UDTF) batch
+    shape frame extraction needs.  Frame rows are the unit of
+    downstream multimodal work (per-frame embeddings, dedup), so they
     must be real rows, not an aggregate.
     """
 
-    def sample(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id, blob):
+        raw = bytes(blob)
+        if raw.startswith(b"VID:"):
+            n, fps = vid_header(raw)
+            return [(doc_id, i, i * 1000 // fps) for i in range(0, n, every_k)]
+        return [(doc_id, i, ts) for i, ts, *_ in _video_frames(raw, every_k)]
 
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "ts_ms": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if raw.startswith(Y4M_MAGIC):
-                    # the REAL path: demux a YUV4MPEG2 stream's FRAME
-                    # markers; timestamps from the true fps ratio
-                    # (floor-exact integer math, matching mjpegtools)
-                    _w, _h, num, den, _cs, _hl = y4m_header(raw)
-                    for idx, _plane in y4m_frames(raw):
-                        if idx % every_k:
-                            continue
-                        out["doc_id"].append(doc_id)
-                        out["frame_idx"].append(idx)
-                        out["ts_ms"].append(idx * 1000 * den // num)
-                    continue
-                if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-                    # the COMPRESSED path: MJPEG-in-AVI — idx1 index
-                    # seek touches only the sampled frames' bytes
-                    from .avi import avi_frames, avi_header
-
-                    hdr = avi_header(raw)
-                    _w, _h, rate, scale, _nf, _vi = hdr
-                    for idx, _jpeg in avi_frames(
-                        raw, every_k=every_k, header=hdr
-                    ):
-                        out["doc_id"].append(doc_id)
-                        out["frame_idx"].append(idx)
-                        out["ts_ms"].append(idx * 1000 * scale // rate)
-                    continue
-                if len(raw) >= 12 and raw[4:8] == b"ftyp":
-                    # the MP4 path (round 13): H.264 keyframe sampling
-                    # through the stss sync table — only the sampled
-                    # samples' mdat byte ranges are touched
-                    from .mp4 import mp4_keyframes, mp4_probe
-
-                    info = mp4_probe(raw)
-                    for si, ts_ms, _sample in mp4_keyframes(
-                        raw, every_k, info
-                    ):
-                        out["doc_id"].append(doc_id)
-                        out["frame_idx"].append(si)
-                        out["ts_ms"].append(int(ts_ms))
-                    continue
-                if not raw.startswith(b"VID:"):
-                    raise NotImplementedError("real video demuxer plugs in here")
-                n_s, _, rest = raw[4:].partition(b":")
-                fps_s, _, _ = rest.partition(b":")
-                n, fps = int(n_s), int(fps_s)
-                for idx in range(0, n, every_k):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(idx)
-                    out["ts_ms"].append(idx * 1000 // fps)
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(videos, sample, FRAME_SCHEMA)
+    return _codec_map_in_pandas(videos, row, FRAME_SCHEMA)
 
 
 # --- real Y4M codec (YUV4MPEG2: pure stdlib marker walk + planar frames) ----
@@ -940,9 +893,9 @@ def sample_frames(videos: DataFrame, every_k: int = 7) -> DataFrame:
 # a size fixed entirely by the header.  No entropy coding means a
 # pure-stdlib demuxer carries it end-to-end REAL — marker walk +
 # zero-copy plane slices — closing the video third of the codec seam
-# the way PNG/BMP closed images and WAV closed audio.  Compressed
-# containers (MP4/H.264 et al.) stay behind the NotImplementedError
-# seam where ffmpeg/pyav plug in.
+# the way PNG/BMP closed images and WAV closed audio; the compressed
+# containers (MJPEG-AVI, H.264-MP4) have their own demuxers in
+# operators/avi.py and operators/mp4.py.
 
 Y4M_MAGIC = b"YUV4MPEG2 "
 
@@ -1030,6 +983,176 @@ def y4m_frames(raw: bytes):
         idx += 1
 
 
+# --- one frame iterator per video container --------------------------------
+#
+# Each yields (frame_idx, ts_ms, width, height, pixels) for every k-th
+# frame it samples; pixels() decodes that frame to exact luma only when
+# called (so frame sampling decodes nothing) and raises ValueError when
+# the decoded geometry disagrees with the container header.  Each
+# iterator raises NotImplementedError on any other container's bytes,
+# so an operator bound to one container never widens to the others.
+
+_NO_DEMUXER = "real video demuxer plugs in here"
+
+
+def _is_y4m(raw: bytes) -> bool:
+    return raw.startswith(Y4M_MAGIC)
+
+
+def _is_avi(raw: bytes) -> bool:
+    return raw[:4] == b"RIFF" and raw[8:12] == b"AVI "
+
+
+def _is_mp4(raw: bytes) -> bool:
+    return len(raw) >= 12 and raw[4:8] == b"ftyp"
+
+
+def _frame_luma(what: str, w: int, h: int, dec):
+    """Exact luma of one decoded frame, checked against the container's
+    (w, h)."""
+    y = _luma_u8(dec)
+    if y.shape != (h, w):
+        raise ValueError(
+            f"{what}: decoded geometry {y.shape} != container {(h, w)}"
+        )
+    return y
+
+
+def _lazy_luma(what: str, w: int, h: int, decode, payload):
+    """pixels() of one frame: decodes ``payload`` only when called."""
+    return lambda: _frame_luma(what, w, h, decode(payload))
+
+
+def _y4m_frame_iter(raw: bytes, every_k: int):
+    """YUV4MPEG2: FRAME-marker walk; ts from the true fps ratio
+    (floor-exact integer math, matching mjpegtools)."""
+    import numpy as np
+
+    if not _is_y4m(raw):
+        raise NotImplementedError(_NO_DEMUXER)
+    if every_k < 1:
+        raise ValueError(f"every_k must be >= 1, got {every_k}")
+    w, h, num, den, _cs, _hl = y4m_header(raw)
+
+    def plane(p):
+        return np.frombuffer(p, dtype=np.uint8).reshape(h, w)
+
+    for idx, p in y4m_frames(raw):
+        if idx % every_k == 0:
+            yield idx, idx * 1000 * den // num, w, h, _lazy_luma(
+                f"Y4M frame {idx}", w, h, plane, p
+            )
+
+
+def _avi_frame_iter(raw: bytes, every_k: int):
+    """MJPEG-in-AVI: idx1 index seek (only the sampled frames' bytes
+    are touched), each frame a JFIF payload; ts from rate/scale."""
+    from .avi import avi_frames, avi_header
+    from .jpeg import jpeg_decode
+
+    if not _is_avi(raw):
+        raise NotImplementedError(_NO_DEMUXER)
+    hdr = avi_header(raw)
+    w, h, rate, scale, _nf, _vi = hdr
+    for idx, payload in avi_frames(raw, every_k=every_k, header=hdr):
+        yield idx, idx * 1000 * scale // rate, w, h, _lazy_luma(
+            f"AVI frame {idx}", w, h, jpeg_decode, payload
+        )
+
+
+def _h264_keyframes(info: dict, keyframes, what: str):
+    """Frame tuples over (idx, ts_ms, sample) IDR samples of one MP4."""
+    from .h264 import h264_decode_sample
+
+    w, h = info["width"], info["height"]
+
+    def decode(sample):
+        return h264_decode_sample(
+            info["sps"], info["pps"], sample, info["length_size"]
+        )
+
+    for i, ts_ms, sample in keyframes:
+        yield int(i), int(ts_ms), w, h, _lazy_luma(
+            f"{what} {i}", w, h, decode, sample
+        )
+
+
+def _mp4_frame_iter(raw: bytes, every_k: int):
+    """H.264-in-MP4 keyframes through the stss sync table (only the
+    sampled samples' mdat byte ranges are touched); ts from stts."""
+    from .mp4 import mp4_keyframes, mp4_probe
+
+    if not _is_mp4(raw):
+        raise NotImplementedError(_NO_DEMUXER)
+    info = mp4_probe(raw)
+    yield from _h264_keyframes(
+        info, mp4_keyframes(raw, every_k, info), "MP4 sample"
+    )
+
+
+def _mp4_sidx_frame_iter(raw: bytes, every_k: int):
+    """Fragmented-MP4 keyframes through the sidx: every k-th SAP
+    subsegment's first sync sample; frame_idx is the subsegment index
+    and ts the sidx-accumulated subsegment start."""
+    from .mp4 import mp4_fragment_keyframes, mp4_probe
+
+    if not _is_mp4(raw):
+        raise NotImplementedError(_NO_DEMUXER)
+    info = mp4_probe(raw)
+    yield from _h264_keyframes(
+        info, mp4_fragment_keyframes(raw, every_k, info), "MP4 subsegment"
+    )
+
+
+# the one video-container dispatch (fragmented MP4 also answers the
+# stss path: mp4_probe expands fragments into the same sample tables)
+_VIDEO_CONTAINERS = (
+    (_is_y4m, _y4m_frame_iter),
+    (_is_avi, _avi_frame_iter),
+    (_is_mp4, _mp4_frame_iter),
+)
+
+
+def _video_frames(raw: bytes, every_k: int):
+    """The frame iterator of the container raw's magic names."""
+    for is_container, frames in _VIDEO_CONTAINERS:
+        if is_container(raw):
+            return frames(raw, every_k)
+    raise NotImplementedError(_NO_DEMUXER)
+
+
+def _min_max_sum(y) -> tuple[int, int, int]:
+    """Exact integer (min, max, sum) of an integer array — the fold
+    behind every per-frame, per-image and per-stream stats row."""
+    import numpy as np
+
+    return int(y.min()), int(y.max()), int(y.sum(dtype=np.int64))
+
+
+Y4M_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("ts_ms", T.IntegerType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("y_min", T.IntegerType()),
+        T.StructField("y_max", T.IntegerType()),
+        T.StructField("y_sum", T.LongType()),
+    ]
+)
+
+
+def _frame_stats(videos: DataFrame, frames, every_k: int) -> DataFrame:
+    """Y4M_STATS_SCHEMA rows, one per frame the iterator samples."""
+
+    def row(doc_id, blob):
+        for idx, ts_ms, w, h, pixels in frames(bytes(blob), every_k):
+            yield (int(doc_id), idx, ts_ms, w, h, *_min_max_sum(pixels()))
+
+    return _codec_map_in_pandas(videos, row, Y4M_STATS_SCHEMA)
+
+
 def synthesize_y4m_blobs(
     df: DataFrame,
     id_col: str,
@@ -1050,39 +1173,16 @@ def synthesize_y4m_blobs(
     Within-frame pixel addressing is pinned by the gradient fixtures in
     tests/test_multimodal_y4m.py."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        w = (i % w_mod) * 2 + 8
+        h = (i % h_mod) * 2 + 8
+        parts = [b"YUV4MPEG2 W%d H%d F10:1 Ip A1:1 Cmono\n" % (w, h)]
+        for f in range(i % frames_mod + frames_base):
+            parts.append(b"FRAME\n")
+            parts.append(bytes([(i + 7 * f) % 256]) * (w * h))
+        return b"".join(parts)
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = (i % w_mod) * 2 + 8
-                h = (i % h_mod) * 2 + 8
-                n = i % frames_mod + frames_base
-                parts = [b"YUV4MPEG2 W%d H%d F10:1 Ip A1:1 Cmono\n" % (w, h)]
-                for f in range(n):
-                    parts.append(b"FRAME\n")
-                    parts.append(bytes([(i + 7 * f) % 256]) * (w * h))
-                ids.append(i)
-                blobs.append(b"".join(parts))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
-
-
-Y4M_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("ts_ms", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("y_min", T.IntegerType()),
-        T.StructField("y_max", T.IntegerType()),
-        T.StructField("y_sum", T.LongType()),
-    ]
-)
+    return _synthesize(df, id_col, make)
 
 
 def y4m_frame_stats(videos: DataFrame, every_k: int = 5) -> DataFrame:
@@ -1092,39 +1192,7 @@ def y4m_frame_stats(videos: DataFrame, every_k: int = 5) -> DataFrame:
     (idx·1000·den DIV num).  One row per sampled frame — the per-frame
     feature unit video quality filtering and near-dup consume; non-Y4M
     blobs raise to the demuxer seam."""
-
-    cols = (
-        "doc_id frame_idx ts_ms width height y_min y_max y_sum".split()
-    )
-
-    def stats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if not raw.startswith(Y4M_MAGIC):
-                    raise NotImplementedError(
-                        "real video demuxer plugs in here"
-                    )
-                w, h, num, den, _cs, _hl = y4m_header(raw)
-                for idx, plane in y4m_frames(raw):
-                    if idx % every_k:
-                        continue
-                    y = np.frombuffer(plane, dtype=np.uint8)
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(idx)
-                    out["ts_ms"].append(idx * 1000 * den // num)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["y_min"].append(int(y.min()))
-                    out["y_max"].append(int(y.max()))
-                    out["y_sum"].append(int(y.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(videos, stats, Y4M_STATS_SCHEMA)
+    return _frame_stats(videos, _y4m_frame_iter, every_k)
 
 
 def synthesize_avi_blobs(
@@ -1148,30 +1216,19 @@ def synthesize_avi_blobs(
     or chunk-size bug lands the decode in a neighboring frame, which
     carries a DIFFERENT solid value and hash-fails)."""
 
-    def gen(batches: Iterator) -> Iterator:
+    def make(i: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
         from .avi import avi_encode
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = i % 24 + 16
-                h = i % 20 + 12
-                n = i % frames_mod + frames_base
-                frames = [
-                    np.full((h, w), (i + 11 * f) % 256, dtype=np.uint8)
-                    for f in range(n)
-                ]
-                ids.append(i)
-                blobs.append(
-                    avi_encode(frames, rate=i % 10 + 5, quality=quality)
-                )
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        w, h = i % 24 + 16, i % 20 + 12
+        frames = [
+            np.full((h, w), (i + 11 * f) % 256, dtype=np.uint8)
+            for f in range(i % frames_mod + frames_base)
+        ]
+        return avi_encode(frames, rate=i % 10 + 5, quality=quality)
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 def avi_frame_stats(videos: DataFrame, every_k: int = 3) -> DataFrame:
@@ -1181,50 +1238,7 @@ def avi_frame_stats(videos: DataFrame, every_k: int = 3) -> DataFrame:
     min / max / sum plus the rate/scale timestamp — the same per-frame
     feature unit as y4m_frame_stats, now over a COMPRESSED container.
     Non-AVI blobs raise to the demuxer seam."""
-
-    cols = (
-        "doc_id frame_idx ts_ms width height y_min y_max y_sum".split()
-    )
-
-    def stats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        from .avi import avi_frames, avi_header
-        from .jpeg import jpeg_decode
-
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
-                    raise NotImplementedError(
-                        "real video demuxer plugs in here"
-                    )
-                hdr = avi_header(raw)
-                w, h, rate, scale, _nf, _vi = hdr
-                for idx, payload in avi_frames(
-                    raw, every_k=every_k, header=hdr
-                ):
-                    dec = jpeg_decode(payload)
-                    y = dec if dec.ndim == 2 else _luma_u8(dec)
-                    if y.shape != (h, w):
-                        raise ValueError(
-                            f"AVI frame {idx}: JPEG geometry "
-                            f"{y.shape} != container {(h, w)}"
-                        )
-                    y = y.astype(np.int64)
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(idx)
-                    out["ts_ms"].append(idx * 1000 * scale // rate)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["y_min"].append(int(y.min()))
-                    out["y_max"].append(int(y.max()))
-                    out["y_sum"].append(int(y.sum()))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(videos, stats, Y4M_STATS_SCHEMA)
+    return _frame_stats(videos, _avi_frame_iter, every_k)
 
 
 def synthesize_mp4_blobs(df: DataFrame, id_col: str) -> DataFrame:
@@ -1243,32 +1257,20 @@ def synthesize_mp4_blobs(df: DataFrame, id_col: str) -> DataFrame:
     entropy decode — a sample-table or seek bug lands in a frame with
     a DIFFERENT solid value and hash-fails."""
 
-    def gen(batches: Iterator) -> Iterator:
+    def make(i: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
         from .mp4 import mp4_encode_gray
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = ((i % 24 + 16) // 2) * 2
-                h = ((i % 20 + 12) // 2) * 2
-                n = i % 12 + 4
-                frames = [
-                    np.full((h, w), (i + 13 * f) % 256, dtype=np.uint8)
-                    for f in range(n)
-                ]
-                ids.append(i)
-                blobs.append(
-                    mp4_encode_gray(
-                        frames, fps=i % 10 + 5, key_every=i % 3 + 1
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        w = ((i % 24 + 16) // 2) * 2
+        h = ((i % 20 + 12) // 2) * 2
+        frames = [
+            np.full((h, w), (i + 13 * f) % 256, dtype=np.uint8)
+            for f in range(i % 12 + 4)
+        ]
+        return mp4_encode_gray(frames, fps=i % 10 + 5, key_every=i % 3 + 1)
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 def mp4_frame_stats(videos: DataFrame, every_k: int = 2) -> DataFrame:
@@ -1280,48 +1282,7 @@ def mp4_frame_stats(videos: DataFrame, every_k: int = 2) -> DataFrame:
     per-frame feature unit as y4m/avi_frame_stats, over the container
     a crawl corpus actually has.  Non-MP4 blobs raise to the demuxer
     seam."""
-
-    cols = "doc_id frame_idx ts_ms width height y_min y_max y_sum".split()
-
-    def stats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        from .mp4 import mp4_keyframes, mp4_probe
-        from .h264 import h264_decode_sample
-
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if len(raw) < 12 or raw[4:8] != b"ftyp":
-                    raise NotImplementedError(
-                        "real video demuxer plugs in here"
-                    )
-                info = mp4_probe(raw)
-                w, h = info["width"], info["height"]
-                for si, ts_ms, sample in mp4_keyframes(raw, every_k, info):
-                    dec = h264_decode_sample(
-                        info["sps"], info["pps"], sample,
-                        info["length_size"],
-                    )
-                    y = _luma_u8(dec).astype(np.int64)
-                    if y.shape != (h, w):
-                        raise ValueError(
-                            f"MP4 sample {si}: decoded geometry "
-                            f"{y.shape} != container {(h, w)}"
-                        )
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(si)
-                    out["ts_ms"].append(int(ts_ms))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["y_min"].append(int(y.min()))
-                    out["y_max"].append(int(y.max()))
-                    out["y_sum"].append(int(y.sum()))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(videos, stats, Y4M_STATS_SCHEMA)
+    return _frame_stats(videos, _mp4_frame_iter, every_k)
 
 
 def _pgop_specs(i: int, n_gops: int, gop_len: int) -> list:
@@ -1361,28 +1322,16 @@ def synthesize_mp4p_blobs(df: DataFrame, id_col: str) -> DataFrame:
     reference-tracking bug shifts a frame's solid value and
     hash-fails."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make(i: int) -> bytes:
         from .mp4 import mp4_encode_pgop
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = ((i % 22 + 16) // 2) * 2
-                h = ((i % 18 + 12) // 2) * 2
-                gops = _pgop_specs(i, 2, i % 3 + 3)
-                specs = [s for g in gops for s in g]
-                ids.append(i)
-                blobs.append(
-                    mp4_encode_pgop(
-                        specs, w, h, fps=i % 8 + 5, qp=12 + i % 5
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        specs = [s for g in _pgop_specs(i, 2, i % 3 + 3) for s in g]
+        return mp4_encode_pgop(
+            specs, ((i % 22 + 16) // 2) * 2, ((i % 18 + 12) // 2) * 2,
+            fps=i % 8 + 5, qp=12 + i % 5,
+        )
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 MP4_SEQ_STATS_SCHEMA = T.StructType(
@@ -1408,44 +1357,20 @@ def mp4_video_stats(videos: DataFrame) -> DataFrame:
     progressive and fragmented containers: mp4_probe expands
     moof/traf/trun fragments to the same per-sample tables."""
 
-    cols = ("doc_id frame_idx ts_ms is_key width height "
-            "y_min y_max y_sum").split()
-
-    def stats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
+    def row(doc_id, blob):
         from .mp4 import mp4_decode_all, mp4_probe
 
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if len(raw) < 12 or raw[4:8] != b"ftyp":
-                    raise NotImplementedError(
-                        "real video demuxer plugs in here"
-                    )
-                info = mp4_probe(raw)
-                w, h = info["width"], info["height"]
-                for si, ts_ms, is_key, dec in mp4_decode_all(raw, info):
-                    y = _luma_u8(dec).astype(np.int64)
-                    if y.shape != (h, w):
-                        raise ValueError(
-                            f"MP4 sample {si}: decoded geometry "
-                            f"{y.shape} != container {(h, w)}"
-                        )
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(si)
-                    out["ts_ms"].append(int(ts_ms))
-                    out["is_key"].append(bool(is_key))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["y_min"].append(int(y.min()))
-                    out["y_max"].append(int(y.max()))
-                    out["y_sum"].append(int(y.sum()))
-            yield pd.DataFrame(out)
+        raw = bytes(blob)
+        if not _is_mp4(raw):
+            raise NotImplementedError(_NO_DEMUXER)
+        info = mp4_probe(raw)
+        w, h = info["width"], info["height"]
+        for si, ts_ms, is_key, dec in mp4_decode_all(raw, info):
+            y = _frame_luma(f"MP4 sample {si}", w, h, dec)
+            yield (int(doc_id), si, int(ts_ms), bool(is_key), w, h,
+                   *_min_max_sum(y))
 
-    return _codec_map_in_pandas(videos, stats, MP4_SEQ_STATS_SCHEMA)
+    return _codec_map_in_pandas(videos, row, MP4_SEQ_STATS_SCHEMA)
 
 
 def synthesize_mp4frag_blobs(df: DataFrame, id_col: str) -> DataFrame:
@@ -1455,27 +1380,16 @@ def synthesize_mp4frag_blobs(df: DataFrame, id_col: str) -> DataFrame:
     mvex/trex — same geometry/qp/fps arithmetic as
     synthesize_mp4p_blobs."""
 
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make(i: int) -> bytes:
         from .mp4 import mp4_encode_fragmented
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w = ((i % 22 + 16) // 2) * 2
-                h = ((i % 18 + 12) // 2) * 2
-                ids.append(i)
-                blobs.append(
-                    mp4_encode_fragmented(
-                        _pgop_specs(i, 3, i % 3 + 2), w, h,
-                        fps=i % 8 + 5, qp=12 + i % 5,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        return mp4_encode_fragmented(
+            _pgop_specs(i, 3, i % 3 + 2),
+            ((i % 22 + 16) // 2) * 2, ((i % 18 + 12) // 2) * 2,
+            fps=i % 8 + 5, qp=12 + i % 5,
+        )
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 def mp4_frag_keyframe_stats(videos: DataFrame, every_k: int = 2) -> DataFrame:
@@ -1485,49 +1399,7 @@ def mp4_frag_keyframe_stats(videos: DataFrame, every_k: int = 2) -> DataFrame:
     unsampled fragments' mdat bytes are never touched (the stss/idx1
     discipline at DASH granularity).  frame_idx is the subsegment
     index; ts_ms the sidx-accumulated subsegment start."""
-
-    cols = "doc_id frame_idx ts_ms width height y_min y_max y_sum".split()
-
-    def stats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        from .h264 import h264_decode_sample
-        from .mp4 import mp4_fragment_keyframes, mp4_probe
-
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if len(raw) < 12 or raw[4:8] != b"ftyp":
-                    raise NotImplementedError(
-                        "real video demuxer plugs in here"
-                    )
-                info = mp4_probe(raw)
-                w, h = info["width"], info["height"]
-                for ri, ts_ms, sample in mp4_fragment_keyframes(
-                        raw, every_k, info):
-                    dec = h264_decode_sample(
-                        info["sps"], info["pps"], sample,
-                        info["length_size"],
-                    )
-                    y = _luma_u8(dec).astype(np.int64)
-                    if y.shape != (h, w):
-                        raise ValueError(
-                            f"MP4 subsegment {ri}: decoded geometry "
-                            f"{y.shape} != container {(h, w)}"
-                        )
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(int(ri))
-                    out["ts_ms"].append(int(ts_ms))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["y_min"].append(int(y.min()))
-                    out["y_max"].append(int(y.max()))
-                    out["y_sum"].append(int(y.sum()))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(videos, stats, Y4M_STATS_SCHEMA)
+    return _frame_stats(videos, _mp4_sidx_frame_iter, every_k)
 
 
 FRAME_AHASH_SCHEMA = T.StructType(
@@ -1544,76 +1416,21 @@ FRAME_AHASH_SCHEMA = T.StructType(
 
 def y4m_frame_ahash(videos: DataFrame, every_k: int = 5) -> DataFrame:
     """True spatial aHash per sampled video frame: each kept frame's
-    real Y plane (Y4M) or JPEG-decoded luma (MJPEG-in-AVI — round 12)
-    feeds the SAME 8×8 block-grid / exact-integer thresholding as image
-    blobs (_spatial_cells/_ahash_bands), so the banded pigeonhole join
-    behind image near-dup (ahash_near_dup, keyed on (doc_id, frame_idx)
-    instead of doc_id) finds recurring and near-duplicate frames across
-    a video corpus — and ACROSS containers: the same pixels hash
-    identically from Y4M and lossless-path frames, and within a small
-    hamming radius through quality<100 JPEG frames (pinned in
-    tests/test_multimodal_avi.py)."""
+    real Y plane (Y4M), JPEG-decoded luma (MJPEG-in-AVI) or H.264
+    keyframe luma (MP4) feeds the SAME 8×8 block-grid / exact-integer
+    thresholding as image blobs (_spatial_ahash), so the banded
+    pigeonhole join behind image near-dup (ahash_near_dup, keyed on
+    (doc_id, frame_idx) instead of doc_id) finds recurring and
+    near-duplicate frames across a video corpus — and ACROSS
+    containers: the same pixels hash identically from Y4M and
+    lossless-path frames, and within a small hamming radius through
+    quality<100 JPEG frames (pinned in tests/test_multimodal_avi.py)."""
 
-    def hash_frames(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, blob):
+        for idx, _ts, _w, _h, pixels in _video_frames(bytes(blob), every_k):
+            yield (int(doc_id), idx, *_spatial_ahash(pixels()))
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_idx": [],
-                "b0": [], "b1": [], "b2": [], "b3": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if raw.startswith(Y4M_MAGIC):
-                    w, h, _num, _den, _cs, _hl = y4m_header(raw)
-                    planes = (
-                        (idx, np.frombuffer(p, dtype=np.uint8).reshape(h, w))
-                        for idx, p in y4m_frames(raw)
-                        if idx % every_k == 0
-                    )
-                elif raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-                    # compressed container: MJPEG frames decode through
-                    # the JPEG codec, then share the SAME spatial hash —
-                    # so near-dup finds recurring frames ACROSS both
-                    # containers (the cross-format image discipline)
-                    from .avi import avi_frames
-                    from .jpeg import jpeg_decode
-
-                    def _avi_planes(raw=raw):
-                        for idx, payload in avi_frames(raw, every_k=every_k):
-                            dec = jpeg_decode(payload)
-                            yield idx, dec if dec.ndim == 2 else _luma_u8(dec)
-
-                    planes = _avi_planes()
-                elif len(raw) >= 12 and raw[4:8] == b"ftyp":
-                    # H.264-in-MP4 (round 13): keyframes seek through
-                    # stss, decode through operators/h264.py, and share
-                    # the SAME spatial hash — frame near-dup now spans
-                    # uncompressed (Y4M), MJPEG-AVI and H.264-MP4
-                    from .mp4 import mp4_decode_keyframes
-
-                    def _mp4_planes(raw=raw):
-                        for si, _ts, dec in mp4_decode_keyframes(
-                            raw, every_k=every_k
-                        ):
-                            yield si, _luma_u8(dec)
-
-                    planes = _mp4_planes()
-                else:
-                    raise NotImplementedError(
-                        "real video demuxer plugs in here"
-                    )
-                for idx, plane in planes:
-                    px = plane.astype(np.int64)
-                    bands = _ahash_bands(_spatial_cells(px), px.ravel())
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(idx)
-                    for b in range(4):
-                        out[f"b{b}"].append(bands[b])
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(videos, hash_frames, FRAME_AHASH_SCHEMA)
+    return _codec_map_in_pandas(videos, row, FRAME_AHASH_SCHEMA)
 
 
 GRAY_STATS_SCHEMA = T.StructType(
@@ -1629,33 +1446,18 @@ GRAY_STATS_SCHEMA = T.StructType(
 
 
 def decode_gray_stats(blobs: DataFrame) -> DataFrame:
-    """Exact integer grayscale statistics from REAL image bytes: PNG,
-    BMP and baseline JPEG decode to pixels (the shared _luma_u8 for
-    color), then min / max / sum per image — the per-image feature
-    unit quality filtering and brightness audits consume.  Synthetic
-    headers and unknown formats raise to the codec seam: a stats row
-    from fake pixels would poison the audit."""
+    """Exact integer grayscale statistics from REAL image bytes: every
+    real format decodes to pixels through gray_pixels_any (the shared
+    _luma_u8 for color), then min / max / sum per image — the per-image
+    feature unit quality filtering and brightness audits consume.
+    Synthetic headers and unknown formats raise to the codec seam: a
+    stats row from fake pixels would poison the audit."""
 
-    def stats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, blob):
+        px = gray_pixels_any(bytes(blob))
+        return [(int(doc_id), px.shape[1], px.shape[0], *_min_max_sum(px))]
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                c: [] for c in
-                ("doc_id", "width", "height", "y_min", "y_max", "y_sum")
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                px = gray_pixels_any(bytes(blob)).astype(np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["height"].append(int(px.shape[0]))
-                out["width"].append(int(px.shape[1]))
-                out["y_min"].append(int(px.min()))
-                out["y_max"].append(int(px.max()))
-                out["y_sum"].append(int(px.sum()))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(blobs, stats, GRAY_STATS_SCHEMA)
+    return _codec_map_in_pandas(blobs, row, GRAY_STATS_SCHEMA)
 
 
 THUMB_SCHEMA = T.StructType(
@@ -1666,31 +1468,6 @@ THUMB_SCHEMA = T.StructType(
         T.StructField("new_height", T.IntegerType()),
     ]
 )
-
-
-def gray_pixels_any(raw: bytes):
-    """Decode ANY of the seam's real image formats (PNG/BMP/JPEG/GIF/
-    TIFF) to (h, w) gray uint8 via the shared exact luma — the single
-    magic-dispatch used by decode_gray_stats and thumbnail_blobs, so
-    chain-level fuzzing exercises exactly the production dispatch.
-    Unknown formats raise to the codec seam; corrupt streams raise
-    ValueError inside their decoder (the codec-guard contract)."""
-    from .gif import GIF_MAGIC, gif_gray_pixels
-    from .jpeg import JPEG_MAGIC, jpeg_decode
-    from .tiff import TIFF_MAGIC_BE, TIFF_MAGIC_LE, tiff_gray_pixels
-
-    if raw.startswith(PNG_MAGIC):
-        return png_gray_pixels(raw)
-    if raw.startswith(BMP_MAGIC):
-        return bmp_gray_pixels(raw)
-    if raw.startswith(JPEG_MAGIC):
-        dec = jpeg_decode(raw)
-        return dec if dec.ndim == 2 else _luma_u8(dec)
-    if raw.startswith(GIF_MAGIC):
-        return gif_gray_pixels(raw)
-    if raw.startswith(TIFF_MAGIC_LE) or raw.startswith(TIFF_MAGIC_BE):
-        return tiff_gray_pixels(raw)
-    raise NotImplementedError("real image codec plugs in here")
 
 
 def thumbnail_one(raw: bytes, max_side: int = 32) -> tuple[bytes, int, int]:
@@ -1725,22 +1502,10 @@ def thumbnail_blobs(blobs: DataFrame, max_side: int = 32) -> DataFrame:
     hash-check the WHOLE decode→resize→re-encode→decode chain end to
     end.  Non-image or synthetic blobs raise to the codec seam."""
 
-    def thumb(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id, blob):
+        return [(int(doc_id), *thumbnail_one(bytes(blob), max_side))]
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "thumb": [], "new_width": [], "new_height": []
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                t, nw, nh = thumbnail_one(bytes(blob), max_side)
-                out["doc_id"].append(int(doc_id))
-                out["thumb"].append(t)
-                out["new_width"].append(nw)
-                out["new_height"].append(nh)
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(blobs, thumb, THUMB_SCHEMA)
+    return _codec_map_in_pandas(blobs, row, THUMB_SCHEMA)
 
 
 AHASH_SCHEMA = T.StructType(
@@ -1780,6 +1545,14 @@ def _ahash_bands(cells, cps) -> list[int]:
     return [int(vals[b * 16 : (b + 1) * 16].sum()) for b in range(4)]
 
 
+def _spatial_ahash(px) -> list[int]:
+    """aHash bands of an (h, w) luma array over the spatial 8×8 grid."""
+    import numpy as np
+
+    px = px.astype(np.int64)
+    return _ahash_bands(_spatial_cells(px), px.ravel())
+
+
 def ahash_blobs(blobs: DataFrame) -> DataFrame:
     """Perceptual average-hash over media blobs (aHash — the classic
     image near-dup fingerprint: downsample, threshold each cell at the
@@ -1787,14 +1560,19 @@ def ahash_blobs(blobs: DataFrame) -> DataFrame:
     batch; the only Python in the pipeline, at the codec seam where it
     belongs.
 
-    PNG blobs hash their REAL decoded pixels over a spatial 8×8 block
-    grid (true aHash); synthetic IMG blobs 'decode' to their payload's
-    code-point sequence over a linear 64-cell split — both feed the
-    identical thresholding/bit-packing below, and the banded near-dup
-    join downstream is unchanged.  Cell means are compared in EXACT integers
-    (cell_sum · n ≥ total · cell_count — no float division), so the
-    hash is bit-identical to the SQL oracle's restatement; empty cells
-    (payloads shorter than 64 units) hash to 0.  The 64 bits come out
+    Every real image format (PNG/BMP/JPEG/GIF/TIFF, via
+    gray_pixels_any) hashes its REAL decoded pixels over a spatial 8×8
+    block grid (true aHash) — they share the exact luma, so the same
+    pixels hash identically across formats (JPEG up to its
+    quantization loss, which aHash near-dup absorbs); synthetic IMG
+    blobs 'decode' to their payload's code-point sequence over a linear
+    64-cell split — both feed the identical thresholding/bit-packing,
+    and the banded near-dup join downstream is unchanged.  Cell means
+    are compared in EXACT integers (cell_sum · n ≥ total · cell_count —
+    no float division), so the hash is bit-identical to the SQL
+    oracle's restatement; empty cells (payloads shorter than 64 units)
+    hash to 0, and an empty payload to the all-zero hash, so no
+    document silently vanishes from the table.  The 64 bits come out
     as four 16-bit band integers (b0..b3) — exactly what the pigeonhole
     LSH join consumes, and sign-safe in any engine's 64-bit integer.
 
@@ -1802,80 +1580,18 @@ def ahash_blobs(blobs: DataFrame) -> DataFrame:
     < 2^63 — ~2.9e6 code points per document at the Unicode max.
     """
 
-    def hash_batch(batches: Iterator) -> Iterator:
+    def row(doc_id, blob):
         import numpy as np
-        import pandas as pd
 
-        from .gif import GIF_MAGIC, gif_gray_pixels
-        from .jpeg import JPEG_MAGIC, jpeg_decode
-        from .tiff import TIFF_MAGIC_BE, TIFF_MAGIC_LE, tiff_gray_pixels
+        raw = bytes(blob)
+        if not raw.startswith(b"IMG:"):
+            return [(doc_id, *_spatial_ahash(gray_pixels_any(raw)))]
+        payload = img_header(raw)[2].decode("utf-8")
+        cps = np.array([ord(c) for c in payload], dtype=np.int64)
+        cells = (np.arange(len(cps), dtype=np.int64) * 64) // max(len(cps), 1)
+        return [(doc_id, *_ahash_bands(cells, cps))]
 
-        for pdf in batches:
-            out = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                cells = None
-                if (
-                    raw.startswith(PNG_MAGIC)
-                    or raw.startswith(BMP_MAGIC)
-                    or raw.startswith(JPEG_MAGIC)
-                    or raw.startswith(GIF_MAGIC)
-                    or raw.startswith(TIFF_MAGIC_LE)
-                    or raw.startswith(TIFF_MAGIC_BE)
-                ):
-                    # the REAL path: decoded grayscale pixels feed the
-                    # same exact-integer cell thresholding below, with
-                    # SPATIAL 8x8 block cells (true aHash geometry);
-                    # PNG/BMP/JPEG share the exact luma, so the same
-                    # pixels hash identically across formats (JPEG up
-                    # to its quantization loss — which is exactly what
-                    # aHash near-dup is built to absorb)
-                    if raw.startswith(PNG_MAGIC):
-                        px = png_gray_pixels(raw)
-                    elif raw.startswith(BMP_MAGIC):
-                        px = bmp_gray_pixels(raw)
-                    elif raw.startswith(GIF_MAGIC):
-                        px = gif_gray_pixels(raw)
-                    elif raw.startswith(TIFF_MAGIC_LE) or raw.startswith(
-                        TIFF_MAGIC_BE
-                    ):
-                        px = tiff_gray_pixels(raw)
-                    else:
-                        dec = jpeg_decode(raw)
-                        px = dec if dec.ndim == 2 else _luma_u8(dec)
-                    px = px.astype(np.int64)
-                    cells = _spatial_cells(px)
-                    cps = px.ravel()
-                elif raw.startswith(b"IMG:"):
-                    _head, _, payload = raw[4:].partition(b":")
-                    # synthetic fixture path: the payload's code points
-                    # stand in for pixels with the identical batch shape
-                    cps = np.array(
-                        [ord(c) for c in payload.decode("utf-8")],
-                        dtype=np.int64,
-                    )
-                else:
-                    raise NotImplementedError(
-                        "real image codec plugs in here"
-                    )
-                n = len(cps)
-                if n == 0:
-                    # an empty payload still emits a signature — the
-                    # all-zero hash (every cell empty -> bit 0), so no
-                    # document silently vanishes from the table
-                    out["doc_id"].append(doc_id)
-                    for b in range(4):
-                        out[f"b{b}"].append(0)
-                    continue
-                if cells is None:  # synthetic path: linear cell split
-                    cells = (np.arange(n, dtype=np.int64) * 64) // n
-                bands = _ahash_bands(cells, cps)
-                out["doc_id"].append(doc_id)
-                for b in range(4):
-                    out[f"b{b}"].append(bands[b])
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(blobs, hash_batch, AHASH_SCHEMA)
+    return _codec_map_in_pandas(blobs, row, AHASH_SCHEMA)
 
 
 def ahash_near_dup(
@@ -1952,6 +1668,14 @@ def synthesize_audio(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.col(id_col).alias("doc_id"),
         F.encode(F.concat(header, F.col(text_col)), "UTF-8").alias("blob"),
     )
+
+
+def aud_header(raw: bytes) -> tuple[int, bytes]:
+    """'AUD:<rate>:<payload>' -> (rate, payload): the one parser of the
+    synthetic audio header."""
+    rate_s, _, payload = raw[4:].partition(b":")
+    (rate,) = _header_ints(b"AUD:", raw, rate_s)
+    return rate, payload
 
 
 # --- real WAV codec (pure stdlib: RIFF chunk walk + PCM frombuffer) ---------
@@ -2218,23 +1942,13 @@ def synthesize_g711_blobs(df: DataFrame, id_col: str) -> DataFrame:
     so every segment/mantissa branch of both expansion formulas is
     inside the oracle hash."""
 
-    def gen(batches: Iterator) -> Iterator:
+    def make(i: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = i % 60 + 40
-                codes = (i * 7 + 13 * np.arange(n, dtype=np.int64)) % 256
-                ids.append(i)
-                blobs.append(
-                    wav_encode_g711(codes, 8000, alaw=(i % 24 != 0))
-                )
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        codes = (i * 7 + 13 * np.arange(i % 60 + 40, dtype=np.int64)) % 256
+        return wav_encode_g711(codes, 8000, alaw=(i % 24 != 0))
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 def g711_stats(blobs: DataFrame) -> DataFrame:
@@ -2243,36 +1957,18 @@ def g711_stats(blobs: DataFrame) -> DataFrame:
     min / max / sum — the audio analog of the solid-frame video
     oracles, but over the full nonlinear code space."""
 
-    def stats(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id, blob):
+        raw = bytes(blob)
+        if raw[:4] != WAV_MAGIC:
+            raise NotImplementedError("real audio decoder plugs in here")
+        tag = wave_format_tag(raw)
+        if tag not in (6, 7):
+            raise ValueError(f"g711_stats: WAVE format {tag} is not G.711")
+        rate, samples, _bits = wav_pcm_samples(raw)
+        return [(int(doc_id), "alaw" if tag == 6 else "ulaw", int(rate),
+                 len(samples), *_min_max_sum(samples))]
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "law": [], "sample_rate": [],
-                "n_samples": [], "s_min": [], "s_max": [], "s_sum": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if raw[:4] != WAV_MAGIC:
-                    raise NotImplementedError(
-                        "real audio decoder plugs in here"
-                    )
-                tag = wave_format_tag(raw)
-                if tag not in (6, 7):
-                    raise ValueError(
-                        f"g711_stats: WAVE format {tag} is not G.711"
-                    )
-                rate, samples, _bits = wav_pcm_samples(raw)
-                out["doc_id"].append(int(doc_id))
-                out["law"].append("alaw" if tag == 6 else "ulaw")
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(int(len(samples)))
-                out["s_min"].append(int(samples.min()))
-                out["s_max"].append(int(samples.max()))
-                out["s_sum"].append(int(samples.sum()))
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(blobs, stats, G711_STATS_SCHEMA)
+    return _codec_map_in_pandas(blobs, row, G711_STATS_SCHEMA)
 
 
 def wave_format_tag(raw: bytes) -> int:
@@ -2358,27 +2054,17 @@ def synthesize_wav_blobs(df: DataFrame, id_col: str) -> DataFrame:
     id arithmetic for the SQL oracle while the bytes exercise genuine
     RIFF walk + nibble decode."""
 
-    def gen(batches: Iterator) -> Iterator:
+    def make(i: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                amp = 32767 if i % 9 == 0 else (i % 61) - 30
-                n = i % 400 + 50
-                rate = (i % 3 + 1) * 8000
-                sig = np.full(n, amp, dtype=np.int64)
-                ids.append(i)
-                blobs.append(
-                    wav_encode_pcm16(sig, rate)
-                    if i % 2 == 0
-                    else wav_encode_adpcm(sig, rate)
-                )
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        amp = 32767 if i % 9 == 0 else (i % 61) - 30
+        sig = np.full(i % 400 + 50, amp, dtype=np.int64)
+        rate = (i % 3 + 1) * 8000
+        if i % 2 == 0:
+            return wav_encode_pcm16(sig, rate)
+        return wav_encode_adpcm(sig, rate)
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 def synthesize_flac_blobs(df: DataFrame, id_col: str) -> DataFrame:
@@ -2394,32 +2080,21 @@ def synthesize_flac_blobs(df: DataFrame, id_col: str) -> DataFrame:
     arithmetic for the SQL oracle while the bytes run genuine frame
     sync, CRC-8/16, fixed-predictor and Rice decode."""
 
-    def gen(batches: Iterator) -> Iterator:
+    def make(i: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
         from .flac import flac_encode
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = i % 400 + 50
-                rate = (i % 3 + 1) * 8000
-                j = np.arange(n, dtype=np.int64)
-                if i % 9 == 0:
-                    sig = np.where(j % 2 == 0, 32767, -32767).astype(
-                        np.int64
-                    )
-                else:
-                    sig = ((i + 17 * j) % 2001) - 1000
-                if i % 2 == 1:
-                    sig = np.stack([sig, sig // 2], axis=1)
-                ids.append(i)
-                blobs.append(flac_encode(sig, rate, block_size=256))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+        j = np.arange(i % 400 + 50, dtype=np.int64)
+        if i % 9 == 0:
+            sig = np.where(j % 2 == 0, 32767, -32767).astype(np.int64)
+        else:
+            sig = ((i + 17 * j) % 2001) - 1000
+        if i % 2 == 1:
+            sig = np.stack([sig, sig // 2], axis=1)
+        return flac_encode(sig, (i % 3 + 1) * 8000, block_size=256)
 
-    return _codec_map_in_pandas(df.select(id_col), gen, "doc_id long, blob binary")
+    return _synthesize(df, id_col, make)
 
 
 AUDIO_META_SCHEMA = T.StructType(
@@ -2440,77 +2115,58 @@ _AUDIO_CENTER = 96
 _AUDIO_CLIP = 24
 
 
+def _audio_samples(raw: bytes):
+    """(sample_rate, channel-0 int64 samples, bits) of a real audio
+    blob — the one audio-format dispatch (channel 0: the gray+alpha
+    PNG convention)."""
+    if raw[:4] == WAV_MAGIC and raw[8:12] == b"WAVE":
+        return wav_pcm_samples(raw)
+    if raw[:4] == b"fLaC":
+        from .flac import flac_decode
+
+        rate, samples, bits = flac_decode(raw)
+        return rate, samples[:, 0] if samples.ndim == 2 else samples, bits
+    raise NotImplementedError("real audio codec plugs in here")
+
+
 def decode_audio(blobs: DataFrame) -> DataFrame:
     """Arrow-batched audio 'decode': duration + signal-quality stats.
 
-    Two formats decode for REAL: RIFF/WAVE PCM (the stdlib codec above
-    — true sample rate, frame count, peak, clipping from real PCM
-    bytes; clipping for real audio = |sample| at full scale, 32767 /
-    127) and the synthetic 'AUD:<rate>:' header (payload code points as
-    centered samples — the deterministic fixture format whose exact
-    integer stats the SQL oracle restates: duration_ms = n·1000 //
-    rate, peak = max |sample|, n_clipped = count beyond ±clip).
-    Anything else raises NotImplementedError — the marked
-    soundfile/ffmpeg seam, like decode_blobs/sample_frames.
+    Real formats: RIFF/WAVE (PCM 8/16/24-bit, IMA ADPCM, G.711 — see
+    wav_pcm_samples) and FLAC — true sample rate, sample count, peak
+    and clipping over channel 0 (clipping for real audio = |sample| at
+    full scale, (1 << (bits-1)) - 1).  The synthetic 'AUD:<rate>:'
+    header decodes its payload code points as centered samples — the
+    deterministic fixture format whose exact integer stats the SQL
+    oracle restates: duration_ms = n·1000 // rate, peak = max |sample|,
+    n_clipped = count beyond ±clip.  Anything else raises
+    NotImplementedError — the marked soundfile/ffmpeg seam, like
+    decode_blobs/sample_frames.
     """
 
-    def decode(batches: Iterator) -> Iterator:
+    def row(doc_id, blob):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "sample_rate": [], "n_samples": [],
-                "duration_ms": [], "peak": [], "n_clipped": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if raw[:4] == WAV_MAGIC and raw[8:12] == b"WAVE":
-                    rate, samples, bits = wav_pcm_samples(raw)
-                    # real audio clips AT full scale (inclusive);
-                    # (1<<(bits-1))-1 = 32767/127 for 16/8-bit exactly
-                    # as before, and 8388607 for 24-bit PCM
-                    clipped = np.abs(samples) >= (1 << (bits - 1)) - 1
-                elif raw[:4] == b"fLaC":
-                    # LOSSLESS compressed audio (round 13): genuine
-                    # frame/CRC/Rice/fixed-predictor decode — stats over
-                    # channel 0 (the gray+alpha PNG convention)
-                    from .flac import flac_decode
+        raw = bytes(blob)
+        if raw.startswith(b"AUD:"):
+            rate, payload = aud_header(raw)
+            samples = np.array(
+                [ord(c) for c in payload.decode("utf-8")], dtype=np.int64
+            ) - _AUDIO_CENTER
+            # the fixture clips strictly beyond ±_AUDIO_CLIP (integer
+            # samples) — the SQL oracle restates it verbatim
+            full = _AUDIO_CLIP + 1
+        else:
+            rate, samples, bits = _audio_samples(raw)
+            # real audio clips AT full scale (inclusive): 32767 / 127
+            # for 16/8-bit, 8388607 for 24-bit
+            full = (1 << (bits - 1)) - 1
+        mag = np.abs(samples)
+        n = len(samples)
+        return [(doc_id, int(rate), n, n * 1000 // rate,
+                 int(mag.max()) if n else 0, int((mag >= full).sum()))]
 
-                    rate, samples, bits = flac_decode(raw)
-                    if samples.ndim == 2:
-                        samples = samples[:, 0]
-                    full = (1 << (bits - 1)) - 1
-                    clipped = np.abs(samples) >= full
-                elif raw.startswith(b"AUD:"):
-                    rate_s, _, payload = raw[4:].partition(b":")
-                    rate = int(rate_s)
-                    samples = (
-                        np.array(
-                            [ord(c) for c in payload.decode("utf-8")],
-                            dtype=np.int64,
-                        )
-                        - _AUDIO_CENTER
-                    )
-                    # the fixture threshold is strict-greater — the SQL
-                    # oracle restates it verbatim; do not change
-                    clipped = np.abs(samples) > _AUDIO_CLIP
-                else:
-                    raise NotImplementedError(
-                        "real audio codec plugs in here"
-                    )
-                n = len(samples)
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(n)
-                out["duration_ms"].append(n * 1000 // rate)
-                out["peak"].append(
-                    int(np.abs(samples).max()) if n else 0
-                )
-                out["n_clipped"].append(int(clipped.sum()) if n else 0)
-            yield pd.DataFrame(out)
-
-    return _codec_map_in_pandas(blobs, decode, AUDIO_META_SCHEMA)
+    return _codec_map_in_pandas(blobs, row, AUDIO_META_SCHEMA)
 
 
 def resample_audio_geometry(

@@ -141,3 +141,39 @@ def test_jpeg_undefined_table_ids_valueerror():
     raw[sos + 6] = 0x77
     with pytest.raises(ValueError, match="undefined Huffman"):
         jpeg_decode(bytes(raw))
+
+
+# --- synthetic fixture headers: one parser each, loud on bad fields ----------
+#
+# A zero field used to reach a division downstream and crash with
+# ZeroDivisionError (resize_images' longer side, sample_frames' fps,
+# decode_audio's rate) — outside the seam's ValueError contract.
+
+
+def test_img_header_rejects_non_positive_and_malformed():
+    from imdb_top_250_etl_pipeline_spark.operators.multimodal import img_header
+
+    assert img_header(b"IMG:40x30:hello") == (40, 30, b"hello")
+    for bad in (
+        b"IMG:0x0:", b"IMG:40x0:", b"IMG:-4x3:", b"IMG:40:x", b"PNG:1x1:"
+    ):
+        with pytest.raises(ValueError, match="synthetic"):
+            img_header(bad)
+
+
+def test_vid_header_rejects_non_positive_and_malformed():
+    from imdb_top_250_etl_pipeline_spark.operators.multimodal import vid_header
+
+    assert vid_header(b"VID:12:10:") == (12, 10)
+    for bad in (b"VID:5:0:", b"VID:0:10:", b"VID:5:x:", b"VID:5"):
+        with pytest.raises(ValueError, match="synthetic"):
+            vid_header(bad)
+
+
+def test_aud_header_rejects_non_positive_and_malformed():
+    from imdb_top_250_etl_pipeline_spark.operators.multimodal import aud_header
+
+    assert aud_header(b"AUD:8000:abc") == (8000, b"abc")
+    for bad in (b"AUD:0:", b"AUD:-8000:abc", b"AUD::abc"):
+        with pytest.raises(ValueError, match="synthetic"):
+            aud_header(bad)
