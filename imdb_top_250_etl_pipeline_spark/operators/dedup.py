@@ -110,42 +110,43 @@ def shingle_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
 
 
-def minhash_signature(hashes: Column, k: int = 16, seed: int = 42) -> Column:
-    """k-permutation MinHash signature over pre-hashed shingles
-    (see shingle_hashes).
+def minhash_signature(hashes: str, k: int = 16, seed: int = 42) -> Column:
+    """k-permutation MinHash signature over the pre-hashed shingle
+    column ``hashes`` (see shingle_hashes).
 
     Permutation i is h -> (a_i * h + b_i) mod P — the classic universal-
     hash family, fixed seeds so the signature is deterministic across
     runs and cluster layouts, and every intermediate fits a long even
-    under ANSI mode (31-bit domain: a*h+b < 2^62).
+    under ANSI mode (31-bit domain: a*h+b < 2^62).  Rendered as one SQL
+    expression: building the k lambdas through the Column API cost ~850
+    driver-JVM round trips per call.
     """
-    sig = []
+    perms = []
     for i in range(k):
         a = (seed * 1_000_003 + i * 7919) % _P or 1
         b = (seed * 999_983 + i * 104_729) % _P
-        sig.append(
-            F.array_min(
-                F.transform(hashes, lambda h: F.pmod(a * h + b, F.lit(_P)))
-            )
+        perms.append(
+            f"array_min(transform(`{hashes}`, x -> pmod(x * {a} + {b}, {_P})))"
         )
-    return F.array(*sig)
+    return F.expr(f"array({', '.join(perms)})")
 
 
-def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Split a signature into ``bands`` hashed bands of ``rows`` values.
+def lsh_bands(sig: str, bands: int, rows: int) -> Column:
+    """Split the signature column ``sig`` into ``bands`` hashed bands of
+    ``rows`` values.
 
     Two docs collide in a band iff their signatures agree on all of that
     band's rows — the standard S-curve knob: P(candidate) =
     1-(1-j^rows)^bands for Jaccard j.
     """
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(F.slice(sig, i * rows + 1, rows)).alias("bucket"),
-            )
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {i}, 'bucket', "
+            f"xxhash64(slice(`{sig}`, {i * rows + 1}, {rows})))"
             for i in range(bands)
-        ]
+        )
+        + ")"
     )
 
 
@@ -335,42 +336,14 @@ def minhash_candidate_pairs(
     the dominant cost and it carries only (band, bucket, id) triples.
     Buckets above ``max_bucket`` members fall back to star pairs against
     the bucket representative (see capped_band_pairs) so a degenerate
-    bucket cannot go quadratic.
-
-    The shingle+hash table is computed ONCE and materialized (eager
-    localCheckpoint — persist()/a staging table on a cluster): it feeds
-    the signature AND both verify joins, and shingle generation is
-    interpreted higher-order-function work, the pipeline's dominant CPU
-    cost (re-deriving it 3× measured ~3× slower end-to-end).  The
-    repartition spreads that work across all cores — text corpora often
-    arrive as a few big files, which would otherwise cap parallelism at
-    the file count.
+    bucket cannot go quadratic.  The shingle and bucket tables come from
+    build_minhash_index.
     """
-    rows = k // bands
     if collapse_exact:
         df = collapse_exact_first(df, text_col, id_col)
-    base = eager_pin(
-        spread(df, id_col)
-        .select(
-            F.col(id_col),
-            F.array_distinct(word_shingles(text_col, n_shingle)).alias("shingles"),
-        )
-        .where(F.size("shingles") > 0)
-        .withColumn("h", shingle_hashes(F.col("shingles")))
-    )
-    sigs = base.select(id_col, minhash_signature(F.col("h"), k=k).alias("sig"))
-    # materialize the small (id, band, bucket) table: the guard's bucket
-    # aggregation AND both pair-join sides read it, and the k-permutation
-    # signature above is interpreted higher-order-function work that must
-    # not be re-derived per consumer (persist() on a cluster)
-    buckets = eager_pin(
-        sigs.select(
-            id_col, F.explode(lsh_bands(F.col("sig"), bands, rows)).alias("bb")
-        )
-        .select(id_col, "bb.band", "bb.bucket")
-    )
-    cand = capped_band_pairs(buckets, id_col, ["band", "bucket"], max_bucket)
-    sh = base
+    index = build_minhash_index(df, text_col, id_col, n_shingle, k, bands)
+    cand = capped_band_pairs(index.buckets, id_col, ["band", "bucket"], max_bucket)
+    sh = index.shingles
     verified = (
         cand.join(
             sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
@@ -736,8 +709,19 @@ def build_minhash_index(
     k: int = 16,
     bands: int = 4,
 ) -> MinhashIndex:
-    """One-time index build over the existing corpus (same shingle/
-    signature/banding machinery as minhash_candidate_pairs)."""
+    """Shingle and bucket tables of a corpus: the one-time index build
+    of the incremental flow, and minhash_candidate_pairs' first step.
+
+    The shingle+hash table is computed ONCE and materialized (eager
+    localCheckpoint — persist()/a staging table on a cluster): it feeds
+    the signature AND both verify joins, and shingle generation is
+    interpreted higher-order-function work, the pipeline's dominant CPU
+    cost (re-deriving it 3× measured ~3× slower end-to-end).  The
+    repartition spreads that work across all cores — text corpora often
+    arrive as a few big files, which would otherwise cap parallelism at
+    the file count.  The small (id, band, bucket) table is pinned too:
+    the guard's bucket aggregation AND both pair-join sides read it, and
+    the k-permutation signature must not be re-derived per consumer."""
     rows = k // bands
     base = eager_pin(
         spread(df, id_col)
@@ -748,11 +732,9 @@ def build_minhash_index(
         .where(F.size("shingles") > 0)
         .withColumn("h", shingle_hashes(F.col("shingles")))
     )
-    sigs = base.select(id_col, minhash_signature(F.col("h"), k=k).alias("sig"))
+    sigs = base.select(id_col, minhash_signature("h", k=k).alias("sig"))
     buckets = eager_pin(
-        sigs.select(
-            id_col, F.explode(lsh_bands(F.col("sig"), bands, rows)).alias("bb")
-        )
+        sigs.select(id_col, F.explode(lsh_bands("sig", bands, rows)).alias("bb"))
         .select(id_col, "bb.band", "bb.bucket")
     )
     return MinhashIndex(base.select(id_col, "shingles"), buckets)

@@ -759,7 +759,8 @@ def _image_codec(raw: bytes):
 def image_dims(raw: bytes) -> tuple[int, int]:
     """(width, height) of a PNG/BMP/JPEG/GIF/TIFF blob from its header
     (no pixel decode), or of a synthetic 'IMG:' blob; anything else
-    raises to the codec seam."""
+    raises to the codec seam.  A header that declares a non-positive
+    side raises ValueError (resize_images divides by the longer side)."""
     if raw.startswith(b"IMG:"):
         return img_header(raw)[:2]
     codec = _image_codec(raw)
@@ -768,7 +769,10 @@ def image_dims(raw: bytes) -> tuple[int, int]:
             "only PNG/BMP/JPEG/GIF/TIFF and the synthetic IMG header are "
             "decodable in this container; plug a real codec in here"
         )
-    return codec[0](raw)
+    w, h = codec[0](raw)
+    if w <= 0 or h <= 0:
+        raise ValueError(f"image header declares {w}x{h}")
+    return w, h
 
 
 def gray_pixels_any(raw: bytes):
@@ -2118,15 +2122,20 @@ _AUDIO_CLIP = 24
 def _audio_samples(raw: bytes):
     """(sample_rate, channel-0 int64 samples, bits) of a real audio
     blob — the one audio-format dispatch (channel 0: the gray+alpha
-    PNG convention)."""
+    PNG convention).  A non-positive sample rate raises ValueError
+    (decode_audio divides by it)."""
     if raw[:4] == WAV_MAGIC and raw[8:12] == b"WAVE":
-        return wav_pcm_samples(raw)
-    if raw[:4] == b"fLaC":
+        rate, samples, bits = wav_pcm_samples(raw)
+    elif raw[:4] == b"fLaC":
         from .flac import flac_decode
 
         rate, samples, bits = flac_decode(raw)
-        return rate, samples[:, 0] if samples.ndim == 2 else samples, bits
-    raise NotImplementedError("real audio codec plugs in here")
+        samples = samples[:, 0] if samples.ndim == 2 else samples
+    else:
+        raise NotImplementedError("real audio codec plugs in here")
+    if rate <= 0:
+        raise ValueError(f"audio header declares sample rate {rate}")
+    return rate, samples, bits
 
 
 def decode_audio(blobs: DataFrame) -> DataFrame:

@@ -177,3 +177,35 @@ def test_aud_header_rejects_non_positive_and_malformed():
     for bad in (b"AUD:0:", b"AUD:-8000:abc", b"AUD::abc"):
         with pytest.raises(ValueError, match="synthetic"):
             aud_header(bad)
+
+
+# --- real headers that declare an empty image or a zero sample rate ----------
+#
+# The header readers return what the bytes say; the seam's dispatch
+# (image_dims, _audio_samples) rejects the non-positive values that would
+# otherwise reach a division in resize_images / decode_audio.
+
+
+def test_image_dims_rejects_zero_size_headers():
+    from imdb_top_250_etl_pipeline_spark.operators.multimodal import image_dims
+
+    png = _png(0, 0, zlib.compress(b""))
+    gif = b"GIF89a" + struct.pack("<HH", 0, 0) + b"\x00" * 3
+    bmp = b"BM" + b"\x00" * 16 + struct.pack("<ii", 0, 0) + b"\x00" * 4
+    assert image_dims(_png(3, 2, zlib.compress(b"\x00" * 8))) == (3, 2)
+    for raw in (png, gif, bmp):
+        with pytest.raises(ValueError, match="declares 0x0"):
+            image_dims(raw)
+
+
+def test_audio_samples_rejects_zero_sample_rate():
+    from imdb_top_250_etl_pipeline_spark.operators.multimodal import (
+        _audio_samples,
+        wav_encode_pcm16,
+    )
+
+    raw = bytearray(wav_encode_pcm16([0, 100, -100], 8000))
+    assert _audio_samples(bytes(raw))[0] == 8000
+    raw[24:28] = struct.pack("<I", 0)  # fmt nSamplesPerSec
+    with pytest.raises(ValueError, match="sample rate 0"):
+        _audio_samples(bytes(raw))

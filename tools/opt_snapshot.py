@@ -16,6 +16,9 @@ Usage:
   python tools/opt_snapshot.py [--sf-dir /root/testdata/sf0.01]
       [--out OPT_SNAPSHOT_sf001.json] [--only substr,substr]
       [--compare OPT_SNAPSHOT_sf001.json]
+
+The driver heap is ``SPARK_DRIVER_MEMORY`` when set, else a quarter of
+physical RAM.
 """
 
 from __future__ import annotations
@@ -30,6 +33,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
 )
+
+
+def quarter_of_ram() -> str:
+    """A quarter of physical RAM as a JVM memory size.  The session's own
+    driver default (48g) lets the heap outgrow a small host mid-sweep,
+    and once the kernel kills the JVM every later entry reads ERR."""
+    with open("/proc/meminfo") as f:
+        total_kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{total_kib // 1024 // 4}m"
 
 
 def main() -> None:
@@ -48,6 +60,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", quarter_of_ram())
     spark = get_spark("opt-snapshot")
     only = [s for s in args.only.split(",") if s]
 
