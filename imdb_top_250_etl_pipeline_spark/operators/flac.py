@@ -42,6 +42,8 @@ import struct
 
 import numpy as np
 
+from .bitstream import BitReader, BitWriter
+
 FLAC_MAGIC = b"fLaC"
 
 # frame-header block size codes 2..15 (0 reserved, 6/7 read extra bytes)
@@ -77,46 +79,7 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _Bits:
-    """MSB-first bit reader tracking byte extent for CRC slices."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes, pos_bytes: int = 0):
-        self.data = data
-        self.pos = pos_bytes * 8
-
-    def u(self, k: int) -> int:
-        if self.pos + k > len(self.data) * 8:
-            raise ValueError("FLAC: bitstream truncated")
-        v = 0
-        p, d = self.pos, self.data
-        for _ in range(k):
-            v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.pos = p
-        return v
-
-    def s(self, k: int) -> int:
-        v = self.u(k)
-        return v - (1 << k) if v & (1 << (k - 1)) else v
-
-    def unary(self, limit: int = 1 << 20) -> int:
-        n = 0
-        while self.u(1) == 0:
-            n += 1
-            if n > limit:
-                raise ValueError("FLAC: runaway unary code")
-        return n
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def byte_pos(self) -> int:
-        return self.pos >> 3
-
-
-def _read_utf8_number(br: _Bits) -> int:
+def _read_utf8_number(br: BitReader) -> int:
     """The frame header's UTF-8-style coded number (up to 36 bits)."""
     b0 = br.u(8)
     if b0 < 0x80:
@@ -158,7 +121,7 @@ def flac_streaminfo(raw: bytes) -> dict:
                 raise ValueError("FLAC: duplicate STREAMINFO")
             if length != 34:
                 raise ValueError(f"FLAC: STREAMINFO length {length} != 34")
-            br = _Bits(body)
+            br = BitReader(body, codec="FLAC")
             info = {
                 "min_blocksize": br.u(16),
                 "max_blocksize": br.u(16),
@@ -189,7 +152,7 @@ def flac_streaminfo(raw: bytes) -> dict:
     return info
 
 
-def _read_residual(br: _Bits, blocksize: int, order: int) -> list[int]:
+def _read_residual(br: BitReader, blocksize: int, order: int) -> list[int]:
     method = br.u(2)
     if method > 1:
         raise ValueError(f"FLAC: reserved residual method {method}")
@@ -228,7 +191,7 @@ def _read_residual(br: _Bits, blocksize: int, order: int) -> list[int]:
 _FIXED_COEF = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1]}
 
 
-def _read_subframe(br: _Bits, blocksize: int, bps: int) -> list[int]:
+def _read_subframe(br: BitReader, blocksize: int, bps: int) -> list[int]:
     if br.u(1) != 0:
         raise ValueError("FLAC: nonzero subframe padding bit")
     stype = br.u(6)
@@ -285,7 +248,7 @@ def flac_decode(raw: bytes):
     channels_out: list[list[int]] = [[] for _ in range(info["channels"])]
     got = 0
     while pos < len(raw) and (total == 0 or got < total):
-        br = _Bits(raw, pos)
+        br = BitReader(raw, pos, "FLAC")
         sync = br.u(14)
         if sync != 0b11111111111110:
             raise ValueError(f"FLAC: bad frame sync at byte {pos}")
@@ -408,37 +371,7 @@ def flac_decode(raw: bytes):
 # ---------------------------------------------------------------------------
 
 
-class _BitsW:
-    __slots__ = ("bits",)
-
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def u(self, v: int, k: int) -> None:
-        for i in range(k - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-
-    def s(self, v: int, k: int) -> None:
-        self.u(v & ((1 << k) - 1), k)
-
-    def align(self) -> None:
-        while len(self.bits) & 7:
-            self.bits.append(0)
-
-    def to_bytes(self) -> bytes:
-        out = bytearray()
-        acc = 0
-        for i, b in enumerate(self.bits):
-            acc = (acc << 1) | b
-            if i % 8 == 7:
-                out.append(acc)
-                acc = 0
-        if len(self.bits) % 8:
-            out.append(acc << (8 - len(self.bits) % 8))
-        return bytes(out)
-
-
-def _write_utf8_number(w: _BitsW, v: int) -> None:
+def _write_utf8_number(w: BitWriter, v: int) -> None:
     if v < 0x80:
         w.u(v, 8)
         return
@@ -461,7 +394,7 @@ def _write_utf8_number(w: _BitsW, v: int) -> None:
         w.u(0x80 | g, 8)
 
 
-def _write_rice(w: _BitsW, resid: list[int], param: int) -> None:
+def _write_rice(w: BitWriter, resid: list[int], param: int) -> None:
     for r in resid:
         v = (abs(r) << 1) - (1 if r < 0 else 0)  # zigzag: 2|r| - [r<0]
         q = v >> param
@@ -508,7 +441,7 @@ def flac_encode(
         raise ValueError(f"FLAC encoder: bad rate {rate}")
 
     # STREAMINFO
-    si = _BitsW()
+    si = BitWriter()
     si.u(block_size, 16)
     si.u(block_size, 16)
     si.u(0, 24)
@@ -529,7 +462,7 @@ def flac_encode(
     for fi, start in enumerate(range(0, n, block_size)):
         blk = arr[start : start + block_size]
         bs = blk.shape[0]
-        w = _BitsW()
+        w = BitWriter()
         w.u(0b11111111111110, 14)
         w.u(0, 1)
         w.u(0, 1)  # fixed blocking strategy: number is the frame index
@@ -552,13 +485,13 @@ def flac_encode(
                 w.u(0, 1)
                 w.u(0, 6)
                 w.u(0, 1)  # no wasted bits
-                w.s(x[0], 16)
+                w.u(x[0], 16)
             elif mode == "verbatim":
                 w.u(0, 1)
                 w.u(1, 6)
                 w.u(0, 1)
                 for v in x:
-                    w.s(v, 16)
+                    w.u(v, 16)
             elif mode == "fixed":
                 # pick order 0-2 by total residual magnitude
                 cands = {}
@@ -581,7 +514,7 @@ def flac_encode(
                 w.u(8 + order, 6)
                 w.u(0, 1)
                 for i in range(order):
-                    w.s(x[i], 16)
+                    w.u(x[i], 16)
                 w.u(0, 2)  # 4-bit rice params
                 w.u(0, 4)  # partition order 0
                 param = _best_rice_param(resid)

@@ -26,6 +26,8 @@ import struct
 
 import numpy as np
 
+from .bitstream import lzw_decode, lzw_encode
+
 GIF_MAGIC = b"GIF8"
 
 # 4-pass interlace row schedule (GIF spec appendix E)
@@ -51,70 +53,17 @@ def _byte_at(raw: bytes, pos: int) -> int:
     return raw[pos]
 
 
-def _skip_subblocks(raw: bytes, pos: int) -> int:
+def _subblocks(raw: bytes, pos: int) -> tuple[bytes, int]:
+    """A sub-block chain's joined payload and the position after its
+    zero-length terminator."""
+    chunks = []
     while True:
         n = _byte_at(raw, pos)
         pos += 1
         if n == 0:
-            return pos
+            return b"".join(chunks), pos
+        chunks.append(raw[pos : pos + n])
         pos += n
-
-
-def _lzw_decode(mcs: int, data: bytes, n_expected: int) -> list[int]:
-    """Variable-width LZW over LSB-first packed codes (GIF flavor).
-
-    Grows the dictionary to 4096 entries, handles CLEAR (reset) and
-    END, and the KwKwK case where a code references the entry being
-    built.  Decodes exactly n_expected indices; short data raises."""
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    out: list[int] = []
-    # bit reader state: LSB-first within each byte
-    acc = 0
-    nbits = 0
-    pos = 0
-    width = mcs + 1
-    table: list[list[int]] = [[i] for i in range(clear)] + [[], []]
-    prev: list[int] | None = None
-
-    while len(out) < n_expected:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("truncated GIF LZW stream")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = [[i] for i in range(clear)] + [[], []]
-            width = mcs + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            # first code after start/CLEAR must be a palette root —
-            # anything else (incl. the empty placeholder slots) is a
-            # corrupt stream, not an IndexError
-            if code >= clear:
-                raise ValueError(f"invalid initial LZW code {code}")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + [entry[0]])
-        elif code == len(table):  # KwKwK
-            entry = prev + [prev[0]]
-            table.append(entry)
-        else:
-            raise ValueError(f"invalid LZW code {code}")
-        out.extend(entry)
-        prev = entry
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-    if len(out) < n_expected:
-        raise ValueError("GIF LZW stream ended early")
-    return out[:n_expected]
 
 
 def gif_gray_pixels(raw: bytes):
@@ -139,7 +88,7 @@ def gif_gray_pixels(raw: bytes):
         block = raw[pos]
         pos += 1
         if block == 0x21:  # extension: label + sub-block chain
-            pos = _skip_subblocks(raw, pos + 1)
+            _, pos = _subblocks(raw, pos + 1)
         elif block == 0x2C:  # image descriptor
             if pos + 9 > len(raw):
                 raise ValueError("truncated GIF image descriptor")
@@ -169,16 +118,13 @@ def gif_gray_pixels(raw: bytes):
             pos += 1
             if not 2 <= mcs <= 8:  # palette depth is 1..8 bits
                 raise ValueError(f"invalid GIF LZW min code size {mcs}")
-            chunks = []
-            while True:
-                n = _byte_at(raw, pos)
-                pos += 1
-                if n == 0:
-                    break
-                chunks.append(raw[pos : pos + n])
-                pos += n
-            idx = np.array(
-                _lzw_decode(mcs, b"".join(chunks), iw * ih), dtype=np.int64
+            data, pos = _subblocks(raw, pos)
+            idx = np.frombuffer(
+                lzw_decode(
+                    data, iw * ih, 1 << mcs, msb_first=False,
+                    early_change=0, what="GIF LZW stream",
+                ),
+                dtype=np.uint8,
             )
             if (idx >= len(ct)).any():
                 raise ValueError("GIF pixel index outside color table")
@@ -197,55 +143,6 @@ def gif_gray_pixels(raw: bytes):
         else:
             raise ValueError(f"unknown GIF block 0x{block:02X}")
     raise ValueError("GIF stream has no image block")
-
-
-def _lzw_encode(mcs: int, indices: list[int]) -> bytes:
-    """Real variable-width LZW (GIF flavor, LSB-first packing)."""
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    width = mcs + 1
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[tuple[int, ...], int] = {(i,): i for i in range(clear)}
-    next_code = end + 1
-    emit(clear)
-    run: tuple[int, ...] = ()
-    for px in indices:
-        cand = run + (px,)
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run])
-        table[cand] = next_code
-        # width sync: the decoder appends its entry for OUR k-th emitted
-        # code while processing our (k+1)-th, and widens when its table
-        # hits 2^width — which is exactly when the code we just assigned
-        # equals 2^width (trace: codes 1..255 at width 9, 256th at 10)
-        if next_code == (1 << width) and width < 12:
-            width += 1
-        next_code += 1
-        if next_code > 4095:
-            emit(clear)
-            table = {(i,): i for i in range(clear)}
-            next_code = end + 1
-            width = mcs + 1
-        run = (px,)
-    if run:
-        emit(table[run])
-    emit(end)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
 
 
 def gif_encode(
@@ -268,7 +165,9 @@ def gif_encode(
             r for start, step in _INTERLACE for r in range(start, h, step)
         ]
         rows = px[order]
-    data = _lzw_encode(8, [int(v) for v in rows.ravel()])
+    data = lzw_encode(
+        rows.astype(np.uint8).tobytes(), 256, msb_first=False, early_change=0
+    )
     out += bytes([8])  # LZW minimum code size
     for i in range(0, len(data), 255):
         chunk = data[i : i + 255]

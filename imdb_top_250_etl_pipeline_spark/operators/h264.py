@@ -53,118 +53,33 @@ import struct
 
 import numpy as np
 
+from .bitstream import BitReader, BitWriter
+
 # ---------------------------------------------------------------------------
-# bitstream
+# bitstream: operators/bitstream.py reads and writes; the RBSP framing
+# (emulation prevention, the stop bit) stays here
 # ---------------------------------------------------------------------------
 
 
-class BitReader:
-    """MSB-first bit reader over an RBSP (emulation bytes already removed)."""
-
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-        self.n = len(data) * 8
-
-    def u(self, k: int) -> int:
-        if self.pos + k > self.n:
-            raise ValueError("H264: bitstream truncated")
-        v = 0
-        p = self.pos
-        d = self.data
-        for _ in range(k):
-            v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.pos = p
-        return v
-
-    def flag(self) -> int:
-        return self.u(1)
-
-    def ue(self) -> int:
-        zeros = 0
-        while True:
-            if self.pos >= self.n:
-                raise ValueError("H264: truncated exp-Golomb")
-            b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-            self.pos += 1
-            if b:
-                break
-            zeros += 1
-            if zeros > 32:
-                raise ValueError("H264: exp-Golomb prefix too long")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def byte_align(self) -> None:
-        while self.pos & 7:
-            if self.u(1) != 0:
-                raise ValueError("H264: nonzero pcm alignment bit")
-
-    def more_rbsp_data(self) -> bool:
-        """True while bits beyond pos hold more than the rbsp stop bit
-        (a single 1 followed only by zeros)."""
-        if self.pos >= self.n:
-            return False
-        last_one = -1
-        for p in range(self.n - 1, self.pos - 1, -1):
-            if (self.data[p >> 3] >> (7 - (p & 7))) & 1:
-                last_one = p
-                break
-        # the stop bit is the LAST 1 in the stream: if it sits at or
-        # before pos there is no further payload
-        return last_one > self.pos
+def _reader(rbsp: bytes) -> BitReader:
+    return BitReader(rbsp, codec="H264")
 
 
-class BitWriter:
-    __slots__ = ("bits",)
+def _more_rbsp_data(r: BitReader) -> bool:
+    """True while bits past the read position hold more than the rbsp
+    stop bit (the LAST 1 in the RBSP, followed only by zeros)."""
+    data = r.data
+    end = len(data.rstrip(b"\0"))
+    if not end:
+        return False
+    last = data[end - 1]
+    last_one = end * 8 - (last & -last).bit_length()
+    return last_one > r.bit_pos()
 
-    def __init__(self):
-        self.bits: list[int] = []
 
-    def u(self, v: int, k: int) -> None:
-        for i in range(k - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-
-    def ue(self, v: int) -> None:
-        code = v + 1
-        k = code.bit_length()
-        self.u(0, k - 1)
-        self.u(code, k)
-
-    def se(self, v: int) -> None:
-        self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def bitstr(self, s: str) -> None:
-        for ch in s:
-            self.bits.append(1 if ch == "1" else 0)
-
-    def byte_align_zero(self) -> None:
-        while len(self.bits) & 7:
-            self.bits.append(0)
-
-    def rbsp_trailing(self) -> None:
-        self.bits.append(1)
-        while len(self.bits) & 7:
-            self.bits.append(0)
-
-    def to_bytes(self) -> bytes:
-        out = bytearray()
-        acc = 0
-        for i, b in enumerate(self.bits):
-            acc = (acc << 1) | b
-            if i % 8 == 7:
-                out.append(acc)
-                acc = 0
-        rem = len(self.bits) % 8
-        if rem:
-            out.append(acc << (8 - rem))
-        return bytes(out)
+def _rbsp_trailing(w: BitWriter) -> None:
+    w.u(1, 1)
+    w.align()
 
 
 def ebsp_to_rbsp(data: bytes) -> bytes:
@@ -207,7 +122,7 @@ def parse_sps(nalu: bytes) -> dict:
     """Parse a seq_parameter_set NAL unit (header byte included)."""
     if not nalu or (nalu[0] & 0x1F) != 7:
         raise ValueError("H264: not an SPS NAL unit")
-    r = BitReader(ebsp_to_rbsp(nalu[1:]))
+    r = _reader(ebsp_to_rbsp(nalu[1:]))
     profile = r.u(8)
     r.u(8)  # constraint flags + reserved
     level = r.u(8)
@@ -216,15 +131,15 @@ def parse_sps(nalu: bytes) -> dict:
     if profile in (100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134):
         chroma_format_idc = r.ue()
         if chroma_format_idc == 3:
-            r.flag()  # separate_colour_plane_flag
+            r.u(1)  # separate_colour_plane_flag
         bit_depth_luma = r.ue() + 8
         bit_depth_chroma = r.ue() + 8
         if bit_depth_luma != 8 or bit_depth_chroma != 8:
             raise NotImplementedError(
                 "H264: >8-bit depth: plug ffmpeg in here"
             )
-        r.flag()  # qpprime_y_zero_transform_bypass
-        if r.flag():
+        r.u(1)  # qpprime_y_zero_transform_bypass
+        if r.u(1):
             raise NotImplementedError(
                 "H264: seq scaling matrices: plug ffmpeg in here"
             )
@@ -240,23 +155,23 @@ def parse_sps(nalu: bytes) -> dict:
     if poc_type == 0:
         log2_max_poc_lsb = r.ue() + 4
     elif poc_type == 1:
-        delta_poc_always_zero = r.flag()
+        delta_poc_always_zero = r.u(1)
         r.se()
         r.se()
         for _ in range(r.ue()):
             r.se()
     r.ue()  # max_num_ref_frames
-    r.flag()  # gaps_in_frame_num_value_allowed
+    r.u(1)  # gaps_in_frame_num_value_allowed
     pic_w_mbs = r.ue() + 1
     pic_h_units = r.ue() + 1
-    frame_mbs_only = r.flag()
+    frame_mbs_only = r.u(1)
     if not frame_mbs_only:
         raise NotImplementedError(
             "H264: interlaced (fields/MBAFF): plug ffmpeg in here"
         )
-    r.flag()  # direct_8x8_inference
+    r.u(1)  # direct_8x8_inference
     crop_l = crop_r = crop_t = crop_b = 0
-    if r.flag():
+    if r.u(1):
         crop_l, crop_r, crop_t, crop_b = r.ue(), r.ue(), r.ue(), r.ue()
     # 4:2:0 frame coding: crop units are 2 luma samples both axes
     width = pic_w_mbs * 16 - 2 * (crop_l + crop_r)
@@ -289,27 +204,27 @@ def parse_sps(nalu: bytes) -> dict:
 def parse_pps(nalu: bytes) -> dict:
     if not nalu or (nalu[0] & 0x1F) != 8:
         raise ValueError("H264: not a PPS NAL unit")
-    r = BitReader(ebsp_to_rbsp(nalu[1:]))
+    r = _reader(ebsp_to_rbsp(nalu[1:]))
     pps_id = r.ue()
     sps_id = r.ue()
-    entropy = r.flag()
+    entropy = r.u(1)
     if entropy:
         raise NotImplementedError(
             "H264: CABAC entropy coding: plug ffmpeg in here"
         )
-    pic_order_present = r.flag()
+    pic_order_present = r.u(1)
     if r.ue() != 0:  # num_slice_groups_minus1
         raise NotImplementedError("H264: FMO slice groups: plug ffmpeg in here")
     num_ref_l0 = r.ue() + 1  # num_ref_idx_l0_default_active_minus1
     r.ue()  # num_ref_idx_l1_default_active_minus1
-    weighted_pred = r.flag()
+    weighted_pred = r.u(1)
     r.u(2)  # weighted_bipred_idc
     pic_init_qp = r.se() + 26
     r.se()  # pic_init_qs_minus26
     chroma_qp_offset = r.se()
-    deblocking_control = r.flag()
-    constrained_intra = r.flag()
-    redundant_present = r.flag()
+    deblocking_control = r.u(1)
+    constrained_intra = r.u(1)
+    redundant_present = r.u(1)
     return {
         "pps_id": pps_id,
         "sps_id": sps_id,
@@ -513,11 +428,6 @@ _QPC_TAB = [29, 30, 31, 32, 32, 33, 34, 34, 35, 35, 36, 36, 37, 37,
             37, 38, 38, 38, 39, 39, 39, 39]
 
 
-def _invert(tbl):
-    """bitstring->val dict inverted to a prefix-matching decode dict."""
-    return dict(tbl)
-
-
 def _check_prefix_free(name: str, codes) -> None:
     codes = sorted(codes)
     for a, b in zip(codes, codes[1:]):
@@ -585,14 +495,8 @@ def _read_vlc(r: BitReader, table: dict, what: str):
 
 
 def _read_list_vlc(r: BitReader, codes: list, what: str) -> int:
-    code = ""
-    maxlen = max(len(c) for c in codes)
-    lookup = {c: i for i, c in enumerate(codes)}
-    while len(code) <= maxlen:
-        code += "1" if r.u(1) else "0"
-        if code in lookup:
-            return lookup[code]
-    raise ValueError(f"H264: invalid {what} codeword {code!r}")
+    """Match a prefix code from ``codes``; returns its index."""
+    return _read_vlc(r, {c: i for i, c in enumerate(codes)}, what)
 
 # ---------------------------------------------------------------------------
 # CAVLC residual block decode (spec 9.2)
@@ -641,11 +545,7 @@ def residual_block_cavlc(
     suffix_len = 1 if (total > 10 and t1s < 3) else 0
     for i in range(t1s, total):
         # level_prefix: leading zeros before a 1
-        prefix = 0
-        while r.u(1) == 0:
-            prefix += 1
-            if prefix > 32:
-                raise ValueError("H264: level_prefix too long")
+        prefix = r.unary(32)
         if prefix >= 15:
             suffix_size = prefix - 3
         elif prefix == 14 and suffix_len == 0:
@@ -690,11 +590,7 @@ def residual_block_cavlc(
             if code != 0:
                 run = 7 - code
             else:
-                run = 7
-                while r.u(1) == 0:
-                    run += 1
-                    if run > 32:
-                        raise ValueError("H264: run_before tail too long")
+                run = 7 + r.unary(25)
         elif zeros_left > 0:
             run = _read_list_vlc(r, _RUN_BEFORE[zeros_left], "run_before")
         else:
@@ -1275,7 +1171,7 @@ def _decode_mb_i4(fr, r, mx, my, qp, chroma_qp_offset):
         ma = _neighbor_mode(gx + bx - 1, gy + by)
         mb = _neighbor_mode(gx + bx, gy + by - 1)
         pred_mode = 2 if (ma is None or mb is None) else min(ma, mb)
-        if r.flag():
+        if r.u(1):
             mode = pred_mode
         else:
             rem = r.u(3)
@@ -1366,7 +1262,8 @@ def _decode_mb_i4(fr, r, mx, my, qp, chroma_qp_offset):
 
 
 def _decode_mb_pcm(fr, r, mx, my):
-    r.byte_align()
+    if r.align():
+        raise ValueError("H264: nonzero pcm alignment bit")
     y0, x0 = my * 16, mx * 16
     for yy in range(16):
         for xx in range(16):
@@ -1710,14 +1607,14 @@ def _parse_slice_header(r: BitReader, sps: dict, pps: dict,
             )
     if ptype == "P":
         num_ref = pps["num_ref_l0"]
-        if r.flag():  # num_ref_idx_active_override_flag
+        if r.u(1):  # num_ref_idx_active_override_flag
             num_ref = r.ue() + 1
         if num_ref != 1:
             raise NotImplementedError(
                 f"H264: {num_ref} L0 reference pictures (only 1): "
                 "plug ffmpeg in here"
             )
-        if r.flag():  # ref_pic_list_modification_flag_l0
+        if r.u(1):  # ref_pic_list_modification_flag_l0
             raise NotImplementedError(
                 "H264: reference list modification: plug ffmpeg in here"
             )
@@ -1735,10 +1632,10 @@ def _parse_slice_header(r: BitReader, sps: dict, pps: dict,
                 "in here"
             )
     if idr:
-        r.flag()  # no_output_of_prior_pics_flag
-        r.flag()  # long_term_reference_flag
+        r.u(1)  # no_output_of_prior_pics_flag
+        r.u(1)  # long_term_reference_flag
     elif nal_ref_idc != 0:
-        if r.flag():  # adaptive_ref_pic_marking_mode_flag
+        if r.u(1):  # adaptive_ref_pic_marking_mode_flag
             raise NotImplementedError(
                 "H264: adaptive ref pic marking (MMCO): plug ffmpeg in here"
             )
@@ -1801,7 +1698,7 @@ def decode_slice(sps: dict, pps: dict, nalu: bytes,
     nal_type = nalu[0] & 0x1F
     if nal_type not in (1, 5):
         raise ValueError(f"H264: NAL type {nal_type} is not a coded slice")
-    r = BitReader(ebsp_to_rbsp(nalu[1:]))
+    r = _reader(ebsp_to_rbsp(nalu[1:]))
     hdr = _parse_slice_header(r, sps, pps, nal_ref_idc, nal_type == 5)
     qp = hdr["qp"]
     fr = _Frame(sps)
@@ -1834,7 +1731,7 @@ def decode_slice(sps: dict, pps: dict, nalu: bytes,
                 mb_idx += 1
             if mb_idx == total:
                 break
-            if not r.more_rbsp_data():
+            if not _more_rbsp_data(r):
                 raise ValueError(
                     f"H264: P slice data ends after {mb_idx}/{total} MBs"
                 )
@@ -2004,7 +1901,7 @@ def encode_sps(mb_w: int, mb_h: int, crop_r: int, crop_b: int) -> bytes:
     else:
         w.u(0, 1)
     w.u(0, 1)  # vui_parameters_present
-    w.rbsp_trailing()
+    _rbsp_trailing(w)
     return _nal(0x67, w.to_bytes())
 
 
@@ -2025,7 +1922,7 @@ def encode_pps(qp: int) -> bytes:
     w.u(1, 1)  # deblocking_filter_control_present
     w.u(0, 1)  # constrained_intra_pred
     w.u(0, 1)  # redundant_pic_cnt_present
-    w.rbsp_trailing()
+    _rbsp_trailing(w)
     return _nal(0x68, w.to_bytes())
 
 
@@ -2051,24 +1948,24 @@ def _write_slice_header(w: BitWriter, idr: bool,
 
 
 def _write_empty_dc_block_nc0(w: BitWriter) -> None:
-    w.bitstr("1")  # coeff_token TotalCoeff 0 (nC < 2)
+    w.u(0b1, 1)  # coeff_token TotalCoeff 0 (nC < 2)
 
 
 def _write_single_chroma_dc_block(w: BitWriter, level: int) -> None:
     """One coefficient at scan position 0 of a 4-coeff chroma DC block
     (nC == -1 table) — the flat-COLOR fixture's chroma path."""
     if level == 0:
-        w.bitstr("01")  # coeff_token TotalCoeff 0 (chroma DC)
+        w.u(0b01, 2)  # coeff_token TotalCoeff 0 (chroma DC)
         return
     if abs(level) == 1:
-        w.bitstr("1")  # (T1=1, TC=1)
+        w.u(0b1, 1)  # (T1=1, TC=1)
         w.u(0 if level > 0 else 1, 1)
     else:
-        w.bitstr("000111")  # (T1=0, TC=1)
+        w.u(0b000111, 6)  # (T1=0, TC=1)
         lc = 2 * level - 2 if level > 0 else -2 * level - 1
         lc -= 2  # first coeff after <3 trailing ones
         _write_level_code(w, lc, 0)
-    w.bitstr("1")  # total_zeros == 0 (chroma DC, TotalCoeff 1)
+    w.u(0b1, 1)  # total_zeros == 0 (chroma DC, TotalCoeff 1)
 
 
 def _flat_chroma_dc_coeff(delta: int, qpc: int) -> int:
@@ -2151,16 +2048,16 @@ def _write_single_dc_block_nc0(w: BitWriter, level: int) -> None:
         _write_empty_dc_block_nc0(w)
         return
     if abs(level) == 1:
-        w.bitstr("01")  # coeff_token (T1=1, TC=1)
+        w.u(0b01, 2)  # coeff_token (T1=1, TC=1)
         w.u(0 if level > 0 else 1, 1)  # trailing one sign
     else:
-        w.bitstr("000101")  # coeff_token (T1=0, TC=1)
+        w.u(0b000101, 6)  # coeff_token (T1=0, TC=1)
         lc = 2 * level - 2 if level > 0 else -2 * level - 1
         lc -= 2  # first coeff after <3 trailing ones adjustment
         if lc < 0:
             raise ValueError(f"H264 encoder: bad levelCode {lc}")
         _write_level_code(w, lc, 0)
-    w.bitstr("1")  # total_zeros == 0 for TotalCoeff 1 (Table 9-7)
+    w.u(0b1, 1)  # total_zeros == 0 for TotalCoeff 1 (Table 9-7)
 
 
 def _flat_dc_coeff(delta: int, qp: int) -> int:
@@ -2233,7 +2130,7 @@ def encode_flat_i16_slice(value: int, mb_w: int, mb_h: int, qp: int,
                     _write_single_chroma_dc_block(w, ccr)
             else:
                 _write_empty_dc_block_nc0(w)
-    w.rbsp_trailing()
+    _rbsp_trailing(w)
     return _nal(0x65 if idr else 0x01, w.to_bytes())
 
 
@@ -2252,7 +2149,7 @@ def encode_pcm_slice(frame: np.ndarray, idr: bool = True,
     for my in range(mb_h):
         for mx in range(mb_w):
             w.ue(25)  # I_PCM
-            w.byte_align_zero()  # pcm_alignment_zero_bit
+            w.align()  # pcm_alignment_zero_bit
             blk = frame[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16]
             for yy in range(16):
                 for xx in range(16):
@@ -2260,7 +2157,7 @@ def encode_pcm_slice(frame: np.ndarray, idr: bool = True,
             for _ in range(2):  # Cb then Cr, flat 128
                 for _ in range(64):
                     w.u(128, 8)
-    w.rbsp_trailing()
+    _rbsp_trailing(w)
     return _nal(0x65 if idr else 0x01, w.to_bytes())
 
 
@@ -2404,7 +2301,7 @@ def encode_p_slice(mbs: list, mb_w: int, mb_h: int, qp: int,
             _write_single_chroma_dc_block(w, _flat_chroma_dc_coeff(dcr, qpc))
     if run:
         w.ue(run)  # trailing skip run
-    w.rbsp_trailing()
+    _rbsp_trailing(w)
     return _nal(0x41, w.to_bytes())  # nal_ref_idc 2, coded slice
 
 
@@ -2571,15 +2468,12 @@ def encode_residual_block_cavlc(
             t1s += 1
         else:
             break
-    # coeff_token
-    if nC == -1:
-        w.bitstr(_CT_ENC[-1][(t1s, total)])
-    elif nC < 2:
-        w.bitstr(_CT_ENC[0][(t1s, total)])
-    elif nC < 4:
-        w.bitstr(_CT_ENC[2][(t1s, total)])
-    elif nC < 8:
-        w.bitstr(_CT_ENC[4][(t1s, total)])
+    # coeff_token: a VLC string from the nC class's table, or the
+    # 6-bit FLC for nC >= 8
+    if nC < 8:
+        cls = -1 if nC == -1 else 0 if nC < 2 else 2 if nC < 4 else 4
+        code = _CT_ENC[cls][(t1s, total)]
+        w.u(int(code, 2), len(code))
     else:
         v = 0b000011 if total == 0 else (((total - 1) << 2) | t1s)
         w.u(v, 6)
@@ -2609,7 +2503,7 @@ def encode_residual_block_cavlc(
     tz = pos[-1] + 1 - total  # zeros before the last nonzero
     if total < max_coeff:
         codes = _TZ_CHROMA_DC[total] if nC == -1 else _TZ_4x4[total]
-        w.bitstr(codes[tz])
+        w.u(int(codes[tz], 2), len(codes[tz]))
     zeros_left = tz
     for i in range(total - 1):
         run = rev[i] - rev[i + 1] - 1
@@ -2621,7 +2515,8 @@ def encode_residual_block_cavlc(
                 w.u(0, run - 7)
                 w.u(1, 1)
         elif zeros_left > 0:
-            w.bitstr(_RUN_BEFORE[zeros_left][run])
+            code = _RUN_BEFORE[zeros_left][run]
+            w.u(int(code, 2), len(code))
         elif run != 0:
             raise ValueError("H264 encoder: run without zeros left")
         zeros_left -= run

@@ -53,6 +53,8 @@ import struct
 
 import numpy as np
 
+from .bitstream import BitReader, BitWriter
+
 # --- shared tables -----------------------------------------------------------
 
 # zigzag scan: position k in the scan -> raster index in the 8x8 block
@@ -156,75 +158,61 @@ _ENC_AC_COUNTS[7] = len(_ENC_AC_SYMBOLS)  # all 8-bit
 assert len(_ENC_AC_SYMBOLS) == 162
 
 
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with FF00
-    byte-unstuffing; RSTn handling is explicit via sync_restart."""
+def _entropy_byte(r: BitReader) -> int:
+    """The T.81 byte fetch for operators/bitstream.py's reader: FF00 is
+    a stuffed FF data byte, any other FFxx is a marker inside the
+    entropy data and an error."""
+    data, p = r.data, r.pos
+    if p >= len(data):
+        raise ValueError("truncated entropy data")
+    b = data[p]
+    if b == 0xFF:
+        if p + 1 >= len(data):
+            raise ValueError("truncated entropy data")
+        if data[p + 1] != 0x00:
+            raise ValueError(f"marker FF{data[p + 1]:02X} inside entropy data")
+        p += 1
+    r.pos = p + 1
+    return b
 
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.cur = 0
-        self.nbits = 0
 
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated entropy data")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                if self.pos >= len(self.data):
-                    raise ValueError("truncated entropy data")
-                nxt = self.data[self.pos]
-                if nxt != 0x00:
-                    raise ValueError(
-                        f"marker FF{nxt:02X} inside entropy data"
-                    )
-                self.pos += 1
-            self.cur = b
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.cur >> self.nbits) & 1
+def _entropy_reader(raw: bytes, pos: int) -> BitReader:
+    return BitReader(raw, pos, fetch=_entropy_byte)
 
-    def receive(self, size: int) -> int:
-        """T.81 RECEIVE: size raw bits, MSB first (no sign EXTEND) —
-        EOBRUN low bits and refinement correction bits read this way."""
-        v = 0
-        for _ in range(size):
-            v = (v << 1) | self.read_bit()
-        return v
 
-    def receive_extend(self, size: int) -> int:
-        """T.81 RECEIVE + EXTEND: size bits -> signed coefficient."""
-        if size == 0:
-            return 0
-        v = self.receive(size)
-        if v < (1 << (size - 1)):
-            v -= (1 << size) - 1
-        return v
+def _receive_extend(br: BitReader, size: int) -> int:
+    """T.81 RECEIVE + EXTEND: size bits -> signed coefficient."""
+    if size == 0:
+        return 0
+    v = br.u(size)
+    if v < (1 << (size - 1)):
+        v -= (1 << size) - 1
+    return v
 
-    def decode_symbol(self, table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in entropy data")
 
-    def sync_restart(self, n: int) -> None:
-        """Byte-align and consume the expected RSTn marker."""
-        self.nbits = 0
-        if self.pos + 2 > len(self.data):
-            raise ValueError("truncated entropy data at restart marker")
-        if self.data[self.pos] != 0xFF or self.data[self.pos + 1] != (
-            0xD0 + n % 8
-        ):
-            raise ValueError(
-                f"expected RST{n % 8} at offset {self.pos}, got "
-                f"{self.data[self.pos]:02X}{self.data[self.pos + 1]:02X}"
-            )
-        self.pos += 2
+def _decode_symbol(br: BitReader, table: dict) -> int:
+    u, get = br.u, table.get
+    code = 0
+    for length in range(1, 17):
+        code = (code << 1) | u(1)
+        sym = get((length, code))
+        if sym is not None:
+            return sym
+    raise ValueError("invalid Huffman code in entropy data")
+
+
+def _sync_restart(br: BitReader, n: int) -> None:
+    """Byte-align and consume the expected RSTn marker."""
+    br.align()
+    data, p = br.data, br.pos
+    if p + 2 > len(data):
+        raise ValueError("truncated entropy data at restart marker")
+    if data[p] != 0xFF or data[p + 1] != 0xD0 + n % 8:
+        raise ValueError(
+            f"expected RST{n % 8} at offset {p}, got "
+            f"{data[p]:02X}{data[p + 1]:02X}"
+        )
+    br.pos = p + 2
 
 
 # --- decoder -----------------------------------------------------------------
@@ -459,11 +447,11 @@ def jpeg_decode(raw: bytes) -> np.ndarray:
         for c in comps
     }
     preds = {c["id"]: 0 for c in comps}
-    br = _BitReader(raw, scan_pos)
+    br = _entropy_reader(raw, scan_pos)
     n_rst = 0
     for mi in range(mcux * mcuy):
         if dri and mi and mi % dri == 0:
-            br.sync_restart(n_rst)
+            _sync_restart(br, n_rst)
             n_rst += 1
             preds = {c["id"]: 0 for c in comps}
         my, mx = divmod(mi, mcux)
@@ -473,12 +461,12 @@ def jpeg_decode(raw: bytes) -> np.ndarray:
             for by in range(c["v"]):
                 for bx in range(c["h"]):
                     coef = np.zeros(64, dtype=np.float64)
-                    size = br.decode_symbol(dc_tabs[td])
-                    preds[c["id"]] += br.receive_extend(size)
+                    size = _decode_symbol(br, dc_tabs[td])
+                    preds[c["id"]] += _receive_extend(br, size)
                     coef[0] = preds[c["id"]] * q[0]
                     k = 1
                     while k < 64:
-                        rs = br.decode_symbol(ac_tabs[ta])
+                        rs = _decode_symbol(br, ac_tabs[ta])
                         r, s = rs >> 4, rs & 15
                         if s == 0:
                             if r == 15:  # ZRL: 16 zeros
@@ -488,7 +476,7 @@ def jpeg_decode(raw: bytes) -> np.ndarray:
                         k += r
                         if k > 63:
                             raise ValueError("AC coefficient overrun")
-                        coef[_ZZ[k]] = br.receive_extend(s) * q[_ZZ[k]]
+                        coef[_ZZ[k]] = _receive_extend(br, s) * q[_ZZ[k]]
                         k += 1
                     block = _DCT.T @ coef.reshape(8, 8) @ _DCT + 128.0
                     r0 = (my * c["v"] + by) * 8
@@ -502,8 +490,8 @@ def jpeg_decode(raw: bytes) -> np.ndarray:
 
 
 def _prog_dc_first(br, dc_tab, coef, pred: int, al: int) -> int:
-    size = br.decode_symbol(dc_tab)
-    pred += br.receive_extend(size)
+    size = _decode_symbol(br, dc_tab)
+    pred += _receive_extend(br, size)
     coef[0] = pred << al
     return pred
 
@@ -514,7 +502,7 @@ def _prog_ac_first(br, ac_tab, coef, ss, se, al, eobrun: int) -> int:
         return eobrun - 1
     k = ss
     while k <= se:
-        rs = br.decode_symbol(ac_tab)
+        rs = _decode_symbol(br, ac_tab)
         r, s = rs >> 4, rs & 15
         if s == 0:
             if r == 15:  # ZRL
@@ -522,12 +510,12 @@ def _prog_ac_first(br, ac_tab, coef, ss, se, al, eobrun: int) -> int:
                 continue
             eobrun = (1 << r) - 1
             if r:
-                eobrun += br.receive(r)
+                eobrun += br.u(r)
             break
         k += r
         if k > se:
             raise ValueError("AC coefficient overrun in progressive scan")
-        coef[k] = br.receive_extend(s) << al
+        coef[k] = _receive_extend(br, s) << al
         k += 1
     return eobrun
 
@@ -541,14 +529,14 @@ def _prog_ac_refine(br, ac_tab, coef, ss, se, al, eobrun: int) -> int:
     k = ss
     if eobrun == 0:
         while k <= se:
-            rs = br.decode_symbol(ac_tab)
+            rs = _decode_symbol(br, ac_tab)
             r, s = rs >> 4, rs & 15
             val = 0
             if s == 0:
                 if r != 15:
                     eobrun = 1 << r
                     if r:
-                        eobrun += br.receive(r)
+                        eobrun += br.u(r)
                     break
                 # ZRL: skip 16 zero-history positions below
             else:
@@ -556,12 +544,12 @@ def _prog_ac_refine(br, ac_tab, coef, ss, se, al, eobrun: int) -> int:
                     raise ValueError(
                         "invalid coefficient magnitude in AC refinement"
                     )
-                val = p1 if br.read_bit() else m1
+                val = p1 if br.u(1) else m1
             # advance: correction bits on nonzero-history coefficients,
             # consume r zero-history slots
             while k <= se:
                 if coef[k] != 0:
-                    if br.read_bit() and (coef[k] & p1) == 0:
+                    if br.u(1) and (coef[k] & p1) == 0:
                         coef[k] += p1 if coef[k] >= 0 else m1
                 else:
                     if r == 0:
@@ -579,7 +567,7 @@ def _prog_ac_refine(br, ac_tab, coef, ss, se, al, eobrun: int) -> int:
         # this block is inside the EOB run: correction bits only
         while k <= se:
             if coef[k] != 0:
-                if br.read_bit() and (coef[k] & p1) == 0:
+                if br.u(1) and (coef[k] & p1) == 0:
                     coef[k] += p1 if coef[k] >= 0 else m1
             k += 1
         eobrun -= 1
@@ -720,7 +708,7 @@ def _prog_scan(
         raise ValueError(f"invalid spectral band {ss}..{se}")
     if ss > 0 and ns != 1:
         raise ValueError("progressive AC scans must be single-component")
-    br = _BitReader(raw, entropy_pos)
+    br = _entropy_reader(raw, entropy_pos)
     n_rst = 0
     if ss == 0:
         # DC scan, interleaved over MCUs (or the single comp's grid)
@@ -730,41 +718,36 @@ def _prog_scan(
                     raise ValueError(
                         f"scan references undefined Huffman table dc={td}"
                     )
-        preds = {c["id"]: 0 for c, _, _ in scomps}
+        # restart-interval units: MCUs when interleaved, else blocks
         if ns > 1:
-            mcus = geom["mcux"] * geom["mcuy"]
-            for mi in range(mcus):
-                if dri and mi and mi % dri == 0:
-                    br.sync_restart(n_rst)
-                    n_rst += 1
-                    preds = {c["id"]: 0 for c, _, _ in scomps}
-                my, mx = divmod(mi, geom["mcux"])
-                for c, td, _ in scomps:
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            coef = coefs[c["id"]][
-                                my * c["v"] + by, mx * c["h"] + bx
-                            ]
-                            if ah == 0:
-                                preds[c["id"]] = _prog_dc_first(
-                                    br, dc_tabs[td], coef, preds[c["id"]], al
-                                )
-                            elif br.read_bit():
-                                coef[0] |= 1 << al
+            units = [
+                [
+                    (c, td, my * c["v"] + by, mx * c["h"] + bx)
+                    for c, td, _ in scomps
+                    for by in range(c["v"])
+                    for bx in range(c["h"])
+                ]
+                for my in range(geom["mcuy"])
+                for mx in range(geom["mcux"])
+            ]
         else:
             c, td, _ = scomps[0]
-            for bi in range(c["by"] * c["bx"]):
-                if dri and bi and bi % dri == 0:
-                    br.sync_restart(n_rst)
-                    n_rst += 1
-                    preds = {c["id"]: 0}
-                by, bx = divmod(bi, c["bx"])
+            units = [
+                [(c, td, by, bx)] for by in range(c["by"]) for bx in range(c["bx"])
+            ]
+        preds = {c["id"]: 0 for c, _, _ in scomps}
+        for ui, unit in enumerate(units):
+            if dri and ui and ui % dri == 0:
+                _sync_restart(br, n_rst)
+                n_rst += 1
+                preds = {c["id"]: 0 for c, _, _ in scomps}
+            for c, td, by, bx in unit:
                 coef = coefs[c["id"]][by, bx]
                 if ah == 0:
                     preds[c["id"]] = _prog_dc_first(
                         br, dc_tabs[td], coef, preds[c["id"]], al
                     )
-                elif br.read_bit():
+                elif br.u(1):
                     coef[0] |= 1 << al
     else:
         # AC scan: single component, non-interleaved block order
@@ -777,7 +760,7 @@ def _prog_scan(
         eobrun = 0
         for bi in range(c["by"] * c["bx"]):
             if dri and bi and bi % dri == 0:
-                br.sync_restart(n_rst)
+                _sync_restart(br, n_rst)
                 n_rst += 1
                 eobrun = 0
             by, bx = divmod(bi, c["bx"])
@@ -804,32 +787,21 @@ _ENC_ACP_COUNTS[7] = len(_ENC_ACP_SYMBOLS)
 assert len(_ENC_ACP_SYMBOLS) == 176
 
 
-class _BitWriter:
-    """MSB-first bit writer with FF00 byte stuffing and 1-padding."""
+def _entropy_bytes(bw: BitWriter) -> bytes:
+    """The writer's bits as T.81 entropy data: padded with 1s to the
+    byte boundary, every FF byte stuffed as FF00."""
+    bw.align(1)
+    return bw.to_bytes().replace(b"\xff", b"\xff\x00")
 
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
 
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc = 0
-                self.nbits = 0
-
-    def flush(self) -> None:
-        while self.nbits:
-            self.write(1, 1)  # pad with 1s per spec
+def _mag(v: int) -> tuple[int, int]:
+    """(size, appended-bits) for a signed coefficient (T.81 F.1.2.1)."""
+    size = int(abs(v)).bit_length()
+    return size, (v if v >= 0 else v + (1 << size) - 1)
 
 
 def _encode_block(
-    bw: _BitWriter,
+    bw: BitWriter,
     block: np.ndarray,
     q: np.ndarray,
     pred: int,
@@ -839,39 +811,38 @@ def _encode_block(
     coef2 = _DCT @ (block.astype(np.float64) - 128.0) @ _DCT.T
     coef = np.round(coef2.reshape(64) / q).astype(np.int64)
     dc = int(coef[0])
-    diff = dc - pred
-
-    def _mag(v: int) -> tuple[int, int]:
-        size = int(abs(v)).bit_length()
-        return size, (v if v >= 0 else v + (1 << size) - 1)
-
-    size, bits = _mag(diff)
+    size, bits = _mag(dc - pred)
     ln, code = dc_tab[size]
-    bw.write(code, ln)
+    bw.u(code, ln)
     if size:
-        bw.write(bits, size)
-    zz = coef[_ZZ]
+        bw.u(bits, size)
+    if _encode_ac_runs(bw, ac_tab, coef[_ZZ][1:]):
+        ln, code = ac_tab[0x00]  # EOB
+        bw.u(code, ln)
+    return dc
+
+
+def _encode_ac_runs(bw: BitWriter, ac_tab: dict, tv: np.ndarray) -> bool:
+    """Write the run/size symbol (ZRL first for runs past 15) and the
+    appended bits of each nonzero coefficient of ``tv``; True when
+    zeros follow the last one, which the caller ends with an EOB."""
     run = 0
-    for k in range(1, 64):
-        v = int(zz[k])
-        if v == 0:
+    for x in tv.tolist():
+        if x == 0:
             run += 1
             continue
         while run > 15:
             ln, code = ac_tab[0xF0]  # ZRL
-            bw.write(code, ln)
+            bw.u(code, ln)
             run -= 16
-        size, bits = _mag(v)
+        size, bits = _mag(x)
         if size > 10:
             raise ValueError("AC coefficient out of baseline range")
         ln, code = ac_tab[(run << 4) | size]
-        bw.write(code, ln)
-        bw.write(bits, size)
+        bw.u(code, ln)
+        bw.u(bits, size)
         run = 0
-    if run:
-        ln, code = ac_tab[0x00]  # EOB
-        bw.write(code, ln)
-    return dc
+    return run > 0
 
 
 def _prep_planes(px: np.ndarray, quality: int, subsample: bool):
@@ -916,6 +887,37 @@ def _prep_planes(px: np.ndarray, quality: int, subsample: bool):
     return gray, samp, qsel, qy, qc, prepped, (hmax, vmax, mcux, mcuy)
 
 
+def _headers(sof, px, samp, qsel, qy, qc, ac_counts, ac_symbols) -> bytearray:
+    """SOI, JFIF APP0, DQT, the SOFn frame header and the DC/AC DHT
+    segments: everything both encoders write before their scans."""
+    h, w = px.shape[:2]
+    gray = px.ndim == 2
+    out = bytearray(b"\xff\xd8")  # SOI
+    # APP0/JFIF v1.1: density unit 0 with 1:1 aspect, no thumbnail
+    out += (
+        b"\xff\xe0"
+        + struct.pack(">H", 16)
+        + b"JFIF\x00\x01\x01\x00"
+        + struct.pack(">HHBB", 1, 1, 0, 0)
+    )
+    for tq, tab in ((0, qy),) + (() if gray else ((1, qc),)):
+        out += b"\xff\xdb" + struct.pack(">HB", 67, tq) + bytes(
+            int(tab[_ZZ[k]]) for k in range(64)
+        )
+    nc = 1 if gray else 3
+    out += bytes([0xFF, sof]) + struct.pack(">HBHHB", 8 + 3 * nc, 8, h, w, nc)
+    for i in range(nc):
+        out += bytes([i + 1, (samp[i][0] << 4) | samp[i][1], qsel[i]])
+    for tc_th, counts, syms in (
+        (0x00, _ENC_DC_COUNTS, _ENC_DC_SYMBOLS),
+        (0x10, ac_counts, ac_symbols),
+    ):
+        out += b"\xff\xc4" + struct.pack(
+            ">HB", 19 + len(syms), tc_th
+        ) + bytes(counts) + syms
+    return out
+
+
 def jpeg_encode(
     px: np.ndarray,
     quality: int = 90,
@@ -933,30 +935,10 @@ def jpeg_encode(
     )
     h, w = px.shape[:2]
     hmax, vmax, mcux, mcuy = geo
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    # APP0/JFIF v1.1: density unit 0 with 1:1 aspect, no thumbnail
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00"
-        + struct.pack(">HHBB", 1, 1, 0, 0)
-    )
-    for tq, tab in ((0, qy),) + (() if gray else ((1, qc),)):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tq) + bytes(
-            int(tab[_ZZ[k]]) for k in range(64)
-        )
     nc = 1 if gray else 3
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * nc, 8, h, w, nc)
-    for i in range(nc):
-        out += bytes([i + 1, (samp[i][0] << 4) | samp[i][1], qsel[i]])
-    for tc_th, counts, syms in (
-        (0x00, _ENC_DC_COUNTS, _ENC_DC_SYMBOLS),
-        (0x10, _ENC_AC_COUNTS, _ENC_AC_SYMBOLS),
-    ):
-        out += b"\xff\xc4" + struct.pack(
-            ">HB", 19 + len(syms), tc_th
-        ) + bytes(counts) + syms
+    out = _headers(
+        0xC0, px, samp, qsel, qy, qc, _ENC_AC_COUNTS, _ENC_AC_SYMBOLS
+    )
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
     out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * nc, nc)
@@ -965,13 +947,13 @@ def jpeg_encode(
     out += b"\x00\x3f\x00"  # Ss=0 Se=63 Ah/Al=0
     dc_tab = _build_encode_table(_ENC_DC_COUNTS, _ENC_DC_SYMBOLS)
     ac_tab = _build_encode_table(_ENC_AC_COUNTS, _ENC_AC_SYMBOLS)
-    bw = _BitWriter()
+    bw = BitWriter()
     preds = [0] * nc
     n_rst = 0
     for mi in range(mcux * mcuy):
         if restart_interval and mi and mi % restart_interval == 0:
-            bw.flush()
-            bw.out += bytes([0xFF, 0xD0 + n_rst % 8])
+            out += _entropy_bytes(bw) + bytes([0xFF, 0xD0 + n_rst % 8])
+            bw = BitWriter()
             n_rst += 1
             preds = [0] * nc
         my, mx = divmod(mi, mcux)
@@ -990,19 +972,12 @@ def jpeg_encode(
                         dc_tab,
                         ac_tab,
                     )
-    bw.flush()
-    out += bw.out
+    out += _entropy_bytes(bw)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
 # --- progressive encoder (SOF2) ----------------------------------------------
-
-
-def _mag(v: int) -> tuple[int, int]:
-    """(size, appended-bits) for a signed coefficient (T.81 F.1.2.1)."""
-    size = int(abs(v)).bit_length()
-    return size, (v if v >= 0 else v + (1 << size) - 1)
 
 
 def _quantized_zz(prepped, samp, qsel, qy, qc) -> list:
@@ -1068,7 +1043,7 @@ class _EobState:
     """Pending EOB run + the refinement correction bits that ride
     behind the EOBn symbol (T.81 G.1.2.3 encode side)."""
 
-    def __init__(self, bw: "_BitWriter", ac_tab: dict):
+    def __init__(self, bw: BitWriter, ac_tab: dict):
         self.bw = bw
         self.ac_tab = ac_tab
         self.eobrun = 0
@@ -1078,12 +1053,12 @@ class _EobState:
         if self.eobrun > 0:
             r = self.eobrun.bit_length() - 1
             ln, code = self.ac_tab[r << 4]
-            self.bw.write(code, ln)
+            self.bw.u(code, ln)
             if r:
-                self.bw.write(self.eobrun - (1 << r), r)
+                self.bw.u(self.eobrun - (1 << r), r)
             self.eobrun = 0
         for b in self.bits:
-            self.bw.write(b, 1)
+            self.bw.u(b, 1)
         self.bits = []
 
     def bump(self, extra_bits: list[int]) -> None:
@@ -1094,37 +1069,18 @@ class _EobState:
 
 
 def _encode_ac_first_block(
-    bw: "_BitWriter", ac_tab: dict, tv: np.ndarray, eob: "_EobState"
+    bw: BitWriter, ac_tab: dict, tv: np.ndarray, eob: "_EobState"
 ) -> None:
-    nz = np.nonzero(tv)[0]
-    if len(nz) == 0:
+    if not tv.any():
         eob.bump([])
         return
     eob.flush()
-    run = 0
-    last = nz[-1]
-    for k in range(last + 1):
-        x = int(tv[k])
-        if x == 0:
-            run += 1
-            continue
-        while run > 15:
-            ln, code = ac_tab[0xF0]
-            bw.write(code, ln)
-            run -= 16
-        size, bits = _mag(x)
-        if size > 10:
-            raise ValueError("AC coefficient out of range")
-        ln, code = ac_tab[(run << 4) | size]
-        bw.write(code, ln)
-        bw.write(bits, size)
-        run = 0
-    if last < len(tv) - 1:
+    if _encode_ac_runs(bw, ac_tab, tv):
         eob.bump([])
 
 
 def _encode_ac_refine_block(
-    bw: "_BitWriter",
+    bw: BitWriter,
     ac_tab: dict,
     band: np.ndarray,
     al: int,
@@ -1144,20 +1100,20 @@ def _encode_ac_refine_block(
         while r > 15 and k <= eobpos:
             eob.flush()
             ln, code = ac_tab[0xF0]
-            bw.write(code, ln)
+            bw.u(code, ln)
             r -= 16
             for b in br_bits:
-                bw.write(b, 1)
+                bw.u(b, 1)
             br_bits = []
         if t > 1:
             br_bits.append(t & 1)
             continue
         eob.flush()
         ln, code = ac_tab[(r << 4) | 1]
-        bw.write(code, ln)
-        bw.write(1 if tv[k] > 0 else 0, 1)
+        bw.u(code, ln)
+        bw.u(1 if tv[k] > 0 else 0, 1)
         for b in br_bits:
-            bw.write(b, 1)
+            bw.u(b, 1)
         br_bits = []
         r = 0
     if r > 0 or br_bits:
@@ -1195,27 +1151,9 @@ def jpeg_encode_progressive(
         ch = -(-(h * samp[ci][1]) // vmax)
         grids.append((-(-ch // 8), -(-cw // 8)))
 
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00"
-        + struct.pack(">HHBB", 1, 1, 0, 0)
+    out = _headers(
+        0xC2, px, samp, qsel, qy, qc, _ENC_ACP_COUNTS, _ENC_ACP_SYMBOLS
     )
-    for tq, tab in ((0, qy),) + (() if gray else ((1, qc),)):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tq) + bytes(
-            int(tab[_ZZ[k]]) for k in range(64)
-        )
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * nc, 8, h, w, nc)
-    for i in range(nc):
-        out += bytes([i + 1, (samp[i][0] << 4) | samp[i][1], qsel[i]])
-    for tc_th, counts, syms in (
-        (0x00, _ENC_DC_COUNTS, _ENC_DC_SYMBOLS),
-        (0x10, _ENC_ACP_COUNTS, _ENC_ACP_SYMBOLS),
-    ):
-        out += b"\xff\xc4" + struct.pack(
-            ">HB", 19 + len(syms), tc_th
-        ) + bytes(counts) + syms
     dc_tab = _build_encode_table(_ENC_DC_COUNTS, _ENC_DC_SYMBOLS)
     ac_tab = _build_encode_table(_ENC_ACP_COUNTS, _ENC_ACP_SYMBOLS)
 
@@ -1225,46 +1163,35 @@ def jpeg_encode_progressive(
         for ci in comp_ids:
             out += bytes([ci + 1, 0x00])  # DC table 0, AC table 0
         out += bytes([ss, se, (ah << 4) | al])
-        bw = _BitWriter()
+        bw = BitWriter()
         if ss == 0:
-            if ah == 0:
-                preds = {ci: 0 for ci in comp_ids}
-            if ns > 1:
-                for mi in range(mcux * mcuy):
-                    my, mx = divmod(mi, mcux)
-                    for ci in comp_ids:
-                        sh, sv = samp[ci]
-                        for by in range(sv):
-                            for bx in range(sh):
-                                dc = int(
-                                    coefzz[ci][my * sv + by, mx * sh + bx, 0]
-                                )
-                                if ah == 0:
-                                    v = dc >> al
-                                    size, bits = _mag(v - preds[ci])
-                                    preds[ci] = v
-                                    ln, code = dc_tab[size]
-                                    bw.write(code, ln)
-                                    if size:
-                                        bw.write(bits, size)
-                                else:
-                                    bw.write((dc >> al) & 1, 1)
+            if ns > 1:  # interleaved: blocks in MCU order
+                blocks = [
+                    (ci, my * samp[ci][1] + by, mx * samp[ci][0] + bx)
+                    for my in range(mcuy)
+                    for mx in range(mcux)
+                    for ci in comp_ids
+                    for by in range(samp[ci][1])
+                    for bx in range(samp[ci][0])
+                ]
             else:
-                ci = comp_ids[0]
-                gby, gbx = grids[ci]
-                for bi in range(gby * gbx):
-                    by, bx = divmod(bi, gbx)
-                    dc = int(coefzz[ci][by, bx, 0])
-                    if ah == 0:
-                        v = dc >> al
-                        size, bits = _mag(v - preds[ci])
-                        preds[ci] = v
-                        ln, code = dc_tab[size]
-                        bw.write(code, ln)
-                        if size:
-                            bw.write(bits, size)
-                    else:
-                        bw.write((dc >> al) & 1, 1)
+                gby, gbx = grids[comp_ids[0]]
+                blocks = [
+                    (comp_ids[0], by, bx)
+                    for by in range(gby)
+                    for bx in range(gbx)
+                ]
+            preds = {ci: 0 for ci in comp_ids}
+            for ci, by, bx in blocks:
+                dc = int(coefzz[ci][by, bx, 0])
+                if ah:  # refinement: one bit per block
+                    bw.u((dc >> al) & 1, 1)
+                    continue
+                size, bits = _mag((dc >> al) - preds[ci])
+                preds[ci] = dc >> al
+                ln, code = dc_tab[size]
+                bw.u(code, ln)
+                bw.u(bits, size)
         else:
             if ns != 1:
                 raise ValueError("progressive AC scans are single-component")
@@ -1281,7 +1208,6 @@ def jpeg_encode_progressive(
                 else:
                     _encode_ac_refine_block(bw, ac_tab, band, al, eob)
             eob.flush()
-        bw.flush()
-        out += bw.out
+        out += _entropy_bytes(bw)
     out += b"\xff\xd9"  # EOI
     return bytes(out)

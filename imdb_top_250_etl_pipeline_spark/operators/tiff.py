@@ -47,6 +47,8 @@ import struct
 
 import numpy as np
 
+from .bitstream import lzw_decode, lzw_encode
+
 TIFF_MAGIC_LE = b"II*\x00"
 TIFF_MAGIC_BE = b"MM\x00*"
 
@@ -162,114 +164,6 @@ def _packbits_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-_CLEAR, _EOI = 256, 257
-
-
-def _lzw_decode_tiff(data: bytes, n_expected: int) -> bytes:
-    """TIFF-flavor LZW: MSB-first packed 9..12-bit codes, CLEAR=256,
-    EOI=257, EarlyChange width bump at table size 2^width − 1."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
-    width = 9
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    prev: bytes | None = None
-    # the WRITER adds a table entry on EVERY data code (including the
-    # first after CLEAR), while the reader's own string table lags one
-    # code behind — so code widths must follow the writer's counter,
-    # not len(table): that skew is exactly what the spec's EarlyChange
-    # compensates (width bumps at 2^width - 1, one entry before GIF
-    # would)
-    next_code = 258
-    while len(out) < n_expected:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("truncated TIFF LZW strip")
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        if code == _CLEAR:
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            width = 9
-            prev = None
-            next_code = 258
-            continue
-        if code == _EOI:
-            break
-        if prev is None:
-            if code >= 256:
-                raise ValueError(f"invalid initial TIFF LZW code {code}")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):  # KwKwK
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(f"invalid TIFF LZW code {code}")
-        out += entry
-        prev = entry
-        next_code += 1
-        if next_code == (1 << width) - 1 and width < 12:
-            width += 1
-        # a conformant writer CLEARs near table-full (4094); the CLEAR
-        # branch above resets state when that code arrives
-    if len(out) < n_expected:
-        raise ValueError("TIFF LZW strip ended early")
-    return bytes(out[:n_expected])
-
-
-def _lzw_encode_tiff(data: bytes) -> bytes:
-    """Mirror of the decoder: emits CLEAR up front, widens at
-    next-free-slot 2^width − 1 (EarlyChange), ends with EOI."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    width = 9
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    emit(_CLEAR)
-    run = b""
-    for b in data:
-        cand = run + bytes([b])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run])
-        table[cand] = next_code
-        next_code += 1
-        # the decoder appends ITS entry for the code we just emitted,
-        # reaching size next_code-? — widen exactly when the table's
-        # next free slot hits 2^width - 1 (EarlyChange)
-        if next_code == (1 << width) - 1 and width < 12:
-            width += 1
-        if next_code == 4094:  # table nearly full: reset (rare)
-            emit(_CLEAR)
-            table = {bytes([i]): i for i in range(256)}
-            next_code = 258
-            width = 9
-        run = bytes([b])
-    if run:
-        emit(table[run])
-    emit(_EOI)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
 def tiff_gray_pixels(raw: bytes) -> np.ndarray:
     """Decode the first TIFF page to an (h, w) uint8 grayscale ndarray
     through the shared exact integer luma — the same pixels hash
@@ -313,7 +207,10 @@ def tiff_gray_pixels(raw: bytes) -> np.ndarray:
             return chunk[:expected]
         if comp == 32773:
             return _packbits_decode(chunk, expected)
-        return _lzw_decode_tiff(chunk, expected)
+        return lzw_decode(
+            chunk, expected, 256, msb_first=True, early_change=2,
+            what="TIFF LZW strip",
+        )
 
     def _undiff(a: np.ndarray) -> np.ndarray:
         # horizontal differencing, per sample: cumsum mod 256 along x
@@ -426,7 +323,7 @@ def tiff_encode(
             return data
         if comp_id == 32773:
             return _packbits_encode(data)
-        return _lzw_encode_tiff(data)
+        return lzw_encode(data, 256, msb_first=True, early_change=2)
 
     strips = []
     if tile is not None:

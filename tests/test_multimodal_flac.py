@@ -18,9 +18,9 @@ import struct
 import numpy as np
 import pytest
 
+from imdb_top_250_etl_pipeline_spark.operators.bitstream import BitWriter
 from imdb_top_250_etl_pipeline_spark.operators.flac import (
     FLAC_MAGIC,
-    _BitsW,
     _crc8,
     _crc16,
     flac_decode,
@@ -77,7 +77,7 @@ def test_tail_frame_and_streaminfo():
 def _hand_stream(nch, bps, total, frame_writer, rate=8000) -> bytes:
     """Assemble marker + STREAMINFO (md5 zero = unchecked) + one frame
     whose subframes are written by ``frame_writer(w)``."""
-    si = _BitsW()
+    si = BitWriter()
     si.u(total, 16)
     si.u(total, 16)
     si.u(0, 24)
@@ -89,7 +89,7 @@ def _hand_stream(nch, bps, total, frame_writer, rate=8000) -> bytes:
     head = FLAC_MAGIC + bytes([0x80]) + (34).to_bytes(3, "big") + (
         si.to_bytes() + b"\x00" * 16
     )
-    w = _BitsW()
+    w = BitWriter()
     w.u(0b11111111111110, 14)
     w.u(0, 2)
     w.u(7, 4)  # 16-bit blocksize at end
@@ -119,11 +119,11 @@ def test_lpc_subframe_hand_stream():
         w.u(32 + 1, 6)  # LPC order 2 (type 100001)
         w.u(0, 1)  # no wasted bits
         for v in warm:
-            w.s(v, 16)
+            w.u(v, 16)
         w.u(4 - 1, 4)  # precision 4 bits
-        w.s(1, 5)  # shift 1
-        w.s(2, 4)  # coef[0]
-        w.s(-1, 4)  # coef[1]
+        w.u(1, 5)  # shift 1
+        w.u(2, 4)  # coef[0]
+        w.u(-1, 4)  # coef[1]
         w.u(0, 2)  # rice 4-bit
         w.u(0, 4)  # partition order 0
         w.u(2, 4)  # rice param 2
@@ -166,7 +166,7 @@ def test_stereo_decorrelation_hand_streams(assign):
             w.u(1, 6)  # VERBATIM
             w.u(0, 1)
             for v in vals:
-                w.s(v, b)
+                w.u(v, b)
 
     raw = _hand_stream(
         2, 16, n,
@@ -185,7 +185,7 @@ def test_wasted_bits_hand_stream():
         w.u(1, 1)  # wasted-bits flag
         w.u(0b01, 2)  # unary 1 -> wasted = 2
         for v in vals:
-            w.s(v >> 2, 14)
+            w.u(v >> 2, 14)
 
     raw = _hand_stream(
         1, 16, len(vals),
@@ -208,7 +208,7 @@ def test_escape_partition_hand_stream():
         w.u(0b1111, 4)  # escape
         w.u(7, 5)  # 7-bit raw residuals
         for r in resid:
-            w.s(r, 7)
+            w.u(r, 7)
 
     raw = _hand_stream(
         1, 16, len(resid),
@@ -228,7 +228,7 @@ def test_multi_partition_rice_hand_stream():
         w.u(0, 1)
         w.u(8 + 1, 6)  # FIXED order 1
         w.u(0, 1)
-        w.s(warm[0], 16)
+        w.u(warm[0], 16)
         w.u(0, 2)
         w.u(2, 4)  # partition order 2 -> 4 partitions of 2 (first: 1)
         chunks = [resid[:1], resid[1:3], resid[3:5], resid[5:7]]

@@ -19,13 +19,28 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from imdb_top_250_etl_pipeline_spark.operators.bitstream import (
+    lzw_decode,
+    lzw_encode,
+)
 from imdb_top_250_etl_pipeline_spark.operators.gif import (
-    _lzw_decode,
-    _lzw_encode,
     gif_dims,
     gif_encode,
     gif_gray_pixels,
 )
+
+
+def _lzw_decode(mcs: int, data: bytes, n: int) -> list[int]:
+    """The shared LZW with GIF's constants: 2^mcs roots, LSB-first,
+    no EarlyChange."""
+    return list(
+        lzw_decode(data, n, 1 << mcs, msb_first=False, early_change=0,
+                   what="GIF LZW stream")
+    )
+
+
+def _lzw_encode(mcs: int, seq: list[int]) -> bytes:
+    return lzw_encode(bytes(seq), 1 << mcs, msb_first=False, early_change=0)
 
 
 def _grad(h: int, w: int, seed: int = 0) -> np.ndarray:

@@ -23,9 +23,11 @@ import numpy as np
 import pytest
 
 from imdb_top_250_etl_pipeline_spark.operators import h264, mp4
-from imdb_top_250_etl_pipeline_spark.operators.h264 import (
+from imdb_top_250_etl_pipeline_spark.operators.bitstream import (
     BitReader,
     BitWriter,
+)
+from imdb_top_250_etl_pipeline_spark.operators.h264 import (
     encode_residual_block_cavlc,
     residual_block_cavlc,
 )
@@ -159,7 +161,7 @@ def test_b_slice_refuses():
     w.ue(1)  # slice_type B
     w.ue(0)
     w.u(0, 4)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     nalu = bytes([0x41]) + h264.rbsp_to_ebsp(w.to_bytes())
     with pytest.raises(NotImplementedError, match="B/SP/SI"):
         h264.decode_i_slice(sps, pps, nalu)
@@ -185,7 +187,7 @@ def test_invalid_deblocking_idc_raises():
     w.u(0, 2)  # idr marking flags
     w.se(0)   # slice_qp_delta
     w.ue(5)   # disable_deblocking_filter_idc out of range
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     nalu = bytes([0x65]) + h264.rbsp_to_ebsp(w.to_bytes())
     with pytest.raises(ValueError, match="deblocking idc"):
         h264.decode_i_slice(sps, pps, nalu)
@@ -207,7 +209,7 @@ def test_max_pixels_guard():
     w.u(1, 1)
     w.u(0, 1)
     w.u(0, 1)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     with pytest.raises(ValueError, match="MAX_PIXELS"):
         h264.parse_sps(bytes([0x67]) + h264.rbsp_to_ebsp(w.to_bytes()))
 
@@ -255,11 +257,11 @@ def test_cavlc_known_block_hand_vector():
     hand-assembled bit by bit (coeff_token '000101', levelCode path,
     total_zeros '1')."""
     w = BitWriter()
-    w.bitstr("000101")  # TC=1, T1=0
+    w.u(0b000101, 6)  # TC=1, T1=0
     # level +5 -> levelCode 2*5-2=8, minus 2 (first after T1s<3) = 6:
     # six zeros then a 1 at suffixLength 0
-    w.bitstr("0000001")
-    w.bitstr("1")  # total_zeros = 0
+    w.u(0b0000001, 7)
+    w.u(0b1, 1)  # total_zeros = 0
     w.u(1, 1)
     w.u(0, 6)
     got, total = residual_block_cavlc(BitReader(w.to_bytes()), 16, 0)
@@ -275,7 +277,7 @@ def _mk_slice(body_fn) -> tuple[dict, dict, bytes]:
     w = BitWriter()
     h264._write_slice_header(w, True)
     body_fn(w)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     return sps, pps, bytes([0x65]) + h264.rbsp_to_ebsp(w.to_bytes())
 
 
@@ -354,7 +356,7 @@ def test_intra4x4_vertical_from_pcm_neighbor():
     def body(w):
         # MB 0: I_PCM
         w.ue(25)
-        w.byte_align_zero()
+        w.align()
         for yy in range(16):
             for xx in range(16):
                 w.u(int(pcm_block[yy, xx]), 8)
@@ -388,7 +390,7 @@ def test_intra4x4_vertical_from_pcm_neighbor():
     w = BitWriter()
     h264._write_slice_header(w, True)
     body(w)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     nalu = bytes([0x65]) + h264.rbsp_to_ebsp(w.to_bytes())
     f = h264.decode_i_slice(sps, pps, nalu)[:, :, 0]
     assert (f[:16, :] == pcm_block).all()
@@ -559,7 +561,7 @@ def _two_value_slice(a, b, qp, deblocking):
     w.ue(0)
     w.se(0)
     h264._write_single_dc_block_nc0(w, h264._flat_dc_coeff(b - a, qp))
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     return bytes([0x65]) + h264.rbsp_to_ebsp(w.to_bytes())
 
 
@@ -664,7 +666,7 @@ def test_chroma_ac_parse_order_cbp2():
     w = BitWriter()
     h264._write_slice_header(w, True)
     body(w)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     nalu = bytes([0x65]) + h264.rbsp_to_ebsp(w.to_bytes())
     f = h264.decode_i_slice(sps, pps, nalu)
 

@@ -26,8 +26,8 @@ import numpy as np
 import pytest
 
 from imdb_top_250_etl_pipeline_spark.operators import h264, mp4
+from imdb_top_250_etl_pipeline_spark.operators.bitstream import BitWriter
 from imdb_top_250_etl_pipeline_spark.operators.h264 import (
-    BitWriter,
     _Frame,
     _mc_chroma,
     _mc_luma,
@@ -489,7 +489,7 @@ def _p_header_bits(slice_type=5, override=False, modify=False, mmco=False):
         w.u(1 if mmco else 0, 1)
     w.se(0)
     w.ue(1)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     return bytes([0x41]) + h264.rbsp_to_ebsp(w.to_bytes())
 
 
@@ -532,7 +532,7 @@ def test_weighted_pred_refuses():
     w.u(1, 1)
     w.u(0, 1)
     w.u(0, 1)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     pps = h264.parse_pps(b"\x68" + h264.rbsp_to_ebsp(w.to_bytes()))
     assert pps["weighted_pred"] == 1
     sps, _ = _ctx(1, 1, 26)
@@ -562,7 +562,7 @@ def test_constrained_intra_pred_refuses_in_p():
     w.u(1, 1)
     w.u(1, 1)  # constrained_intra_pred ON
     w.u(0, 1)
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     pps = h264.parse_pps(b"\x68" + h264.rbsp_to_ebsp(w.to_bytes()))
     assert pps["constrained_intra"] == 1
     sps, pps_ok = _ctx(1, 1, 26)
@@ -589,7 +589,7 @@ def test_skip_run_overrun_raises():
     w = BitWriter()
     h264._write_p_slice_header(w, 1)
     w.ue(7)  # skip run of 7 in a 2-MB picture
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     nalu = bytes([0x41]) + h264.rbsp_to_ebsp(w.to_bytes())
     with pytest.raises(ValueError, match="mb_skip_run"):
         h264.decode_slice(sps, pps, nalu, ref)
@@ -601,7 +601,7 @@ def test_p_slice_early_end_raises():
     w = BitWriter()
     h264._write_p_slice_header(w, 1)
     w.ue(1)  # skip 1 of 4 MBs, then nothing
-    w.rbsp_trailing()
+    h264._rbsp_trailing(w)
     nalu = bytes([0x41]) + h264.rbsp_to_ebsp(w.to_bytes())
     with pytest.raises(ValueError, match="ends after"):
         h264.decode_slice(sps, pps, nalu, ref)

@@ -29,13 +29,17 @@ import struct
 import numpy as np
 import pytest
 
+from imdb_top_250_etl_pipeline_spark.operators.bitstream import (
+    BitReader,
+    BitWriter,
+)
 from imdb_top_250_etl_pipeline_spark.operators.jpeg import (
     _ENC_ACP_COUNTS,
     _ENC_ACP_SYMBOLS,
     _ENC_DC_COUNTS,
     _ENC_DC_SYMBOLS,
-    _BitReader,
-    _BitWriter,
+    _entropy_byte,
+    _entropy_bytes,
     _build_decode_table,
     _build_encode_table,
     _EobState,
@@ -189,13 +193,12 @@ def test_hand_assembled_dc16_block():
     """DC diff 16: symbol 5 (code 0101) + bits 10000, packed
     0101 10000 + 1111111 pad = 0x58 0xFF(stuffed) -> dequant coef0=16,
     IDCT: flat 128 + 16/8 = 130."""
-    bw = _BitWriter()
+    bw = BitWriter()
     dc_tab = _build_encode_table(_ENC_DC_COUNTS, _ENC_DC_SYMBOLS)
     ln, code = dc_tab[5]
-    bw.write(code, ln)
-    bw.write(16, 5)
-    bw.flush()
-    raw = _hand_stream([bytes(bw.out), b"\x00"])
+    bw.u(code, ln)
+    bw.u(16, 5)
+    raw = _hand_stream([_entropy_bytes(bw), b"\x00"])
     out = jpeg_decode(raw)
     assert (out == 130).all()
 
@@ -204,20 +207,18 @@ def test_hand_assembled_eobrun_bits():
     """A 16x8 two-block image: AC scan emits EOB2 (symbol 0x10 + 1
     appended bit 0 covering both blocks) — the EOBRUN>1 path that a
     per-block EOB encoder never produces."""
-    bw = _BitWriter()
+    bw = BitWriter()
     dc_tab = _build_encode_table(_ENC_DC_COUNTS, _ENC_DC_SYMBOLS)
     for _ in range(2):  # two blocks, dc diff 0
         ln, code = dc_tab[0]
-        bw.write(code, ln)
-    bw.flush()
-    dc_bytes = bytes(bw.out)
-    bw2 = _BitWriter()
+        bw.u(code, ln)
+    dc_bytes = _entropy_bytes(bw)
+    bw2 = BitWriter()
     ac_tab = _build_encode_table(_ENC_ACP_COUNTS, _ENC_ACP_SYMBOLS)
     ln, code = ac_tab[0x10]  # EOB2
-    bw2.write(code, ln)
-    bw2.write(0, 1)  # eobrun = 2 + 0
-    bw2.flush()
-    raw = _hand_stream([dc_bytes, bytes(bw2.out)], w=8, h=16)
+    bw2.u(code, ln)
+    bw2.u(0, 1)  # eobrun = 2 + 0
+    raw = _hand_stream([dc_bytes, _entropy_bytes(bw2)], w=8, h=16)
     out = jpeg_decode(raw)
     assert out.shape == (16, 8) and (out == 128).all()
 
@@ -231,17 +232,16 @@ def _roundtrip_refine(coefs: np.ndarray, ah: int, al: int) -> np.ndarray:
     after the step (in natural coefficient units)."""
     band = coefs.astype(np.int64)
     ac_tab = _build_encode_table(_ENC_ACP_COUNTS, _ENC_ACP_SYMBOLS)
-    bw = _BitWriter()
+    bw = BitWriter()
     eob = _EobState(bw, ac_tab)
     _encode_ac_refine_block(bw, ac_tab, band, al, eob)
     eob.flush()
-    bw.flush()
-    data = bytes(bw.out) + b"\xff\xd9"  # sentinel so overruns fail loud
+    data = _entropy_bytes(bw) + b"\xff\xd9"  # sentinel so overruns fail loud
     dec_tab = _build_decode_table(_ENC_ACP_COUNTS, _ENC_ACP_SYMBOLS)
     # decoder state after the PREVIOUS (Ah) pass
     state = np.zeros(64, dtype=np.int64)
     state[1 : 1 + len(band)] = _pt_ac(band, ah) << ah
-    br = _BitReader(data, 0)
+    br = BitReader(data, 0, fetch=_entropy_byte)
     left = _prog_ac_refine(br, dec_tab, state, 1, len(band), al, 0)
     assert left == 0
     return state[1 : 1 + len(band)]

@@ -18,15 +18,28 @@ import struct
 import numpy as np
 import pytest
 
+from imdb_top_250_etl_pipeline_spark.operators.bitstream import (
+    lzw_decode,
+    lzw_encode,
+)
 from imdb_top_250_etl_pipeline_spark.operators.tiff import (
-    _lzw_decode_tiff,
-    _lzw_encode_tiff,
     _packbits_decode,
     _packbits_encode,
     tiff_dims,
     tiff_encode,
     tiff_gray_pixels,
 )
+
+
+def _lzw_decode_tiff(data: bytes, n: int) -> bytes:
+    """The shared LZW with TIFF's constants: 256 roots, MSB-first,
+    EarlyChange."""
+    return lzw_decode(data, n, 256, msb_first=True, early_change=2,
+                      what="TIFF LZW strip")
+
+
+def _lzw_encode_tiff(data: bytes) -> bytes:
+    return lzw_encode(data, 256, msb_first=True, early_change=2)
 
 
 def _grad(h, w, seed=0):
