@@ -208,7 +208,7 @@ def tiff_gray_pixels(raw: bytes) -> np.ndarray:
         if comp == 32773:
             return _packbits_decode(chunk, expected)
         return lzw_decode(
-            chunk, expected, 256, msb_first=True, early_change=2,
+            chunk, expected, 256, msb_first=True, early_change=1,
             what="TIFF LZW strip",
         )
 
@@ -323,7 +323,7 @@ def tiff_encode(
             return data
         if comp_id == 32773:
             return _packbits_encode(data)
-        return lzw_encode(data, 256, msb_first=True, early_change=2)
+        return lzw_encode(data, 256, msb_first=True, early_change=1)
 
     strips = []
     if tile is not None:

@@ -34,12 +34,12 @@ from imdb_top_250_etl_pipeline_spark.operators.tiff import (
 def _lzw_decode_tiff(data: bytes, n: int) -> bytes:
     """The shared LZW with TIFF's constants: 256 roots, MSB-first,
     EarlyChange."""
-    return lzw_decode(data, n, 256, msb_first=True, early_change=2,
+    return lzw_decode(data, n, 256, msb_first=True, early_change=1,
                       what="TIFF LZW strip")
 
 
 def _lzw_encode_tiff(data: bytes) -> bytes:
-    return lzw_encode(data, 256, msb_first=True, early_change=2)
+    return lzw_encode(data, 256, msb_first=True, early_change=1)
 
 
 def _grad(h, w, seed=0):
@@ -108,7 +108,7 @@ def test_lzw_kwkwk_from_hand_stream():
 def test_lzw_early_change_boundary_roundtrip():
     """Push the table exactly across the 9->10 bit EarlyChange point:
     distinct byte pairs grow the table by ~1 per input byte, so inputs
-    sized around 253 data codes cross the boundary; any width-timing
+    sized around 254 data codes cross the boundary; any width-timing
     mismatch between encoder and decoder derails the stream."""
     rng = np.random.default_rng(11)
     for n in (250, 252, 253, 254, 255, 256, 258, 400, 1200, 6000, 40000):
