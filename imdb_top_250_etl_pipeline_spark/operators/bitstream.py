@@ -37,8 +37,9 @@ class BitReader:
 
     ``fetch(reader)`` returns the next byte and advances ``reader.pos``;
     the default reads ``data`` as is and raises ``ValueError("<codec>:
-    bitstream truncated")`` past its end.  Fetched bits not yet read wait
-    in ``acc`` (``nbits`` of them)."""
+    bitstream truncated")`` past its end.  Fetched bits not yet read are
+    the low ``nbits`` bits of ``acc``; bits above them are already read
+    and dropped at the next fetch."""
 
     __slots__ = ("data", "pos", "acc", "nbits", "codec", "fetch")
 
@@ -54,16 +55,25 @@ class BitReader:
         """k bits as an unsigned int."""
         n = self.nbits
         if n < k:
-            acc = self.acc
+            acc = self.acc & ((1 << n) - 1)
             while n < k:
                 acc = (acc << 8) | self.fetch(self)
                 n += 8
             self.acc = acc
         n -= k
         self.nbits = n
-        v = self.acc >> n
-        self.acc ^= v << n
-        return v
+        return (self.acc >> n) & ((1 << k) - 1)
+
+    def bit(self) -> int:
+        """One bit: ``u(1)`` without the field arithmetic, for the
+        bit-at-a-time Huffman/VLC walks that dominate JPEG and CAVLC."""
+        n = self.nbits
+        if not n:
+            self.acc = self.fetch(self)
+            n = 8
+        n -= 1
+        self.nbits = n
+        return (self.acc >> n) & 1
 
     def s(self, k: int) -> int:
         """k bits as a two's-complement signed int (k >= 1)."""
@@ -75,7 +85,8 @@ class BitReader:
         ``limit`` zeros is a corrupt stream."""
         n = 0
         while True:
-            acc, nb = self.acc, self.nbits
+            nb = self.nbits
+            acc = self.acc & ((1 << nb) - 1)
             if acc:
                 z = nb - acc.bit_length()
                 n += z
@@ -180,7 +191,6 @@ def lzw_decode(
     roots_table = [bytes([i]) for i in range(roots)] + [b"", b""]
     table = list(roots_table)
     width = first_width
-    mask = (1 << width) - 1
     out = bytearray()
     acc = nbits = pos = 0
     prev = None
@@ -199,12 +209,11 @@ def lzw_decode(
             code = acc >> nbits
             acc &= (1 << nbits) - 1
         else:
-            code = acc & mask
+            code = acc & ((1 << width) - 1)
             acc >>= width
         if code == clear:
             table = list(roots_table)
             width = first_width
-            mask = (1 << width) - 1
             prev = None
             continue
         if code == clear + 1:
@@ -225,7 +234,6 @@ def lzw_decode(
         prev = entry
         if len(table) + early_change == 1 << width and width < 12:
             width += 1
-            mask = (1 << width) - 1
     if len(out) < n_expected:
         raise ValueError(f"{what} ended early")
     return bytes(out[:n_expected])
@@ -235,10 +243,11 @@ def lzw_encode(
     data: bytes, roots: int, msb_first: bool, early_change: int
 ) -> bytes:
     """LZW encode that ``lzw_decode`` with the same constants inverts:
-    CLEAR first, the width grows one code after the decoder's table
-    would (the decoder's table lags the encoder's by one entry), CLEAR
-    again when the table is full, END last, the final byte
-    zero-padded."""
+    CLEAR first and again when the table fills, END last, the final
+    byte zero-padded.  The encoder's table runs one entry ahead of the
+    decoder's, so it widens at 2^width + 1 entries (plus
+    ``early_change``) — the same code in the stream where the decoder
+    widens."""
     clear = roots
     first_width = roots.bit_length()
     codes: list[int] = [clear]

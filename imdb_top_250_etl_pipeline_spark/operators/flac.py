@@ -22,6 +22,10 @@ Decoder scope (the FLAC format spec, RFC 9639):
   * Sample sizes 8/12/16/20/24/32; anything structurally invalid
     raises ValueError (the codec-guard contract).
 
+Bit fields, signed reads, unary Rice quotients and the byte positions
+of the CRC slices come from operators/bitstream.py's reader; the encoder
+writes through its writer.
+
 Encoder (fixture writer): 16-bit mono/stereo, constant / verbatim /
 fixed-order subframes with single-partition Rice residuals, computed
 MD5 — deterministic, and LOSSLESS round-trip means decode(encode(x))
@@ -398,10 +402,8 @@ def _write_rice(w: BitWriter, resid: list[int], param: int) -> None:
     for r in resid:
         v = (abs(r) << 1) - (1 if r < 0 else 0)  # zigzag: 2|r| - [r<0]
         q = v >> param
-        w.u(0, q)
-        w.u(1, 1)
-        if param:
-            w.u(v & ((1 << param) - 1), param)
+        w.u(1, q + 1)  # q zeros, then a 1
+        w.u(v, param)  # the low param bits
 
 
 def _best_rice_param(resid: list[int]) -> int:

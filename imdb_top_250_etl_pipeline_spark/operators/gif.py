@@ -10,6 +10,8 @@ local color table, interlaced or sequential, any extension blocks
 skipped by their sub-block chains, full variable-width LZW (dictionary
 growth to 4096, CLEAR/END codes, the KwKwK self-reference case, LSB-
 first bit packing — the opposite bit order of JPEG's entropy data).
+The LZW codec is operators/bitstream.py's, shared with TIFF; GIF passes
+its constants: 2^min-code-size roots, LSB-first, no EarlyChange.
 Later animation frames are ignored by design (frame 1 is the corpus
 thumbnail case); a missing image block raises ValueError.
 

@@ -33,6 +33,11 @@ with a single luma-DC-Hadamard coefficient whose reconstruction is
 integer-exact arithmetic — the q100-JPEG / Y4M / WAV id-arithmetic
 oracle discipline applied to real entropy-coded H.264.
 
+Bits are read and written through operators/bitstream.py (fixed-width
+fields, exp-Golomb, unary prefixes); this module keeps the RBSP framing
+(emulation prevention, the stop bit) and the CAVLC tables, whose VLC
+strings the encoder writes through the shared writer's ``u``.
+
 CAVLC tables are transcribed from the public spec (Tables 9-5..9-10)
 and structurally validated at import (prefix-free, complete where the
 spec's table is complete); invalid codewords in a stream raise
@@ -59,10 +64,6 @@ from .bitstream import BitReader, BitWriter
 # bitstream: operators/bitstream.py reads and writes; the RBSP framing
 # (emulation prevention, the stop bit) stays here
 # ---------------------------------------------------------------------------
-
-
-def _reader(rbsp: bytes) -> BitReader:
-    return BitReader(rbsp, codec="H264")
 
 
 def _more_rbsp_data(r: BitReader) -> bool:
@@ -122,7 +123,7 @@ def parse_sps(nalu: bytes) -> dict:
     """Parse a seq_parameter_set NAL unit (header byte included)."""
     if not nalu or (nalu[0] & 0x1F) != 7:
         raise ValueError("H264: not an SPS NAL unit")
-    r = _reader(ebsp_to_rbsp(nalu[1:]))
+    r = BitReader(ebsp_to_rbsp(nalu[1:]), codec="H264")
     profile = r.u(8)
     r.u(8)  # constraint flags + reserved
     level = r.u(8)
@@ -204,7 +205,7 @@ def parse_sps(nalu: bytes) -> dict:
 def parse_pps(nalu: bytes) -> dict:
     if not nalu or (nalu[0] & 0x1F) != 8:
         raise ValueError("H264: not a PPS NAL unit")
-    r = _reader(ebsp_to_rbsp(nalu[1:]))
+    r = BitReader(ebsp_to_rbsp(nalu[1:]), codec="H264")
     pps_id = r.ue()
     sps_id = r.ue()
     entropy = r.u(1)
@@ -488,7 +489,7 @@ def _read_vlc(r: BitReader, table: dict, what: str):
     code = ""
     maxlen = max(len(k) for k in table)
     while len(code) <= maxlen:
-        code += "1" if r.u(1) else "0"
+        code += "1" if r.bit() else "0"
         if code in table:
             return table[code]
     raise ValueError(f"H264: invalid {what} codeword {code!r}")
@@ -1698,7 +1699,7 @@ def decode_slice(sps: dict, pps: dict, nalu: bytes,
     nal_type = nalu[0] & 0x1F
     if nal_type not in (1, 5):
         raise ValueError(f"H264: NAL type {nal_type} is not a coded slice")
-    r = _reader(ebsp_to_rbsp(nalu[1:]))
+    r = BitReader(ebsp_to_rbsp(nalu[1:]), codec="H264")
     hdr = _parse_slice_header(r, sps, pps, nal_ref_idc, nal_type == 5)
     qp = hdr["qp"]
     fr = _Frame(sps)
@@ -1947,27 +1948,6 @@ def _write_slice_header(w: BitWriter, idr: bool,
         w.ue(1)  # disable_deblocking_filter_idc: OFF
 
 
-def _write_empty_dc_block_nc0(w: BitWriter) -> None:
-    w.u(0b1, 1)  # coeff_token TotalCoeff 0 (nC < 2)
-
-
-def _write_single_chroma_dc_block(w: BitWriter, level: int) -> None:
-    """One coefficient at scan position 0 of a 4-coeff chroma DC block
-    (nC == -1 table) — the flat-COLOR fixture's chroma path."""
-    if level == 0:
-        w.u(0b01, 2)  # coeff_token TotalCoeff 0 (chroma DC)
-        return
-    if abs(level) == 1:
-        w.u(0b1, 1)  # (T1=1, TC=1)
-        w.u(0 if level > 0 else 1, 1)
-    else:
-        w.u(0b000111, 6)  # (T1=0, TC=1)
-        lc = 2 * level - 2 if level > 0 else -2 * level - 1
-        lc -= 2  # first coeff after <3 trailing ones
-        _write_level_code(w, lc, 0)
-    w.u(0b1, 1)  # total_zeros == 0 (chroma DC, TotalCoeff 1)
-
-
 def _flat_chroma_dc_coeff(delta: int, qpc: int) -> int:
     """Chroma DC coefficient whose 2x2-Hadamard + dequant + DC-only
     inverse transform reconstructs EXACTLY ``delta`` on all four 4x4
@@ -2001,30 +1981,25 @@ def _write_level_code(w: BitWriter, lc: int, suffix_len: int) -> None:
     prefix>=16 escape ranges (levelCode += (1<<(prefix-3)) - 4096)."""
     if suffix_len == 0:
         if lc < 14:
-            w.u(0, lc)
-            w.u(1, 1)
+            w.u(1, lc + 1)  # lc zeros, then a 1
             return
         if lc < 30:
-            w.u(0, 14)
-            w.u(1, 1)
+            w.u(1, 14 + 1)  # 14 zeros, then a 1
             w.u(lc - 14, 4)
             return
         if lc < 30 + 4096:
-            w.u(0, 15)
-            w.u(1, 1)
+            w.u(1, 15 + 1)  # 15 zeros, then a 1
             w.u(lc - 30, 12)
             return
         base15 = 30
     else:
         prefix = lc >> suffix_len
         if prefix < 15:
-            w.u(0, prefix)
-            w.u(1, 1)
+            w.u(1, prefix + 1)  # prefix zeros, then a 1
             w.u(lc & ((1 << suffix_len) - 1), suffix_len)
             return
         if lc - (15 << suffix_len) < 4096:
-            w.u(0, 15)
-            w.u(1, 1)
+            w.u(1, 15 + 1)  # 15 zeros, then a 1
             w.u(lc - (15 << suffix_len), 12)
             return
         base15 = 15 << suffix_len
@@ -2034,30 +2009,10 @@ def _write_level_code(w: BitWriter, lc: int, suffix_len: int) -> None:
         if lc - base < (1 << (p - 3)):
             if lc < base:
                 break
-            w.u(0, p)
-            w.u(1, 1)
+            w.u(1, p + 1)  # p zeros, then a 1
             w.u(lc - base, p - 3)
             return
     raise ValueError(f"H264 encoder: levelCode {lc} unencodable")
-
-
-def _write_single_dc_block_nc0(w: BitWriter, level: int) -> None:
-    """One nonzero coefficient at scan position 0 of a 16-coeff block,
-    nC < 2 — the flat-DC fixture's only nontrivial CAVLC block."""
-    if level == 0:
-        _write_empty_dc_block_nc0(w)
-        return
-    if abs(level) == 1:
-        w.u(0b01, 2)  # coeff_token (T1=1, TC=1)
-        w.u(0 if level > 0 else 1, 1)  # trailing one sign
-    else:
-        w.u(0b000101, 6)  # coeff_token (T1=0, TC=1)
-        lc = 2 * level - 2 if level > 0 else -2 * level - 1
-        lc -= 2  # first coeff after <3 trailing ones adjustment
-        if lc < 0:
-            raise ValueError(f"H264 encoder: bad levelCode {lc}")
-        _write_level_code(w, lc, 0)
-    w.u(0b1, 1)  # total_zeros == 0 for TotalCoeff 1 (Table 9-7)
 
 
 def _flat_dc_coeff(delta: int, qp: int) -> int:
@@ -2124,12 +2079,12 @@ def encode_flat_i16_slice(value: int, mb_w: int, mb_h: int, qp: int,
             w.ue(0)  # intra_chroma_pred_mode: DC
             w.se(0)  # mb_qp_delta
             if first:
-                _write_single_dc_block_nc0(w, c0)
+                encode_residual_block_cavlc(w, [c0] + [0] * 15, 0)
                 if chroma_coded:  # Cb then Cr chroma DC blocks
-                    _write_single_chroma_dc_block(w, ccb)
-                    _write_single_chroma_dc_block(w, ccr)
+                    encode_residual_block_cavlc(w, [ccb, 0, 0, 0], -1)
+                    encode_residual_block_cavlc(w, [ccr, 0, 0, 0], -1)
             else:
-                _write_empty_dc_block_nc0(w)
+                encode_residual_block_cavlc(w, [0] * 16, 0)
     _rbsp_trailing(w)
     return _nal(0x65 if idr else 0x01, w.to_bytes())
 
@@ -2295,10 +2250,11 @@ def encode_p_slice(mbs: list, mb_w: int, mb_h: int, qp: int,
             for _ in range(16):
                 # every block carries TotalCoeff 1, so the in-picture
                 # nC chain stays 0/1 — always the nC<2 table
-                _write_single_dc_block_nc0(w, cy)
+                encode_residual_block_cavlc(w, [cy] + [0] * 15, 0)
         if cbp_c:
-            _write_single_chroma_dc_block(w, _flat_chroma_dc_coeff(dcb, qpc))
-            _write_single_chroma_dc_block(w, _flat_chroma_dc_coeff(dcr, qpc))
+            for d in (dcb, dcr):
+                c = _flat_chroma_dc_coeff(d, qpc)
+                encode_residual_block_cavlc(w, [c, 0, 0, 0], -1)
     if run:
         w.ue(run)  # trailing skip run
     _rbsp_trailing(w)

@@ -35,6 +35,12 @@ decoder reads them); this keeps the encoder free of the 162-entry
 Annex-K AC tables while staying bit-deterministic, which is what a
 fixture writer and an oracle-checked pipeline need.
 
+Bitstream: entropy bits go through operators/bitstream.py.  The T.81
+byte step is the only bitstream code here: FF00 unstuffing (any other
+FFxx inside entropy data is a marker and an error) as the shared
+reader's byte fetch, RSTn resynchronisation, and FF->FF00 stuffing with
+1-bit padding over the shared writer's bytes.
+
 Exactness anchor: at quality=100 every quant divisor is 1, and for a
 SOLID 8×8 block the FDCT is DC-only with an integer DC (8·(v−128)), so
 encode→decode of a solid-gray image is EXACT — the property the
@@ -176,10 +182,6 @@ def _entropy_byte(r: BitReader) -> int:
     return b
 
 
-def _entropy_reader(raw: bytes, pos: int) -> BitReader:
-    return BitReader(raw, pos, fetch=_entropy_byte)
-
-
 def _receive_extend(br: BitReader, size: int) -> int:
     """T.81 RECEIVE + EXTEND: size bits -> signed coefficient."""
     if size == 0:
@@ -191,10 +193,10 @@ def _receive_extend(br: BitReader, size: int) -> int:
 
 
 def _decode_symbol(br: BitReader, table: dict) -> int:
-    u, get = br.u, table.get
+    bit, get = br.bit, table.get
     code = 0
     for length in range(1, 17):
-        code = (code << 1) | u(1)
+        code = (code << 1) | bit()
         sym = get((length, code))
         if sym is not None:
             return sym
@@ -447,7 +449,7 @@ def jpeg_decode(raw: bytes) -> np.ndarray:
         for c in comps
     }
     preds = {c["id"]: 0 for c in comps}
-    br = _entropy_reader(raw, scan_pos)
+    br = BitReader(raw, scan_pos, fetch=_entropy_byte)
     n_rst = 0
     for mi in range(mcux * mcuy):
         if dri and mi and mi % dri == 0:
@@ -544,12 +546,12 @@ def _prog_ac_refine(br, ac_tab, coef, ss, se, al, eobrun: int) -> int:
                     raise ValueError(
                         "invalid coefficient magnitude in AC refinement"
                     )
-                val = p1 if br.u(1) else m1
+                val = p1 if br.bit() else m1
             # advance: correction bits on nonzero-history coefficients,
             # consume r zero-history slots
             while k <= se:
                 if coef[k] != 0:
-                    if br.u(1) and (coef[k] & p1) == 0:
+                    if br.bit() and (coef[k] & p1) == 0:
                         coef[k] += p1 if coef[k] >= 0 else m1
                 else:
                     if r == 0:
@@ -567,7 +569,7 @@ def _prog_ac_refine(br, ac_tab, coef, ss, se, al, eobrun: int) -> int:
         # this block is inside the EOB run: correction bits only
         while k <= se:
             if coef[k] != 0:
-                if br.u(1) and (coef[k] & p1) == 0:
+                if br.bit() and (coef[k] & p1) == 0:
                     coef[k] += p1 if coef[k] >= 0 else m1
             k += 1
         eobrun -= 1
@@ -708,7 +710,7 @@ def _prog_scan(
         raise ValueError(f"invalid spectral band {ss}..{se}")
     if ss > 0 and ns != 1:
         raise ValueError("progressive AC scans must be single-component")
-    br = _entropy_reader(raw, entropy_pos)
+    br = BitReader(raw, entropy_pos, fetch=_entropy_byte)
     n_rst = 0
     if ss == 0:
         # DC scan, interleaved over MCUs (or the single comp's grid)
@@ -747,7 +749,7 @@ def _prog_scan(
                     preds[c["id"]] = _prog_dc_first(
                         br, dc_tabs[td], coef, preds[c["id"]], al
                     )
-                elif br.u(1):
+                elif br.bit():
                     coef[0] |= 1 << al
     else:
         # AC scan: single component, non-interleaved block order
@@ -814,8 +816,7 @@ def _encode_block(
     size, bits = _mag(dc - pred)
     ln, code = dc_tab[size]
     bw.u(code, ln)
-    if size:
-        bw.u(bits, size)
+    bw.u(bits, size)
     if _encode_ac_runs(bw, ac_tab, coef[_ZZ][1:]):
         ln, code = ac_tab[0x00]  # EOB
         bw.u(code, ln)
@@ -933,7 +934,6 @@ def jpeg_encode(
     gray, samp, qsel, qy, qc, prepped, geo = _prep_planes(
         px, quality, subsample
     )
-    h, w = px.shape[:2]
     hmax, vmax, mcux, mcuy = geo
     nc = 1 if gray else 3
     out = _headers(

@@ -13,7 +13,9 @@ decoders' common-case scope):
   * Compression 1 (none), 32773 (PackBits), and 5 (TIFF-flavor LZW:
     MSB-first bit packing — the OPPOSITE order of GIF's — 9→12-bit
     codes with the spec's EarlyChange quirk: the code width bumps when
-    the table reaches 2^width − 1, one entry EARLIER than GIF).
+    the decoder's table reaches 2^width − 1 entries, one code EARLIER
+    than GIF).  The LZW codec is operators/bitstream.py's, shared with
+    GIF; TIFF passes 256 roots, MSB-first, EarlyChange 1.
   * Horizontal-differencing predictor (tag 317 = 2) for LZW strips.
   * PhotometricInterpretation 0 (WhiteIsZero, inverted gray) and 1.
   * Strip layout: StripOffsets/StripByteCounts/RowsPerStrip, each

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32
-threads, single JVM), but every config below is chosen so the same plans
-scale to a real multi-executor cluster at ~100 TB:
+Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+CPUs this process may run on; single JVM), but every config below is
+chosen so the same plans scale to a real multi-executor cluster at
+~100 TB:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join
   strategy switch) — at scale this is what rescues skewed shuffles.
@@ -29,7 +30,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the CPUs in this process's affinity
+    mask (a container's cpuset, not the host's core count)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def _input_bytes(path: str) -> int:

@@ -556,11 +556,13 @@ def _two_value_slice(a, b, qp, deblocking):
     w.ue(3)
     w.ue(0)
     w.se(0)
-    h264._write_single_dc_block_nc0(w, h264._flat_dc_coeff(a - 128, qp))
+    dc = h264._flat_dc_coeff(a - 128, qp)
+    encode_residual_block_cavlc(w, [dc] + [0] * 15, 0)
     w.ue(3)
     w.ue(0)
     w.se(0)
-    h264._write_single_dc_block_nc0(w, h264._flat_dc_coeff(b - a, qp))
+    dc = h264._flat_dc_coeff(b - a, qp)
+    encode_residual_block_cavlc(w, [dc] + [0] * 15, 0)
     h264._rbsp_trailing(w)
     return bytes([0x65]) + h264.rbsp_to_ebsp(w.to_bytes())
 
@@ -648,9 +650,9 @@ def test_chroma_ac_parse_order_cbp2():
         w.ue(11)  # I_16x16: pred DC(2), cbp_chroma 2, cbp_luma 0
         w.ue(0)   # chroma pred DC
         w.se(0)   # mb_qp_delta
-        h264._write_empty_dc_block_nc0(w)          # luma DC (16 coeffs)
-        h264._write_single_chroma_dc_block(w, 0)   # Cb DC (empty)
-        h264._write_single_chroma_dc_block(w, cr_dc)  # Cr DC
+        encode_residual_block_cavlc(w, [0] * 16, 0)  # luma DC (16 coeffs)
+        encode_residual_block_cavlc(w, [0] * 4, -1)  # Cb DC (empty)
+        encode_residual_block_cavlc(w, [cr_dc, 0, 0, 0], -1)  # Cr DC
         # EIGHT chroma AC blocks: Cb's four then Cr's four
         cb_ac0 = [0] * 15
         cb_ac0[0] = 6  # zigzag position 1 -> block (0, 1)

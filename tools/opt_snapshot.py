@@ -54,6 +54,7 @@ def main() -> None:
 
     from oracle_harness import _hash_rows
 
+    from imdb_top_250_etl_pipeline_spark.operators.pinning import pin_scope
     from imdb_top_250_etl_pipeline_spark.plans import QUERIES, SUBSUMED
     from imdb_top_250_etl_pipeline_spark.session import get_spark
 
@@ -74,8 +75,12 @@ def main() -> None:
             continue
         t0 = time.perf_counter()
         try:
-            df = fns[name](spark, args.sf_dir)
-            rows = [tuple(r) for r in df.collect()]
+            # each entry's pins are released when it has been collected,
+            # as bench.time_queries does: held for the whole sweep they
+            # fill executor storage and slow every later entry
+            with pin_scope():
+                df = fns[name](spark, args.sf_dir)
+                rows = [tuple(r) for r in df.collect()]
             h = _hash_rows([c.lower() for c in df.columns], rows)
             snap[name] = {
                 "rows": len(rows),

@@ -44,6 +44,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 def main() -> None:
     import duckdb
 
+    from imdb_top_250_etl_pipeline_spark.operators.pinning import pin_scope
     from imdb_top_250_etl_pipeline_spark.plans import (
         QUERIES,
         SHARDED_BATTERIES,
@@ -193,10 +194,13 @@ def main() -> None:
         sys.stderr.flush()
         _flush()
 
+    # one pin scope per query, as bench.time_queries: pins held across
+    # the sweep fill executor storage and slow every later query
     for name in sorted(all_q):
         if ONLY and not any(s in name for s in ONLY):
             continue
-        run_query(name, BUDGET)
+        with pin_scope():
+            run_query(name, BUDGET)
 
     # one automatic retry pass for budget timeouts at 4x: a legitimately
     # expensive oracle (extension_battery's ~60-branch UNION needs ~19
@@ -209,7 +213,8 @@ def main() -> None:
     ]
     for name in retry:
         sys.stderr.write(f"[RETRY x4 budget] {name}\n")
-        run_query(name, BUDGET * 4)
+        with pin_scope():
+            run_query(name, BUDGET * 4)
 
     _flush(final=True)
     green = all(r.get("hash_match") for r in oracle_res.values())
