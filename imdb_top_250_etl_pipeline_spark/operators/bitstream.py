@@ -247,9 +247,11 @@ def lzw_encode(
     byte zero-padded.  The encoder's table runs one entry ahead of the
     decoder's, so it widens at 2^width + 1 entries (plus
     ``early_change``) — the same code in the stream where the decoder
-    widens."""
+    widens.  GIF clears at the full 4096-entry table; TIFF at 4094,
+    where libtiff's writer clears (free_ent == CODE_MAX - 1)."""
     clear = roots
     first_width = roots.bit_length()
+    full = 4094 if early_change else 4096
     codes: list[int] = [clear]
     widths: list[int] = [first_width]
     width = first_width
@@ -270,7 +272,7 @@ def lzw_encode(
         next_code += 1
         if next_code + early_change == (1 << width) + 1 and width < 12:
             width += 1
-        if next_code + early_change == 4096:
+        if next_code == full:
             codes.append(clear)
             widths.append(width)
             table = {}

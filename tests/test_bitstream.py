@@ -135,3 +135,51 @@ def test_writer_matches_reader():
     w.u(0x1FF, 9)
     w.align()
     assert w.to_bytes() == bytes([0b10101101, 0b11110111, 0xFF, 0x80])
+
+
+# Table reset.  Every data code but the last adds one encoder entry, so
+# the encoder's next free code after data code n is 258 + n whatever the
+# input.  GIF clears when the table is full (next free code 4096, after
+# data code 3838); TIFF clears at 4094, libtiff's writer point
+# (free_ent == CODE_MAX - 1), after data code 3836.  Widths of data code
+# n, from the same decoder rule as above: GIF 9 bits up to n = 255, 10
+# from 256, 11 from 768, 12 from 1792; TIFF one code earlier (255, 767,
+# 1791).  The CLEAR is written at 12 bits and the count restarts after it.
+# flavour -> (first data code at 10, 11, 12 bits, index of the reset CLEAR)
+_RESET = {"gif": ((256, 768, 1792), 3839), "tiff": ((255, 767, 1791), 3837)}
+_LONG = bytes((i * i * 7 + i * 13 + (i >> 5)) & 0xFF for i in range(6000))
+
+
+def _reset_widths(flavour: str, n_codes: int) -> list[int]:
+    wider, reset = _RESET[flavour]
+    widths = [9]  # the leading CLEAR
+    n = 0  # data codes since the last CLEAR
+    while len(widths) < n_codes:
+        if n == reset - 1:  # the reset CLEAR: still 12 bits
+            widths.append(12)
+            n = 0
+            continue
+        n += 1
+        widths.append(9 + sum(n >= k for k in wider))
+    return widths
+
+
+@pytest.mark.parametrize("flavour", sorted(_RESET))
+def test_lzw_table_reset_clear_is_spec_index(flavour):
+    msb_first, early, _ = _FLAVOURS[flavour]
+    enc = lzw_encode(_LONG, 256, msb_first=msb_first, early_change=early)
+    reset = _RESET[flavour][1]
+    # enough codes to pass one reset and not reach a second; the END code
+    # is the last field, so count fields until the stream is consumed
+    n_codes = 1
+    while -(-sum(_reset_widths(flavour, n_codes)) // 8) < len(enc):
+        n_codes += 1
+    codes = _unpack(enc, _reset_widths(flavour, n_codes), msb_first)
+    assert reset < n_codes < 2 * reset
+    assert [i for i, c in enumerate(codes) if c == 256] == [0, reset]
+    assert codes[-1] == 257
+    raw = _pack(codes, _reset_widths(flavour, n_codes), msb_first)
+    assert raw == enc
+    got = lzw_decode(raw, len(_LONG), 256, msb_first=msb_first,
+                     early_change=early, what="hand stream")
+    assert got == _LONG

@@ -120,7 +120,7 @@ _GOLDEN = {
     "mp4_gray_dc16": "2e2def5a6751227835b1f7d162c8852fb4d83108cc16af645d60fdae5302da09",
     "mp4_gray_pcm": "735cff0bc3881d8e9ba81af30465f9641b3272d0b8cc92f3cb11dea16446ba9b",
     "mp4_pgop": "6723a38399938e79d8c287b9b10f7aabe9e52cff4d55b9e830ff3e95a4f0fe1f",
-    "tiff_lzw": "faa90fc780d30ea545ff68e1184c271bc806092fdca93fb5899b714416cea9db",
+    "tiff_lzw": "08ec62002b4a3e6599be52ed33e494a5398d287dd614f1949d467e09b97bce2e",
     "tiff_lzw_predictor": "7af170ad9a4033865fcfb68f52fe60003e0ec4530eb9c7dd802ad2b9f6b8712d",
 }
 

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Per-format codec timing, no Spark: min-of-N wall time of each fixture
+"""Per-format codec timing, no Spark: min-of-7 wall time of each fixture
 encoder and of its decoder on fixed inputs.
 
 Formats: JPEG baseline with restart markers, JPEG progressive, GIF,
@@ -18,12 +18,11 @@ the two alternately, one process each, on an otherwise idle host:
 
 then take the per-format minimum of each file.
 
-Usage: python tools/codec_timing.py [--runs 7]
+Usage: python tools/codec_timing.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -33,10 +32,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
+RUNS = 7
 
-def _best_ms(fn, runs: int) -> float:
+
+def _best_ms(fn) -> float:
     best = float("inf")
-    for _ in range(runs):
+    for _ in range(RUNS):
         t0 = time.perf_counter()
         fn()
         best = min(best, time.perf_counter() - t0)
@@ -76,15 +77,12 @@ def _formats():
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--runs", type=int, default=7)
-    args = ap.parse_args()
     out = {}
     for name, (encode, decode) in _formats().items():
         raw = encode()
         out[name] = {
-            "decode_ms": _best_ms(lambda: decode(raw), args.runs),
-            "encode_ms": _best_ms(encode, args.runs),
+            "decode_ms": _best_ms(lambda: decode(raw)),
+            "encode_ms": _best_ms(encode),
         }
     print(json.dumps(out))
 
