@@ -20,7 +20,8 @@ Layout:
                   IVF, hyperplane LSH), text.py (counts/quality/lang-id/
                   fingerprints), multimodal.py (JSON props, embedding
                   features, binary decode), udfs.py (mapInPandas parse+
-                  fetch, applyInPandas)
+                  fetch, applyInPandas), sizing.py (every task count,
+                  salt count and byte gate)
     plans/        named query registry (queries() + oracle_sql() twins)
     streaming/    Structured Streaming jobs (watermarked windows,
                   sessions, stateful dedup, foreachBatch merge)

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import sizing
+
 
 def funnel_steps(
     events: DataFrame,
@@ -313,13 +315,10 @@ def trending_topk(
     per = events.groupBy(
         F.window(ts_col, window).alias("w"), key_col
     ).agg(F.count("*").alias("n_events"))
-    # n_salts is sized from cluster layout, yet the RESULT is
-    # layout-independent: each key hashes to exactly ONE salt group, so
-    # any row in a window's true global top-k is also top-k within its
-    # (window, salt) group — phase 1 can never cut a survivor, for any
-    # salt count.  The salt only spreads phase-1 work; phase 2's real
-    # per-window rank is what selects.
-    n_salts = max(events.sparkSession.sparkContext.defaultParallelism, 8)
+    # each key hashes to ONE salt group, so any row of a window's global
+    # top-k is top-k within its (window, salt) group: phase 1 never cuts
+    # a survivor, whatever the salt count (operators/sizing.py)
+    n_salts = sizing.salts(events)
     salted = per.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salts))
     )

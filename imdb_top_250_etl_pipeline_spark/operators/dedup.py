@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import sizing
 from .pinning import eager_pin, pin
 
 # Mersenne prime 2^31-1: modulus for the minhash permutation family.
@@ -30,25 +31,6 @@ from .pinning import eager_pin, pin
 # long — the driver's vanilla session runs ANSI mode, where a silent
 # 64-bit wraparound would instead be a runtime ARITHMETIC_OVERFLOW error.
 _P = (1 << 31) - 1
-
-
-def plan_size_bytes(df: DataFrame) -> int | None:
-    """Optimized-logical-plan size estimate in bytes — a STATIC size
-    hint (no job, no action; the round-13 DSIR lesson forbids plan-time
-    probe jobs).  None when unavailable (Connect session).  Estimates
-    above joins/aggregates can inflate wildly — callers must clamp."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-
-
-# bytes of input that justify one spread task: these passes do heavy
-# per-byte expression work (shingling, hashing, signatures), so the
-# quantum errs small — but a KB-scale input must not fan to 2*cores
-# (round 14: at local[32] the fixed 64-way spread made every stage a
-# 64-task stage on ~10 KB partitions; the 8-core control beat 32 cores)
-_SPREAD_TASK_BYTES = 32 * 1024
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -60,21 +42,10 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     stage collapsed to 1 task).  An explicit count is a user demand AQE
     honors.  Use before interpreted/per-row-expensive passes whose input
     is small in bytes; harmless at scale where inputs arrive many-
-    partitioned anyway.
-
-    The count is SIZE-ADAPTIVE (round 14): 2*parallelism as before, but
-    never more than one task per ``_SPREAD_TASK_BYTES`` of the plan's
-    static byte estimate (floor 8) — a KB-scale input keeps real
-    per-task work instead of scheduling 64 near-empty tasks.  Inflated
-    estimates (joins) and unavailable stats degrade to the old fixed
-    count; at production scale the 2*parallelism clamp always wins.
-    Measured at sf0.1/local[32], min-of-4: simhash raw 3.55 → 2.40 s,
-    minhash raw 2.87 → 1.74 s, cosine dedup 3.99 → 3.40 s.
+    partitioned anyway.  The count is ``sizing.width`` with the spread
+    quantum (see operators/sizing.py).
     """
-    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    est = plan_size_bytes(df)
-    if est is not None:
-        n = max(8, min(n, -(-est // _SPREAD_TASK_BYTES)))
+    n = sizing.width(df, sizing.SPREAD_QUANTUM)
     return df.repartition(n, *[F.col(c) for c in cols])
 
 

@@ -484,20 +484,31 @@ def _validate_tables() -> None:
 _validate_tables()
 
 
-def _read_vlc(r: BitReader, table: dict, what: str):
-    """Match a prefix code from ``table`` (bitstring keys)."""
+def _vlc(codes) -> tuple[dict, int]:
+    """A prefix code as (codeword -> value, longest codeword length); a
+    list of codewords maps each one to its index."""
+    table = codes if isinstance(codes, dict) else {c: i for i, c in enumerate(codes)}
+    return table, max(map(len, table))
+
+
+# decoder views, built once
+_CT_CHROMA_DC_VLC, _CT_NC0_VLC, _CT_NC2_VLC, _CT_NC4_VLC = map(
+    _vlc, (_CT_CHROMA_DC, _CT_NC0, _CT_NC2, _CT_NC4)
+)
+_TZ_4x4_VLC = {tc: _vlc(c) for tc, c in _TZ_4x4.items()}
+_TZ_CHROMA_DC_VLC = {tc: _vlc(c) for tc, c in _TZ_CHROMA_DC.items()}
+_RUN_BEFORE_VLC = {zl: _vlc(c) for zl, c in _RUN_BEFORE.items()}
+
+
+def _read_vlc(r: BitReader, vlc: tuple[dict, int], what: str):
+    """Match a prefix code from ``vlc`` (a ``_vlc`` pair)."""
+    table, maxlen = vlc
     code = ""
-    maxlen = max(len(k) for k in table)
     while len(code) <= maxlen:
         code += "1" if r.bit() else "0"
         if code in table:
             return table[code]
     raise ValueError(f"H264: invalid {what} codeword {code!r}")
-
-
-def _read_list_vlc(r: BitReader, codes: list, what: str) -> int:
-    """Match a prefix code from ``codes``; returns its index."""
-    return _read_vlc(r, {c: i for i, c in enumerate(codes)}, what)
 
 # ---------------------------------------------------------------------------
 # CAVLC residual block decode (spec 9.2)
@@ -506,13 +517,13 @@ def _read_list_vlc(r: BitReader, codes: list, what: str) -> int:
 
 def _coeff_token(r: BitReader, nC: int):
     if nC == -1:
-        return _read_vlc(r, _CT_CHROMA_DC, "coeff_token(chromaDC)")
+        return _read_vlc(r, _CT_CHROMA_DC_VLC, "coeff_token(chromaDC)")
     if nC < 2:
-        return _read_vlc(r, _CT_NC0, "coeff_token(nC<2)")
+        return _read_vlc(r, _CT_NC0_VLC, "coeff_token(nC<2)")
     if nC < 4:
-        return _read_vlc(r, _CT_NC2, "coeff_token(2<=nC<4)")
+        return _read_vlc(r, _CT_NC2_VLC, "coeff_token(2<=nC<4)")
     if nC < 8:
-        return _read_vlc(r, _CT_NC4, "coeff_token(4<=nC<8)")
+        return _read_vlc(r, _CT_NC4_VLC, "coeff_token(4<=nC<8)")
     # nC >= 8: 6-bit FLC, xxxxyy = (TotalCoeff-1, TrailingOnes);
     # 000011 means TotalCoeff 0
     v = r.u(6)
@@ -573,9 +584,9 @@ def residual_block_cavlc(
     # total_zeros
     if total < max_coeff:
         if nC == -1:
-            tz = _read_list_vlc(r, _TZ_CHROMA_DC[total], "total_zeros(cdc)")
+            tz = _read_vlc(r, _TZ_CHROMA_DC_VLC[total], "total_zeros(cdc)")
         else:
-            tz = _read_list_vlc(r, _TZ_4x4[total], "total_zeros")
+            tz = _read_vlc(r, _TZ_4x4_VLC[total], "total_zeros")
     else:
         tz = 0
     if tz > max_coeff - total:
@@ -593,7 +604,7 @@ def residual_block_cavlc(
             else:
                 run = 7 + r.unary(25)
         elif zeros_left > 0:
-            run = _read_list_vlc(r, _RUN_BEFORE[zeros_left], "run_before")
+            run = _read_vlc(r, _RUN_BEFORE_VLC[zeros_left], "run_before")
         else:
             run = 0
         if run > zeros_left:

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import plan_size_bytes
+from . import sizing
 
 PROPS_SCHEMA = "k INT"
 
@@ -80,44 +80,14 @@ def quantized_embedding_features(
 
 # --- opaque binary modality -------------------------------------------------
 
-# per-Arrow-batch byte budget at the codec seam: the default ROW-counted
-# batching (maxRecordsPerBatch=10000) would materialize multi-GB batches
-# on a multi-MB-blob corpus regardless of partitioning
-_ARROW_BATCH_BYTES = 64 * 1024 * 1024
-
-# per-task byte quantum for the decode seam's widening fan-out: a
-# partition carrying less than this holds too little decode work to be
-# worth its Python worker launch (pure-stdlib codecs are CPU-heavy per
-# byte, so the quantum errs small)
-_SEAM_TASK_BYTES = 128 * 1024
-
-
-def _seam_width(df: DataFrame, par: int) -> int:
-    """Partition target for the codec seam's round-robin fan-out:
-    plan-estimated input bytes / ``_SEAM_TASK_BYTES``, clamped to
-    [1, 2*par].  The logical-plan size estimate is rough (fine — it
-    only sizes a fan-out; both clamps bound the damage) and reading it
-    plans nothing beyond the optimized logical plan, unlike the old
-    ``df.rdd.getNumPartitions()`` probe which built the physical plan
-    twice on chained seams.  No estimate available (Connect session)
-    falls back to the round-13 fixed ``2*par``."""
-    est = plan_size_bytes(df)
-    if est is None:
-        return 2 * par
-    return max(1, min(2 * par, -(-est // _SEAM_TASK_BYTES)))
-
 
 def widen_for_python(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition a below-parallelism input ahead of a Python seam,
-    with the fan-out SIZED from the plan's byte estimate (round 14):
-    Python workers parallelize per partition, so a 1-task input
-    serializes the seam — but every partition costs a worker round
-    trip, so tiny inputs must not fan to 2*parallelism either.  With
-    ``cols`` the repartition hashes on them (callers that feed keyed
-    aggregation downstream); keyless round-robin otherwise.  A no-op
-    when the input is already wide enough or too small to matter."""
-    spark = df.sparkSession
-    target = _seam_width(df, spark.sparkContext.defaultParallelism)
+    """Repartition a below-parallelism input ahead of a Python seam to
+    the seam width of operators/sizing.py.  With ``cols`` the
+    repartition hashes on them (callers that feed keyed aggregation
+    downstream); keyless round-robin otherwise.  A no-op when the input
+    is already wide enough or too small to matter."""
+    target = sizing.width(df, sizing.SEAM_QUANTUM, floor=1)
     if target > 1:
         try:
             n_in = df.rdd.getNumPartitions()
@@ -157,32 +127,23 @@ def _codec_map_in_pandas(
     to output tuples in ``schema`` order, run over Arrow batches by
     mapInPandas with the Arrow byte-batch cap enforced.
 
-    The 64 MiB ``spark.sql.execution.arrow.maxBytesPerBatch`` bound
-    must hold under ANY session (judge-r12: the tuned session.py
-    builder pins it, but the grading driver's vanilla session would
-    fall back to row-counted batching) — so every codec-seam operator
-    sets it here, on the session the DataFrame actually runs in.
-    Only tightens: a caller who pinned a smaller cap keeps it.
+    The ``sizing.ARROW_BATCH_CAP`` bound must hold under ANY session:
+    session.get_spark pins it, but a vanilla session falls back to
+    row-counted batching -- so every codec-seam operator sets it here,
+    on the session the DataFrame actually runs in.  Only tightens: a
+    caller who pinned a smaller cap keeps it.
     """
     spark = df.sparkSession
     key = "spark.sql.execution.arrow.maxBytesPerBatch"
     cur = spark.conf.get(key, None)
-    if cur is None or int(cur) > _ARROW_BATCH_BYTES:
-        spark.conf.set(key, str(_ARROW_BATCH_BYTES))
-    # Round-13 optimization (guide §2.5 input skew / §4 Python boundary):
+    if cur is None or int(cur) > sizing.ARROW_BATCH_CAP:
+        spark.conf.set(key, str(sizing.ARROW_BATCH_CAP))
     # Python workers parallelize per PARTITION, and blob fixtures arrive
-    # as one single-row-group parquet file — every decode was running
-    # serially in one worker while 31 cores idled.  Repartition before
-    # the seam ONLY when the incoming plan has fewer partitions than the
-    # cluster has slots (a 100 TB input arrives many-partitioned and is
-    # not shuffled); keyless round-robin is deterministic under Spark's
-    # sort-before-repartition and per-row codec output is order-free.
-    # Round-14 (guide §2.5 + judge r13): the fan-out is SIZED, not
-    # fixed — the old unconditional 2*par widened a few hundred KB of
-    # blobs to 64 partitions at local[32], paying ~60 Python worker
-    # launches for a decode that fits in a handful; target partitions
-    # now derive from the plan's byte estimate (one worker per
-    # ~128 KiB of input), clamped to the round-13 cap.
+    # as one single-row-group parquet file, so the seam widens a
+    # below-parallelism input (a 100 TB input arrives many-partitioned
+    # and is not shuffled); keyless round-robin is deterministic under
+    # Spark's sort-before-repartition and per-row codec output is
+    # order-free.
     return widen_for_python(df).mapInPandas(
         _row_batches(row, cols, schema.fieldNames()), schema
     )

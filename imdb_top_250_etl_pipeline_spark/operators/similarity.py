@@ -26,7 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .dedup import capped_band_pairs, plan_size_bytes, spread
+from . import sizing
+from .dedup import capped_band_pairs, spread
 from .pinning import eager_pin, pin
 
 
@@ -117,13 +118,6 @@ def brute_force_topk(
     return _two_phase_topk(scored, k, size_hint_df=corpus)
 
 
-# one-task top-k bound: when the CORPUS side of a scoring pass is
-# estimated under this many bytes, a single per-query window task holds
-# at most ~a million scored rows — no hot partition is possible and the
-# salting phase is pure overhead (an extra sort + exchange per query)
-_ONE_TASK_TOPK_BYTES = 256 * 1024 * 1024
-
-
 def _two_phase_topk(
     scored: DataFrame, k: int, size_hint_df: DataFrame | None = None
 ) -> DataFrame:
@@ -144,13 +138,12 @@ def _two_phase_topk(
     (query, salt) group — phase 1 can never cut a survivor, for any
     salt count (the trending_topk invariant).
 
-    ``size_hint_df`` (round 14): callers pass the CORPUS-side relation
-    (per-query scored volume is bounded by it); when its static plan
-    estimate is small enough that one task can hold a whole query's
-    rows, the salting phase is skipped — the identical result (the
-    invariant above, fuzz-pinned) through one window pass instead of
-    two.  No hint, or an estimate past the bound, keeps the salted
-    production shape.
+    ``size_hint_df``: callers pass the CORPUS-side relation (per-query
+    scored volume is bounded by it); when ``sizing.fits_one_task`` says
+    one task can hold a whole query's rows, the salting phase is
+    skipped -- the identical result (the invariant above, fuzz-pinned)
+    through one window pass instead of two.  No hint keeps the salted
+    production shape.  The salt count is ``sizing.salts``.
     """
     w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     rank_k = lambda df: (  # noqa: E731
@@ -158,10 +151,9 @@ def _two_phase_topk(
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
     )
-    hint = plan_size_bytes(size_hint_df) if size_hint_df is not None else None
-    if hint is not None and hint < _ONE_TASK_TOPK_BYTES:
+    if size_hint_df is not None and sizing.fits_one_task(size_hint_df):
         return rank_k(scored)
-    n_salts = max(scored.sparkSession.sparkContext.defaultParallelism, 8)
+    n_salts = sizing.salts(scored)
     salted = scored.withColumn(
         "salt", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(n_salts))
     )
@@ -1156,7 +1148,7 @@ def brute_force_topk_arrow(
     """
     spark = corpus.sparkSession
     if n_groups is None:
-        n_groups = max(spark.sparkContext.defaultParallelism * 2, 8)
+        n_groups = sizing.width(corpus)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("nvec"),

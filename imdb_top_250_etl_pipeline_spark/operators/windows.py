@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import sizing
 from .pinning import eager_pin
 
 
@@ -79,7 +80,7 @@ def grouped_row_number(
     """
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     gcols = [F.col(c) for c in group_cols]
-    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    n = sizing.width(df)
     parted = _pin_partition_ids(df.repartitionByRange(n, *gcols, *ocols))
     cell = W.partitionBy("_pid", *group_cols).orderBy(*ocols)
     local = parted.withColumn("_local_rn", F.row_number().over(cell))
@@ -130,7 +131,7 @@ def distributed_cumsum(
     if len(vcols) != len(outs):
         raise ValueError("value_col and out_col lengths differ")
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    n = sizing.width(df)
     parted = _pin_partition_ids(df.repartitionByRange(n, *ocols))
     cell = (
         W.partitionBy("_pid")
@@ -198,7 +199,7 @@ def grouped_cumsum(
     """
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     gcols = [F.col(c) for c in group_cols]
-    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    n = sizing.width(df)
     parted = _pin_partition_ids(df.repartitionByRange(n, *gcols, *ocols))
     cell = (
         W.partitionBy("_pid", *group_cols)
@@ -259,7 +260,7 @@ def distributed_prev_max(
     pinned in executor storage for the session.
     """
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    n = sizing.width(df)
     parted = _pin_partition_ids(df.repartitionByRange(n, *ocols))
     cell = (
         W.partitionBy("_pid")

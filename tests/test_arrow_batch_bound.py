@@ -79,10 +79,10 @@ def test_codec_seam_sets_cap_under_vanilla_session(spark):
     _codec_map_in_pandas.  Simulated here by unsetting the conf (the
     vanilla-session state) and invoking a seam operator."""
     from imdb_top_250_etl_pipeline_spark.operators.multimodal import (
-        _ARROW_BATCH_BYTES,
         decode_blobs,
         synthesize_blobs,
     )
+    from imdb_top_250_etl_pipeline_spark.operators.sizing import ARROW_BATCH_CAP
 
     key = "spark.sql.execution.arrow.maxBytesPerBatch"
     old = spark.conf.get(key, None)
@@ -93,7 +93,7 @@ def test_codec_seam_sets_cap_under_vanilla_session(spark):
         )
         out = decode_blobs(synthesize_blobs(docs, "text", "doc_id"))
         assert out.count() == 4
-        assert int(spark.conf.get(key)) == _ARROW_BATCH_BYTES
+        assert int(spark.conf.get(key)) == ARROW_BATCH_CAP
         # a session already pinned TIGHTER keeps its own cap
         spark.conf.set(key, str(1 << 20))
         decode_blobs(synthesize_blobs(docs, "text", "doc_id")).count()
@@ -111,19 +111,22 @@ def test_seam_width_sized_from_plan_bytes(spark):
     round-13 fixed fan paid ~60 Python worker launches for a decode
     that fits in a handful), while a byte-heavy plan clamps at the
     round-13 cap."""
-    from imdb_top_250_etl_pipeline_spark.operators.multimodal import (
-        _SEAM_TASK_BYTES,
-        _seam_width,
+    from imdb_top_250_etl_pipeline_spark.operators.sizing import (
+        SEAM_QUANTUM,
+        width,
     )
+
+    def seam_width(df):
+        return width(df, SEAM_QUANTUM, floor=1)
 
     par = spark.sparkContext.defaultParallelism
     # tiny: well under one quantum -> 1 (no fan-out, no exchange)
     tiny = spark.range(4).selectExpr("id", "repeat('x', 8) AS s")
-    assert _seam_width(tiny, par) == 1
+    assert seam_width(tiny) == 1
     # byte-heavy: far over 2*par quanta -> clamped to exactly 2*par
     # (plan stats size strings by defaultSize ~20B/row, so drive the
     # estimate with row count: 2*par quanta need ~par*10_000 rows)
-    wide = spark.range(par * _SEAM_TASK_BYTES).selectExpr(
+    wide = spark.range(par * SEAM_QUANTUM).selectExpr(
         "id", "repeat('x', 64) AS s"
     )
-    assert _seam_width(wide, par) == 2 * par
+    assert seam_width(wide) == 2 * par
