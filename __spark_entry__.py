@@ -24,25 +24,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["flagship_top_customers"].fn(spark, "/root/testdata/sf0.001")
 
 
-# Rolling pin-release for the driver's 50-query session (round 14).
-#
-# Many queries materialize intermediates via eager localCheckpoint (the
-# package's pin discipline).  The grading driver runs every queries()
-# entry in ONE vanilla session with no ambient pinning.pin_scope, so
-# each query's blocks leaked until session end — 50 queries deep, the
-# executor storage holds every dead block ever pinned (bench.py fixed
-# the same hazard for itself in round 13; a GC-pressure flake from
-# exactly this was observed in a driver-style verify run this round).
-#
-# pinning.rolling_pin_scope gives each query build its own scope and
-# frees it a few builds later.  A sequential caller (build -> collect
-# -> next, the contract the verify recipe mirrors) has consumed those
-# results long ago; nothing is cached and nothing is computed early.
+# Each query's pins live until that query is built again: a consumer
+# may build every entry first and collect afterwards, or use threads.
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: pinning.rolling_pin_scope(q.fn) for name, q in QUERIES.items()}
+    return {name: pinning.latest_pin_scope(name, q.fn) for name, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -15,7 +15,9 @@ pipeline that calls these operators repeatedly therefore accumulates
 dead blocks until the session dies — the one cluster-reliability gap
 the round-6 audit left open.
 
-This module closes it with an ambient-scope pattern:
+This module closes it with one lifetime rule: a pin belongs to the
+innermost open scope of the thread that took it, and lives until that
+scope is released.
 
 * ``pin(df)`` — localCheckpoint + return ``(pinned_df, PinHandle)``.
   The handle releases exactly the blocks that checkpoint created
@@ -23,11 +25,13 @@ This module closes it with an ambient-scope pattern:
   call).  Iterative operators use this to free round N-1's blocks as
   soon as round N has materialized.
 * ``eager_pin(df)`` — ``pin`` without exposing the handle; the pin is
-  still registered with the innermost active ``pin_scope`` (if any),
+  still filed under its thread's innermost ``pin_scope`` (if any),
   which releases it when the scope closes.
 * ``pin_scope()`` — context manager for pipeline authors: every pin
-  taken inside the ``with`` block (by ANY operator in this package)
-  is unpersisted on exit, idempotently.  The 100 TB composition
+  taken inside the ``with`` block on this thread (by ANY operator in
+  this package) is unpersisted on exit, idempotently.  Scopes stack
+  per thread, so a scope another thread opens or closes meanwhile
+  never adopts or frees this thread's pins.  The 100 TB composition
   pattern::
 
       with pin_scope():
@@ -35,10 +39,13 @@ This module closes it with an ambient-scope pattern:
           groups.write.parquet(out)    # consume INSIDE the scope
       # all checkpoint blocks freed here
 
-* ``rolling_pin_scope(fn)`` — for a consumer that cannot open a
+* ``latest_pin_scope(name, fn)`` — for a consumer that cannot open a
   ``with`` block around its use of a result (the ``queries()`` adapter
-  in ``__spark_entry__.py``): each build gets a scope that is released
-  a fixed number of builds later.
+  in ``__spark_entry__.py``): each build of ``name`` runs in its own
+  scope, which is released when ``name`` is built again.  A consumer
+  may build any number of other queries ahead, or on other threads,
+  and still collect every result; what stays pinned is bounded by one
+  scope per name.
 
 CONTRACT: a pinned DataFrame is executor-storage-backed and cannot be
 recomputed once released (lineage is truncated at the checkpoint —
@@ -46,9 +53,10 @@ Spark raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).  Consume results
 before the scope closes / the handle releases.  Release is
 best-effort and never raises: a stopped context or a Connect session
 (no JVM handle) degrades to a no-op, matching the pre-handle
-behavior.  Pin attribution serializes concurrent pins through a lock;
-the id-diff is exact for the single-driver-thread usage every
-operator here has.
+behavior.  The persistent-id diff in ``pin``, a handle's release and
+the name swap in ``latest_pin_scope`` serialize through one lock.  A
+callback that Spark runs on its own thread (a ``foreachBatch`` body
+runs on a Py4J thread) has no scope unless it opens one.
 
 On a real cluster, prefer reliable ``checkpoint()`` (HDFS-backed,
 survives executor loss) for the iterative operators.  That swap is ONE
@@ -66,7 +74,6 @@ import os
 import shutil
 import threading
 import uuid
-from collections import deque
 from collections.abc import Callable
 from contextlib import contextmanager
 from typing import Iterator
@@ -74,10 +81,17 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.RLock()
-_SCOPES: list["_PinScope"] = []
-# scopes of finished rolling_pin_scope builds, oldest first
-_RETIRED: deque["_PinScope"] = deque()
-_KEEP_PRIOR = 2
+# each query name's latest build scope (latest_pin_scope)
+_LATEST: dict[str, "_PinScope"] = {}
+
+
+class _ThreadScopes(threading.local):
+    def __init__(self) -> None:
+        # this thread's open scopes, innermost last
+        self.stack: list[_PinScope] = []
+
+
+_OPEN = _ThreadScopes()
 
 
 def _persistent_ids(sc) -> set[int]:
@@ -195,38 +209,33 @@ class _PinScope:
             shutil.rmtree(self.reliable_dir, ignore_errors=True)
 
 
-def rolling_pin_scope(
-    fn: Callable[[SparkSession, str], DataFrame],
+def latest_pin_scope(
+    name: str, fn: Callable[[SparkSession, str], DataFrame]
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """Wrap a query build so each call gets its own pin scope.
+    """Wrap query ``name``'s build so its pins live until ``name`` is
+    built again.
 
-    For a consumer that builds a query, collects it and moves on (all
-    50 ``queries()`` entries in one session) with no ambient
-    ``pin_scope``.
-    Each call's scope retires when the build returns; a call first
-    releases the scopes retired more than ``_KEEP_PRIOR`` calls ago, so
-    the results of the two most recent prior builds stay consumable
-    while older ones stop holding executor storage.  The retire queue
-    only changes under ``_LOCK``.
+    Each call builds in its own scope.  A build that returns makes its
+    scope ``name``'s latest and releases the previous one; a build that
+    raises releases its own scope and leaves the previous result of
+    ``name`` consumable.
     """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        with _LOCK:
-            stale = [
-                _RETIRED.popleft()
-                for _ in range(len(_RETIRED) - _KEEP_PRIOR)
-            ]
-        for old in stale:
-            old.release()
         scope = _PinScope()
-        with _LOCK:
-            _SCOPES.append(scope)
+        _OPEN.stack.append(scope)
         try:
-            return fn(spark, sf_dir)
+            out = fn(spark, sf_dir)
+        except BaseException:
+            scope.release()
+            raise
         finally:
-            with _LOCK:
-                _SCOPES.remove(scope)
-                _RETIRED.append(scope)
+            _OPEN.stack.pop()
+        with _LOCK:
+            prev, _LATEST[name] = _LATEST.get(name), scope
+        if prev is not None:
+            prev.release()
+        return out
 
     return run
 
@@ -245,23 +254,20 @@ def pin_scope(reliable_dir: str | None = None) -> Iterator[_PinScope]:
     scope deletes its checkpoint subdirectory on exit.
     """
     scope = _PinScope(reliable_dir)
-    with _LOCK:
-        _SCOPES.append(scope)
+    _OPEN.stack.append(scope)
     try:
         yield scope
     finally:
-        with _LOCK:
-            _SCOPES.remove(scope)
+        _OPEN.stack.pop()
         scope.release()
 
 
 def pin(df: DataFrame) -> tuple[DataFrame, PinHandle]:
     """Eager localCheckpoint with a release handle.
 
-    The handle is ALSO registered with the innermost active
-    ``pin_scope`` so a caller that forgets (or an exception path that
-    skips) the explicit release is still covered; double release is a
-    no-op.
+    The handle is ALSO registered with this thread's innermost open
+    scope so a caller that forgets (or an exception path that skips)
+    the explicit release is still covered; double release is a no-op.
     """
     try:
         sc = df.sparkSession.sparkContext
@@ -269,8 +275,9 @@ def pin(df: DataFrame) -> tuple[DataFrame, PinHandle]:
         # Connect session: no JVM-side tracking possible; keep the
         # pre-handle behavior and hand back an inert handle
         return df.localCheckpoint(eager=True), PinHandle()
+    stack = _OPEN.stack
+    scope = stack[-1] if stack else None
     with _LOCK:
-        scope = _SCOPES[-1] if _SCOPES else None
         reliable = scope is not None and scope.reliable_dir is not None
         if reliable:
             scope._ensure_checkpoint_dir(sc)
@@ -289,8 +296,8 @@ def pin(df: DataFrame) -> tuple[DataFrame, PinHandle]:
 
 def eager_pin(df: DataFrame) -> DataFrame:
     """``pin`` for call sites that hand their result to the caller:
-    the blocks live until the ambient ``pin_scope`` (if any) closes —
-    exactly the old ``localCheckpoint(eager=True)`` behavior when no
-    scope is active."""
+    the blocks live until this thread's innermost scope (if any)
+    closes — exactly the old ``localCheckpoint(eager=True)`` behavior
+    when no scope is open."""
     out, _ = pin(df)
     return out

@@ -1111,93 +1111,3 @@ def pq_refine_topk(
             F.col("rank").cast("int").alias("rank"),
         )
     )
-
-
-COSINE_TOPK_SCHEMA = (
-    "query_id long, neighbor_id long, cos_sim double"
-)
-
-
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_groups: int | None = None,
-) -> DataFrame:
-    """Exact cosine top-k via blocked BLAS matmul — the Arrow-batched
-    alternative to brute_force_topk's codegen expression path.
-
-    Shape: the corpus hashes into ``n_groups`` blocks; the (broadcast-
-    small) query set replicates to every block via a range cross join —
-    NO driver collect, the replication is a plan edge.  Each cogroup
-    lands in ONE pandas call as two Arrow frames, where a single
-    ``queries @ block.T`` matmul scores the whole block (numpy dispatches
-    to the platform BLAS) and a partial argsort keeps the block-local
-    top-k.  The survivors (≤ k·n_groups per query) take one tiny global
-    window.  Scoring work is identical to the expression path; the win
-    is vectorization — one GEMM per block instead of one interpreted
-    aggregate-fold per (query, vector) pair.
-
-    Float caveat: BLAS sums in a different association order than the
-    expression fold, so scores can differ in the last ulps and tie-
-    breaks at equal similarity may pick a different neighbor — this is
-    the measured-performance path; the registered oracle query stays on
-    the deterministic expression form.
-    """
-    spark = corpus.sparkSession
-    if n_groups is None:
-        n_groups = sizing.width(corpus)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)).alias("_g"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).crossJoin(spark.range(n_groups).select(F.col("id").alias("_g")))
-
-    def score(key, cpdf, qpdf):
-        import numpy as np
-        import pandas as pd
-
-        if cpdf.empty or qpdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            )
-        cm = np.stack(cpdf["nvec"].to_numpy()).astype(np.float64)
-        qm = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-        cn = np.linalg.norm(cm, axis=1)
-        qn = np.linalg.norm(qm, axis=1)
-        sims = (qm @ cm.T) / (qn[:, None] * cn[None, :])
-        nid = cpdf["neighbor_id"].to_numpy()
-        qid = qpdf["query_id"].to_numpy()
-        sims[nid[None, :] == qid[:, None]] = -np.inf  # self-matches
-        kk = min(k, sims.shape[1])
-        # partial selection then exact ordering of just the survivors
-        idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-        rows = {"query_id": [], "neighbor_id": [], "cos_sim": []}
-        for r in range(sims.shape[0]):
-            cols = idx[r]
-            for c_ in cols:
-                s = sims[r, c_]
-                if s != -np.inf:
-                    rows["query_id"].append(int(qid[r]))
-                    rows["neighbor_id"].append(int(nid[c_]))
-                    rows["cos_sim"].append(float(s))
-        return pd.DataFrame(rows)
-
-    partial = (
-        c.groupBy("_g")
-        .cogroup(q.groupBy("_g"))
-        .applyInPandas(score, schema=COSINE_TOPK_SCHEMA)
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("rank")
-    )

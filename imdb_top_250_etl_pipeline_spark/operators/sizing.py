@@ -7,8 +7,7 @@ job).  The estimate can inflate by orders of magnitude above joins and
 is missing on a Connect session, so a count that reads it is clamped to
 the parallelism count, which always wins at production scale.
 
-- ``width(df)``, ``max(2*par, 8)``: windows.py's range repartitions and
-  similarity.brute_force_topk_arrow's blocks.
+- ``width(df)``, ``max(2*par, 8)``: windows.py's range repartitions.
 - ``width(df, SPREAD_QUANTUM)``, dedup.spread: one task per 32 KiB ahead
   of per-row-expensive passes (shingling, hashing), floor 8.  At local[32]
   the fixed 64-way spread lost to an 8-core control (sf0.1, min-of-4:
@@ -25,9 +24,10 @@ the parallelism count, which always wins at production scale.
   back into ~2 splits) when the input holds 2 MiB per split.  Byte-small
   CPU-dense corpora would otherwise scan one task per file; ungated, the
   floor scheduled near-empty splits of every small fixture file.
-  ``session.get_spark`` probes ``$SPARK_GRAFT_SF_DIR`` once, at session
-  build: a query later handed another ``sf_dir`` keeps the session's
-  floor, and perfbench sets the variable before the session starts.
+  ``session.get_spark`` probes ``$SPARK_GRAFT_SF_DIR`` on each call and
+  sets or clears the floor: a query later handed another ``sf_dir``
+  keeps the session's floor, and perfbench sets the variable before the
+  session starts.
 - ``ARROW_BATCH_CAP``: 64 MiB per Arrow batch into Python; the default
   row-counted batching hands a worker multi-GB batches of large blobs.
 """
@@ -94,8 +94,13 @@ def path_bytes(spark: SparkSession, path: str) -> int:
 
 def scan_floor(spark: SparkSession, cpus: int, path: str) -> None:
     """Set the scan-split floor on ``spark`` when ``path`` holds at
-    least ``SPLIT_BYTES`` per wanted split."""
+    least ``SPLIT_BYTES`` per wanted split, and clear it otherwise (a
+    reused session may carry an earlier, larger dir's floor)."""
     splits = 2 * cpus
+    keys = ("spark.sql.files.minPartitionNum", "spark.sql.files.openCostInBytes")
     if path_bytes(spark, path) >= splits * SPLIT_BYTES:
-        spark.conf.set("spark.sql.files.minPartitionNum", str(splits))
-        spark.conf.set("spark.sql.files.openCostInBytes", str(OPEN_COST_BYTES))
+        for key, value in zip(keys, (splits, OPEN_COST_BYTES)):
+            spark.conf.set(key, str(value))
+    else:
+        for key in keys:
+            spark.conf.unset(key)

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .dedup import spread
+from .dedup import spread, tokens
 
 # Minimal deterministic marker lexicons for the language-ID heuristic.
 # Real language ID uses char n-gram profiles; the operator shape (score
@@ -30,11 +30,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 _BPE_ISH = r"[a-z]+|[0-9]|[^a-z0-9\s]"
-
-
-def tokens(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, " ")
 
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:

@@ -932,8 +932,8 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("part", F.lit("pushdown"))
         )
 
-        return full.unionByName(par).unionByName(pushed).localCheckpoint(
-            eager=True
-        )
+        from ..operators.pinning import eager_pin
+
+        return eager_pin(full.unionByName(par).unionByName(pushed))
     finally:
         shutil.rmtree(path, ignore_errors=True)

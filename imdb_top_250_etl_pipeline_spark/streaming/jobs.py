@@ -581,6 +581,7 @@ def stream_near_dup_ingest(
         build_minhash_index,
         minhash_probe_incremental,
     )
+    from ..operators.pinning import pin_scope
     from ..sources.txn import txn_append, txn_read
 
     sh_table = os.path.join(index_dir, "shingles")
@@ -588,51 +589,54 @@ def stream_near_dup_ingest(
     dup_table = os.path.join(index_dir, "dups")
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        b = batch.select(id_col, text_col)
-        new_index = build_minhash_index(
-            b, text_col, id_col, n_shingle, k, bands
-        )
-        try:
-            existing = MinhashIndex(
-                txn_read(spark, sh_table), txn_read(spark, bk_table)
+        # foreachBatch calls back on a Py4J thread, which has no scope
+        # of its own: the batch owns its pins and frees them at its end
+        with pin_scope():
+            spark = batch.sparkSession
+            b = batch.select(id_col, text_col)
+            new_index = build_minhash_index(
+                b, text_col, id_col, n_shingle, k, bands
             )
-            cross = minhash_probe_incremental(
-                existing, b, text_col, id_col, n_shingle, k, bands,
+            try:
+                existing = MinhashIndex(
+                    txn_read(spark, sh_table), txn_read(spark, bk_table)
+                )
+                cross = minhash_probe_incremental(
+                    existing, b, text_col, id_col, n_shingle, k, bands,
+                    jaccard_threshold, new_index=new_index,
+                )
+            except FileNotFoundError:
+                cross = None  # first batch: nothing indexed yet
+            within = minhash_probe_incremental(
+                new_index, b, text_col, id_col, n_shingle, k, bands,
                 jaccard_threshold, new_index=new_index,
+            ).where(F.col("new_id") > F.col("existing_id"))
+            dups = within if cross is None else cross.unionByName(within)
+            dups = dups.select(
+                "new_id", "existing_id", "jaccard",
+                F.lit(batch_id).cast("long").alias("batch_id"),
             )
-        except FileNotFoundError:
-            cross = None  # first batch: nothing indexed yet
-        within = minhash_probe_incremental(
-            new_index, b, text_col, id_col, n_shingle, k, bands,
-            jaccard_threshold, new_index=new_index,
-        ).where(F.col("new_id") > F.col("existing_id"))
-        dups = within if cross is None else cross.unionByName(within)
-        dups = dups.select(
-            "new_id", "existing_id", "jaccard",
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        )
-        txn_append(
-            dups, dup_table, key="new_id",
-            app_txn=(f"{app_id}-dups", batch_id),
-        )
-        if index_duplicates:
-            accepted_sh = new_index.shingles
-            accepted_bk = new_index.buckets
-        else:
-            flagged = dups.select(F.col("new_id").alias(id_col)).distinct()
-            accepted_sh = new_index.shingles.join(
-                flagged, id_col, "left_anti"
+            txn_append(
+                dups, dup_table, key="new_id",
+                app_txn=(f"{app_id}-dups", batch_id),
             )
-            accepted_bk = new_index.buckets.join(flagged, id_col, "left_anti")
-        txn_append(
-            accepted_sh, sh_table, key=id_col,
-            app_txn=(f"{app_id}-sh", batch_id),
-        )
-        txn_append(
-            accepted_bk, bk_table, key=id_col,
-            app_txn=(f"{app_id}-bk", batch_id),
-        )
+            if index_duplicates:
+                accepted_sh = new_index.shingles
+                accepted_bk = new_index.buckets
+            else:
+                flagged = dups.select(F.col("new_id").alias(id_col)).distinct()
+                accepted_sh = new_index.shingles.join(
+                    flagged, id_col, "left_anti"
+                )
+                accepted_bk = new_index.buckets.join(flagged, id_col, "left_anti")
+            txn_append(
+                accepted_sh, sh_table, key=id_col,
+                app_txn=(f"{app_id}-sh", batch_id),
+            )
+            txn_append(
+                accepted_bk, bk_table, key=id_col,
+                app_txn=(f"{app_id}-bk", batch_id),
+            )
 
     return docs.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_path

@@ -1621,49 +1621,6 @@ def test_containment_finds_quotes_jaccard_misses(spark):
     )
 
 
-def test_arrow_blas_topk_matches_expression_path(spark, emb):
-    import time
-
-    import pyspark.sql.functions as F
-
-    from imdb_top_250_etl_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_arrow,
-    )
-    from imdb_top_250_etl_pipeline_spark.sources import load
-
-    e = load(spark, SF_SMOKE, "embeddings")
-    queries = e.where(F.col("vec_id") % 50 == 0)
-    t0 = time.perf_counter()
-    expr = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(e, queries, k=5).collect()
-    }
-    t_expr = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    blas_rows = brute_force_topk_arrow(e, queries, k=5).collect()
-    t_blas = time.perf_counter() - t0
-    print(f"\ncosine topk sf0.001: expression {t_expr:.2f}s, BLAS {t_blas:.2f}s")
-    blas = {(r.query_id, r.neighbor_id) for r in blas_rows}
-    # same (query, neighbor) sets — fixture scores are distinct enough
-    # that last-ulp BLAS reassociation cannot flip any k-boundary
-    assert blas == expr
-    # BLAS scores match an exact numpy recompute
-    ids, mat = emb
-    norms = __import__("numpy").linalg.norm(mat, axis=1)
-    pos = {int(i): j for j, i in enumerate(ids)}
-    for r in blas_rows:
-        qi, ni = pos[r.query_id], pos[r.neighbor_id]
-        exact = float(mat[qi] @ mat[ni] / (norms[qi] * norms[ni]))
-        assert abs(r.cos_sim - exact) < 1e-12, (r, exact)
-    # every query answered with exactly k neighbors, no self-matches
-    from collections import Counter
-
-    per_q = Counter(q for q, _ in blas)
-    assert all(v == 5 for v in per_q.values())
-    assert all(q != n for q, n in blas)
-
-
 def test_gopher_rules_hand_fixture(spark):
     import pyspark.sql.functions as F
 

@@ -1,17 +1,22 @@
 """Lifecycle tests for the localCheckpoint pin handles (operators/
 pinning.py): every eager-pinned operator's executor-storage blocks must
 be releasable — ``pin_scope`` frees them on exit, and the iterative
-operators free round N-1 as soon as round N materializes.
+operators free round N-1 as soon as round N materializes.  Scopes stack
+per thread, and the entry adapter keeps each query's pins until that
+query is built again.
 """
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from imdb_top_250_etl_pipeline_spark.operators.pinning import (
     _persistent_ids,
     pin,
     pin_scope,
 )
+
+from .conftest import SF_SMOKE
 
 
 def _ids(spark):
@@ -294,87 +299,171 @@ def test_pin_scope_reliable_mode_is_scoped(spark, tmp_path):
     handle.release()
 
 
-def test_entry_queries_roll_pin_release(spark, monkeypatch):
-    """Round-14: the driver adapter wraps each queries() entry in its
-    own pin scope and retires scopes from builds >= 3 invocations ago —
-    a 50-query vanilla-session run must not accumulate every query's
-    dead localCheckpoint blocks (the hazard bench.py fixed for itself
-    in round 13).  Sequential build->consume->next stays correct, and
-    the pinned-RDD count stays bounded instead of growing per query."""
-    monkeypatch.syspath_prepend(".")
-    import __spark_entry__ as mod
+# pin-backed queries() entries: each build takes at least one eager pin
+ENTRY_NAMES = [
+    "dedup_embedding_cosine",
+    "dedup_minhash_candidates",
+    "dedup_pairs_battery",
+    "etl_bridges",
+    "etl_full_pipeline",
+    "etl_movies_surrogate_keys",
+    "etl_normalize_people",
+    "sample_stratified",
+    "sim_topk_battery",
+    "sink_managed_table",
+    "sink_parquet_roundtrip",
+    "window_events_battery",
+]
+
+
+@pytest.fixture
+def latest(monkeypatch):
+    """A fresh name -> latest-build map for the entry adapter; every
+    scope left in it is released afterwards, so no pin outlives the
+    test."""
     from imdb_top_250_etl_pipeline_spark.operators import pinning
-    from imdb_top_250_etl_pipeline_spark.operators.pinning import (
-        pinned_rdd_count,
-    )
+
+    monkeypatch.setattr(pinning, "_LATEST", {})
+    yield pinning._LATEST
+    for scope in pinning._LATEST.values():
+        scope.release()
+
+
+def test_entry_queries_survive_build_ahead(spark, latest):
+    """A consumer may build every entry before it collects any: a pin
+    lives until its own query is rebuilt, however many other queries
+    were built in between."""
+    import __spark_entry__ as mod
 
     qs = mod.queries()
-    # pick pin-heavy entries; run several times to exceed the keep window
-    names = [
-        "dedup_pairs_battery",
-        "dedup_minhash_candidates",
-        "dedup_embedding_cosine",
-    ] * 3
-    sf = "/root/testdata/sf0.001"
-    base = pinned_rdd_count(spark)
-    high = 0
-    try:
-        for n in names:
-            rows = qs[n](spark, sf).collect()
-            assert rows, n  # consumed sequentially, correct under the wrap
-            high = max(high, pinned_rdd_count(spark))
-        # after the loop, only the keep-window scopes may still hold
-        # blocks: trigger two more retires and verify the count returns
-        # near base
-        qs["dedup_exact_documents"](spark, sf).collect()
-        qs["dedup_exact_documents"](spark, sf).collect()
-        qs["dedup_exact_documents"](spark, sf).collect()
-        settled = pinned_rdd_count(spark)
-        # 9 pin-heavy builds happened; without the rolling release the
-        # settled count would sit ~9 queries' pins above base
-        assert settled - base <= high - base, (base, high, settled)
-        assert settled - base < 9, (base, settled)
-    finally:
-        # the keep window outlives the test: free it so later tests
-        # start from the session's own pins
-        with pinning._LOCK:
-            retired = list(pinning._RETIRED)
-            pinning._RETIRED.clear()
-        for scope in retired:
-            scope.release()
+    base = _ids(spark)
+    built = {n: qs[n](spark, SF_SMOKE) for n in ENTRY_NAMES}
+    first = _ids(spark) - base
+    assert first
+    for n, df in built.items():
+        assert df.collect(), n
+    for n in ENTRY_NAMES:
+        assert qs[n](spark, SF_SMOKE).collect(), n
+    # every first build was superseded by its own rebuild
+    assert first & _ids(spark) == set()
 
 
-def test_rolling_pin_scope_threads_account_for_every_scope(monkeypatch):
-    """Builds racing through rolling_pin_scope from several threads:
-    every scope ends either released exactly once or still in the keep
-    window.  A retire check made outside the lock could pop an empty
-    queue or release a scope twice."""
+def test_entry_queries_survive_threads(spark, latest):
+    from concurrent.futures import ThreadPoolExecutor
+
+    import __spark_entry__ as mod
+
+    qs = mod.queries()
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        rows = dict(
+            zip(
+                ENTRY_NAMES,
+                pool.map(lambda n: qs[n](spark, SF_SMOKE).collect(), ENTRY_NAMES),
+            )
+        )
+    assert all(rows.values()), [n for n, r in rows.items() if not r]
+
+
+def test_pin_scope_is_per_thread(spark):
+    """Thread A opens its scope after thread B opened its own; B's pin
+    belongs to B's scope, so A's exit does not free it."""
+    import threading
+
+    b_open, a_open, b_pinned, a_done = (threading.Event() for _ in range(4))
+    errors = []
+
+    def thread_a():
+        b_open.wait(60)
+        with pin_scope():
+            a_open.set()
+            b_pinned.wait(60)
+        a_done.set()
+
+    def thread_b():
+        try:
+            with pin_scope():
+                b_open.set()
+                a_open.wait(60)
+                df, _ = pin(spark.range(100))
+                b_pinned.set()
+                a_done.wait(60)
+                assert df.count() == 100
+        except Exception as ex:  # noqa: BLE001 — surfaced below
+            errors.append(ex)
+            b_pinned.set()
+
+    threads = [threading.Thread(target=f) for f in (thread_a, thread_b)]
+    base = _ids(spark)
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert _ids(spark) - base == set()
+
+
+def test_failing_build_keeps_previous_result(spark, latest):
+    """A build that raises frees its own pins; the previous build of
+    the same name stays consumable."""
+    from imdb_top_250_etl_pipeline_spark.operators.pinning import (
+        latest_pin_scope,
+    )
+
+    def build(spark, n):
+        df, _ = pin(spark.range(n))
+        if n == 20:
+            raise RuntimeError("boom")
+        return df
+
+    run = latest_pin_scope("probe", build)
+    base = _ids(spark)
+    ok = run(spark, 10)
+    kept = _ids(spark) - base
+    assert len(kept) == 1
+    with pytest.raises(RuntimeError):
+        run(spark, 20)
+    assert _ids(spark) - base == kept
+    assert ok.count() == 10
+
+
+def test_latest_pin_scope_threads_release_every_superseded_scope(
+    latest, monkeypatch
+):
+    """Builds of a few names racing from several threads: every scope
+    ends either released exactly once or as its name's latest.  A swap
+    made outside the lock could lose a scope or release one twice."""
     import sys
     import threading
-    from collections import deque
 
     from imdb_top_250_etl_pipeline_spark.operators import pinning
 
-    monkeypatch.setattr(pinning, "_RETIRED", deque())
     released = []
+    scopes = []
+
+    def build(spark, sf):
+        scopes.append(pinning._OPEN.stack[-1])
+
+    names = ["a", "b", "c"]
+    runs = [pinning.latest_pin_scope(n, build) for n in names]
+    n_threads, n_calls = 8, 300
+    errors = []
+
+    def worker(i):
+        try:
+            for j in range(n_calls):
+                runs[(i + j) % len(runs)](None, "")
+        except Exception as ex:  # noqa: BLE001 — surfaced below
+            errors.append(ex)
+
+    threads = [
+        threading.Thread(target=worker, args=(i,)) for i in range(n_threads)
+    ]
     monkeypatch.setattr(
         pinning._PinScope,
         "release",
         lambda self, blocking=False: released.append(self),
     )
-    built = []
-    run = pinning.rolling_pin_scope(lambda spark, sf: built.append(sf))
-    n_threads, n_calls = 8, 300
-    errors = []
-
-    def worker():
-        try:
-            for _ in range(n_calls):
-                run(None, "")
-        except Exception as ex:  # noqa: BLE001 — surfaced below
-            errors.append(ex)
-
-    threads = [threading.Thread(target=worker) for _ in range(n_threads)]
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
@@ -386,8 +475,9 @@ def test_rolling_pin_scope_threads_account_for_every_scope(monkeypatch):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
-    total = n_threads * n_calls
-    assert len(built) == total
+    assert len(scopes) == n_threads * n_calls
     assert len({id(s) for s in released}) == len(released)
-    assert len(released) + len(pinning._RETIRED) == total
-    assert len(pinning._RETIRED) <= pinning._KEEP_PRIOR + n_threads
+    assert {id(s) for s in released} | {id(s) for s in latest.values()} == {
+        id(s) for s in scopes
+    }
+    assert set(latest) == set(names)

@@ -103,8 +103,6 @@ def scan_floor_of(spark, monkeypatch):
     saved = {k: spark.conf.get(k, None) for k in SCAN_KEYS}
 
     def probe(path):
-        for k in SCAN_KEYS:
-            spark.conf.unset(k)
         monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(path))
         s = get_spark("tests")
         return s.conf.get(SCAN_KEYS[0], None), s.conf.get(SCAN_KEYS[1], None)
@@ -131,9 +129,12 @@ def test_scan_floor_gate(spark, scan_floor_of, tmp_path):
     splits = 2 * cpu_count()
     gate = splits * (2 << 20)  # 2 MiB per wanted split
     over = _sparse_dir(tmp_path / "over", gate)
-    assert scan_floor_of(over) == (str(splits), str(256 << 10))
     under = _sparse_dir(tmp_path / "under", gate - 1)
+    # in sequence on one reused session: each probe sets or clears the
+    # floor the one before it left
+    assert scan_floor_of(over) == (str(splits), str(256 << 10))
     assert scan_floor_of(under) == (None, None)
+    assert scan_floor_of(over) == (str(splits), str(256 << 10))
     assert scan_floor_of(tmp_path / "missing") == (None, None)
 
 
