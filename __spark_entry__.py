@@ -15,7 +15,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from imdb_top_250_etl_pipeline_spark.operators import pinning
 from imdb_top_250_etl_pipeline_spark.plans import QUERIES, ORACLES
 
 
@@ -24,13 +23,14 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["flagship_top_customers"].fn(spark, "/root/testdata/sf0.001")
 
 
-# Each query's pins live until that query is built again: a consumer
-# may build every entry first and collect afterwards, or use threads.
+# No pin release here: the caller owns each result, so it may build every
+# entry first or use threads.  Spark's ContextCleaner frees a dropped
+# result's blocks; a pinning.pin_scope() around the use frees them at once.
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: pinning.latest_pin_scope(name, q.fn) for name, q in QUERIES.items()}
+    return {name: q.fn for name, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

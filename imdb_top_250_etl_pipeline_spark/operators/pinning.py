@@ -39,13 +39,11 @@ scope is released.
           groups.write.parquet(out)    # consume INSIDE the scope
       # all checkpoint blocks freed here
 
-* ``latest_pin_scope(name, fn)`` — for a consumer that cannot open a
-  ``with`` block around its use of a result (the ``queries()`` adapter
-  in ``__spark_entry__.py``): each build of ``name`` runs in its own
-  scope, which is released when ``name`` is built again.  A consumer
-  may build any number of other queries ahead, or on other threads,
-  and still collect every result; what stays pinned is bounded by one
-  scope per name.
+* A pin taken with no scope open has no owner here: its blocks live
+  until Spark's ContextCleaner collects the dropped DataFrame, or the
+  session ends.  The driver adapter (``__spark_entry__.queries()``)
+  opens none, so a consumer may build every query ahead, or on
+  threads, and collect later.
 
 CONTRACT: a pinned DataFrame is executor-storage-backed and cannot be
 recomputed once released (lineage is truncated at the checkpoint —
@@ -53,10 +51,10 @@ Spark raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).  Consume results
 before the scope closes / the handle releases.  Release is
 best-effort and never raises: a stopped context or a Connect session
 (no JVM handle) degrades to a no-op, matching the pre-handle
-behavior.  The persistent-id diff in ``pin``, a handle's release and
-the name swap in ``latest_pin_scope`` serialize through one lock.  A
-callback that Spark runs on its own thread (a ``foreachBatch`` body
-runs on a Py4J thread) has no scope unless it opens one.
+behavior.  The persistent-id diff in ``pin`` and a handle's release
+serialize through one lock.  A callback that Spark runs on its own
+thread (a ``foreachBatch`` body runs on a Py4J thread) has no scope
+unless it opens one.
 
 On a real cluster, prefer reliable ``checkpoint()`` (HDFS-backed,
 survives executor loss) for the iterative operators.  That swap is ONE
@@ -74,15 +72,12 @@ import os
 import shutil
 import threading
 import uuid
-from collections.abc import Callable
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 _LOCK = threading.RLock()
-# each query name's latest build scope (latest_pin_scope)
-_LATEST: dict[str, "_PinScope"] = {}
 
 
 class _ThreadScopes(threading.local):
@@ -207,37 +202,6 @@ class _PinScope:
             # context's checkpoint dir back to whoever owned it before
             self._restore_checkpoint_dir()
             shutil.rmtree(self.reliable_dir, ignore_errors=True)
-
-
-def latest_pin_scope(
-    name: str, fn: Callable[[SparkSession, str], DataFrame]
-) -> Callable[[SparkSession, str], DataFrame]:
-    """Wrap query ``name``'s build so its pins live until ``name`` is
-    built again.
-
-    Each call builds in its own scope.  A build that returns makes its
-    scope ``name``'s latest and releases the previous one; a build that
-    raises releases its own scope and leaves the previous result of
-    ``name`` consumable.
-    """
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        scope = _PinScope()
-        _OPEN.stack.append(scope)
-        try:
-            out = fn(spark, sf_dir)
-        except BaseException:
-            scope.release()
-            raise
-        finally:
-            _OPEN.stack.pop()
-        with _LOCK:
-            prev, _LATEST[name] = _LATEST.get(name), scope
-        if prev is not None:
-            prev.release()
-        return out
-
-    return run
 
 
 @contextmanager

@@ -25,7 +25,7 @@ the parallelism count, which always wins at production scale.
   CPU-dense corpora would otherwise scan one task per file; ungated, the
   floor scheduled near-empty splits of every small fixture file.
   ``session.get_spark`` probes ``$SPARK_GRAFT_SF_DIR`` on each call and
-  sets or clears the floor: a query later handed another ``sf_dir``
+  sets or clears its own floor: a query later handed another ``sf_dir``
   keeps the session's floor, and perfbench sets the variable before the
   session starts.
 - ``ARROW_BATCH_CAP``: 64 MiB per Arrow batch into Python; the default
@@ -94,13 +94,17 @@ def path_bytes(spark: SparkSession, path: str) -> int:
 
 def scan_floor(spark: SparkSession, cpus: int, path: str) -> None:
     """Set the scan-split floor on ``spark`` when ``path`` holds at
-    least ``SPLIT_BYTES`` per wanted split, and clear it otherwise (a
-    reused session may carry an earlier, larger dir's floor)."""
-    splits = 2 * cpus
-    keys = ("spark.sql.files.minPartitionNum", "spark.sql.files.openCostInBytes")
-    if path_bytes(spark, path) >= splits * SPLIT_BYTES:
-        for key, value in zip(keys, (splits, OPEN_COST_BYTES)):
-            spark.conf.set(key, str(value))
-    else:
-        for key in keys:
+    least ``SPLIT_BYTES`` per wanted split.  Otherwise clear a floor an
+    earlier, larger dir left on a reused session: a key is unset only
+    while it holds the value the floor writes, so one the user passed
+    (``--conf``, spark-defaults) stays."""
+    floor = {
+        "spark.sql.files.minPartitionNum": str(2 * cpus),
+        "spark.sql.files.openCostInBytes": str(OPEN_COST_BYTES),
+    }
+    over = path_bytes(spark, path) >= 2 * cpus * SPLIT_BYTES
+    for key, value in floor.items():
+        if over:
+            spark.conf.set(key, value)
+        elif spark.conf.get(key, None) == value:
             spark.conf.unset(key)

@@ -316,52 +316,39 @@ ENTRY_NAMES = [
 ]
 
 
-@pytest.fixture
-def latest(monkeypatch):
-    """A fresh name -> latest-build map for the entry adapter; every
-    scope left in it is released afterwards, so no pin outlives the
-    test."""
-    from imdb_top_250_etl_pipeline_spark.operators import pinning
-
-    monkeypatch.setattr(pinning, "_LATEST", {})
-    yield pinning._LATEST
-    for scope in pinning._LATEST.values():
-        scope.release()
-
-
-def test_entry_queries_survive_build_ahead(spark, latest):
-    """A consumer may build every entry before it collects any: a pin
-    lives until its own query is rebuilt, however many other queries
-    were built in between."""
+def test_entry_queries_survive_build_ahead(spark):
+    """A consumer may build every entry before it collects any: the
+    entry releases no pin, so each result stays consumable until the
+    consumer's own scope closes."""
     import __spark_entry__ as mod
 
     qs = mod.queries()
     base = _ids(spark)
-    built = {n: qs[n](spark, SF_SMOKE) for n in ENTRY_NAMES}
-    first = _ids(spark) - base
-    assert first
-    for n, df in built.items():
-        assert df.collect(), n
-    for n in ENTRY_NAMES:
-        assert qs[n](spark, SF_SMOKE).collect(), n
-    # every first build was superseded by its own rebuild
-    assert first & _ids(spark) == set()
+    with pin_scope():
+        built = {n: qs[n](spark, SF_SMOKE) for n in ENTRY_NAMES}
+        assert _ids(spark) - base
+        for n, df in built.items():
+            assert df.collect(), n
+    assert _ids(spark) - base == set()
 
 
-def test_entry_queries_survive_threads(spark, latest):
+def test_entry_queries_survive_threads(spark):
     from concurrent.futures import ThreadPoolExecutor
 
     import __spark_entry__ as mod
 
     qs = mod.queries()
+
+    def build_and_collect(n):
+        with pin_scope():
+            return qs[n](spark, SF_SMOKE).collect()
+
+    base = _ids(spark)
     with ThreadPoolExecutor(max_workers=4) as pool:
-        rows = dict(
-            zip(
-                ENTRY_NAMES,
-                pool.map(lambda n: qs[n](spark, SF_SMOKE).collect(), ENTRY_NAMES),
-            )
-        )
+        rows = dict(zip(ENTRY_NAMES, pool.map(build_and_collect, ENTRY_NAMES)))
     assert all(rows.values()), [n for n, r in rows.items() if not r]
+    # each worker's scope freed its own pins
+    assert _ids(spark) - base == set()
 
 
 def test_pin_scope_is_per_thread(spark):
@@ -401,83 +388,3 @@ def test_pin_scope_is_per_thread(spark):
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert _ids(spark) - base == set()
-
-
-def test_failing_build_keeps_previous_result(spark, latest):
-    """A build that raises frees its own pins; the previous build of
-    the same name stays consumable."""
-    from imdb_top_250_etl_pipeline_spark.operators.pinning import (
-        latest_pin_scope,
-    )
-
-    def build(spark, n):
-        df, _ = pin(spark.range(n))
-        if n == 20:
-            raise RuntimeError("boom")
-        return df
-
-    run = latest_pin_scope("probe", build)
-    base = _ids(spark)
-    ok = run(spark, 10)
-    kept = _ids(spark) - base
-    assert len(kept) == 1
-    with pytest.raises(RuntimeError):
-        run(spark, 20)
-    assert _ids(spark) - base == kept
-    assert ok.count() == 10
-
-
-def test_latest_pin_scope_threads_release_every_superseded_scope(
-    latest, monkeypatch
-):
-    """Builds of a few names racing from several threads: every scope
-    ends either released exactly once or as its name's latest.  A swap
-    made outside the lock could lose a scope or release one twice."""
-    import sys
-    import threading
-
-    from imdb_top_250_etl_pipeline_spark.operators import pinning
-
-    released = []
-    scopes = []
-
-    def build(spark, sf):
-        scopes.append(pinning._OPEN.stack[-1])
-
-    names = ["a", "b", "c"]
-    runs = [pinning.latest_pin_scope(n, build) for n in names]
-    n_threads, n_calls = 8, 300
-    errors = []
-
-    def worker(i):
-        try:
-            for j in range(n_calls):
-                runs[(i + j) % len(runs)](None, "")
-        except Exception as ex:  # noqa: BLE001 — surfaced below
-            errors.append(ex)
-
-    threads = [
-        threading.Thread(target=worker, args=(i,)) for i in range(n_threads)
-    ]
-    monkeypatch.setattr(
-        pinning._PinScope,
-        "release",
-        lambda self, blocking=False: released.append(self),
-    )
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=120)
-    finally:
-        sys.setswitchinterval(old)
-    assert not any(t.is_alive() for t in threads)
-    assert not errors, errors
-    assert len(scopes) == n_threads * n_calls
-    assert len({id(s) for s in released}) == len(released)
-    assert {id(s) for s in released} | {id(s) for s in latest.values()} == {
-        id(s) for s in scopes
-    }
-    assert set(latest) == set(names)

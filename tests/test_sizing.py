@@ -136,6 +136,9 @@ def test_scan_floor_gate(spark, scan_floor_of, tmp_path):
     assert scan_floor_of(under) == (None, None)
     assert scan_floor_of(over) == (str(splits), str(256 << 10))
     assert scan_floor_of(tmp_path / "missing") == (None, None)
+    # a value the floor did not write is the user's: under the gate it stays
+    spark.conf.set(SCAN_KEYS[0], "3")
+    assert scan_floor_of(under) == ("3", None)
 
 
 def test_path_bytes_reads_hadoop_content_summary(spark):
