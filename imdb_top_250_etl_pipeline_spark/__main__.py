@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -28,26 +29,11 @@ def run_etl(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     every downstream table, the set-oriented replacement for the
     reference's read-back-and-probe loops (:163, :225-227).
     """
-    import os
-
-    from .operators.etl import build_bridge, normalize_people
-    from .operators.pinning import eager_pin
-    from .plans.etl import _movies_table
-    from .plans.etl_fixtures import details_raw
+    from .plans.etl import _etl_tables
     from .sources.sink import write_parquet
 
-    d = details_raw(spark, sf_dir)
-    movies = eager_pin(_movies_table(spark, sf_dir))
-    people = eager_pin(normalize_people(d))
-    tables = {
-        "movies": movies,
-        "people": people,
-        "movie_director": build_bridge(d, movies, people, "director"),
-        "movie_writer": build_bridge(d, movies, people, "writers"),
-        "movie_star": build_bridge(d, movies, people, "stars"),
-    }
     counts: dict[str, int] = {}
-    for name, df in tables.items():
+    for name, df in _etl_tables(spark, sf_dir).items():
         path = os.path.join(out_dir, name)
         write_parquet(df, path)
         counts[name] = spark.read.parquet(path).count()

@@ -121,35 +121,19 @@ def lsh_bands(sig: str, bands: int, rows: int) -> Column:
     )
 
 
-def bucket_stats(
-    banded: DataFrame, id_col: str, band_cols: list[str]
-) -> DataFrame:
-    """Per-bucket member count + min id — the hot-bucket guard's input.
-
-    One bare aggregation (band cols + id only, map-side partial combine).
-    Compute once, persist (or write to a stats table), and pass to
-    ``capped_band_pairs(precomputed_stats=...)`` so composed pipelines
-    keep plan construction fully lazy; the eager default recomputes this
-    internally per call.
-    """
-    return (
-        banded.select(*band_cols, id_col)
-        .groupBy(*band_cols)
-        .agg(F.count("*").alias("_bn"), F.min(id_col).alias("_bmin"))
-    )
-
-
 def capped_band_pairs(
     banded: DataFrame,
     id_col: str,
     band_cols: list[str],
     max_bucket: int = 256,
     payload_cols: list[str] | None = None,
-    precomputed_stats: DataFrame | None = None,
     verify=None,
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs within equal ``band_cols`` buckets,
-    with a hot-bucket guard.
+    with a hot-bucket guard — the one banded pair join of the near-dup
+    family (minhash, simhash, prefix-filtered n-grams, cosine LSH,
+    semantic dedup) and of operators/linkage.py's blocking.  Exact
+    clones are the caller's step: ``op(collapse_exact_first(df, ...))``.
 
     Buckets of <= ``max_bucket`` members emit all pairs (the normal LSH
     path).  A degenerate bucket — N near-identical boilerplate docs, N
@@ -166,24 +150,23 @@ def capped_band_pairs(
     join and come back as ``<col>_a`` / ``<col>_b`` — callers verify
     candidates without re-joining the base table (a join-back per side
     measured ~2× slower end-to-end on the simhash bench).  The star
-    representative's payload is captured in the stats aggregate via
-    min_by, so the star path needs no lookup either.
+    path takes each representative's payload from its own min-id row.
 
     Guard plumbing is sized for the EXPECTED case — hot buckets are rare
     by construction (that's what banding is for): the over-cap buckets
     are detected with one BARE aggregation (band cols + id only, no
-    payloads; map-side partial combine) materialized at plan-build time,
-    and when the hot set is EMPTY — the normal case — the pair join is
-    built directly on ``banded``, so the guarded plan differs from an
-    unguarded one by exactly that one aggregation pass.  Only when hot
-    buckets exist do the broadcast anti join (cap the all-pairs side)
-    and the star path (members + representative payload lookup, both
-    tiny broadcast joins) enter the plan.  (Earlier drafts joined full
-    bucket stats onto every banded row — 1.9× slower on the minhash
-    bench — or window-counted over the band columns — 4× slower on
-    simhash.)  A corpus so degenerate that ``hot`` itself is huge would
-    stress the broadcast; at that point the corpus needs cleaning, not
-    pairing.
+    payloads; map-side partial combine) probed with ``isEmpty`` at
+    plan-build time, and when the hot set is EMPTY — the normal case —
+    the pair join is built directly on ``banded``, so the guarded plan
+    differs from an unguarded one by exactly that one aggregation pass.
+    Only when hot buckets exist do the broadcast anti join (cap the
+    all-pairs side) and the star path (members + representative payload
+    lookup, both tiny broadcast joins) enter the plan.  (Earlier drafts
+    joined full bucket stats onto every banded row — 1.9× slower on the
+    minhash bench — or window-counted over the band columns — 4× slower
+    on simhash.)  A corpus so degenerate that ``hot`` itself is huge
+    would stress the broadcast; at that point the corpus needs
+    cleaning, not pairing.
 
     ``verify`` (round 14, guide §2.3): an optional per-pair transform
     (filter + projection) applied to the candidate rows BEFORE the
@@ -197,39 +180,25 @@ def capped_band_pairs(
     pair reached via different bands must produce identical rows —
     which any distance verify satisfies), so filter-then-distinct
     equals distinct-then-filter.  It runs on the star path too.
-
-    ``precomputed_stats`` keeps plan construction FULLY LAZY: pass a
-    ``bucket_stats(banded, ...)`` table (persisted, or written once per
-    pipeline run) and no Spark job runs at build time — the guard is
-    composed as the union of both paths (anti-joined all-pairs + star),
-    which degrades gracefully to the all-pairs result when no bucket is
-    actually hot (the anti join passes everything, the star side is
-    empty).  That is the composed-pipeline/cluster shape; the default
-    ``None`` keeps the eager measure-then-pick-a-plan behavior, which
-    skips the two extra joins entirely in the common no-hot-bucket case.
     """
     payload_cols = payload_cols or []
-    if precomputed_stats is None:
-        hot_plan = bucket_stats(banded, id_col, band_cols).where(
-            F.col("_bn") > max_bucket
-        )
-        # plan-build-time action, deliberately: when no bucket is hot (the
-        # normal case) the guarded plan collapses to the bare pair join.
-        # Round-13 optimization: probe emptiness on the LAZY plan and pin
-        # only when hot buckets exist — the old eager_pin-then-isEmpty
-        # paid a localCheckpoint write of the stats table on EVERY call,
-        # then threw it away in the common empty case (nothing downstream
-        # reads ``hot`` when no_hot).  The rare hot path now derives the
-        # stats twice (isEmpty + pin), which is the right side of the
-        # trade; callers pass ``precomputed_stats`` to avoid even that.
-        no_hot = hot_plan.isEmpty()
-        hot = None if no_hot else eager_pin(hot_plan)
-    else:
-        hot = precomputed_stats.where(F.col("_bn") > max_bucket)
-        no_hot = False  # unknowable without an action; build both paths
+    hot_plan = (
+        banded.select(*band_cols, id_col)
+        .groupBy(*band_cols)
+        .agg(F.count("*").alias("_bn"), F.min(id_col).alias("_bmin"))
+        .where(F.col("_bn") > max_bucket)
+    )
+    # plan-build-time action, deliberately: when no bucket is hot (the
+    # normal case) the guarded plan collapses to the bare pair join.
+    # Probe emptiness on the LAZY plan and pin only when hot buckets
+    # exist (round 13): pinning first paid a localCheckpoint write of
+    # the stats table on every call, then threw it away in the common
+    # empty case.  The rare hot path derives the stats twice (isEmpty
+    # + pin), which is the right side of the trade.
+    hot = None if hot_plan.isEmpty() else eager_pin(hot_plan)
     small = (
         banded
-        if no_hot
+        if hot is None
         else banded.join(
             F.broadcast(hot.select(*band_cols)), list(band_cols), "left_anti"
         )
@@ -246,7 +215,7 @@ def capped_band_pairs(
     )
     if verify is not None:
         all_pairs = verify(all_pairs)
-    if no_hot:
+    if hot is None:
         return all_pairs.dropDuplicates(["id_a", "id_b"])
     hot_members = banded.join(F.broadcast(hot), list(band_cols))
     # representative payloads: one row per hot bucket, joined back to the
@@ -297,7 +266,6 @@ def minhash_candidate_pairs(
     bands: int = 4,
     jaccard_threshold: float = 0.5,
     max_bucket: int = 256,
-    collapse_exact: bool = False,
 ) -> DataFrame:
     """Near-dup pairs via MinHash + LSH banding + exact-Jaccard verify.
 
@@ -310,8 +278,6 @@ def minhash_candidate_pairs(
     bucket cannot go quadratic.  The shingle and bucket tables come from
     build_minhash_index.
     """
-    if collapse_exact:
-        df = collapse_exact_first(df, text_col, id_col)
     index = build_minhash_index(df, text_col, id_col, n_shingle, k, bands)
     cand = capped_band_pairs(index.buckets, id_col, ["band", "bucket"], max_bucket)
     sh = index.shingles
@@ -393,7 +359,9 @@ def collapse_exact_first(
     factor.  Near-dup pairs among representatives plus exact-dup groups
     from ``exact_dedup`` together cover exactly the pairs the
     un-collapsed run emits (clone-clique pairs are the exact-dup
-    signal, not a near-dup discovery).
+    signal, not a near-dup discovery).  The pair operators take no
+    collapse flag: the caller composes the step, e.g.
+    ``simhash_pairs(collapse_exact_first(df, "text", "doc_id"), ...)``.
 
     Digest discipline (round 12): the representative set is derived by
     grouping 256-bit sha2 digests (the same collision-resistant hash
@@ -423,7 +391,6 @@ def simhash_pairs(
     max_hamming: int = 8,
     bands: int = 4,
     max_bucket: int = 256,
-    collapse_exact: bool = False,
 ) -> DataFrame:
     """Near-dup pairs whose SimHash hamming distance <= max_hamming.
 
@@ -437,8 +404,6 @@ def simhash_pairs(
     Hot buckets (identical boilerplate fingerprints) are capped to star
     pairs via capped_band_pairs, so they cannot go quadratic.
     """
-    if collapse_exact:
-        df = collapse_exact_first(df, text_col, id_col)
     width = 64 // bands
     # materialize once: the banded self-join would otherwise rebuild the
     # whole fingerprint table for each side (persist() on a cluster)
@@ -511,7 +476,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.6,
     length_band: int = 32,
-    collapse_exact: bool = False,
 ) -> DataFrame:
     """Character-n-gram Jaccard near-dup pairs within bounded buckets.
 
@@ -529,12 +493,6 @@ def ngram_jaccard_pairs(
     the verify stage; use MinHash/SimHash banding when no natural
     bucketing exists.
     """
-    if collapse_exact:
-        # digest-first collapse preserves the min-id row's own bucket
-        # columns (exactly what the old min_by(c, id) picked)
-        df = collapse_exact_first(
-            df.select(*{text_col, id_col, *bucket_cols}), text_col, id_col
-        )
     grams = char_ngrams_distinct(text_col, n)
     band = F.floor(F.length(text_col) / length_band)
     # repartition FIRST: the probe side of the (broadcast) bucket join

@@ -11,8 +11,9 @@ real-world entity" (customer files, product catalogs, author tables):
    work are hash joins.
 2. **Verify** — exact edit distance (levenshtein, JVM codegen) on the
    few pairs sharing a block, keeping pairs within ``max_dist``.
-   Payload (the normalized strings) rides the block join; nothing
-   re-joins against the corpus.
+   Payload (the normalized strings) rides the block join
+   (operators/dedup.py::capped_band_pairs, hot blocks capped to star
+   pairs); nothing re-joins against the corpus.
 3. **Cluster** — connected components over the verified pairs
    (operators/dedup.py::dedup_groups — pointer-jumped min-label
    propagation), so A↔B and B↔C land A,B,C in one entity even when
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import capped_band_pairs, dedup_groups
 
 
 def normalize_name(c: Column | str) -> Column:
@@ -59,9 +62,13 @@ def linkage_candidates(
     length difference), so banding on exact length only costs matches
     blocking already risks, and it bounds the worst block size.
 
-    Cost: one shuffle on the block key; per-block work is |block|²
-    verify comparisons — the block key must be chosen so blocks stay
-    O(1)-ish, the same hot-bucket discipline as capped_band_pairs.
+    The pairs come from operators/dedup.py::capped_band_pairs with the
+    block as the one band column and the normalized name as payload,
+    so a block is guarded like an LSH bucket: a block of more than 256
+    records emits star pairs against its min id (O(n)) instead of its
+    n²/2 clique, and the levenshtein verify runs on both paths before
+    the distinct-pairs exchange.  ``linkage_clusters`` still puts every
+    verified star member in the representative's entity.
     """
     n = normalize_name(name_col)
     keyed = records.select(
@@ -73,22 +80,11 @@ def linkage_candidates(
             F.length(n).cast("string"),
         ).alias("_block"),
     )
-    a = keyed.select(
-        F.col("rec_id").alias("id_a"),
-        F.col("name_n").alias("name_a"),
-        "_block",
-    )
-    b = keyed.select(
-        F.col("rec_id").alias("id_b"),
-        F.col("name_n").alias("name_b"),
-        "_block",
-    )
-    return (
-        a.join(b, "_block")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("dist", F.levenshtein("name_a", "name_b"))
-        .where(F.col("dist") <= max_dist)
-        .select("id_a", "id_b", "dist")
+    verify = lambda pairs: pairs.select(  # noqa: E731
+        "id_a", "id_b", F.levenshtein("name_n_a", "name_n_b").alias("dist")
+    ).where(F.col("dist") <= max_dist)
+    return capped_band_pairs(
+        keyed, "rec_id", ["_block"], payload_cols=["name_n"], verify=verify
     )
 
 
@@ -99,8 +95,6 @@ def linkage_clusters(pairs: DataFrame) -> DataFrame:
     records with no matching pair are their own entity and simply
     don't appear (union them back with entity_id = rec_id if a total
     assignment is needed)."""
-    from .dedup import dedup_groups
-
     return dedup_groups(pairs.select("id_a", "id_b")).select(
         F.col("doc_id").alias("rec_id"), F.col("group_id").alias("entity_id")
     )

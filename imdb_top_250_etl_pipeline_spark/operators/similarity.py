@@ -385,7 +385,6 @@ def cosine_near_dup_pairs(
     n_planes: int = 32,
     bands: int = 4,
     max_bucket: int = 256,
-    collapse_exact: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs via random-hyperplane LSH + cosine verify.
 
@@ -407,14 +406,12 @@ def cosine_near_dup_pairs(
     (a 0.95-pair flips any given plane with p ≈ 0.1; an 8-bit band still
     matches with p ≈ 0.43, and 4 bands give ≥ 90% recall).
 
-    ``collapse_exact`` (round 13): run the production exact-then-near
-    order — byte-identical vectors collapse to min-id representatives
-    BEFORE signing, so pairs are emitted among representatives only and
-    pair volume stays ~linear in docs on clone-dense corpora (clone-
-    clique pairs are the exact-dup signal, not a near-dup discovery).
+    On a clone-dense corpus compose the production exact-then-near
+    order, ``cosine_near_dup_pairs(collapse_exact_vectors_first(df,
+    ...))``: pairs are then emitted among representatives only and pair
+    volume stays ~linear in docs (clone-clique pairs are the exact-dup
+    signal, not a near-dup discovery).
     """
-    if collapse_exact:
-        df = collapse_exact_vectors_first(df, vec_col, id_col)
     rows = n_planes // bands
     # Hyperplane weights are DATA-INDEPENDENT pseudo-random ints in
     # [-1000, 1000), derived per (plane, dim) from xxhash64 — but

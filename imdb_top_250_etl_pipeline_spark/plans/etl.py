@@ -22,9 +22,11 @@ from ..operators.etl import (
     upsert,
     with_surrogate_key,
 )
+from ..operators.pinning import eager_pin
 from ..sources import load
 from .etl_fixtures import details_raw, movies_raw, with_etl_ctes
 from .registry import register
+from .relational import _physical_plan
 
 
 def _movies_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,6 +39,26 @@ def _movies_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         clean.where(F.col("details_url").isNotNull()), "movie_id", ["details_url"]
     )
     return keyed.withColumn("last_updated", F.current_timestamp())
+
+
+def _etl_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The reference pipeline's five output tables, by table name.
+
+    The two shared subplans are materialized once: movies feeds four of
+    the five tables and people feeds four — without this each consumer
+    recomputes the window/explode work (AQE exchange reuse catches only
+    some); persist() on a cluster, eager localCheckpoint locally.
+    """
+    d = details_raw(spark, sf_dir)
+    movies = eager_pin(_movies_table(spark, sf_dir))
+    people = eager_pin(normalize_people(d))
+    return {
+        "movies": movies,
+        "people": people,
+        "movie_director": build_bridge(d, movies, people, "director"),
+        "movie_writer": build_bridge(d, movies, people, "writers"),
+        "movie_star": build_bridge(d, movies, people, "stars"),
+    }
 
 
 @register(
@@ -552,16 +574,12 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "part", "c_custkey", "c_name", "c_acctbal", "c_mktsegment", "ok"
             )
         )
-        from ..operators.pinning import eager_pin
-
         return eager_pin(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
 
-@register(
-    "etl_upsert_orders",
-    oracle="""
+_UPSERT_ORACLE = """
     WITH e AS (
       SELECT o_orderkey, o_custkey, o_orderstatus,
              CAST(o_totalprice AS DECIMAL(12,2)) AS total
@@ -578,13 +596,12 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN e.o_orderkey IS NOT NULL THEN e.o_custkey ELSE i.o_custkey END AS o_custkey
     FROM e FULL OUTER JOIN i ON e.o_orderkey = i.o_orderkey
     ORDER BY o_orderkey
-    """,
-    doc="S5: INSERT..ON CONFLICT DO UPDATE (webscraper-postgres.py:199-209) "
-    "as a pure full-outer+case transformation: dynamic columns update-win, "
-    "stable columns keep the existing side, unmatched incoming rows insert. "
-    "At scale this is Delta/Iceberg MERGE INTO; semantics identical.",
-)
-def etl_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+"""
+
+
+def _upsert_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The existing and incoming orders both upsert queries merge —
+    _UPSERT_ORACLE's ``e`` and ``i`` CTEs."""
     o = load(spark, sf_dir, "orders")
     existing = o.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey",
@@ -600,6 +617,19 @@ def etl_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(13,2)")
         .alias("total"),
     )
+    return existing, incoming
+
+
+@register(
+    "etl_upsert_orders",
+    oracle=_UPSERT_ORACLE,
+    doc="S5: INSERT..ON CONFLICT DO UPDATE (webscraper-postgres.py:199-209) "
+    "as a pure full-outer+case transformation: dynamic columns update-win, "
+    "stable columns keep the existing side, unmatched incoming rows insert. "
+    "At scale this is Delta/Iceberg MERGE INTO; semantics identical.",
+)
+def etl_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    existing, incoming = _upsert_inputs(spark, sf_dir)
     merged = upsert(
         existing,
         incoming,
@@ -646,50 +676,18 @@ def etl_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan reuse.",
 )
 def etl_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = details_raw(spark, sf_dir)
-    # materialize the two shared subplans once: movies feeds 4 of the 5
-    # counts and people feeds 4 — without this each crossJoined count
-    # recomputes the window/explode work (AQE exchange reuse catches only
-    # some); persist() on a cluster, eager localCheckpoint locally
-    from ..operators.pinning import eager_pin
-
-    movies = eager_pin(_movies_table(spark, sf_dir))
-    people = eager_pin(normalize_people(d))
-    bridges = {
-        name: build_bridge(d, movies, people, name)
-        for name in ("director", "writers", "stars")
-    }
+    tables = _etl_tables(spark, sf_dir)
     counts = [
-        movies.agg(F.count("*").alias("n_movies")),
-        people.agg(F.count("*").alias("n_people")),
-        bridges["director"].agg(F.count("*").alias("n_director")),
-        bridges["writers"].agg(F.count("*").alias("n_writer")),
-        bridges["stars"].agg(F.count("*").alias("n_star")),
+        df.agg(F.count("*").alias(col))
+        for df, col in zip(
+            tables.values(),
+            ("n_movies", "n_people", "n_director", "n_writer", "n_star"),
+        )
     ]
     out = counts[0]
     for c in counts[1:]:
         out = out.crossJoin(c)
     return out
-
-
-_UPSERT_ORACLE = """
-    WITH e AS (
-      SELECT o_orderkey, o_custkey, o_orderstatus,
-             CAST(o_totalprice AS DECIMAL(12,2)) AS total
-      FROM orders WHERE o_orderkey % 2 = 0
-    ),
-    i AS (
-      SELECT o_orderkey, o_custkey + 1000000 AS o_custkey, 'U' AS o_orderstatus,
-             CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 1.50 AS DECIMAL(13,2)) AS total
-      FROM orders WHERE o_orderkey % 3 = 0
-    )
-    SELECT COALESCE(i.o_orderkey, e.o_orderkey) AS o_orderkey,
-           CASE WHEN i.o_orderkey IS NOT NULL THEN i.o_orderstatus ELSE e.o_orderstatus END AS o_orderstatus,
-           CAST(CASE WHEN i.o_orderkey IS NOT NULL THEN i.total ELSE e.total END AS DOUBLE) AS total,
-           CASE WHEN e.o_orderkey IS NOT NULL THEN e.o_custkey ELSE i.o_custkey END AS o_custkey
-    FROM e FULL OUTER JOIN i ON e.o_orderkey = i.o_orderkey
-    ORDER BY o_orderkey
-"""
 
 
 @register(
@@ -703,21 +701,7 @@ _UPSERT_ORACLE = """
     "'existing' on the second pass.",
 )
 def etl_incremental_rerun(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    existing = o.where(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        F.col("o_totalprice").cast("decimal(12,2)").alias("total"),
-    )
-    incoming = o.where(F.col("o_orderkey") % 3 == 0).select(
-        "o_orderkey",
-        (F.col("o_custkey") + 1000000).alias("o_custkey"),
-        F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice").cast("decimal(12,2)") + F.lit("1.50").cast("decimal(3,2)"))
-        .cast("decimal(13,2)")
-        .alias("total"),
-    )
+    existing, incoming = _upsert_inputs(spark, sf_dir)
     kw = dict(key="o_orderkey", update_cols=["o_orderstatus", "total"], stable_cols=["o_custkey"])
     once = upsert(existing, incoming, **kw)
     twice = upsert(once.select(*existing.columns), incoming, **kw)
@@ -807,8 +791,6 @@ def sink_managed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         insert_into(stats, name)
-        from ..operators.pinning import eager_pin
-
         return eager_pin(spark.table(name).orderBy("n_name"))
     finally:
         drop_table(spark, name)
@@ -921,18 +903,12 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         pushed_df = read_jdbc(
             spark, url, "cust", driver=DERBY_EMBEDDED_DRIVER
         ).where(F.col("c_mktsegment") == "BUILDING")
-        try:
-            phys = pushed_df._jdf.queryExecution().executedPlan().toString()
-        except Exception:
-            phys = ""
-        ok_push = "EqualTo(c_mktsegment,BUILDING)" in phys
+        ok_push = "EqualTo(c_mktsegment,BUILDING)" in _physical_plan(pushed_df)
         pushed = (
             pushed_df.select(*cols)
             .withColumn("ok", F.lit(bool(ok_push)))
             .withColumn("part", F.lit("pushdown"))
         )
-
-        from ..operators.pinning import eager_pin
 
         return eager_pin(full.unionByName(par).unionByName(pushed))
     finally:

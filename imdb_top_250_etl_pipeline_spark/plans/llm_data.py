@@ -224,7 +224,9 @@ def _minhash_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself; unit tests pin planted recall and exact jaccard values on it."""
     return (
         minhash_candidate_pairs(
-            _corpus_near(spark, sf_dir), "text", "doc_id", collapse_exact=True
+            collapse_exact_first(_corpus_near(spark, sf_dir), "text", "doc_id"),
+            "text",
+            "doc_id",
         )
         .withColumn("jaccard", F.round("jaccard", 4))
         .orderBy("id_a", "id_b")
@@ -334,11 +336,11 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_union(sh_a, sh_b)).cast("bigint").alias("u"),
         ).where((F.col("u") > 0) & (2 * F.col("i") >= F.col("u")))
     )
-    # COLLAPSE-AWARE found-count: the LSH pipeline runs
-    # collapse_exact=True, so on a clone-dense corpus (the sf1 stress
-    # shape: ~10 byte-identical replicas per text) a planted pair
-    # surfaces under its text groups' MIN-ID REPRESENTATIVES, not its
-    # own ids.  Map each planted doc through the same text->min(id)
+    # COLLAPSE-AWARE found-count: the LSH pipeline runs on
+    # collapse_exact_first's representatives, so on a clone-dense
+    # corpus (the sf1 stress shape: ~10 byte-identical replicas per
+    # text) a planted pair surfaces under its text groups' MIN-ID
+    # REPRESENTATIVES, not its own ids.  Map each planted doc through the same text->min(id)
     # collapse over the full corpus before probing the pair set.
     # digest discipline: group/join on sha2(text), never shuffle raw text
     reps = (
@@ -389,8 +391,10 @@ def _dedup_simhash_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-copy corpus — the banded pipeline itself; consumed by
     dedup_pairs_battery, bench, and the lossless-hamming unit tests."""
     return simhash_pairs(
-        _corpus_near(spark, sf_dir), "text", "doc_id", max_hamming=3,
-        collapse_exact=True,
+        collapse_exact_first(_corpus_near(spark, sf_dir), "text", "doc_id"),
+        "text",
+        "doc_id",
+        max_hamming=3,
     ).orderBy("id_a", "id_b")
 
 
@@ -423,7 +427,7 @@ SELECT 'precision', NULL, NULL, NULL, CAST(0 AS BIGINT), true
     "bit_count(xor) hamming verify. With 4 bands, pigeonhole makes "
     "recall EXACT for hamming ≤3 — the output is precisely the set of "
     "pairs within distance 3, not an approximation. Runs in the "
-    "production exact-then-near order (collapse_exact=True). "
+    "production exact-then-near order (collapse_exact_first, then pairs). "
     "PROMOTED to an invariant oracle (round 12, the "
     "dedup_minhash_candidates pattern): corpus = distinct-text docs ∪ "
     "WORD-REVERSED twins of every 13th rep (id + 300000, reversed "
@@ -473,8 +477,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (_dedup_simhash_raw) keeps the default cap.
     pairs = eager_pin(
         simhash_pairs(
-            base.unionByName(twins), "text", "doc_id", max_hamming=3,
-            collapse_exact=True, max_bucket=1_000_000,
+            collapse_exact_first(base.unionByName(twins), "text", "doc_id"),
+            "text",
+            "doc_id",
+            max_hamming=3,
+            max_bucket=1_000_000,
         )
     )
     twin_pair = planted.select(
@@ -503,8 +510,15 @@ def _dedup_ngram_jaccard_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests."""
     return (
         ngram_jaccard_pairs(
-            _corpus_near(spark, sf_dir), "text", "doc_id", ["lang"], threshold=0.8,
-            collapse_exact=True,
+            collapse_exact_first(
+                _corpus_near(spark, sf_dir).select("doc_id", "text", "lang"),
+                "text",
+                "doc_id",
+            ),
+            "text",
+            "doc_id",
+            ["lang"],
+            threshold=0.8,
         )
         .withColumn("jaccard", F.round("jaccard", 4))
         .orderBy("id_a", "id_b")
@@ -543,7 +557,7 @@ SELECT 'precision', NULL, NULL, CAST(0 AS BIGINT), true
     doc="Char-3-gram Jaccard near-dup pairs, bucketed by language — the "
     "bounded-quadratic verify stage (only same-bucket pairs compare; at "
     "scale the bucket must be an LSH band, see dedup_minhash_candidates). "
-    "Exact clones collapse to representatives first (collapse_exact) — "
+    "Exact clones collapse to representatives first (collapse_exact_first) — "
     "the within-bucket quadratic falls with the clone factor squared "
     "(~730 s -> seconds at sf1).  PROMOTED to an invariant oracle "
     "(round 12): corpus = distinct-text reps ∪ APPEND-LAST-CHAR twins "
@@ -591,8 +605,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = eager_pin(
         ngram_jaccard_pairs(
-            base.unionByName(twins), "text", "doc_id", ["lang"],
-            threshold=0.8, collapse_exact=True,
+            collapse_exact_first(
+                base.unionByName(twins).select("doc_id", "text", "lang"),
+                "text",
+                "doc_id",
+            ),
+            "text",
+            "doc_id",
+            ["lang"],
+            threshold=0.8,
         )
     )
     twin_pair = planted.select(

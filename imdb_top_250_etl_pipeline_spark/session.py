@@ -75,4 +75,10 @@ def get_spark(app_name: str = "imdb-top-250-etl-pipeline-spark") -> SparkSession
     )
     sizing.scan_floor(spark, cpus, os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR))
     spark.sparkContext.setLogLevel("WARN")
+    # releasing a localCheckpoint pin (operators/pinning.py) truncates
+    # lineage on purpose; Spark WARNs on every such unpersist
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD", log4j.Level.ERROR
+    )
     return spark

@@ -82,6 +82,23 @@ def test_candidates_on_identifier_shaped_names(spark):
     assert all(r.dist <= 2 for r in pairs)
 
 
+def test_hot_block_emits_star_pairs_and_one_cluster(spark):
+    # 300 names in ONE block (same suffix and length), pairwise within
+    # distance 2 (they differ only in their first two letters): the
+    # blocking join is capped like an LSH bucket, so the block yields
+    # the 299-pair star around its min id instead of 300*299/2 pairs,
+    # and the star still joins every record into one entity
+    letters = "abcdefghijklmnopqr"
+    names = [a + b + " record 0001" for a in letters for b in letters][:300]
+    df = spark.createDataFrame(list(enumerate(names)), "rec_id long, name string")
+    pairs = linkage_candidates(df, "rec_id", "name")
+    got = sorted((r.id_a, r.id_b, r.dist) for r in pairs.collect())
+    assert [(a, b) for a, b, _ in got] == [(0, i) for i in range(1, 300)]
+    assert all(d <= 2 for _, _, d in got)
+    clusters = {r.entity_id for r in linkage_clusters(pairs).collect()}
+    assert clusters == {0}
+
+
 def test_fastss_pairs_matches_brute_force(spark):
     import functools
     import itertools

@@ -333,6 +333,7 @@ def test_cosine_near_dup_uses_all_dims_above_256(spark):
 
 def test_capped_band_pairs_star_fallback_bounds_hot_bucket(spark):
     from imdb_top_250_etl_pipeline_spark.operators.dedup import (
+        capped_band_pairs,
         minhash_candidate_pairs,
     )
 
@@ -355,60 +356,21 @@ def test_capped_band_pairs_star_fallback_bounds_hot_bucket(spark):
     )
     assert full.count() == 40 * 39 // 2
 
-
-def test_capped_band_pairs_precomputed_stats_lazy_and_equivalent(spark):
-    from imdb_top_250_etl_pipeline_spark.operators.dedup import (
-        bucket_stats,
-        capped_band_pairs,
-    )
-
-    # one hot bucket (12 members > cap 5) + two small ones
+    # banded input straight into the guard: one hot bucket (12 members >
+    # cap 5) next to two small ones — the hot bucket becomes an 11-pair
+    # star, the small buckets stay full cliques
     rows = [(i, 0, 7) for i in range(12)]
     rows += [(100 + i, 1, 3) for i in range(3)]
     rows += [(200 + i, 2, 9) for i in range(4)]
     banded = spark.createDataFrame(rows, "doc_id long, band int, bucket long")
-    stats = spark.createDataFrame(
-        bucket_stats(banded, "doc_id", ["band", "bucket"]).collect()
+    got = sorted(
+        (r.id_a, r.id_b)
+        for r in capped_band_pairs(
+            banded, "doc_id", ["band", "bucket"], max_bucket=5
+        ).collect()
     )
-
-    # composed-pipeline contract: with stats supplied, building the plan
-    # runs NO Spark job (the eager default runs the stats aggregate +
-    # isEmpty at construction time)
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
-    lazy = capped_band_pairs(
-        banded,
-        "doc_id",
-        ["band", "bucket"],
-        max_bucket=5,
-        precomputed_stats=stats,
-    )
-    assert len(tracker.getJobIdsForGroup(None)) == before, (
-        "plan construction with precomputed_stats must not run a job"
-    )
-
-    eager = capped_band_pairs(banded, "doc_id", ["band", "bucket"], max_bucket=5)
-    got_lazy = sorted((r.id_a, r.id_b) for r in lazy.collect())
-    got_eager = sorted((r.id_a, r.id_b) for r in eager.collect())
-    assert got_lazy == got_eager
-    # hot bucket became a star (11 pairs), small buckets full cliques
-    assert len(got_lazy) == 11 + 3 * 2 // 2 + 4 * 3 // 2
-
-    # no-hot case: the lazy union-of-both-paths plan degrades to the
-    # plain all-pairs result (anti join passes everything, star empty)
-    lazy_cold = capped_band_pairs(
-        banded,
-        "doc_id",
-        ["band", "bucket"],
-        max_bucket=100,
-        precomputed_stats=stats,
-    )
-    eager_cold = capped_band_pairs(
-        banded, "doc_id", ["band", "bucket"], max_bucket=100
-    )
-    assert sorted((r.id_a, r.id_b) for r in lazy_cold.collect()) == sorted(
-        (r.id_a, r.id_b) for r in eager_cold.collect()
-    )
+    assert [p for p in got if p[0] < 100] == [(0, i) for i in range(1, 12)]
+    assert len(got) == 11 + 3 * 2 // 2 + 4 * 3 // 2 == 20
 
 
 def test_chunk_documents_matches_python_reference(spark):
@@ -854,6 +816,7 @@ def test_prefix_jaccard_superset_of_banded(spark):
 
 def test_collapse_exact_first_pairs_equal_representative_restriction(spark):
     from imdb_top_250_etl_pipeline_spark.operators.dedup import (
+        collapse_exact_first,
         ngram_jaccard_pairs,
         simhash_pairs,
     )
@@ -870,7 +833,10 @@ def test_collapse_exact_first_pairs_equal_representative_restriction(spark):
     got = {
         (r.id_a, r.id_b)
         for r in ngram_jaccard_pairs(
-            clones, "text", "doc_id", ["lang"], collapse_exact=True
+            collapse_exact_first(clones, "text", "doc_id"),
+            "text",
+            "doc_id",
+            ["lang"],
         ).collect()
     }
     plain = {
@@ -887,7 +853,7 @@ def test_collapse_exact_first_pairs_equal_representative_restriction(spark):
     sh = {
         (r.id_a, r.id_b)
         for r in simhash_pairs(
-            clones, "text", "doc_id", collapse_exact=True
+            collapse_exact_first(clones, "text", "doc_id"), "text", "doc_id"
         ).collect()
     }
     sh_plain = {
@@ -2087,9 +2053,10 @@ def test_twin_id_guard_fires_on_offset_overlap(spark):
 def test_cosine_collapse_exact_bounds_clone_pairs(spark):
     """Round 13 (found by the 3-point scale probe): on a clone-dense
     corpus the cosine pair stage must NOT emit the clone-clique
-    quadratic — collapse_exact pre-collapses byte-identical vectors to
-    min-id reps, so pairs are emitted among reps only while planted
-    near-dup recall is preserved."""
+    quadratic — composed after collapse_exact_vectors_first, which
+    pre-collapses byte-identical vectors to min-id reps, pairs are
+    emitted among reps only while planted near-dup recall is
+    preserved."""
     from pyspark.sql import functions as F
 
     from imdb_top_250_etl_pipeline_spark.operators.similarity import (
@@ -2116,7 +2083,7 @@ def test_cosine_collapse_exact_bounds_clone_pairs(spark):
     assert rep_ids == {b * 10 for b in range(20)} | {9999}
 
     pairs = cosine_near_dup_pairs(
-        df, "vec_id", "embedding", threshold=0.98, collapse_exact=True
+        reps, "vec_id", "embedding", threshold=0.98
     ).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     # ONLY the planted near-dup pair among representatives — zero

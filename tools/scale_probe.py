@@ -12,9 +12,10 @@ expensive queries at all three scales, recording per query and scale:
     candidate-pair volume, the quantity that must grow ~linearly in
     docs (a quadratic pair curve is the all-pairs failure mode the
     banded-LSH design exists to avoid),
-  * shuffle read/write bytes and records summed over TaskEnd events
-    (plain-text event log, the spill-probe parsing discipline) — the
-    quantity that becomes the bottleneck first on a real cluster.
+  * shuffle read/write bytes and task counts summed per query's job
+    group by perfbench/eventlog.py::by_job_group (plain-text event log)
+    — shuffle is the quantity that becomes the bottleneck first on a
+    real cluster.
 
 Each scale runs in its OWN subprocess JVM so event logs and JIT state
 never smear across points.  The replicated corpus makes dedup HARDER
@@ -36,6 +37,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.eventlog import by_job_group  # noqa: E402
 
 OUT = os.environ.get("SCALE_OUT", "SCALE_PROBE_r13.json")
 SCALES = {
@@ -113,51 +116,16 @@ def _run_scale(scale: str) -> dict:
         spark.sparkContext.setJobGroup("", "")
     spark.stop()  # flush event log
 
-    # per-query shuffle metrics: map stage -> job -> job group
-    job_group: dict[int, str] = {}
-    stage_jobs: dict[int, int] = {}
-    agg: dict[str, dict] = {
-        q: {"shuffle_read_b": 0, "shuffle_write_b": 0,
-            "shuffle_records": 0, "tasks": 0}
-        for q in queries
-    }
-    paths = []
-    for root, _dirs, files in os.walk(event_dir):
-        paths += [os.path.join(root, f) for f in files]
-    for path in paths:
-        with open(path, errors="ignore") as fh:
-            for line in fh:
-                if '"SparkListenerJobStart"' in line:
-                    ev = json.loads(line)
-                    g = (ev.get("Properties") or {}).get(
-                        "spark.jobGroup.id"
-                    )
-                    jid = ev.get("Job ID")
-                    if g is not None:
-                        job_group[jid] = g
-                    for sid in ev.get("Stage IDs", []):
-                        stage_jobs[sid] = jid
-                elif '"SparkListenerTaskEnd"' in line:
-                    ev = json.loads(line)
-                    g = job_group.get(stage_jobs.get(ev.get("Stage ID")))
-                    if g not in agg:
-                        continue
-                    tm = ev.get("Task Metrics") or {}
-                    srm = tm.get("Shuffle Read Metrics") or {}
-                    swm = tm.get("Shuffle Write Metrics") or {}
-                    a = agg[g]
-                    a["shuffle_read_b"] += srm.get(
-                        "Remote Bytes Read", 0
-                    ) + srm.get("Local Bytes Read", 0)
-                    a["shuffle_write_b"] += swm.get(
-                        "Shuffle Bytes Written", 0
-                    )
-                    a["shuffle_records"] += swm.get(
-                        "Shuffle Records Written", 0
-                    )
-                    a["tasks"] += 1
+    # per-query shuffle metrics, summed per job group by the benchmark's
+    # event-log reader (rolled files replayed in roll order)
+    groups = by_job_group(event_dir)
     for q in queries:
-        queries[q].update(agg[q])
+        g = groups[q]
+        queries[q].update(
+            shuffle_read_b=g["shuffle_read_bytes"],
+            shuffle_write_b=g["shuffle_write_bytes"],
+            tasks=g["tasks"],
+        )
     return {"scale": scale, "sf_dir": sf_dir, "n_docs": int(n_docs),
             "queries": queries}
 
